@@ -353,7 +353,9 @@ object Cluster {
    * clustering pass (those not produced by a cluster commit), leaving
    * already-clustered files untouched — the steady-state maintenance mode
    * at 100 TB, where re-sorting the whole table per ingest cycle is
-   * impossible. Periodic full rewrites restore global order.
+   * impossible. Periodic full rewrites restore global order. Without
+   * `dims.columns`, the table's declared `cluster-columns` apply
+   * ([[withDeclaredColumns]]), exactly as through `OPTIMIZE … INCREMENTAL`.
    */
   def incremental(
       table: GraftTable,
@@ -361,10 +363,11 @@ object Cluster {
       targetFileBytes: Long = 128L * 1024 * 1024,
       runId: String = java.util.UUID.randomUUID.toString,
       minFiles: Int = 2): Option[Snapshot] = {
+    val layout = withDeclaredColumns(table, dims)
     // validate/canonicalize UP FRONT: a typo'd column must fail loudly even
     // when there is nothing to rewrite (a scheduled no-op would otherwise
     // hide the mistake until the first real pass)
-    val cols = canonicalColumns(table, dims)
+    val cols = canonicalColumns(table, layout)
     val wantZdims = if (cols.nonEmpty) cols.mkString(",") else "lang,host,warc_ts"
     // a file only counts as clustered if its cluster commit used THESE dims
     // and curve — after the user changes cluster-columns, files ordered on
@@ -374,13 +377,13 @@ object Cluster {
     val staleRuns = table.metadata.snapshots
       .filter(s => s.operation == "cluster" &&
         (s.summary.getOrElse("zdims", "") != wantZdims ||
-          s.summary.getOrElse("curve", "") != dims.curve))
+          s.summary.getOrElse("curve", "") != layout.curve))
       .flatMap(_.summary.get("run-id")).toSet
     // tagged commit uuids (`cluster-z<8hex>-…`) carry their layout in the
     // NAME, so freshness survives snapshot expiry; legacy untagged files
     // keep the snapshot-based verdict (expired → treated as clustered —
     // the pre-existing, documented gap, now closed for all new rewrites)
-    val tag = layoutTag(wantZdims, dims.curve)
+    val tag = layoutTag(wantZdims, layout.curve)
     val (stale, fresh) = table.files()
       .filter { f =>
         val cu = f.commitUuid
@@ -393,9 +396,18 @@ object Cluster {
     // (any stale file) always proceeds — re-ordering even one file is the
     // entire point
     if (stale.isEmpty && fresh.size < minFiles) None
-    else zorderRewrite(table, dims, targetFileBytes, runId,
+    else zorderRewrite(table, layout, targetFileBytes, runId,
       onlyFiles = Some(stale ++ fresh))
   }
+
+  /** `dims`, or — when it names no columns — `dims` over the table's
+    * declared `cluster-columns` property (Nil when unset: the page dims).
+    * The one place that property resolves, so the programmatic and SQL
+    * doors tag the same layout. */
+  def withDeclaredColumns(table: GraftTable, dims: ZDims): ZDims =
+    if (dims.columns.nonEmpty) dims
+    else dims.copy(columns = table.metadata.properties.get(GraftTable.ClusterColumnsProp).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
 
   /** 8-hex tag of a clustering layout (dims + curve), embedded in cluster
     * commit uuids (`cluster-z<tag>-<runId>-p<g>`) so INCREMENTAL can verify

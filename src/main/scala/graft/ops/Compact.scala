@@ -50,10 +50,10 @@ object Compact {
     val threshold = (targetBytes * smallFileFraction).toLong
     // delete pressure: a file whose position-deleted row share reaches
     // `deleteRatioThreshold` is a rewrite candidate REGARDLESS of size —
-    // every read pays the DV anti-join for a covered file until a rewrite
+    // every read pays the DV filter for a covered file until a rewrite
     // clears it, so compaction is what keeps DV accumulation bounded at
-    // 100 TB (Iceberg's delete-file-threshold strategy). One tiny aggregate
-    // over the DV rows; empty map when the snapshot carries none.
+    // 100 TB (Iceberg's delete-file-threshold strategy). Counts are the
+    // cached DV bitmaps' cardinalities; empty map when the snapshot has none.
     val dvCounts = table.posDeleteRowCounts()
     val pressured: Set[String] = all.filter { f =>
       val d = dvCounts.getOrElse(f.path, 0L)

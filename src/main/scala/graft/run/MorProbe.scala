@@ -75,7 +75,7 @@ object MorProbe {
       val rows = t.read().count()
       // time ONE real scan: a hash aggregate cannot be metadata-answered on
       // either side (counts are — free on the CoW table, a real scan
-      // through the DV anti-join on the MoR one — so they stay untimed)
+      // through the DV filter on the MoR one — so they stay untimed)
       val r0 = System.nanoTime()
       t.read().agg(bit_xor(xxhash64(col("url")))).first()
       val readSec = (System.nanoTime() - r0) / 1e9

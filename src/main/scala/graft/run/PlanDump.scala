@@ -13,9 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * this also dumps the op-internal plans the optimization claims are about,
  * via dedicated `internal:<name>` targets:
  *
- *   internal:merge_src   — the merge full-outer join feeding q30's rewrite
- *   internal:dedup_exact — Dedup.exact over the planted corpus (q11)
- *   internal:cc_seed     — connectedComponents initial label frame
+ *   internal:changelog_diff — the changes() frame over q35's CoW MERGE
+ *   internal:dedup_exact    — Dedup.exact over the planted corpus (q11)
+ *   internal:dv_read        — q44's read with its three deletion-vector
+ *                             files live (before REWRITE DELETES)
  *
  * Diagnostic only; Bench/Verify are untouched.
  */
@@ -72,6 +73,23 @@ object PlanDump {
         write("internal_changelog_diff", formatted(tbl.changes(from)))
         graft.table.FileIO.deleteRecursively(
           root.substring(0, root.lastIndexOf('/')))
+      case "internal:dv_read" =>
+        // q44's table and deletes; its returned frame is checkpointed, so
+        // the DV-covered scan is dumped here (executed: the final plan)
+        import org.apache.spark.sql.functions.col
+        val ord = spark.read.parquet(s"$dir/orders.parquet").select(
+          col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
+          col("o_totalprice").cast("double").as("price"))
+        val root = java.nio.file.Files.createTempDirectory("graft-plandump-dv").toString + "/t"
+        val tbl = graft.table.GraftTable.create(spark, root, ord.schema)
+        tbl.append(ord.coalesce(8))
+        tbl.deleteWherePositional(col("o_orderpriority") === "1-URGENT")
+        tbl.deleteWherePositional(col("o_orderpriority") === "5-LOW")
+        tbl.deleteWherePositional(col("o_orderstatus") === "F" && col("price") < 50000.0)
+        val df = spark.sql(s"SELECT * FROM graft.`$root`").groupBy("o_orderpriority").count()
+        df.collect()
+        write("internal_dv_read", formatted(df))
+        graft.table.FileIO.deleteRecursively(root.substring(0, root.lastIndexOf('/')))
       case "internal:dedup_exact" =>
         import org.apache.spark.sql.functions.col
         val d = spark.read.parquet(s"$dir/documents.parquet")

@@ -182,7 +182,7 @@ object Soak {
 
         // merge-on-read pass at scale: a 0.5% change batch lands as DV
         // entries + appended images — ZERO touched-file rewrites asserted —
-        // then a full scan pays the anti-join once and a pressure
+        // then a full scan pays the DV filter once and a pressure
         // compaction materializes the DVs (the steady-state MoR cycle)
         val preMorPaths = tbl.files().map(_.path).toSet
         val (_, tMor) = time {

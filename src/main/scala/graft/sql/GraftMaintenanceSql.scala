@@ -200,19 +200,15 @@ case class GraftOptimizeCommand(path: String, zorder: Boolean, hilbert: Boolean,
       // (lang, url-host, warc_ts) page dims — the latter failing with a
       // real message instead of a mid-job unresolved-column error on other
       // schemas (BY-columns are validated in Cluster before any bytes move)
-      val cols =
-        if (byColumns.nonEmpty) byColumns
-        else t.metadata.properties.get(GraftTable.ClusterColumnsProp).toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      if (cols.isEmpty) {
+      val curve = if (hilbert) "hilbert" else "zorder"
+      val dims = Cluster.withDeclaredColumns(t, Cluster.ZDims(curve = curve, columns = byColumns))
+      if (dims.columns.isEmpty) {
         val needed = Seq("url", "warc_ts", "lang").filterNot(t.schema.fieldNames.contains)
         if (needed.nonEmpty) throw new IllegalArgumentException(
           s"OPTIMIZE ... ZORDER clusters on (lang, url-host, warc_ts) and needs columns " +
             s"${needed.mkString(", ")}; use ZORDER BY (col, ...) or set the " +
             s"'${GraftTable.ClusterColumnsProp}' table property for other schemas")
       }
-      val curve = if (hilbert) "hilbert" else "zorder"
-      val dims = Cluster.ZDims(curve = curve, columns = cols)
       val snap =
         if (incremental) {
           // steady-state mode: rewrite only files no cluster pass produced —

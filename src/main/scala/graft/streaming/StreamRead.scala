@@ -290,8 +290,8 @@ class GraftStreamSource(
   }
 
   /** Micro-batch DataFrame over `files` with snapshot `to`'s merge-on-read
-    * deletes applied — equality tombstones AND position deletes (both are
-    * stream-static anti-joins; broadcast below the row cap). A row deleted
+    * deletes applied — equality tombstones (a stream-static anti-join) AND
+    * position deletes (the in-scan DV bitmap filter). A row deleted
     * positionally before its file is delivered must not reach the consumer,
     * exactly as `read()` at `to` would hide it. */
   private def streamingDf(files: Seq[DataFileMeta], to: Long): DataFrame =

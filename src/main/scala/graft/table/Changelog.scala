@@ -230,8 +230,8 @@ object Changelog {
       // position-delete / MoR-update commit: the removed row images are the
       // rows at the NEWLY recorded (file, position) tuples. Positions were
       // computed on the parent-visible view (the writers apply live
-      // tombstones + DVs first), so the semi-join is exactly the logical
-      // delete set; the scan touches only the referenced files. An
+      // tombstones + DVs first), so the rows at those positions are exactly
+      // the logical delete set; the scan touches only the referenced files. An
       // update-pos commit additionally appended the updated images — those
       // files are pure additions and emit as inserts (update-image pairing
       // then labels matching keys as pre/post images).

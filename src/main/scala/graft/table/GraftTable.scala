@@ -434,63 +434,41 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     snap.posDeleteList.flatMap(m => readManifest(m.path))
   }
 
-  /** Table-relative path of the file a scanned row came from, derived from
-    * `_metadata.file_path`: `data/` plus everything after the LAST `/data/`
-    * — the table's data dir. Sound regardless of how the filesystem spells
-    * the root (file:/ vs file:///) and of hidden-partition dirs (those are
-    * `name=value` segments and can never equal `data`); matches
-    * [[DataFileMeta.path]] by construction of the write layout. */
-  private def relPathExpr: Column = {
-    import org.apache.spark.sql.functions.{col, concat, lit, substring_index}
-    // substring_index(…, -1) = everything after the LAST occurrence — same
-    // value as element_at(split(…), -1) without the per-row array allocation
-    // (this expression runs once per scanned row on every DV-covered read)
-    concat(lit("data/"), substring_index(col("_metadata.file_path"), "/data/", -1))
-  }
-
   /** Could any row of DV file `d` reference data file `path`? min/max
     * prune on `_file` (missing bounds → conservatively yes). */
   private def dvMayCover(d: DataFileMeta, path: String): Boolean =
     d.minValues.get("_file").forall(_ <= path) &&
       d.maxValues.get("_file").forall(path <= _)
 
-  /** Anti-join `df` — a parquet file-source scan over exactly `filesRead` —
-    * against the snapshot's position deletes that may reference those files
-    * (no-op when none can: the DV `_file` bounds vs the read file paths).
-    * Broadcasts the DV rows below [[TombstoneBroadcastRowCap]]. Every
-    * rewrite pass MUST read its input files through this (then commit via
-    * [[replaceFiles]], which drops exactly the rewritten files' DV rows). */
+  /** `df` — a parquet file-source scan over exactly `filesRead` — without
+    * the rows the snapshot's position deletes remove (no-op when no DV file
+    * can reference those files: the DV `_file` bounds vs the read file
+    * paths). Applied in the scan as a [[DeletionVectors]] bitmap filter.
+    * Every rewrite pass MUST read its input files through this (then commit
+    * via [[replaceFiles]], which drops exactly the rewritten files' DV rows). */
   def withPositionDeletes(df: DataFrame, filesRead: Seq[DataFileMeta],
       snapshotId: Option[Long] = None): DataFrame =
-    withPositionDeletesOf(metadata, df, filesRead, snapshotId)
-
-  private def withPositionDeletesOf(md: TableMetadata, df: DataFrame,
-      filesRead: Seq[DataFileMeta], snapshotId: Option[Long]): DataFrame = {
-    val dvs = posDeletesOf(md, snapshotId)
-    if (dvs.isEmpty || !filesRead.exists(f => dvs.exists(d => dvMayCover(d, f.path)))) df
-    else antiJoinPosDeletes(df, dvs)
-  }
+    applyPosDeletes(df, posDeletesOf(metadata, snapshotId), filesRead)
 
   /** `df` with its (file, row-position) columns materialized as
     * `_gdv_rel`/`_gdv_idx` — must sit directly above a file-source scan
     * (where `_metadata` resolves). */
   private def withPosCols(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    df.withColumn("_gdv_rel", relPathExpr)
+    df.withColumn("_gdv_rel", DeletionVectors.relPathColumn)
       .withColumn("_gdv_idx", col("_metadata.row_index"))
   }
 
-  private def antiJoinPosDeletes(df: DataFrame, dvs: Seq[DataFileMeta],
-      keepPosCols: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val dvDf = spark.read.schema(PosDeleteSchema).parquet(dvs.map(absPath): _*)
-      .withColumnRenamed("_file", "_gdv_file").withColumnRenamed("_pos", "_gdv_pos")
-      .distinct()
-    val right = if (dvs.map(_.rows).sum <= TombstoneBroadcastRowCap) broadcast(dvDf) else dvDf
-    val joined = withPosCols(df)
-      .join(right, col("_gdv_rel") === col("_gdv_file") &&
-        col("_gdv_idx") === col("_gdv_pos"), "left_anti")
-    if (keepPosCols) joined else joined.drop("_gdv_rel", "_gdv_idx")
+  /** `df` (directly above a file-source scan over `filesRead`) without the
+    * rows deleted by those of `dvs` that may reference `filesRead`: `dv_keep`
+    * over their per-file bitmaps, whatever the DV row count (Roaring
+    * containers hold dense runs in a few bytes per 64K positions).
+    * `keepPosCols` also materializes the surviving rows' `_gdv_rel`/`_gdv_idx`. */
+  private def applyPosDeletes(df: DataFrame, dvs: Seq[DataFileMeta],
+      filesRead: Seq[DataFileMeta], keepPosCols: Boolean = false): DataFrame = {
+    val hit = dvs.filter(d => filesRead.exists(f => dvMayCover(d, f.path)))
+    val kept = if (hit.isEmpty) df else df.filter(DeletionVectors.keep(spark, hit.map(absPath)))
+    if (keepPosCols) withPosCols(kept) else kept
   }
 
   /** Like [[withPositionDeletes]] but ALWAYS materializes the scanned rows'
@@ -499,24 +477,20 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * records changed target rows as deletion-vector entries). `df` must sit
     * directly above a file-source scan. */
   def withPositionDeletesKeepingPos(df: DataFrame, filesRead: Seq[DataFileMeta],
-      snapshotId: Option[Long] = None): DataFrame = {
-    val dvs = posDeletesOf(metadata, snapshotId)
-    if (dvs.isEmpty || !filesRead.exists(f => dvs.exists(d => dvMayCover(d, f.path))))
-      withPosCols(df)
-    else antiJoinPosDeletes(df, dvs, keepPosCols = true)
-  }
+      snapshotId: Option[Long] = None): DataFrame =
+    applyPosDeletes(df, posDeletesOf(metadata, snapshotId), filesRead, keepPosCols = true)
 
   /** Snapshot scan with position deletes applied via a SPLIT plan: files no
     * DV can reference scan untouched (at 100 TB the dominant branch — DVs
     * cover the trickle-deleted tail); possibly-covered files scan with
-    * (file, row-position) metadata and anti-join the DV rows. Catalyst
-    * pushes the query's filters into both branches' file indexes. */
+    * (file, row-position) metadata under the `dv_keep` bitmap filter.
+    * Catalyst pushes the query's filters into both branches' file indexes. */
   private def scanWithPosDeletesOf(md: TableMetadata, sch: StructType,
       planned: Seq[DataFileMeta], specs: Seq[PartitionSpec],
       snapshotId: Option[Long]): DataFrame = {
     // bucket-aware scan: when every planned file is provably bucket-pure and
     // stamped, the relation reports HashPartitioning(col, n) — attached on
-    // the plain branch only (the DV anti-join branch reads `_metadata`
+    // the plain branch only (the DV-filtered branch reads `_metadata`
     // columns and is union-destined, where the partitioning can't help)
     val bs = bucketSpecOf(md, sch, planned)
     def rel(fs: Seq[DataFileMeta], bucketed: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]) =
@@ -527,7 +501,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val (covered, plain) = planned.partition(f => dvs.exists(d => dvMayCover(d, f.path)))
     if (covered.isEmpty) rel(planned, bs)
     else {
-      val deleted = antiJoinPosDeletes(rel(covered, None), dvs)
+      val deleted = applyPosDeletes(rel(covered, None), dvs, covered)
       if (plain.isEmpty) deleted else rel(plain, None).unionByName(deleted)
     }
   }
@@ -626,11 +600,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     // positions are computed on the LIVE view (existing DVs and equality
     // tombstones applied), so re-running the same delete is a no-op commit
     // and "rows deleted" counts are logical, as in Delta/Iceberg
-    val dvs = posDeletesOf(md, None)
     val live = applyTombstonesOf(md,
-      if (dvs.isEmpty) withPosCols(raw)
-      else antiJoinPosDeletes(raw, dvs, keepPosCols = true),
-      None)
+      applyPosDeletes(raw, posDeletesOf(md, None), planned, keepPosCols = true), None)
     live.filter(predicate)
       .select(col("_gdv_rel").as("_file"), col("_gdv_idx").as("_pos"))
       .sortWithinPartitions("_file", "_pos") // tight per-DV-file _file bounds
@@ -681,11 +652,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     if (planned.isEmpty) return None
     val raw = org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
       spark, sch, root, planned, allSpecsOf(md, sch))
-    val dvs = posDeletesOf(md, None)
     val live = applyTombstonesOf(md,
-      if (dvs.isEmpty) withPosCols(raw)
-      else antiJoinPosDeletes(raw, dvs, keepPosCols = true),
-      None)
+      applyPosDeletes(raw, posDeletesOf(md, None), planned, keepPosCols = true), None)
     val hit = live.filter(coalesce(predicate, lit(false)))
     // ONE scan feeds both outputs: persist the matching rows (the MoR
     // niche is a trickle — small), then project positions and new images
@@ -731,42 +699,31 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   /** Rows of `files` whose (file, row-position) appears in the given
     * position-delete entries — the row images a delete-pos commit removed
     * (the changelog/CDC scan). Touches only the files the DV rows can
-    * reference (bounds prune on `_file`); semi-join broadcast below
-    * [[TombstoneBroadcastRowCap]]. */
+    * reference (bounds prune on `_file`); the negated `dv_keep` bitmap
+    * filter selects the rows. */
   def rowsAtPositions(sch: StructType, files: Seq[DataFileMeta],
       dvEntries: Seq[DataFileMeta]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val covered = files.filter(f => dvEntries.exists(d => dvMayCover(d, f.path)))
-    val scan = org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
+    org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
       spark, sch, root, covered, allPartitionSpecs)
-    val dvDf = spark.read.schema(PosDeleteSchema).parquet(dvEntries.map(absPath): _*)
-      .withColumnRenamed("_file", "_gdv_file").withColumnRenamed("_pos", "_gdv_pos")
-      .distinct()
-    val right = if (dvEntries.map(_.rows).sum <= TombstoneBroadcastRowCap) broadcast(dvDf) else dvDf
-    withPosCols(scan)
-      .join(right, col("_gdv_rel") === col("_gdv_file") &&
-        col("_gdv_idx") === col("_gdv_pos"), "left_semi")
-      .drop("_gdv_rel", "_gdv_idx")
+      .filter(!DeletionVectors.keep(spark, dvEntries.map(absPath)))
   }
 
   /** Deleted-row count per data-file path across a snapshot's DV files
-    * (duplicates across DV files count once) — one tiny aggregate over the
-    * DV rows; drives compaction's delete-pressure eligibility. Driver-side
-    * result is bounded by the number of COVERED files, not DV rows. */
+    * (duplicates across DV files count once): the cardinalities of the
+    * cached per-file bitmaps, no Spark job. Drives compaction's
+    * delete-pressure eligibility. */
   def posDeleteRowCounts(snapshotId: Option[Long] = None): Map[String, Long] = {
     val dvs = positionDeletes(snapshotId)
     if (dvs.isEmpty) Map.empty
-    else spark.read.schema(PosDeleteSchema).parquet(dvs.map(absPath): _*)
-      .distinct()
-      .groupBy("_file").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    else DeletionVectors.load(spark, dvs.map(absPath)).map { case (f, b) => f -> b.getLongCardinality }
   }
 
   /**
    * Compact the live position-delete (DV) files — the niche of Iceberg's
    * `rewrite_position_delete_files` — WITHOUT touching any data file.
    * Every MoR delete/update/merge commit adds its own small DV file, and a
-   * covered read anti-joins their UNION, so between delete-pressure
+   * covered read unions their bitmaps, so between delete-pressure
    * compactions the DV file count (and duplicate `(_file,_pos)` entries
    * from overlapping deletes) grows with the commit rate. One pass reads
    * the live DV rows, dedupes, and rewrites them globally sorted by
@@ -966,10 +923,10 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val md = metadata
     val sch = schemaOf(md)
     applyTombstonesOf(md,
-      withPositionDeletesOf(md,
+      applyPosDeletes(
         org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
           spark, sch, root, added, allSpecsOf(md, sch)),
-        added, Some(to)),
+        posDeletesOf(md, Some(to)), added),
       Some(to))
   }
 

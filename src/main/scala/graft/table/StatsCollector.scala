@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
  */
 object StatsCollector {
 
-  private lazy val footerPool: scala.concurrent.ExecutionContext =
+  private[table] lazy val footerPool: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(
         math.min(16, Runtime.getRuntime.availableProcessors()),

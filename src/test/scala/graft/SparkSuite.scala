@@ -3,15 +3,25 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession + helpers for all suites. */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
 
-  /** fresh temp dir for a test table */
-  def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** fresh temp dir for a test table; deleted in the suite's `afterAll` */
+  def tmpDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    tmpDirs.add(dir)
+    dir + "/t"
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
 
   /** multiset equality of two DataFrames */
   def assertSameRows(a: DataFrame, b: DataFrame, hint: String = ""): Unit = {

@@ -165,6 +165,31 @@ class GenericZorderSpec extends SparkSuite {
     assert(GraftTable.load(spark, root).currentSnapshot.get.summary("zdims") == "price")
   }
 
+  test("programmatic and SQL INCREMENTAL tag the same declared layout") {
+    val root = tmpDir("graft-gzdoors")
+    val t = GraftTable.create(spark, root, itemsDf(1).schema)
+    t.append(itemsDf(6000).repartition(4))
+    spark.sql(
+      s"ALTER TABLE graft.`$root` SET TBLPROPERTIES ('cluster-columns' = 'pk, d')")
+    // programmatic door, no explicit columns: the declared property applies
+    assert(Cluster.incremental(t).nonEmpty)
+    assert(t.currentSnapshot.get.summary("zdims") == "pk,d")
+    val viaApi = t.files()
+    def layoutTags(fs: Seq[graft.table.DataFileMeta]) = fs.map(_.commitUuid.split("-")(1)).toSet
+    // SQL door on fresh appends: the API-clustered files count as clustered
+    // under the same layout and stay put; only the new files rewrite
+    t.append(itemsDf(3000).repartition(2))
+    val r = spark.sql(s"OPTIMIZE graft.`$root` ZORDER INCREMENTAL").collect()
+    assert(r(0).getLong(1) > 0)
+    val after = t.files()
+    assert(viaApi.map(_.path).toSet.subsetOf(after.map(_.path).toSet),
+      "files the programmatic door clustered must not look stale to the SQL door")
+    assert(layoutTags(after) == layoutTags(viaApi) && layoutTags(viaApi).size == 1,
+      s"both doors must tag one layout: ${layoutTags(viaApi)} vs ${layoutTags(after)}")
+    // and the reverse: the programmatic door sees the SQL door's files as fresh
+    assert(Cluster.incremental(t).isEmpty)
+  }
+
   test("generic embeddings + z-key stay inside whole-stage codegen") {
     // spark.range input (a local Seq folds to LocalTableScan before codegen
     // is planned); every per-type embedding and the interleave must sit in

@@ -1,6 +1,15 @@
 package graft.table
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSuite
 import graft.ops.{Cluster, Compact, Expire, Merge}
@@ -11,12 +20,162 @@ import graft.run.Synth
  * deletes committed without rewriting data files, applied on every read
  * path, and cleared EXACTLY per rewritten file by every maintenance op.
  */
-class PosDeleteSpec extends SparkSuite {
+class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private def freshTable(n: Long, parts: Int = 8) = {
     val t = GraftTable.create(spark, tmpDir("graft-dv"), Synth.pageSchema)
     t.append(Synth.pages(spark, n, partitions = parts))
     t
+  }
+
+  /** deterministic, non-empty, disjoint row buckets */
+  private def bucket(k: Int) = pmod(xxhash64(col("url")), lit(7)) === k
+
+  /** The table's raw files with each row's DV entry `(_file, _pos)`. */
+  private def rawWithPos(t: GraftTable): DataFrame =
+    org.apache.spark.sql.graftshim.GraftRelation.dataFrame(spark, t.schema, t.root, t.files())
+      .withColumn("_file", DeletionVectors.relPathColumn)
+      .withColumn("_pos", col("_metadata.row_index"))
+
+  /** Commit one more DV file that repeats every live DV entry, plus the
+    * positions of `extra`'s rows twice — overlapping `(_file, _pos)` entries
+    * across and within DV files. */
+  private def commitOverlappingDvs(t: GraftTable, extra: org.apache.spark.sql.Column): Unit = {
+    val entries = rawWithPos(t).filter(extra).select("_file", "_pos")
+    val uuid = s"dv-${java.util.UUID.randomUUID}"
+    spark.read.schema(t.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
+      .unionByName(entries).unionByName(entries)
+      .write.parquet(s"${t.dataDir}/$uuid")
+    val metas = StatsCollector.collect(spark, t.PosDeleteSchema, t.root,
+      FileIO.listFiles(s"${t.dataDir}/$uuid", ".parquet"), uuid).filter(_.rows > 0)
+    t.commitFull("delete-pos") { parent =>
+      (parent.map(_.manifests).getOrElse(Seq.empty), parent.flatMap(_.deleteManifests),
+        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ t.writeManifest(metas)), Map.empty)
+    }
+  }
+
+  test("a DV-covered read filters in the scan: no Join, no Exchange on the DV side") {
+    val t = freshTable(2000)
+    val pre = t.read()
+    assert(t.deleteWherePositional(col("lang") === "en").nonEmpty)
+    val df = t.read()
+    assertSameRows(df, pre.filter(col("lang") =!= "en"), "bitmap-filtered read")
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"no DV join:\n$plan")
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, s"no DV exchange:\n$plan")
+    // the bitmap probe runs inside whole-stage codegen, right above the scan
+    val dvFilters = collect(plan) {
+      case w: WholeStageCodegenExec => w.child.collect {
+        case f: FilterExec if f.condition.exists(_.isInstanceOf[DvKeep]) &&
+          f.exists(_.isInstanceOf[FileSourceScanExec]) => f
+      }
+    }.flatten
+    assert(dvFilters.nonEmpty, s"dv_keep must be a codegen'd scan filter:\n$plan")
+  }
+
+  test("overlapping DV files repeating (_file, _pos) read like the distinct anti-join") {
+    val t = freshTable(3000)
+    val pre = t.read().localCheckpoint(true)
+    assert(t.deleteWherePositional(bucket(0)).nonEmpty)
+    commitOverlappingDvs(t, bucket(1))
+    assert(t.positionDeletes().size >= 2)
+    // the anti-join over distinct DV rows every read used before the bitmaps
+    val dvRows = spark.read.schema(t.PosDeleteSchema)
+      .parquet(t.positionDeletes().map(t.absPath): _*).distinct()
+    val antiJoined = rawWithPos(t).join(dvRows, Seq("_file", "_pos"), "left_anti")
+      .drop("_file", "_pos")
+    assertSameRows(t.read(), antiJoined, "bitmap read vs distinct anti-join")
+    assertSameRows(t.read(), pre.filter(!(bucket(0) || bucket(1))), "overlapping DVs")
+    // the interpreted path agrees with the codegen'd one
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try assertSameRows(t.read(), antiJoined, "interpreted dv_keep")
+    finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
+  test("a table dropped and recreated at the same root never sees the old bitmaps") {
+    val root = tmpDir("graft-dvre")
+    val t1 = GraftTable.create(spark, root, Synth.pageSchema)
+    t1.append(Synth.pages(spark, 1000, partitions = 4))
+    val all = t1.read().localCheckpoint(true)
+    assert(t1.deleteWherePositional(col("lang") === "en").nonEmpty)
+    assert(t1.read().count() == all.filter(col("lang") =!= "en").count()) // caches t1's bitmaps
+    FileIO.deleteRecursively(root)
+    val t2 = GraftTable.create(spark, root, Synth.pageSchema)
+    t2.append(Synth.pages(spark, 1000, partitions = 4))
+    assert(t2.deleteWherePositional(col("lang") === "de").nonEmpty)
+    assertSameRows(t2.read(), all.filter(col("lang") =!= "de"), "recreated table")
+    assert(t2.posDeleteRowCounts().values.sum == all.filter(col("lang") === "de").count())
+  }
+
+  test("DV bitmaps round-trip positions at and above 2^31") {
+    import spark.implicits._
+    val dir = tmpDir("graft-dvbig")
+    val big = Seq(0L, 7L, (1L << 31) - 1, 1L << 31, (1L << 31) + 5, (1L << 40) + 3, Long.MaxValue)
+    (big.map(p => ("data/a.parquet", p)) :+ (("data/b.parquet", 1L << 32)))
+      .toDF("_file", "_pos").coalesce(1).write.parquet(dir)
+    val file = FileIO.listFiles(dir, ".parquet").head
+    val bms = DeletionVectors.load(spark, Seq(file))
+    assert(bms("data/a.parquet").toArray.toSeq == big)
+    assert(bms("data/b.parquet").toArray.toSeq == Seq(1L << 32))
+    // the probe sees the same positions
+    val keep = DvKeep(BoundReference(0, StringType, nullable = false),
+      BoundReference(1, LongType, nullable = false), new DvSet(Seq(file), bms))
+    def kept(path: String, pos: Long) = keep.eval(InternalRow(UTF8String.fromString(path), pos))
+    assert(kept("file:/x/t/data/a.parquet", (1L << 31) + 5) == false)
+    assert(kept("file:/x/t/data/a.parquet", (1L << 31) + 6) == true)
+    assert(kept("file:/x/t/data/b.parquet", 1L << 32) == false)
+    assert(kept("file:/x/t/data/c.parquet", 1L << 32) == true)
+  }
+
+  test("dense DV runs above the old 4M-row join cap load as compact bitmaps") {
+    // one memory policy for every DV consumer: the per-file bitmaps, at any
+    // DV row count — Roaring run containers keep dense deletes small
+    val dir = tmpDir("graft-dvdense")
+    val n = 5L * 1000 * 1000
+    spark.range(n).select(lit("data/a.parquet").as("_file"), col("id").as("_pos"))
+      .coalesce(1).write.parquet(dir)
+    val bms = DeletionVectors.load(spark, FileIO.listFiles(dir, ".parquet"))
+    assert(bms("data/a.parquet").getLongCardinality == n)
+    assert(bms("data/a.parquet").serializedSizeInBytes() < 4096)
+  }
+
+  test("DV entries and the scan probe agree on roots and partitions that URL-encode") {
+    import spark.implicits._
+    val root = tmpDir("graft dv%root") + " b"
+    val keys = Seq("a b", "c%d", "e=f", "g/h", "i#j")
+    val df = (0 until 500).map(i => (keys(i % keys.size), i.toLong)).toDF("k", "v")
+    val t = GraftTable.create(spark, root, df.schema)
+    t.setPartitionSpec(Some("identity(k)"))
+    t.append(df.repartition(2))
+    val gone = col("v") % 3 === 0
+    assert(t.deleteWherePositional(gone).nonEmpty)
+    // the writer's `_file` values and the read probe's key derivation agree
+    assertSameRows(t.read(), df.filter(!gone), "encoded-path read")
+    // …and name the table's data files as compaction and the changelog key them
+    val counts = t.posDeleteRowCounts()
+    assert(counts.keySet.subsetOf(t.files().map(_.path).toSet), s"unmatched DV paths: ${counts.keySet}")
+    assert(counts.values.sum == df.filter(gone).count())
+    assertSameRows(t.rowsAtPositions(t.schema, t.files(), t.positionDeletes()),
+      df.filter(gone), "rows at the deleted positions")
+    Compact.run(t, targetBytes = 256L * 1024 * 1024, deleteRatioThreshold = 0.1)
+    assert(t.posDeleteRowCounts().isEmpty, "compaction clears every covered file's DV rows")
+    assertSameRows(t.read(), df.filter(!gone), "compacted read")
+  }
+
+  test("posDeleteRowCounts equals the distinct groupBy count over several DV files") {
+    val t = freshTable(3000)
+    (0 to 2).foreach(k => assert(t.deleteWherePositional(bucket(k)).nonEmpty))
+    commitOverlappingDvs(t, bucket(3))
+    assert(t.positionDeletes().size >= 4)
+    val want = spark.read.schema(t.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
+      .distinct().groupBy("_file").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(want.values.sum > 0)
+    assert(t.posDeleteRowCounts() == want)
   }
 
   test("positional delete hides matching rows without touching data files") {
@@ -175,9 +334,7 @@ class PosDeleteSpec extends SparkSuite {
   test("rewriteDeleteFiles merges DV files, dedupes, stays row-preserving") {
     val t = freshTable(4000)
     // several MoR commits, each its own DV file(s) — the per-commit DV
-    // accumulation this op exists to merge (hash buckets: deterministic,
-    // non-empty, and disjoint on the live view)
-    def bucket(k: Int) = pmod(xxhash64(col("url")), lit(7)) === k
+    // accumulation this op exists to merge
     assert(t.deleteWherePositional(bucket(0)).nonEmpty)
     assert(t.deleteWherePositional(bucket(1)).nonEmpty)
     assert(t.deleteWherePositional(bucket(2)).nonEmpty)
