@@ -1,31 +1,51 @@
 package graft.ops
 
-import java.util.concurrent.Executors
+import java.nio.file.Paths
+import java.util.UUID
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.rewrite.{ParquetRewriter, RewriteOptions}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{InputFile, LocalOutputFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport,
+  SparkToParquetSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.run.{Lineage, Maintenance}
-import graft.table.{DataFileMeta, FileIO, GraftTable, Snapshot}
+import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot, StatsCollector}
 
 /**
- * Bin-packing small-file compaction: groups undersized data files and
- * rewrites each group as one right-sized file, shuffle-free (each group is a
- * single read→write task; groups run as concurrent Spark jobs so a cluster
- * keeps all executors busy — the re-imagining of the reference's
- * partition-parallel row transfer, `job/JobUtil.java:581-607`, where one
- * HBase region ≈ one task; here one file group ≈ one task).
+ * Bin-packing small-file compaction: groups undersized data files into
+ * bins of ~targetBytes and replaces each bin with one file, shuffle-free.
  *
- * Resumable: every group writes to a staging directory keyed by
- * (runId, group index); a rerun after a crash reuses any group directory
+ * A bin whose rows need no change is COPIED: its files' parquet row groups
+ * are concatenated without decoding (parquet-hadoop's `ParquetRewriter`,
+ * page indexes and bloom filters included), and all such bins run as one
+ * Spark job with one task per bin. That needs no live equality tombstones,
+ * no DV rows in the bin's files, all files in one partition dir of the
+ * active spec, and every input footer equal to what [[rewriteBin]] would
+ * write today (parquet schema, Spark row schema with field ids, codec,
+ * bloom columns) — so the copy equals today's rewrite except for row-group
+ * boundaries and row order. Every other bin is RE-ENCODED by [[rewriteBin]]:
+ * read, apply deletes, write as one file in one task (the re-imagining of
+ * the reference's partition-parallel row transfer,
+ * `job/JobUtil.java:581-607`: one HBase region ≈ one task, here one bin ≈
+ * one task), those bins running as concurrent Spark jobs via
+ * [[GroupedRewrite]].
+ *
+ * Resumable: every bin writes to a staging directory keyed by
+ * (runId, bin index); a rerun after a crash reuses any bin directory
  * that completed (`_SUCCESS`) and re-executes the rest, then commits once
  * (checkpoint-resume per the north rule).
  */
 object Compact {
 
-  final case class Plan(snapshotId: Long, groups: Seq[Seq[DataFileMeta]])
+  /** `tombstonesLive`: the snapshot has live equality tombstones;
+    * `dvFiles`: the planned files that have DV rows. */
+  final case class Plan(snapshotId: Long, groups: Seq[Seq[DataFileMeta]],
+      tombstonesLive: Boolean, dvFiles: Set[String])
 
   /**
    * Deterministic plan against the current snapshot: files smaller than
@@ -54,7 +74,7 @@ object Compact {
     // clears it, so compaction is what keeps DV accumulation bounded at
     // 100 TB (Iceberg's delete-file-threshold strategy). Counts are the
     // cached DV bitmaps' cardinalities; empty map when the snapshot has none.
-    val dvCounts = table.posDeleteRowCounts()
+    val dvCounts = table.posDeleteRowCounts(Some(snap.id))
     val pressured: Set[String] = all.filter { f =>
       val d = dvCounts.getOrElse(f.path, 0L)
       d > 0 && f.rows > 0 && d.toDouble / f.rows >= deleteRatioThreshold
@@ -67,7 +87,7 @@ object Compact {
     // can materialize-and-clear the tombstone set (see run()); without
     // tombstones a one-file group has nothing to gain and is dropped —
     // unless it is delete-pressured (the rewrite clears its DV rows)
-    val tombstonesLive = table.tombstones().nonEmpty
+    val tombstonesLive = table.tombstones(Some(snap.id)).nonEmpty
     if (small.isEmpty || (small.size < 2 && !tombstonesLive && pressured.isEmpty)) return None
     val sortCol = orderBy.getOrElse(table.schema.fields.head.name)
     val dt = table.schema.fields.find(_.name == sortCol).map(_.dataType)
@@ -105,7 +125,9 @@ object Compact {
     }
     val useful = (if (tombstonesLive) groups
       else groups.filter(g => g.size >= 2 || g.exists(f => pressured.contains(f.path)))).toSeq
-    if (useful.isEmpty) None else Some(Plan(snap.id, useful))
+    if (useful.isEmpty) None
+    else Some(Plan(snap.id, useful, tombstonesLive,
+      useful.flatten.map(_.path).filter(p => dvCounts.getOrElse(p, 0L) > 0).toSet))
   }
 
   /** Execute (or resume) a compaction run. Returns the committed snapshot,
@@ -132,53 +154,26 @@ object Compact {
     log = Maintenance.markDone(table, log, planStep)
 
     val schema = table.schema
-    // each group rewrite is ONE task (coalesce(1)); the default pool
-    // (jobParallelism=0) therefore sizes to the cluster's task slots so a
-    // many-small-groups plan (e.g. one group per bucket dir) keeps every
-    // core busy — concurrent writers stay ≤ defaultParallelism, the same
-    // pressure as any cluster-wide write job
-    val wanted =
-      if (jobParallelism > 0) jobParallelism
-      else math.max(8, spark.sparkContext.defaultParallelism)
-    val pool = Executors.newFixedThreadPool(math.min(wanted, math.max(1, p.groups.size)),
-      r => { val t = new Thread(r, "graft-compact"); t.setDaemon(true); t })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val results: Seq[Future[(Seq[DataFileMeta], Seq[DataFileMeta])]] =
-      p.groups.zipWithIndex.map { case (group, i) =>
-        Future {
-          val commitUuid = s"compact-$runId-g$i"
-          val dir = s"${table.dataDir}/$commitUuid"
-          val done = log.doneSteps.contains(s"group$i") && FileIO.exists(s"$dir/_SUCCESS")
-          // writeDataFiles already collects the fresh footers — reuse them
-          // (the old shape wrote, discarded the metas, then re-read every
-          // footer; only the RESUME branch still needs the re-read)
-          val metas = if (!done) {
-            FileIO.deleteRecursively(dir) // partial attempt from a crashed run
-            spark.sparkContext.setJobDescription(s"compact $runId group $i (${group.size} files)")
-            // apply live MoR deletes to the rewritten rows: equality
-            // tombstones stay live in the commit (other files may still
-            // hold tombstoned keys); POSITION deletes of exactly these
-            // files are applied here and cleared by replaceFiles
-            val df = table.applyTombstones(table.withPositionDeletes(
-              spark.read.schema(schema).parquet(group.map(table.absPath): _*), group))
-            try table.writeDataFiles(df.coalesce(1), commitUuid)
-            finally spark.sparkContext.setJobDescription(null) // pool threads are reused across groups
-          } else graft.table.StatsCollector.collect(
-            spark, schema, table.root, FileIO.listFilesRecursively(dir, ".parquet"), commitUuid)
-          synchronized { log = Maintenance.markDone(table, log, s"group$i") }
-          (metas, group)
-        }
-      }
-    val finished =
-      try Await.result(Future.sequence(results), Duration.Inf)
-      catch { case e: Throwable =>
-        // fail fast but do NOT leave sibling group jobs writing into staging
-        // dirs a same-runId retry would deleteRecursively from under them
-        pool.shutdownNow()
-        pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS)
-        throw e
-      }
-    pool.shutdown()
+    def dirOf(i: Int) = s"${table.dataDir}/${commitUuid(runId, i)}"
+    val (resumed, pending) = p.groups.zipWithIndex.map(_.swap).partition { case (i, _) =>
+      log.doneSteps.contains(s"group$i") && FileIO.exists(s"${dirOf(i)}/_SUCCESS")
+    }
+    // a completed group of a crashed run: reuse its staged output
+    val reused = resumed.map { case (i, group) =>
+      (StatsCollector.collect(spark, schema, table.root,
+        FileIO.listFilesRecursively(dirOf(i), ".parquet"), commitUuid(runId, i)), group)
+    }
+    val copied = copyBins(table, runId, p, pending)
+    copied.keys.toSeq.sorted.foreach(i => log = Maintenance.markDone(table, log, s"group$i"))
+    val rewritten = GroupedRewrite.run(spark, "graft-compact", jobParallelism,
+      pending.filterNot { case (i, _) => copied.contains(i) }, _ => 1L) { (i, group) =>
+      val metas = rewriteBin(table, group, commitUuid(runId, i))
+      synchronized { log = Maintenance.markDone(table, log, s"group$i") }
+      metas
+    }
+    val finished = reused ++
+      pending.collect { case (i, group) if copied.contains(i) => (Seq(copied(i)), group) } ++
+      rewritten
 
     // drop all-empty outputs: a group whose every row was tombstoned
     // writes a 0-row, bound-less parquet file — unprunable manifest
@@ -195,7 +190,7 @@ object Compact {
     // Sound against races: replaceFiles requires the parent to still BE the
     // planned snapshot, so a tombstone added after planning fails the
     // commit instead of being silently cleared.
-    val clearDeletes = table.tombstones(Some(p.snapshotId)).nonEmpty &&
+    val clearDeletes = p.tombstonesLive &&
       removed == table.files(Some(p.snapshotId)).map(_.path).toSet
     val snap = table.replaceFiles(removed, added, "compact",
       Map("run-id" -> runId, "groups" -> p.groups.size.toString),
@@ -204,5 +199,130 @@ object Compact {
     Lineage.record(spark, table, runId, snap.id, "compact", added, sourcesPerOutput,
       (System.nanoTime() - t0) / 1000000)
     Some(snap)
+  }
+
+  private def commitUuid(runId: String, group: Int) = s"compact-$runId-g$group"
+
+  /** Spark path for one bin: read → apply live MoR deletes → write as one
+    * file (`coalesce(1)`: one read→write task, no shuffle). */
+  private[graft] def rewriteBin(table: GraftTable, group: Seq[DataFileMeta],
+      commitUuid: String): Seq[DataFileMeta] = {
+    val spark = table.spark
+    FileIO.deleteRecursively(s"${table.dataDir}/$commitUuid") // partial attempt from a crashed run
+    spark.sparkContext.setJobDescription(s"compact group $commitUuid (${group.size} files)")
+    // equality tombstones stay live in the commit (other files may still
+    // hold tombstoned keys); POSITION deletes of exactly these files are
+    // applied here and cleared by replaceFiles
+    val df = table.applyTombstones(table.withPositionDeletes(
+      spark.read.schema(table.schema).parquet(group.map(table.absPath): _*), group))
+    try table.writeDataFiles(df.coalesce(1), commitUuid)
+    finally spark.sparkContext.setJobDescription(null) // pool threads are reused across groups
+  }
+
+  /** What a copied file must look like to equal [[rewriteBin]]'s output,
+    * computed once on the driver and checked against every input footer by
+    * the copy task. */
+  private final case class CopyExpect(
+      root: String,
+      schema: StructType,
+      rowSchema: StructType,
+      messageType: String,
+      codec: String,
+      bloomColumns: Set[String],
+      specs: Seq[PartitionSpec])
+
+  private final case class CopyTask(group: Int, inputs: Seq[String], dir: String,
+      subPath: String, commitUuid: String)
+
+  /** Copy every bin of `pending` whose rows need no change — no live
+    * equality tombstones, no DV rows in its files, all files in one
+    * partition dir of the active spec, as planned in `plan` — by
+    * concatenating its files' parquet row groups: ONE Spark job, one task
+    * per bin, no decoding. Each task also checks its inputs' footers against
+    * [[rewriteBin]]'s output schema and layout, and hands a mismatching bin
+    * back. Returns the copied bins' output metas by group index; bins left
+    * out take the Spark path. */
+  private[graft] def copyBins(table: GraftTable, runId: String, plan: Plan,
+      pending: Seq[(Int, Seq[DataFileMeta])]): Map[Int, DataFileMeta] = {
+    if (pending.isEmpty || plan.tombstonesLive) return Map.empty
+    val specs = table.partitionSpecs
+    val tasks = pending.flatMap { case (i, group) =>
+      val subs = group.map(f => subPathOf(specs, f)).distinct
+      if (subs.size != 1 || subs.head.isEmpty || group.exists(f => plan.dvFiles.contains(f.path))) None
+      else Some(CopyTask(i, group.map(table.absPath), s"${table.dataDir}/${commitUuid(runId, i)}",
+        subs.head.get, commitUuid(runId, i)))
+    }
+    if (tasks.isEmpty) return Map.empty
+    val spark = table.spark
+    val sqlConf = spark.sessionState.conf
+    val schema = table.schema
+    // the exact frame rewriteBin writes, for its row schema (no job)
+    val rowSchema = table.writeSchema(spark.read.schema(schema).parquet(tasks.head.inputs.head))
+    val micros = sqlConf.clone()
+    micros.setConfString("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val expect = CopyExpect(table.root, schema, rowSchema,
+      new SparkToParquetSchemaConverter(micros).convert(rowSchema).toString,
+      new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName,
+      table.bloomColumns.toSet, specs)
+    tasks.foreach(t => FileIO.deleteRecursively(t.dir)) // partial attempt from a crashed run
+    spark.sparkContext.setJobDescription(s"compact $runId copy ${tasks.size} bins")
+    val results =
+      try spark.sparkContext.parallelize(tasks, tasks.size).map(copyBin(expect, _)).collect()
+      finally spark.sparkContext.setJobDescription(null)
+    tasks.zip(results).collect { case (t, Some(meta)) => t.group -> meta }.toMap
+  }
+
+  /** The partition sub-path of `f` inside its commit dir (`""` when
+    * unpartitioned) when it is laid out by exactly the active `specs`. */
+  private def subPathOf(specs: Seq[PartitionSpec], f: DataFileMeta): Option[String] = {
+    val prefix = s"data/${f.commitUuid}/"
+    if (!f.path.startsWith(prefix)) return None
+    val dirs = f.path.substring(prefix.length).split('/').dropRight(1).toSeq
+    if (dirs.map(_.takeWhile(_ != '=')) == specs.map(_.name) && dirs.forall(_.contains('=')))
+      Some(dirs.map(_ + "/").mkString)
+    else None
+  }
+
+  /** Executor side of [[copyBins]]: concatenate one bin's row groups into a
+    * new file, or None when an input footer differs from `expect`. */
+  private def copyBin(expect: CopyExpect, task: CopyTask): Option[DataFileMeta] = {
+    import scala.jdk.CollectionConverters._
+    val matches = task.inputs.forall { in =>
+      val reader = StatsCollector.openReader(in)
+      try {
+        val footer = reader.getFooter
+        val meta = footer.getFileMetaData
+        val rowMeta = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        meta.getSchema.toString == expect.messageType &&
+          rowMeta.exists(j => DataType.fromJson(j) == expect.rowSchema) &&
+          footer.getBlocks.asScala.forall(_.getColumns.asScala.forall { c =>
+            c.getCodec.name == expect.codec &&
+              (c.getBloomFilterOffset >= 0) == expect.bloomColumns.contains(c.getPath.toDotString)
+          })
+      } finally reader.close()
+    }
+    if (!matches) return None
+    val codec = CompressionCodecName.valueOf(expect.codec)
+    // java.nio's normal form, like FileIO listings: a table root given as
+    // `/t/` or `/a//t` must still yield a `data/…` meta path
+    val outDir = Paths.get(task.dir, task.subPath)
+    FileIO.mkdirs(outDir.toString)
+    // one name per bin, whichever attempt writes it: each attempt writes a
+    // private temp file (not `.parquet`, so never listed as data) and
+    // renames it atomically onto the name, so the bin dir never holds a
+    // partial file or a second data file from a failed or speculative attempt
+    val out = GraftTable.bucketStamped(expect.specs,
+      outDir.resolve(s"part-00000-${task.commitUuid}.c000${codec.getExtension}.parquet").toString)
+    val tmp = s"$out.${UUID.randomUUID}.tmp"
+    // written through java.nio, like FileIO: Hadoop's local FS forks a
+    // `chmod` per created file when its native library is absent
+    val conf = StatsCollector.hadoopConf
+    val rewriter = new ParquetRewriter(new RewriteOptions.Builder(new HadoopParquetConfiguration(conf),
+      task.inputs.map(p => HadoopInputFile.fromPath(new Path(p), conf): InputFile).asJava,
+      new LocalOutputFile(Paths.get(tmp))).build())
+    try rewriter.processBlocks() finally rewriter.close()
+    FileIO.rename(tmp, out)
+    FileIO.writeString(s"${task.dir}/_SUCCESS", "")
+    Some(StatsCollector.readOne(expect.schema, expect.root, out, task.commitUuid))
   }
 }

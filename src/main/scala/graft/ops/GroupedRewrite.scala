@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
 import graft.table.DataFileMeta
 
 /**
- * Shared orchestration for grouped maintenance rewrites (Cluster, Rebucket):
+ * Shared orchestration for grouped maintenance rewrites (Cluster, Rebucket,
+ * and the bins Compact cannot copy):
  * run `rewriteGroup` over every (index, files) group, concurrently when
  * there are several.
  *
@@ -38,6 +39,7 @@ private[ops] object GroupedRewrite {
       widthOf: Seq[DataFileMeta] => Long)(
       rewriteGroup: (Int, Seq[DataFileMeta]) => Seq[DataFileMeta])
       : Seq[(Seq[DataFileMeta], Seq[DataFileMeta])] = {
+    if (groups.isEmpty) return Seq.empty
     if (groups.size == 1)
       // inline on the caller thread — clear the group's job description
       // afterwards or it leaks onto every later job of the session

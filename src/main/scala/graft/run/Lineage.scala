@@ -78,7 +78,7 @@ object Lineage {
     val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(lineageParquetType)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(file))
-      .withConf(new org.apache.hadoop.conf.Configuration())
+      .withConf(spark.sparkContext.hadoopConfiguration)
       .withType(lineageParquetType)
       .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()

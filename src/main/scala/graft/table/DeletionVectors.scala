@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -107,7 +108,9 @@ object DeletionVectors {
     * graft) are skipped. */
   private def readFile(conf: Configuration, absPath: String): Bitmaps = {
     val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(absPath), conf))
+    // explicit options: `open(file)` alone builds a fresh Configuration per file
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(absPath), conf),
+      HadoopReadOptions.builder(conf).build())
     try {
       val meta = reader.getFooter.getFileMetaData
       val schema = meta.getSchema

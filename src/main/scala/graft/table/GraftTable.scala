@@ -932,28 +932,13 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   // ---- writes --------------------------------------------------------------
 
-  /**
-   * Write `df` as new data files under a fresh commit directory and collect
-   * their footer stats. Does NOT commit — callers build the snapshot.
-   * Partitioning/file count is the caller's responsibility (e.g.
-   * `repartitionByRange` before calling).
-   */
-  def writeDataFiles(df: DataFrame, commitUuid: String = UUID.randomUUID.toString,
-      maxRecordsPerFile: Long = 0L): Seq[DataFileMeta] = {
-    val dir = s"$dataDir/$commitUuid"
-    // INT96 (Spark's legacy parquet timestamp) carries no min/max stats;
-    // micros are required for warc_ts pruning bounds. Set on the FRAME'S
-    // session, not the table handle's: a streaming micro-batch executes
-    // under MicroBatchExecution's cloned session, whose SQLConf snapshot
-    // never sees a conf set on the original — sink-written files would
-    // silently lose every timestamp bound
-    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+  /** `df` as [[writeDataFiles]] lays it out: columns in schema order,
+    * each re-aliased with its table field's metadata. */
+  private def writeProjection(sch: StructType, df: DataFrame): DataFrame = {
     // select in schema order so files are column-identical across commits;
     // re-aliasing with the table field's METADATA stamps the stable parquet
     // field id onto every written column (fieldId.write.enabled is on by
     // default), which is what rename/drop evolution resolves by later
-    val md = metadata // one read: schema + partition specs derive from it
-    val sch = schemaOf(md)
     val cols = sch.fields.map { f =>
       // NESTED field ids live in the column's TYPE (StructField metadata
       // inside the struct), which comes from the incoming frame, not the
@@ -971,7 +956,45 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       }
       c.as(f.name, f.metadata)
     }.toSeq
-    val selected = df.select(cols: _*)
+    df.select(cols: _*)
+  }
+
+  /** The Spark row schema [[writeDataFiles]] would write for `df` now — the
+    * `org.apache.spark.sql.parquet.row.metadata` of its files. Analysis
+    * only, no job. */
+  private[graft] def writeSchema(df: DataFrame): StructType = writeProjection(schema, df).schema
+
+  /** Columns the `bloom-columns` property asks parquet bloom filters for,
+    * in schema spelling. */
+  private[graft] def bloomColumns: Seq[String] = {
+    val md = metadata
+    bloomColumnsOf(md, schemaOf(md))
+  }
+
+  private def bloomColumnsOf(md: TableMetadata, sch: StructType): Seq[String] =
+    md.properties.get(GraftTable.BloomColumnsProp).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+      .flatMap(c => sch.fieldNames.find(_.equalsIgnoreCase(c))) // schema spelling
+
+  /**
+   * Write `df` as new data files under a fresh commit directory and collect
+   * their footer stats. Does NOT commit — callers build the snapshot.
+   * Partitioning/file count is the caller's responsibility (e.g.
+   * `repartitionByRange` before calling).
+   */
+  def writeDataFiles(df: DataFrame, commitUuid: String = UUID.randomUUID.toString,
+      maxRecordsPerFile: Long = 0L): Seq[DataFileMeta] = {
+    val dir = s"$dataDir/$commitUuid"
+    // INT96 (Spark's legacy parquet timestamp) carries no min/max stats;
+    // micros are required for warc_ts pruning bounds. Set on the FRAME'S
+    // session, not the table handle's: a streaming micro-batch executes
+    // under MicroBatchExecution's cloned session, whose SQLConf snapshot
+    // never sees a conf set on the original — sink-written files would
+    // silently lose every timestamp bound
+    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val md = metadata // one read: schema + partition specs derive from it
+    val sch = schemaOf(md)
+    val selected = writeProjection(sch, df)
     // CHECK constraints ride the write pass itself: one codegen'd filter
     // whose assert_true throws (with the constraint name) on the first
     // violating row — zero extra scans at any scale. SQL semantics: a NULL
@@ -1002,10 +1025,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     // overwhelming majority of url point queries. Names not (or no
     // longer, after a rename) in the schema are skipped silently — bloom
     // is an optimization, never a correctness dependency.
-    val bloomCols = md.properties.get(GraftTable.BloomColumnsProp).toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .flatMap(c => sch.fieldNames.find(_.equalsIgnoreCase(c))) // schema spelling
-    val withBloom = bloomCols.foldLeft(writer)((w, c) =>
+    val withBloom = bloomColumnsOf(md, sch).foldLeft(writer)((w, c) =>
       w.option(s"parquet.bloom.filter.enabled#$c", "true"))
     // roll to a new file every N records WITHIN a task: sorted partition
     // runs split into right-sized files without extra partitions (order and
@@ -1015,43 +1035,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       else withBloom
     (if (specs.isEmpty) withRoll else withRoll.partitionBy(specs.map(_.name): _*))
       .mode("errorifexists").parquet(dir)
-    val written = stampBucketIds(specs, FileIO.listFilesRecursively(dir, ".parquet"))
+    val written = GraftTable.stampBucketIds(specs, FileIO.listFilesRecursively(dir, ".parquet"))
     StatsCollector.collect(spark, sch, root, written, commitUuid)
-  }
-
-  /** Stamp Spark's bucket-id file-name suffix (`part-…_00007.snappy.parquet`)
-    * onto freshly written files of a `bucket(n, col)`-partitioned table. The
-    * id is the file's OWN partition-dir value — `partitionBy` above grouped
-    * rows by the transform, so every file is bucket-pure by construction —
-    * and the suffix is spelled via Spark's own `BucketingUtils` formatter so
-    * write-side stamp and read-side parse can never drift. The stamp is what
-    * lets [[read]] attach a `BucketSpec` ([[bucketSpecOf]]): the scan then
-    * reports `HashPartitioning(col, n)` and joins/aggregations on the bucket
-    * column skip their shuffle entirely. Renames happen pre-commit inside the
-    * fresh commit dir — no reader can ever hold the unstamped name. */
-  private def stampBucketIds(specs: Seq[PartitionSpec], absPaths: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.graftshim.GraftRelation
-    val bucketSpecs = specs.filter(_.transform == "bucket")
-    if (bucketSpecs.size != 1) return absPaths
-    val sp = bucketSpecs.head
-    absPaths.map { p =>
-      val slash = p.lastIndexOf('/')
-      val name = p.substring(slash + 1)
-      sp.dirValue(p).flatMap(v => scala.util.Try(v.toInt).toOption) match {
-        case Some(b) if GraftRelation.bucketIdOf(name).isEmpty =>
-          val dot = name.indexOf('.')
-          val stamped =
-            if (dot < 0) name + GraftRelation.bucketIdSuffix(b)
-            else name.substring(0, dot) + GraftRelation.bucketIdSuffix(b) + name.substring(dot)
-          // paranoia: only keep a stamp Spark parses back to the same id
-          if (GraftRelation.bucketIdOf(stamped).contains(b)) {
-            val to = p.substring(0, slash + 1) + stamped
-            FileIO.rename(p, to)
-            to
-          } else p
-        case _ => p // pre-stamped or un-bucketed dir: leave as written
-      }
-    }
   }
 
   /** Append-only commit: parent manifests + one new manifest.
@@ -1921,6 +1906,46 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 }
 
 object GraftTable {
+
+  /** Stamp Spark's bucket-id file-name suffix (`part-…_00007.snappy.parquet`)
+    * onto freshly written files of a `bucket(n, col)`-partitioned table. The
+    * id is the file's OWN partition-dir value — `writeDataFiles`'
+    * `partitionBy` grouped rows by the transform (and a compaction copy
+    * concatenates files of one such dir), so every file is bucket-pure by
+    * construction — and the suffix is spelled via Spark's own `BucketingUtils` formatter so
+    * write-side stamp and read-side parse can never drift. The stamp is what
+    * lets [[read]] attach a `BucketSpec` ([[bucketSpecOf]]): the scan then
+    * reports `HashPartitioning(col, n)` and joins/aggregations on the bucket
+    * column skip their shuffle entirely. Renames happen pre-commit inside the
+    * fresh commit dir — no reader can ever hold the unstamped name. */
+  private[graft] def stampBucketIds(specs: Seq[PartitionSpec], absPaths: Seq[String]): Seq[String] =
+    absPaths.map { p =>
+      val to = bucketStamped(specs, p)
+      if (to != p) FileIO.rename(p, to)
+      to
+    }
+
+  /** `absPath` with [[stampBucketIds]]' stamp applied to its name (no
+    * rename) — unchanged when the table is not bucket-partitioned or the
+    * name is already stamped. */
+  private[graft] def bucketStamped(specs: Seq[PartitionSpec], absPath: String): String = {
+    import org.apache.spark.sql.graftshim.GraftRelation
+    val bucketSpecs = specs.filter(_.transform == "bucket")
+    if (bucketSpecs.size != 1) return absPath
+    val slash = absPath.lastIndexOf('/')
+    val name = absPath.substring(slash + 1)
+    bucketSpecs.head.dirValue(absPath).flatMap(v => scala.util.Try(v.toInt).toOption) match {
+      case Some(b) if GraftRelation.bucketIdOf(name).isEmpty =>
+        val dot = name.indexOf('.')
+        val stamped =
+          if (dot < 0) name + GraftRelation.bucketIdSuffix(b)
+          else name.substring(0, dot) + GraftRelation.bucketIdSuffix(b) + name.substring(dot)
+        // paranoia: only keep a stamp Spark parses back to the same id
+        if (GraftRelation.bucketIdOf(stamped).contains(b)) absPath.substring(0, slash + 1) + stamped
+        else absPath
+      case _ => absPath // pre-stamped or un-bucketed dir: leave as written
+    }
+  }
 
   /** Parquet's native field-id key in StructField metadata — the PUBLIC
     * Spark mechanism (`spark.sql.parquet.fieldId.{read,write}.enabled`)

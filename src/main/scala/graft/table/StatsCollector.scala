@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -59,11 +60,19 @@ object StatsCollector {
     }
   }
 
+  /** One Hadoop configuration per JVM (driver or executor) for footer
+    * reads: building one re-parses `core-default.xml`. */
+  private[graft] lazy val hadoopConf: Configuration = new Configuration()
+
+  /** A reader of `absPath` on the per-JVM configuration — `open(file)`
+    * without options would build a fresh `Configuration` per file. */
+  private[graft] def openReader(absPath: String): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(new Path(absPath), hadoopConf),
+      HadoopReadOptions.builder(hadoopConf).build())
+
   /** Footer stats for one file. Runs on driver or executor. */
   def readOne(schema: StructType, root: String, absPath: String, commitUuid: String): DataFileMeta = {
-    val conf = new Configuration()
-    val in = HadoopInputFile.fromPath(new Path(absPath), conf)
-    val reader = ParquetFileReader.open(in)
+    val reader = openReader(absPath)
     try {
       val footer = reader.getFooter
       import scala.jdk.CollectionConverters._
@@ -104,8 +113,12 @@ object StatsCollector {
     } finally reader.close()
   }
 
+  /** `absPath` relative to `root`, both compared in java.nio's normal form
+    * (no trailing or doubled `/`) — the form [[FileIO]] listings return —
+    * so a root given as `/t/` or `/a//t` still yields `data/…`. */
   def relativize(root: String, absPath: String): String = {
-    val r = if (root.endsWith("/")) root else root + "/"
-    if (absPath.startsWith(r)) absPath.substring(r.length) else absPath
+    val r = java.nio.file.Paths.get(root).toString.stripSuffix("/") + "/"
+    val a = java.nio.file.Paths.get(absPath).toString
+    if (a.startsWith(r)) a.substring(r.length) else absPath
   }
 }

@@ -23,6 +23,18 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     try super.afterAll()
     finally tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
 
+  /** Parquet footer of a local data file. */
+  def footer(path: String): org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    org.apache.parquet.hadoop.ParquetFileReader.readFooter(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(new java.io.File(path).toURI))
+
+  /** Per row group of a data file: leaf column path → has a bloom filter. */
+  def bloomFlags(path: String): Seq[Map[String, Boolean]] = {
+    import scala.jdk.CollectionConverters._
+    footer(path).getBlocks.asScala.toSeq.map(_.getColumns.asScala
+      .map(c => c.getPath.toDotString -> (c.getBloomFilterOffset >= 0)).toMap)
+  }
+
   /** multiset equality of two DataFrames */
   def assertSameRows(a: DataFrame, b: DataFrame, hint: String = ""): Unit = {
     val extraA = a.exceptAll(b).count()

@@ -117,13 +117,8 @@ class TableSpec extends SparkSuite {
     t.append(Synth.pages(spark, 2000, partitions = 4))
     // every written file carries a bloom filter for url (and none for the
     // skipped unknown name) — read the footer column metadata directly
-    val conf = spark.sparkContext.hadoopConfiguration
     for (f <- t.files()) {
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        conf, new org.apache.hadoop.fs.Path(new java.io.File(t.absPath(f)).toURI))
-      import scala.jdk.CollectionConverters._
-      val cols = footer.getBlocks.asScala.head.getColumns.asScala
-        .map(c => c.getPath.toDotString -> (c.getBloomFilterOffset >= 0)).toMap
+      val cols = bloomFlags(t.absPath(f)).head
       assert(cols("url"), s"expected a bloom filter on url in ${f.path}")
       assert(!cols("lang"), "non-bloom columns must not pay the bloom size cost")
     }
