@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.functions.ZOrder
 import graft.run.{Lineage, Maintenance, Synth}
-import graft.table.{DataFileMeta, FileIO, GraftTable, Snapshot}
+import graft.table.{DataFileMeta, FileIO, GraftTable, Snapshot, TableState}
 
 /**
  * Z-order clustering rewrite: sorts the table by a 64-bit Morton key over
@@ -153,25 +153,42 @@ object Cluster {
       dims: ZDims = ZDims(),
       targetFileBytes: Long = 128L * 1024 * 1024,
       runId: String = java.util.UUID.randomUUID.toString,
-      saltThresholdRows: Long = 2000000L,
-      nSalts: Int = 16,
+      saltThresholdRows: Long = DefaultSaltThresholdRows,
+      nSalts: Int = DefaultSalts,
       onlyFiles: Option[Seq[DataFileMeta]] = None,
-      jobParallelism: Int = 0): Option[Snapshot] = {
+      jobParallelism: Int = 0): Option[Snapshot] =
+    rewrite(table.state, dims, targetFileBytes, runId, saltThresholdRows, nSalts, onlyFiles,
+      jobParallelism)
+
+  private val DefaultSaltThresholdRows = 2000000L
+  private val DefaultSalts = 16
+
+  /** [[zorderRewrite]] planned and committed against the pinned state `st`. */
+  private def rewrite(
+      st: TableState,
+      dims: ZDims,
+      targetFileBytes: Long,
+      runId: String,
+      saltThresholdRows: Long,
+      nSalts: Int,
+      onlyFiles: Option[Seq[DataFileMeta]],
+      jobParallelism: Int): Option[Snapshot] = {
+    val table = st.table
     val spark = table.spark
     val t0 = System.nanoTime()
     var log = Maintenance.start(table, runId, "cluster")
-    log.committedSnapshotId.foreach(id => return table.metadata.snapshot(id))
-    val snap = table.currentSnapshot.getOrElse(return None)
+    log.committedSnapshotId.foreach(id => return st.metadata.snapshot(id))
+    val snap = st.snapshot.getOrElse(return None)
     val planStep = s"plan@${snap.id}"
     require(log.doneSteps.isEmpty || log.doneSteps.contains(planStep),
       s"resume $runId: table advanced past planned snapshot; start a fresh run")
     log = Maintenance.markDone(table, log, planStep)
 
-    val inputs = onlyFiles.getOrElse(table.files())
+    val inputs = onlyFiles.getOrElse(st.files)
     if (inputs.isEmpty) return None
-    val schema = table.schema
+    val schema = st.schema
 
-    val clusterCols: Seq[String] = canonicalColumns(table, dims)
+    val clusterCols: Seq[String] = canonicalColumns(st, dims)
     val zdimsStr =
       if (clusterCols.nonEmpty) clusterCols.mkString(",") else "lang,host,warc_ts"
     // layout tag in the commit uuid: INCREMENTAL verifies a file's
@@ -188,7 +205,7 @@ object Cluster {
     // keeps "one sorted run -> one right-sized file" exact; pre-spec files
     // (no partition dirs) form their own group whose rewrite adopts the
     // dir layout (a one-time split).
-    val specs = table.allPartitionSpecs
+    val specs = st.allPartitionSpecs
     val groups: Seq[(Int, Seq[DataFileMeta])] =
       (if (specs.isEmpty) Seq(inputs)
        else inputs.groupBy(f => graft.table.PartitionSpec.fileKey(specs, f))
@@ -209,8 +226,7 @@ object Cluster {
       // MoR deletes are applied during the rewrite; a FULL rewrite
       // (onlyFiles empty) then clears equality tombstones at commit, and
       // position deletes clear per rewritten file in replaceFiles
-      val df = table.applyTombstones(table.withPositionDeletes(
-        spark.read.schema(schema).parquet(gInputs.map(table.absPath): _*), gInputs))
+      val df = st.applyTombstones(st.readFiles(gInputs))
       val gBytes = gInputs.map(_.bytes).sum
       val rowsTotal = gInputs.map(_.rows).sum
       val nOut = math.max(1, math.ceil(gBytes.toDouble / targetFileBytes).toInt)
@@ -271,16 +287,6 @@ object Cluster {
         .sample(withReplacement = false, fraction, seed = 42)
         .select(zC.as("z"), saltGroupC.as("g"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // diagnostic plan artifact (optimization evidence; off by default)
-      sys.env.get("SPARK_GRAFT_EXPLAIN_DIR").foreach { d =>
-        scala.util.Try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$d/cluster_sample_g$gi.txt"),
-            sampled.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-        }
-      }
       val (heavy: Seq[Any], bds: Array[Long]) =
         try {
           val hh = sampled.groupBy("g").count()
@@ -317,7 +323,7 @@ object Cluster {
         .sortWithinPartitions(col("_zs"))
       val rowsPerFile = if (nOut > nPart) math.max(1L, rowsTotal / nOut) else 0L
       // writeDataFiles collects the fresh footers already — reuse them
-      val metas = table.writeDataFiles(sorted, s"$commitUuid-p$gi", rowsPerFile) // selects schema cols, dropping _zkey/_salt/_zs
+      val metas = st.writeDataFiles(sorted, s"$commitUuid-p$gi", rowsPerFile) // selects schema cols, dropping _zkey/_salt/_zs
       synchronized { log = Maintenance.markDone(table, log, s"part$gi") }
       metas
     }
@@ -363,18 +369,19 @@ object Cluster {
       targetFileBytes: Long = 128L * 1024 * 1024,
       runId: String = java.util.UUID.randomUUID.toString,
       minFiles: Int = 2): Option[Snapshot] = {
-    val layout = withDeclaredColumns(table, dims)
+    val st = table.state
+    val layout = withDeclaredColumns(st, dims)
     // validate/canonicalize UP FRONT: a typo'd column must fail loudly even
     // when there is nothing to rewrite (a scheduled no-op would otherwise
     // hide the mistake until the first real pass)
-    val cols = canonicalColumns(table, layout)
+    val cols = canonicalColumns(st, layout)
     val wantZdims = if (cols.nonEmpty) cols.mkString(",") else "lang,host,warc_ts"
     // a file only counts as clustered if its cluster commit used THESE dims
     // and curve — after the user changes cluster-columns, files ordered on
     // the old layout are stale and must rewrite. Commits whose snapshot has
     // expired can't be checked and keep the old treated-as-clustered
     // behavior; the periodic full rewrite restores certainty.
-    val staleRuns = table.metadata.snapshots
+    val staleRuns = st.metadata.snapshots
       .filter(s => s.operation == "cluster" &&
         (s.summary.getOrElse("zdims", "") != wantZdims ||
           s.summary.getOrElse("curve", "") != layout.curve))
@@ -384,7 +391,7 @@ object Cluster {
     // keep the snapshot-based verdict (expired → treated as clustered —
     // the pre-existing, documented gap, now closed for all new rewrites)
     val tag = layoutTag(wantZdims, layout.curve)
-    val (stale, fresh) = table.files()
+    val (stale, fresh) = st.files
       .filter { f =>
         val cu = f.commitUuid
         if (!cu.startsWith("cluster-")) true // fresh append → rewrite set
@@ -396,17 +403,17 @@ object Cluster {
     // (any stale file) always proceeds — re-ordering even one file is the
     // entire point
     if (stale.isEmpty && fresh.size < minFiles) None
-    else zorderRewrite(table, layout, targetFileBytes, runId,
-      onlyFiles = Some(stale ++ fresh))
+    else rewrite(st, layout, targetFileBytes, runId, DefaultSaltThresholdRows, DefaultSalts,
+      Some(stale ++ fresh), jobParallelism = 0)
   }
 
   /** `dims`, or — when it names no columns — `dims` over the table's
     * declared `cluster-columns` property (Nil when unset: the page dims).
     * The one place that property resolves, so the programmatic and SQL
     * doors tag the same layout. */
-  def withDeclaredColumns(table: GraftTable, dims: ZDims): ZDims =
+  def withDeclaredColumns(st: TableState, dims: ZDims): ZDims =
     if (dims.columns.nonEmpty) dims
-    else dims.copy(columns = table.metadata.properties.get(GraftTable.ClusterColumnsProp).toSeq
+    else dims.copy(columns = st.metadata.properties.get(GraftTable.ClusterColumnsProp).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty))
 
   /** 8-hex tag of a clustering layout (dims + curve), embedded in cluster
@@ -427,10 +434,10 @@ object Cluster {
     * SQL-facing column lookup) and demand an order-preserving encoding UP
     * FRONT — a bad column must fail loudly before any bytes move. Nil for
     * the page-dims default. */
-  private[ops] def canonicalColumns(table: GraftTable, dims: ZDims): Seq[String] = {
-    val schema = table.schema
+  private[ops] def canonicalColumns(st: TableState, dims: ZDims): Seq[String] = {
+    val schema = st.schema
     dims.columns.map { c =>
-      val resolver = table.spark.sessionState.analyzer.resolver
+      val resolver = st.table.spark.sessionState.analyzer.resolver
       val f = schema.fields.find(f => resolver(f.name, c)).getOrElse(throw
         new IllegalArgumentException(s"ZORDER BY column '$c' not in schema " +
           schema.fieldNames.mkString("(", ", ", ")")))

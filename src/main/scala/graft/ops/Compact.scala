@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.run.{Lineage, Maintenance}
-import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot, StatsCollector}
+import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot, StatsCollector, TableState}
 
 /**
  * Bin-packing small-file compaction: groups undersized data files into
@@ -42,13 +42,14 @@ import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot, S
  */
 object Compact {
 
-  /** `tombstonesLive`: the snapshot has live equality tombstones;
-    * `dvFiles`: the planned files that have DV rows. */
-  final case class Plan(snapshotId: Long, groups: Seq[Seq[DataFileMeta]],
-      tombstonesLive: Boolean, dvFiles: Set[String])
+  /** Bins of `state`'s files; the run reads, rewrites and commits against
+    * exactly that state. */
+  final case class Plan(state: TableState, groups: Seq[Seq[DataFileMeta]]) {
+    def snapshotId: Long = state.snapshot.get.id
+  }
 
   /**
-   * Deterministic plan against the current snapshot: files smaller than
+   * Deterministic plan against one pinned state: files smaller than
    * `smallFileFraction * targetBytes` are bin-packed, in order of their
    * `orderBy` column min (preserving clustering locality), into groups of
    * ~targetBytes. Groups of one file are dropped (nothing to gain).
@@ -60,13 +61,14 @@ object Compact {
       smallFileFraction: Double = 0.75,
       predicate: Option[org.apache.spark.sql.Column] = None,
       deleteRatioThreshold: Double = 0.1): Option[Plan] = {
-    val snap = table.currentSnapshot.getOrElse(return None)
+    val st = table.state
+    if (st.snapshot.isEmpty) return None
     // WHERE-scoped maintenance: only files whose stats range intersects the
     // predicate are candidates — at 100 TB you compact the hot partition,
     // not the table. Rewrites are row-preserving for ANY file subset, so
     // scoping never affects correctness (and a scoped pass never clears
     // tombstones — the full-coverage check below compares against ALL files)
-    val all = table.planFiles(predicate)
+    val all = st.planFiles(predicate)
     val threshold = (targetBytes * smallFileFraction).toLong
     // delete pressure: a file whose position-deleted row share reaches
     // `deleteRatioThreshold` is a rewrite candidate REGARDLESS of size —
@@ -74,7 +76,7 @@ object Compact {
     // clears it, so compaction is what keeps DV accumulation bounded at
     // 100 TB (Iceberg's delete-file-threshold strategy). Counts are the
     // cached DV bitmaps' cardinalities; empty map when the snapshot has none.
-    val dvCounts = table.posDeleteRowCounts(Some(snap.id))
+    val dvCounts = st.posDeleteRowCounts
     val pressured: Set[String] = all.filter { f =>
       val d = dvCounts.getOrElse(f.path, 0L)
       d > 0 && f.rows > 0 && d.toDouble / f.rows >= deleteRatioThreshold
@@ -87,10 +89,10 @@ object Compact {
     // can materialize-and-clear the tombstone set (see run()); without
     // tombstones a one-file group has nothing to gain and is dropped —
     // unless it is delete-pressured (the rewrite clears its DV rows)
-    val tombstonesLive = table.tombstones(Some(snap.id)).nonEmpty
+    val tombstonesLive = st.tombstones.nonEmpty
     if (small.isEmpty || (small.size < 2 && !tombstonesLive && pressured.isEmpty)) return None
-    val sortCol = orderBy.getOrElse(table.schema.fields.head.name)
-    val dt = table.schema.fields.find(_.name == sortCol).map(_.dataType)
+    val sortCol = orderBy.getOrElse(st.schema.fields.head.name)
+    val dt = st.schema.fields.find(_.name == sortCol).map(_.dataType)
     val ordered = (dt match {
       case Some(t) if graft.table.Bounds.supported(t) =>
         small.sortWith { (a, b) =>
@@ -106,7 +108,7 @@ object Compact {
     // defeating the packing (one group → one file only holds per dir).
     // Pre-spec files (no partition dirs) pack together; their rewrite
     // adopts the dir layout.
-    val specs = table.allPartitionSpecs
+    val specs = st.allPartitionSpecs
     val byPart: Seq[Seq[DataFileMeta]] =
       if (specs.isEmpty) Seq(ordered)
       else ordered.groupBy(f => graft.table.PartitionSpec.fileKey(specs, f))
@@ -125,9 +127,7 @@ object Compact {
     }
     val useful = (if (tombstonesLive) groups
       else groups.filter(g => g.size >= 2 || g.exists(f => pressured.contains(f.path)))).toSeq
-    if (useful.isEmpty) None
-    else Some(Plan(snap.id, useful, tombstonesLive,
-      useful.flatten.map(_.path).filter(p => dvCounts.getOrElse(p, 0L) > 0).toSet))
+    if (useful.isEmpty) None else Some(Plan(st, useful))
   }
 
   /** Execute (or resume) a compaction run. Returns the committed snapshot,
@@ -153,7 +153,8 @@ object Compact {
       s"resume $runId: table advanced past planned snapshot; start a fresh run")
     log = Maintenance.markDone(table, log, planStep)
 
-    val schema = table.schema
+    val st = p.state
+    val schema = st.schema
     def dirOf(i: Int) = s"${table.dataDir}/${commitUuid(runId, i)}"
     val (resumed, pending) = p.groups.zipWithIndex.map(_.swap).partition { case (i, _) =>
       log.doneSteps.contains(s"group$i") && FileIO.exists(s"${dirOf(i)}/_SUCCESS")
@@ -167,7 +168,7 @@ object Compact {
     copied.keys.toSeq.sorted.foreach(i => log = Maintenance.markDone(table, log, s"group$i"))
     val rewritten = GroupedRewrite.run(spark, "graft-compact", jobParallelism,
       pending.filterNot { case (i, _) => copied.contains(i) }, _ => 1L) { (i, group) =>
-      val metas = rewriteBin(table, group, commitUuid(runId, i))
+      val metas = rewriteBin(st, group, commitUuid(runId, i))
       synchronized { log = Maintenance.markDone(table, log, s"group$i") }
       metas
     }
@@ -190,8 +191,7 @@ object Compact {
     // Sound against races: replaceFiles requires the parent to still BE the
     // planned snapshot, so a tombstone added after planning fails the
     // commit instead of being silently cleared.
-    val clearDeletes = p.tombstonesLive &&
-      removed == table.files(Some(p.snapshotId)).map(_.path).toSet
+    val clearDeletes = st.tombstones.nonEmpty && removed == st.files.map(_.path).toSet
     val snap = table.replaceFiles(removed, added, "compact",
       Map("run-id" -> runId, "groups" -> p.groups.size.toString),
       expectedSnapshotId = Some(p.snapshotId), clearDeletes = clearDeletes)
@@ -203,19 +203,20 @@ object Compact {
 
   private def commitUuid(runId: String, group: Int) = s"compact-$runId-g$group"
 
-  /** Spark path for one bin: read → apply live MoR deletes → write as one
-    * file (`coalesce(1)`: one read→write task, no shuffle). */
   private[graft] def rewriteBin(table: GraftTable, group: Seq[DataFileMeta],
+      commitUuid: String): Seq[DataFileMeta] = rewriteBin(table.state, group, commitUuid)
+
+  /** Spark path for one bin of `st`: read → apply live MoR deletes → write
+    * as one file (`coalesce(1)`: one read→write task, no shuffle). */
+  private def rewriteBin(st: TableState, group: Seq[DataFileMeta],
       commitUuid: String): Seq[DataFileMeta] = {
-    val spark = table.spark
-    FileIO.deleteRecursively(s"${table.dataDir}/$commitUuid") // partial attempt from a crashed run
+    val spark = st.table.spark
+    FileIO.deleteRecursively(s"${st.table.dataDir}/$commitUuid") // partial attempt from a crashed run
     spark.sparkContext.setJobDescription(s"compact group $commitUuid (${group.size} files)")
     // equality tombstones stay live in the commit (other files may still
     // hold tombstoned keys); POSITION deletes of exactly these files are
     // applied here and cleared by replaceFiles
-    val df = table.applyTombstones(table.withPositionDeletes(
-      spark.read.schema(table.schema).parquet(group.map(table.absPath): _*), group))
-    try table.writeDataFiles(df.coalesce(1), commitUuid)
+    try st.writeDataFiles(st.applyTombstones(st.readFiles(group)).coalesce(1), commitUuid)
     finally spark.sparkContext.setJobDescription(null) // pool threads are reused across groups
   }
 
@@ -244,26 +245,28 @@ object Compact {
     * out take the Spark path. */
   private[graft] def copyBins(table: GraftTable, runId: String, plan: Plan,
       pending: Seq[(Int, Seq[DataFileMeta])]): Map[Int, DataFileMeta] = {
-    if (pending.isEmpty || plan.tombstonesLive) return Map.empty
-    val specs = table.partitionSpecs
+    val st = plan.state
+    if (pending.isEmpty || st.tombstones.nonEmpty) return Map.empty
+    val specs = st.partitionSpecs
     val tasks = pending.flatMap { case (i, group) =>
       val subs = group.map(f => subPathOf(specs, f)).distinct
-      if (subs.size != 1 || subs.head.isEmpty || group.exists(f => plan.dvFiles.contains(f.path))) None
+      if (subs.size != 1 || subs.head.isEmpty ||
+          group.exists(f => st.posDeleteRowCounts.getOrElse(f.path, 0L) > 0)) None
       else Some(CopyTask(i, group.map(table.absPath), s"${table.dataDir}/${commitUuid(runId, i)}",
         subs.head.get, commitUuid(runId, i)))
     }
     if (tasks.isEmpty) return Map.empty
     val spark = table.spark
     val sqlConf = spark.sessionState.conf
-    val schema = table.schema
+    val schema = st.schema
     // the exact frame rewriteBin writes, for its row schema (no job)
-    val rowSchema = table.writeSchema(spark.read.schema(schema).parquet(tasks.head.inputs.head))
+    val rowSchema = st.writeSchema(spark.read.schema(schema).parquet(tasks.head.inputs.head))
     val micros = sqlConf.clone()
     micros.setConfString("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val expect = CopyExpect(table.root, schema, rowSchema,
       new SparkToParquetSchemaConverter(micros).convert(rowSchema).toString,
       new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName,
-      table.bloomColumns.toSet, specs)
+      st.bloomColumns.toSet, specs)
     tasks.foreach(t => FileIO.deleteRecursively(t.dir)) // partial attempt from a crashed run
     spark.sparkContext.setJobDescription(s"compact $runId copy ${tasks.size} bins")
     val results =

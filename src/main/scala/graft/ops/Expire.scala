@@ -44,15 +44,8 @@ object Expire {
     // walk never reaches the base and pins nothing extra: that branch can
     // only be re-staged, so retaining main history for it buys nothing.
     def chainDown(from: Long, stopAt: Option[Long]): Seq[Long] = {
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var cur = md.snapshot(from)
-      var done = false
-      while (cur.nonEmpty && !done) {
-        ids += cur.get.id
-        done = stopAt.contains(cur.get.id)
-        cur = cur.get.parentId.flatMap(md.snapshot)
-      }
-      ids.toSeq
+      val (above, rest) = md.ancestry(from).map(_.id).span(id => !stopAt.contains(id))
+      above ++ rest.take(1)
     }
     val branchChains = md.refMap.values.filter(_.kind == "branch").flatMap { r =>
       val staged = chainDown(r.snapshotId, r.baseSnapshotId)
@@ -71,14 +64,12 @@ object Expire {
     // data, merge-on-read tombstone, AND position-delete manifests all
     // pin their files
     def allManifests(s: Snapshot) = s.manifests ++ s.deleteManifestList ++ s.posDeleteList
+    // each distinct manifest is read once: snapshots share most of theirs
     val keptManifests = kept.flatMap(allManifests(_).map(_.path)).toSet
-    val keptFiles = kept.flatMap(s => allManifests(s).flatMap(m => table.readManifest(m.path)))
-      .map(_.path).toSet
+    val keptFiles = keptManifests.toSeq.flatMap(table.readManifest).map(_.path).toSet
     val droppedManifests = dropped.flatMap(allManifests(_).map(_.path)).distinct
       .filterNot(keptManifests.contains)
-    val droppedFiles = dropped
-      .flatMap(s => allManifests(s).flatMap(m => table.readManifest(m.path)))
-      .map(_.path).distinct
+    val droppedFiles = droppedManifests.flatMap(table.readManifest).map(_.path).distinct
       .filterNot(keptFiles.contains)
 
     // keepIds and the GC file sets were planned against `md`; if a writer
@@ -114,8 +105,8 @@ object Expire {
    */
   def removeOrphans(table: GraftTable, olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
     val referenced: Set[String] = table.metadata.snapshots
-      .flatMap(s => (s.manifests ++ s.deleteManifestList ++ s.posDeleteList)
-        .flatMap(m => table.readManifest(m.path)))
+      .flatMap(s => (s.manifests ++ s.deleteManifestList ++ s.posDeleteList).map(_.path))
+      .distinct.flatMap(table.readManifest)
       .map(f => s"${table.root}/${f.path}").toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val orphans = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -161,9 +152,10 @@ object Expire {
 object ManifestRewrite {
 
   def run(table: GraftTable, entriesPerManifest: Int = 100000): Option[Snapshot] = {
-    val snap = table.currentSnapshot.getOrElse(return None)
+    val st = table.state
+    val snap = st.snapshot.getOrElse(return None)
     if (snap.manifests.size <= 1) return None
-    val entries = table.files()
+    val entries = st.files
     val groups = entries.grouped(math.max(1, entriesPerManifest)).toSeq
     val committed = table.commit("rewrite-manifests", Some(snap.id)) { _ =>
       val manifests = groups.map(table.writeManifest)

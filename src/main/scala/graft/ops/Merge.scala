@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.run.{Lineage, Maintenance}
-import graft.table.{Bounds, DataFileMeta, GraftTable, Snapshot}
+import graft.table.{Bounds, DataFileMeta, GraftTable, Snapshot, TableState}
 
 /**
  * MERGE INTO with copy-on-write file replacement.
@@ -77,17 +77,22 @@ object Merge {
   }
 
   def touchedFiles(table: GraftTable, sourceKeys: DataFrame, keyCol: String): Seq[DataFileMeta] =
-    touchedFiles(table, sourceKeys, Seq(keyCol))
+    touchedFiles(table.state, sourceKeys, Seq(keyCol))
 
-  /** Files whose per-column [min,max] intervals may contain any source key
-    * TUPLE: the leading key column drives an interval-stabbing index; the
-    * remaining key columns filter its candidate window per row (a file
-    * survives only if the SAME row fits its bounds on every key column). */
-  def touchedFiles(table: GraftTable, sourceKeys: DataFrame, keyCols: Seq[String]): Seq[DataFileMeta] = {
+  def touchedFiles(table: GraftTable, sourceKeys: DataFrame, keyCols: Seq[String]): Seq[DataFileMeta] =
+    touchedFiles(table.state, sourceKeys, keyCols)
+
+  /** Files of `state` whose per-column [min,max] intervals may contain any
+    * source key TUPLE: the leading key column drives an interval-stabbing
+    * index; the remaining key columns filter its candidate window per row (a
+    * file survives only if the SAME row fits its bounds on every key column). */
+  private[graft] def touchedFiles(state: TableState, sourceKeys: DataFrame,
+      keyCols: Seq[String]): Seq[DataFileMeta] = {
     require(keyCols.nonEmpty, "at least one key column")
-    val files = table.files()
+    val files = state.files
     if (files.isEmpty) return Seq.empty
-    val schema = table.schema
+    val schema = state.schema
+    val spark = state.table.spark
     val dts = keyCols.map { k =>
       schema.fields.find(_.name == k).map(_.dataType)
         .getOrElse(throw new IllegalArgumentException(s"no column $k"))
@@ -99,7 +104,7 @@ object Merge {
     // caller-supplied session must fail loudly here, not plan touched
     // files 2h off and silently duplicate merged keys.
     if (dts.contains(TimestampNTZType)) {
-      val zone = table.spark.sessionState.conf.sessionLocalTimeZone
+      val zone = spark.sessionState.conf.sessionLocalTimeZone
       // equivalence, not string equality: "Etc/UTC", "GMT", "+00:00" all
       // resolve to the zero offset and were always correct
       val isUtc = scala.util.Try(
@@ -135,12 +140,11 @@ object Merge {
     // lay files out by (cast to the table's column type first), so both
     // sides share Spark's own murmur3 exactly. Applies across spec
     // generations: each file answers only for dirs it physically has.
-    val bucketSpecs = table.allPartitionSpecs.filter(sp =>
+    val bucketSpecs = state.allPartitionSpecs.filter(sp =>
       sp.transform == "bucket" && keyCols.contains(sp.sourceColumn))
     val fileBuckets: Array[Array[Int]] = bucketSpecs.map(sp =>
       bounded.map(f => sp.dirValue(f.path)
         .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(-1)).toArray).toArray
-    val spark = table.spark
     val bcIdx = spark.sparkContext.broadcast(index)
     val bcRes = spark.sparkContext.broadcast((resDts.toArray, resMin, resMax))
     val bcBuckets = spark.sparkContext.broadcast(fileBuckets)
@@ -202,15 +206,13 @@ object Merge {
     * parallelism under the bucketed path is n — that is the user's declared
     * layout; per-task sort input is touchedBytes/n, so pick bucket counts
     * the way you'd pick shuffle partitions. */
-  private[graft] def targetScan(table: GraftTable, schema: StructType,
-      touched: Seq[graft.table.DataFileMeta], keyCols: Seq[String]): DataFrame = {
-    val bs = table.bucketSpecFor(touched).filter { b =>
+  private[graft] def targetScan(state: TableState, touched: Seq[DataFileMeta],
+      keyCols: Seq[String]): DataFrame = {
+    val bs = state.bucketSpec(touched).filter { b =>
       keyCols.map(_.toLowerCase) == b.bucketColumnNames.map(_.toLowerCase)
     }
-    if (bs.isDefined)
-      org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-        table.spark, schema, table.root, touched, table.allPartitionSpecs, bucketSpec = bs)
-    else table.spark.read.schema(schema).parquet(touched.map(table.absPath): _*)
+    if (bs.isDefined) state.relation(touched, bucketed = bs)
+    else state.table.spark.read.schema(state.schema).parquet(touched.map(state.table.absPath): _*)
   }
 
   /**
@@ -258,13 +260,15 @@ object Merge {
       "NOT MATCHED BY SOURCE requires ANSI semantics (latestWins = false)")
     val spark = table.spark
     val t0 = System.nanoTime()
+    // ONE pinned state plans the whole merge, up to its commit
+    val st = table.state
     var log = Maintenance.start(table, runId, "merge")
     // resume short-circuit FIRST: an already-committed merge must stay
     // idempotently re-runnable even if a MoR delete landed afterwards
-    log.committedSnapshotId.foreach(id => return table.metadata.snapshot(id).get)
-    require(table.tombstones().isEmpty,
+    log.committedSnapshotId.foreach(id => return st.metadata.snapshot(id).get)
+    require(st.tombstones.isEmpty,
       "table has live merge-on-read tombstones; materialize them first (Cluster.zorderRewrite) — equality deletes apply to future rows and would silently suppress merged keys")
-    val snap = table.currentSnapshot
+    val snap = st.snapshot
     // resume identity (same guard as Compact/Cluster): a crashed run's
     // rewrite output is only reusable against the snapshot it was planned
     // on — a concurrent commit in the crash window changes the touched set,
@@ -274,7 +278,7 @@ object Merge {
     require(log.doneSteps.isEmpty || log.doneSteps.contains(planStep),
       s"resume merge $runId: table advanced past the planned snapshot; start a fresh run")
     log = Maintenance.markDone(table, log, planStep)
-    val schema = table.schema
+    val schema = st.schema
     val cols = schema.fieldNames.toSeq
     keyCols.foreach(k => require(cols.contains(k), s"no key column $k in table schema"))
 
@@ -367,7 +371,7 @@ object Merge {
           scala.concurrent.ExecutionContext.global
         Some(scala.concurrent.Future(dupsDf.count()))
       }
-    val keyTouched = touchedFiles(table, planSrc.select(keyC: _*), keyCols)
+    val keyTouched = touchedFiles(st, planSrc.select(keyC: _*), keyCols)
     // NOT MATCHED BY SOURCE widens the rewrite to every file that may hold
     // a row its condition matches (the whole table when unconditional —
     // inherent to the semantics); the condition prunes via file stats
@@ -375,7 +379,7 @@ object Merge {
       if (!nmbs) keyTouched
       else {
         val cond = (notMatchedBySourceDelete.toSeq ++ notMatchedBySourceSet.map(_._1)).reduce(_ || _)
-        (keyTouched ++ table.planFiles(Some(cond))).groupBy(_.path).map(_._2.head).toSeq
+        (keyTouched ++ st.planFiles(Some(cond))).groupBy(_.path).map(_._2.head).toSeq
       }
     // bucket-on-key merge: the touched files scan bucketed (HashPartitioning
     // on the key — only the source side of the join shuffles) AND the join
@@ -383,24 +387,24 @@ object Merge {
     // skips its range exchange too (see the `out` construction below)
     val bucketedN: Option[Int] =
       if (touched.isEmpty) None
-      else table.bucketSpecFor(touched)
+      else st.bucketSpec(touched)
         .filter(b => keyCols.map(_.toLowerCase) == b.bucketColumnNames.map(_.toLowerCase))
         .map(_.numBuckets)
     val bucketedOnKey = bucketedN.isDefined
     val baseRaw =
       if (touched.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else targetScan(table, schema, touched, keyCols)
+      else targetScan(st, touched, keyCols)
     // position deletes applied: a DV-deleted target row is NOT MATCHED
     // (the source row inserts); replaceFiles clears the touched files' DVs.
     // MoR mode additionally carries each surviving row's (file, position)
     // so changed rows can be recorded as new DV entries
     val base =
       if (!mor) {
-        if (touched.isEmpty) baseRaw else table.withPositionDeletes(baseRaw, touched)
+        if (touched.isEmpty) baseRaw else st.withPositionDeletes(baseRaw, touched)
       } else if (touched.isEmpty)
         baseRaw.withColumn("_gdv_rel", lit(null).cast(StringType))
           .withColumn("_gdv_idx", lit(null).cast(LongType))
-      else table.withPositionDeletesKeepingPos(baseRaw, touched)
+      else st.withPositionDeletesKeepingPos(baseRaw, touched)
 
     if (!latestWins) {
       // ANSI MERGE: an error when a TARGET row is matched by more than one
@@ -584,7 +588,7 @@ object Merge {
     // 10 GB MoR merge sorts ~300 MB per task at session-default partitions
     if (mor)
       return withJoinShuffleSizedByData {
-        mergeOnRead(table, joined, imageCols, keyCols, runId, log, snap, touched,
+        mergeOnRead(st, joined, imageCols, keyCols, runId, log, touched,
           sP, tP, del, noop, applies,
           nmbsDel = if (notMatchedBySourceDelete.nonEmpty) coalesce(t("_nmbs_del"), lit(false)) else lit(false),
           nmbsUpd = if (notMatchedBySourceSet.nonEmpty) coalesce(t("_nmbs_upd"), lit(false)) else lit(false),
@@ -684,18 +688,7 @@ object Merge {
       val touchedRows = touched.map(_.rows).sum
       val rollRecords = if (nOut <= 1 || touchedRows == 0) 0L
         else math.max(1L, touchedRows / nOut)
-      val rewriteFrame = out.sortWithinPartitions(keyC: _*)
-      // diagnostic plan artifact (optimization evidence; off by default)
-      sys.env.get("SPARK_GRAFT_EXPLAIN_DIR").foreach { d =>
-        scala.util.Try {
-          java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$d/merge_rewrite.txt"),
-            rewriteFrame.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode).getBytes("UTF-8"))
-        }
-      }
-      table.writeDataFiles(rewriteFrame, commitUuid,
+      st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid,
         maxRecordsPerFile = rollRecords)
       Maintenance.markDone(table, log, "rewrite")
     }
@@ -731,18 +724,18 @@ object Merge {
    * delete-pressure compaction (or any rewrite) materializes the DVs.
    */
   private def mergeOnRead(
-      table: GraftTable,
+      st: TableState,
       joined: DataFrame,
       imageCols: Seq[Column],
       keyCols: Seq[String],
       runId: String,
       log: graft.table.StepLog,
-      snap: Option[Snapshot],
       touched: Seq[DataFileMeta],
       sP: Column, tP: Column, del: Column, noop: Column, applies: Column,
       nmbsDel: Column, nmbsUpd: Column,
       posRel: Column, posIdx: Column, t0: Long,
       propertyUpdates: Map[String, String] = Map.empty): Snapshot = {
+    val table = st.table
     val spark = table.spark
     val matchedFires = applies && !noop
     // a target row leaves its file iff a matched clause fires for it (update
@@ -766,15 +759,15 @@ object Merge {
         .sortWithinPartitions("_file", "_pos")
         .write.mode("errorifexists").parquet(dvDir)
       val dvMetas = graft.table.StatsCollector.collect(
-        spark, table.PosDeleteSchema, table.root,
+        spark, GraftTable.PosDeleteSchema, table.root,
         graft.table.FileIO.listFiles(dvDir, ".parquet"), dvUuid)
         .filter(_.rows > 0)
       val outUuid = s"merge-$runId"
       graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
-      val outCols = table.schema.fieldNames.toSeq
+      val outCols = st.schema.fieldNames.toSeq
       // appended images sort by key within each task: new files carry tight
       // key bounds for the NEXT merge's touchedFiles pruning
-      val added = table.writeDataFiles(
+      val added = st.writeDataFiles(
         changed.filter(col("_wr")).select(outCols.map(col): _*)
           .sortWithinPartitions(keyCols.map(col): _*),
         outUuid).filter(_.rows > 0)
@@ -787,7 +780,7 @@ object Merge {
         graft.table.FileIO.deleteRecursively(dvDir)
         graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
       }
-      val committed = table.commitFull("merge-pos", expectedSnapshotId = snap.map(_.id),
+      val committed = table.commitFull("merge-pos", expectedSnapshotId = st.snapshot.map(_.id),
           propertyUpdates = propertyUpdates) { parent =>
         (parent.map(_.manifests).getOrElse(Seq.empty) ++
             (if (added.nonEmpty) Seq(table.writeManifest(added)) else Nil),
@@ -819,17 +812,17 @@ object Merge {
       runId: String = java.util.UUID.randomUUID.toString): Snapshot = {
     val spark = table.spark
     val t0 = System.nanoTime()
-    val schema = table.schema
+    val st = table.state
+    val schema = st.schema
     for (c <- set.keys)
       require(schema.fieldNames.contains(c), s"UPDATE of unknown column $c")
-    require(table.tombstones().isEmpty,
+    require(st.tombstones.isEmpty,
       "table has live merge-on-read tombstones; materialize them first (Cluster.zorderRewrite)")
-    val snap = table.currentSnapshot
-    val touched = table.planFiles(Some(predicate))
+    val snap = st.snapshot
+    val touched = st.planFiles(Some(predicate))
     if (touched.isEmpty) return snap.getOrElse(throw new IllegalStateException("empty table"))
     val hit = coalesce(predicate, lit(false))
-    val df = table.withPositionDeletes(
-        spark.read.schema(schema).parquet(touched.map(table.absPath): _*), touched)
+    val df = st.readFiles(touched)
       .select(schema.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(v) => when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
@@ -837,7 +830,7 @@ object Merge {
         }
       }: _*)
     val commitUuid = s"update-$runId"
-    val added = table.writeDataFiles(df, commitUuid)
+    val added = st.writeDataFiles(df, commitUuid)
     val committed = table.replaceFiles(touched.map(_.path).toSet, added, "update",
       Map("run-id" -> runId, "predicate" -> predicate.toString,
         "set-columns" -> set.keys.toSeq.sorted.mkString(",")),
@@ -859,15 +852,13 @@ object Merge {
       runId: String = java.util.UUID.randomUUID.toString): Snapshot = {
     val spark = table.spark
     val t0 = System.nanoTime()
-    val schema = table.schema
-    val snap = table.currentSnapshot
-    val touched = table.planFiles(Some(predicate))
+    val st = table.state
+    val snap = st.snapshot
+    val touched = st.planFiles(Some(predicate))
     if (touched.isEmpty) return snap.getOrElse(throw new IllegalStateException("empty table"))
-    val df = table.withPositionDeletes(
-        spark.read.schema(schema).parquet(touched.map(table.absPath): _*), touched)
-      .filter(!coalesce(predicate, lit(false)))
+    val df = st.readFiles(touched).filter(!coalesce(predicate, lit(false)))
     val commitUuid = s"delete-$runId"
-    val metas = table.writeDataFiles(df, commitUuid)
+    val metas = st.writeDataFiles(df, commitUuid)
     // drop all-empty outputs (predicate matched an entire file)
     val added = metas.filter(_.rows > 0)
     val committed = table.replaceFiles(touched.map(_.path).toSet, added, "delete",
@@ -907,8 +898,8 @@ object Merge {
       validate: Boolean = true): Snapshot = {
     val spark = table.spark
     val t0 = System.nanoTime()
-    val schema = table.schema
-    val snap = table.currentSnapshot
+    val st = table.state
+    val snap = st.snapshot
     if (validate) {
       // full parallel count, not take(1): proving absence must scan it all
       // anyway, and CollectLimit's incremental partition batches would
@@ -919,17 +910,15 @@ object Merge {
           s"($predicate) — they would land outside the replaced region; " +
           "fix the data or pass validate=false to keep them")
     }
-    val touched = table.planFiles(Some(predicate))
+    val touched = st.planFiles(Some(predicate))
     // project the incoming frame to the table schema ONCE — the empty-
     // touched branch must union the same shape as the read-back branch
-    val aligned = data.select(schema.fieldNames.map(col): _*)
+    val aligned = data.select(st.schema.fieldNames.map(col): _*)
     val kept =
       if (touched.isEmpty) aligned.limit(0)
-      else table.withPositionDeletes(
-          spark.read.schema(schema).parquet(touched.map(table.absPath): _*), touched)
-        .filter(!coalesce(predicate, lit(false)))
+      else st.readFiles(touched).filter(!coalesce(predicate, lit(false)))
     val commitUuid = s"overwrite-$runId"
-    val metas = table.writeDataFiles(kept.unionByName(aligned), commitUuid)
+    val metas = st.writeDataFiles(kept.unionByName(aligned), commitUuid)
     val added = metas.filter(_.rows > 0)
     val committed = table.replaceFiles(touched.map(_.path).toSet, added, "overwrite",
       Map("run-id" -> runId, "predicate" -> predicate.toString),

@@ -9,7 +9,7 @@ import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot}
  * Bucket-layout migration after partition-spec evolution: rewrite exactly
  * the files that do NOT conform to the active `bucket(n, col)` spec (an
  * older generation's layout, pre-spec files, unstamped names) so the
- * bucketed-scan gate ([[GraftTable.bucketSpec]]) flips back on and joins,
+ * bucketed-scan gate ([[graft.table.TableState.bucketSpec]]) flips back on and joins,
  * aggregations, MERGE, and CDC apply on the bucket column run shuffle-free
  * again. The spec-evolution analog of the reference regenerating its salted
  * rowkey layout when a table's region count changes
@@ -48,8 +48,9 @@ object Rebucket {
       jobParallelism: Int = 0): Option[Snapshot] = {
     val spark = table.spark
     val t0 = System.nanoTime()
-    val schema = table.schema
-    val active = table.partitionSpecs.filter(_.transform == "bucket")
+    val st = table.state
+    val schema = st.schema
+    val active = st.partitionSpecs.filter(_.transform == "bucket")
     require(active.size == 1,
       s"REBUCKET needs exactly one active bucket(n, col) transform (found " +
         s"${if (active.isEmpty) "none" else active.mkString(", ")}); " +
@@ -62,10 +63,9 @@ object Rebucket {
     // snapshot has since been EXPIRED, returning None here would be
     // indistinguishable from "nothing to do" (r5 advice) — report the
     // current snapshot instead: the committed work is part of its history.
-    log.committedSnapshotId.foreach(id =>
-      return table.metadata.snapshot(id).orElse(table.currentSnapshot))
-    val snap = table.currentSnapshot.getOrElse(return None)
-    val inputs = table.nonconformingFiles()
+    log.committedSnapshotId.foreach(id => return st.metadata.snapshot(id).orElse(st.snapshot))
+    val snap = st.snapshot.getOrElse(return None)
+    val inputs = st.nonconformingFiles
     if (inputs.isEmpty) return None
     // the plan key carries the ACTIVE SPEC too, not just the snapshot:
     // setPartitionSpec is a metadata-only change (no snapshot advance), and
@@ -79,7 +79,7 @@ object Rebucket {
     log = Maintenance.markDone(table, log, planStep)
 
     // one group per old partition tuple — generations never mix in a rewrite
-    val allSpecs = table.allPartitionSpecs
+    val allSpecs = st.allPartitionSpecs
     val groups: Seq[(Int, Seq[DataFileMeta])] =
       inputs.groupBy(f => PartitionSpec.fileKey(allSpecs, f))
         .toSeq.sortBy(_._1).map(_._2).zipWithIndex.map(_.swap)
@@ -99,12 +99,7 @@ object Rebucket {
 
     // in-file order: the write sort-order property if set, else the bucket
     // column — each written file is a sorted run with tight bounds
-    val sortCols = {
-      val declared = table.metadata.properties.get(GraftTable.SortOrderProp).toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        .flatMap(c => schema.fieldNames.find(_.equalsIgnoreCase(c)))
-      if (declared.nonEmpty) declared else Seq(sp.sourceColumn)
-    }
+    val sortCols = if (st.writeSortColumns.nonEmpty) st.writeSortColumns else Seq(sp.sourceColumn)
 
     def rewriteGroup(gi: Int, g: Seq[DataFileMeta]): Seq[DataFileMeta] = {
       val commitUuid = s"rebucket-$runId-g$gi"
@@ -117,8 +112,7 @@ object Rebucket {
       // rewritten rows absorb live MoR deletes: equality tombstones apply
       // here (and stay live for untouched files), position deletes of
       // exactly these files apply here and are cleared by replaceFiles
-      val df = table.applyTombstones(table.withPositionDeletes(
-        spark.read.schema(schema).parquet(g.map(table.absPath): _*), g))
+      val df = st.applyTombstones(st.readFiles(g))
       val bytes = g.map(_.bytes).sum
       val rows = g.map(_.rows).sum
       // right-sized rolls from REAL row counts (never derived from a file
@@ -147,7 +141,7 @@ object Rebucket {
       // stamps bucket ids; the pre-sort keys each file a sorted run
       val sorted = prepared.sortWithinPartitions(
         (sp.column(schema) +: sortCols.map(col)): _*)
-      val metas = table.writeDataFiles(sorted, commitUuid, rowsPerFile)
+      val metas = st.writeDataFiles(sorted, commitUuid, rowsPerFile)
       synchronized { log = Maintenance.markDone(table, log, s"group$gi") }
       metas
     }
@@ -172,8 +166,7 @@ object Rebucket {
     // with tombstones applied) may clear the tombstone set — same race
     // guard as Compact: replaceFiles requires the parent to still be the
     // planned snapshot
-    val clearDeletes = table.tombstones(Some(snap.id)).nonEmpty &&
-      removed == table.files(Some(snap.id)).map(_.path).toSet
+    val clearDeletes = st.tombstones.nonEmpty && removed == st.files.map(_.path).toSet
     val committed = table.replaceFiles(removed, added, "rebucket",
       Map("run-id" -> runId, "groups" -> groups.size.toString,
         "bucket-spec" -> sp.toString),

@@ -141,14 +141,15 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
       case SaveMode.Overwrite =>
         val tbl = if (exists) checkSpecUnchanged(GraftTable.load(spark, root))
                   else GraftTable.create(spark, root, data.schema, createProps)
-        val expected = tbl.currentSnapshot.map(_.id)
-        val old = tbl.files().map(_.path).toSet
+        val st = tbl.state
+        val expected = st.snapshot.map(_.id)
+        val old = st.files.map(_.path).toSet
         if (old.isEmpty) {
           // nothing to replace: commit as a plain append so the genesis
           // snapshot stays incremental-read-friendly
           tbl.append(data)
         } else {
-          val added = tbl.writeDataFiles(data)
+          val added = st.writeDataFiles(data)
           // pin the planned-against snapshot: a concurrent append between
           // files() and commit must force a replan, not silently survive
           // inside the "overwritten" table. clearDeletes: every file a
@@ -158,12 +159,12 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
             expectedSnapshotId = expected, clearDeletes = true)
         }
     }
-    val tbl = GraftTable.load(spark, root)
+    val st = GraftTable.load(spark, root).state
     // no tombstone guard here: Spark's SaveIntoDataSourceCommand discards
     // this relation (the write already committed; throwing would fail a
     // successful append) — readers come back through the RelationProvider
     // path above, which enforces it
-    GraftRelation.relation(spark, tbl.schema, root, tbl.files(), tbl.allPartitionSpecs)
+    GraftRelation.relation(spark, st.schema, root, st.files, st.allPartitionSpecs)
   }
 
   override def createRelation(
@@ -178,13 +179,14 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
         table.snapshotAsOf(ts.toLong).getOrElse(throw new IllegalArgumentException(
           s"no snapshot committed at or before $ts")).id
       })
-    require(table.tombstones(snapshotId).isEmpty,
+    val st = table.state.at(snapshotId)
+    require(st.tombstones.isEmpty,
       "snapshot has live merge-on-read tombstones, which a raw file relation cannot apply; " +
         "read via GraftTable.read (applies them) or materialize with Cluster.zorderRewrite")
-    require(table.positionDeletes(snapshotId).isEmpty,
+    require(st.positionDeletes.isEmpty,
       "snapshot has live position deletes (deletion vectors), which a raw file relation " +
         "cannot apply; read via GraftTable.read / SQL (applies them) or compact the files")
-    GraftRelation.relation(spark, table.schema, root, table.files(snapshotId),
-      table.allPartitionSpecs, table.bucketSpec(snapshotId))
+    GraftRelation.relation(spark, st.schema, root, st.files, st.allPartitionSpecs,
+      st.bucketSpec(st.files))
   }
 }

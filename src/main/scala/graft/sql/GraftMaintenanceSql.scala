@@ -201,9 +201,10 @@ case class GraftOptimizeCommand(path: String, zorder: Boolean, hilbert: Boolean,
       // real message instead of a mid-job unresolved-column error on other
       // schemas (BY-columns are validated in Cluster before any bytes move)
       val curve = if (hilbert) "hilbert" else "zorder"
-      val dims = Cluster.withDeclaredColumns(t, Cluster.ZDims(curve = curve, columns = byColumns))
+      val st = t.state
+      val dims = Cluster.withDeclaredColumns(st, Cluster.ZDims(curve = curve, columns = byColumns))
       if (dims.columns.isEmpty) {
-        val needed = Seq("url", "warc_ts", "lang").filterNot(t.schema.fieldNames.contains)
+        val needed = Seq("url", "warc_ts", "lang").filterNot(st.schema.fieldNames.contains)
         if (needed.nonEmpty) throw new IllegalArgumentException(
           s"OPTIMIZE ... ZORDER clusters on (lang, url-host, warc_ts) and needs columns " +
             s"${needed.mkString(", ")}; use ZORDER BY (col, ...) or set the " +
@@ -219,7 +220,7 @@ case class GraftOptimizeCommand(path: String, zorder: Boolean, hilbert: Boolean,
               "combine with WHERE via two separate statements")
           Cluster.incremental(t, dims)
         } else Cluster.zorderRewrite(t, dims,
-          onlyFiles = pred.map(p => t.planFiles(Some(p))))
+          onlyFiles = pred.map(p => st.planFiles(Some(p))))
       Seq(Row(s"cluster-$curve", snap.map(_.id).getOrElse(-1L)))
     } else {
       val snap = Compact.run(t, predicate = pred)

@@ -349,7 +349,8 @@ case class GraftMergeCommand(
 
   override def run(session: SparkSession): Seq[Row] = {
     val table = GraftTable.load(session, path)
-    val schema = table.schema
+    val st = table.state
+    val schema = st.schema
     (matched.flatMap(_.set) ++ inserts.flatMap(_.values)).map(_._1)
       .filterNot(schema.fieldNames.contains).foreach(c =>
         throw new IllegalArgumentException(s"graft MERGE INTO: assignment to unknown column $c"))
@@ -381,7 +382,7 @@ case class GraftMergeCommand(
     // deliberate — the second pass is a key-only source scan, and planning
     // on the narrower set can exclude whole table files from the rewrite,
     // which dominates the repeated scan at scale.
-    val touched = Merge.touchedFiles(table, src.select(keyCols.map(col): _*), keyCols)
+    val touched = Merge.touchedFiles(st, src.select(keyCols.map(col): _*), keyCols)
     // target columns referenced by matched clauses ride the same join as
     // `_matched`, renamed to reserved `_tgt_<col>` passthroughs. The
     // precomputed-per-source-row lowering needs ONE target row per key
@@ -406,8 +407,7 @@ case class GraftMergeCommand(
         // MATCHED here exactly like Merge.into's own scan (ops/Merge.scala
         // "position deletes applied" invariant) — a raw read would set
         // _matched=true from a dead row and break the INSERT clause for it
-        val existingFull = table.withPositionDeletes(
-            session.read.schema(schema).parquet(touched.map(table.absPath): _*), touched)
+        val existingFull = st.readFiles(touched)
           .select((keyCols ++ tgtCols).distinct.map(col): _*)
         if (tgtCols.nonEmpty) {
           val dups = existingFull.groupBy(keyCols.map(col): _*)
@@ -524,7 +524,7 @@ case class GraftMergeCommand(
         nmbsUpdate.map { case (c, h) => c -> Shims.column(h.e) }.toMap))
     // write.merge.mode=merge-on-read (Iceberg's property): changed rows
     // land as DV entries + appended images instead of file rewrites
-    val mode = table.metadata.properties
+    val mode = st.metadata.properties
       .getOrElse("write.merge.mode", "copy-on-write")
     val snap = Merge.into(table, src, keyCols, latestWins = false,
       notMatchedBySourceDelete = nmbsDel, notMatchedBySourceSet = nmbsSet,

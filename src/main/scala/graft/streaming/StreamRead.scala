@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.connector.read.streaming
 import org.apache.spark.sql.types.StructType
 
-import graft.table.{DataFileMeta, GraftTable}
+import graft.table.{DataFileMeta, GraftTable, TableState}
 
 /**
  * Streaming CDC read of a graft table: `spark.readStream.format("graft")
@@ -131,22 +131,25 @@ class GraftStreamSource(
   // schema and partition specs are PINNED at stream start: mid-stream
   // add-column evolution must not change the micro-batch schema under a
   // running query (files are read by name; a column added later simply
-  // does not appear until the stream restarts)
-  private val baseSchema: StructType = table.schema
+  // does not appear until the stream restarts). Every batch reads the
+  // latest state through this one's schema and specs (the spec union keeps
+  // old-generation dirs pruning; field-id column resolution keeps
+  // post-rename/drop files readable by the old schema).
+  private val pinned = table.state
+  private val baseSchema: StructType = pinned.schema
   override val schema: StructType =
     if (changeRows) graft.table.Changelog.schemaFor(baseSchema) else baseSchema
-  private val specs = table.allPartitionSpecs // union: old-generation dirs must keep pruning
-  // changelog batches read through the SAME pinned pair (field-id column
-  // resolution keeps post-rename/drop files readable by the old schema)
-  private val pinned = Some((baseSchema, specs))
   updateImagesOn.filterNot(baseSchema.fieldNames.contains).foreach(c =>
     throw new IllegalArgumentException(
       s"update-images-on column '$c' is not in the table schema"))
 
   startingSnapshotId.foreach { id =>
-    require(id == 0 || table.metadata.snapshot(id).nonEmpty,
+    require(id == 0 || pinned.metadata.snapshot(id).nonEmpty,
       s"starting-snapshot-id $id is not a retained snapshot of $root")
   }
+
+  /** The latest committed version, read through the pinned schema. */
+  private def latest: TableState = table.state.withSchemaOf(pinned)
 
   /** Newest end offset handed to [[getBatch]] — the reference point for
     * admission control: `(snapshotId, Some(filePos))` mid-initial-load,
@@ -161,7 +164,7 @@ class GraftStreamSource(
   private def initFiles(snap: Long): IndexedSeq[DataFileMeta] = initCache match {
     case Some((s, fs)) if s == snap => fs
     case _ =>
-      val fs = table.files(Some(snap)).sortBy(_.path).toIndexedSeq
+      val fs = table.state.at(snap).files.sortBy(_.path).toIndexedSeq
       initCache = Some((snap, fs)); fs
   }
 
@@ -195,21 +198,16 @@ class GraftStreamSource(
         // ancestors of `current` newer than `from`, oldest first; the cap
         // picks the maxN-th — chain-walked so an id on an abandoned
         // (rolled-back) branch is never returned as an offset
-        val chain = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var cur = md.snapshot(current)
-        while (cur.nonEmpty && cur.get.id != from) {
-          chain += cur.get.id
-          cur = cur.get.parentId.flatMap(md.snapshot)
-        }
+        val lineage = md.ancestry(current).map(_.id)
         // a rollback onto another branch can leave current NEWER than the
         // delivered offset yet not descended from it — without this check
         // the cap would emit an offset BELOW the floor and the batch would
         // fail later with a misleading broken-chain error
-        require(cur.nonEmpty || from == 0,
+        require(lineage.contains(from) || from == 0,
           s"delivered offset $from is not reachable from current snapshot $current — " +
             "an intermediate snapshot was expired (raise retention above the " +
             "stream's lag), or a rollback moved the table onto another branch")
-        val newestFirst = chain.toSeq
+        val newestFirst = lineage.takeWhile(_ != from)
         if (newestFirst.size <= maxN) current else newestFirst.reverse(maxN - 1)
       case _ => current
     }
@@ -242,17 +240,18 @@ class GraftStreamSource(
       // ---- whole-snapshot chain tailing (original semantics)
       case (sO, (endId, None)) =>
         val startId = sO.map(_._1)
-        if (changeRows) return changeBatch(startId, endId)
+        val st = latest
+        if (changeRows) return changeBatch(st, startId, endId)
         startId match {
           case Some(from) if from == endId =>
-            streamingDf(Seq.empty, endId)
+            streamingDf(st.at(endId), Seq.empty)
           case Some(from) =>
-            val (files, to) = table.incrementalFiles(from, Some(endId), skipChangeCommits)
-            streamingDf(files, to)
+            val (files, to) = st.incrementalFiles(from, Some(endId), skipChangeCommits)
+            streamingDf(st.at(to), files)
           case None =>
             // initial batch: the table's full contents as of `endId` (the
             // streaming analog of a batch read — Delta-style initial snapshot)
-            streamingDf(table.files(Some(endId)), endId)
+            streamingDf(st.at(endId), st.at(endId).files)
         }
     }
   }
@@ -262,10 +261,10 @@ class GraftStreamSource(
     * tagged as insert events at that snapshot, otherwise plain rows. */
   private def initialChunk(snap: Long, from: Long, until: Long): DataFrame = {
     val chunk = initFiles(snap).slice(from.toInt, until.toInt)
+    val st = latest.at(snap)
     if (changeRows)
-      graft.table.Changelog.initialSnapshot(table, snap, streamingTag = true, pinned,
-        filesOverride = Some(chunk))
-    else streamingDf(chunk, snap)
+      graft.table.Changelog.initialSnapshot(st, streamingTag = true, filesOverride = Some(chunk))
+    else streamingDf(st, chunk)
   }
 
   /** change-rows mode: the batch is the commits' insert/delete row images
@@ -273,34 +272,30 @@ class GraftStreamSource(
     * plans (their joins/EXCEPT ALL must not be planned as streaming-stateful
     * operators); the required isStreaming flag rides on a 0-row streaming
     * relation union'd in by the changelog builder. */
-  private def changeBatch(startId: Option[Long], endId: Long): DataFrame = startId match {
-    case Some(from) if from == endId =>
-      // defensive empty batch (recovery can hand equal start/end): build it
-      // over ZERO files — the full-table variant would pay manifest parsing
-      // plus tombstone/DV footer reads just to filter everything out
-      graft.table.Changelog.initialSnapshot(table, endId, streamingTag = true, pinned,
-        filesOverride = Some(Seq.empty))
-        .filter(lit(false))
-    case Some(from) =>
-      graft.table.Changelog.changes(table, from, Some(endId), streamingTag = true, pinned,
-        updateImagesOn = updateImagesOn)
-    case None =>
-      // initial batch: the full contents as INSERT events at `endId`
-      graft.table.Changelog.initialSnapshot(table, endId, streamingTag = true, pinned)
-  }
+  private def changeBatch(st: TableState, startId: Option[Long], endId: Long): DataFrame =
+    startId match {
+      case Some(from) if from == endId =>
+        // defensive empty batch (recovery can hand equal start/end): build it
+        // over ZERO files — the full-table variant would pay manifest parsing
+        // plus tombstone/DV footer reads just to filter everything out
+        graft.table.Changelog.initialSnapshot(st.at(endId), streamingTag = true,
+          filesOverride = Some(Seq.empty))
+          .filter(lit(false))
+      case Some(from) =>
+        graft.table.Changelog.changes(st, from, Some(endId), streamingTag = true,
+          updateImagesOn = updateImagesOn)
+      case None =>
+        // initial batch: the full contents as INSERT events at `endId`
+        graft.table.Changelog.initialSnapshot(st.at(endId), streamingTag = true)
+    }
 
-  /** Micro-batch DataFrame over `files` with snapshot `to`'s merge-on-read
-    * deletes applied — equality tombstones (a stream-static anti-join) AND
-    * position deletes (the in-scan DV bitmap filter). A row deleted
-    * positionally before its file is delivered must not reach the consumer,
-    * exactly as `read()` at `to` would hide it. */
-  private def streamingDf(files: Seq[DataFileMeta], to: Long): DataFrame =
-    table.applyTombstones(
-      table.withPositionDeletes(
-        org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-          spark, schema, root, files, specs, isStreaming = true),
-        files, Some(to)),
-      Some(to))
+  /** Micro-batch DataFrame over `files` with the merge-on-read deletes of
+    * `st`'s snapshot applied — equality tombstones (a stream-static
+    * anti-join) AND position deletes (the in-scan DV bitmap filter). A row
+    * deleted positionally before its file is delivered must not reach the
+    * consumer, exactly as `read()` at that snapshot would hide it. */
+  private def streamingDf(st: TableState, files: Seq[DataFileMeta]): DataFrame =
+    st.live(files, isStreaming = true)
 
   override def commit(end: OffsetV1): Unit = () // offset log is the state
   override def commit(end: streaming.Offset): Unit = ()

@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * `state := (state \ deletes) ∪ inserts` — reconstructs `read()` exactly
  * (proved in StreamCdcSpec).
  *
- * Per-commit semantics (chain-walked like [[GraftTable.incrementalFiles]]):
+ * Per-commit semantics (chain-walked like [[TableState.incrementalFiles]]):
  *  - append       → the committed files' rows as inserts, with the commit's
  *                   own tombstones applied (a key tombstoned earlier is
  *                   invisible in that snapshot, so it must not be delivered);
@@ -61,7 +61,7 @@ object Changelog {
   val UpdatePostimage = "update_postimage"
 
   /** Row-preserving commit operations: no logical row changes to emit.
-    * SHARED with [[GraftTable.incrementalFiles]] — one definition, so the
+    * SHARED with [[TableState.incrementalFiles]] — one definition, so the
     * changelog and the file-level incremental reader can never disagree on
     * whether a commit kind preserves rows. */
   private[table] val RowPreservingOps: Set[String] =
@@ -74,68 +74,40 @@ object Changelog {
       StructField(ChangeTypeCol, StringType, nullable = false) :+
       StructField(CommitCol, LongType, nullable = false))
 
-  /** The changelog of `(fromSnapshotId, to]` as one DataFrame (commits
-    * union'd; order by [[CommitCol]] to fold). `streamingTag` marks the
-    * frame streaming for the DSv1 source (via a 0-row streaming-flagged
-    * relation union'd in — the diff subplans themselves stay BATCH plans,
-    * so their joins/aggregates never trip streaming-stateful planning). */
+  /** The changelog of `(fromSnapshotId, to]` (default: the state's
+    * snapshot) as one DataFrame (commits union'd; order by [[CommitCol]] to
+    * fold), read from the one metadata version of `state` and in its
+    * schema — a streaming source passes a state carrying its stream-start
+    * schema ([[TableState.withSchemaOf]]), so mid-stream evolution never
+    * changes the micro-batch schema under a running query. `streamingTag`
+    * marks the frame streaming for the DSv1 source (via a 0-row
+    * streaming-flagged relation union'd in — the diff subplans themselves
+    * stay BATCH plans, so their joins/aggregates never trip
+    * streaming-stateful planning). */
   def changes(
-      table: GraftTable,
+      state: TableState,
       fromSnapshotId: Long,
       toSnapshotId: Option[Long] = None,
       streamingTag: Boolean = false,
-      pinned: Option[(StructType, Seq[PartitionSpec])] = None,
       updateImagesOn: Seq[String] = Seq.empty): DataFrame = {
-    val spark = table.spark
-    val md = table.metadata
-    // a streaming source pins schema+specs at stream start (mid-stream
-    // evolution must not change the micro-batch schema under a running
-    // query); batch callers read the live metadata
-    val (sch, specs) = pinned.getOrElse((table.schema, table.allPartitionSpecs))
-    val to = toSnapshotId.orElse(md.currentSnapshotId).getOrElse(
-      throw new IllegalArgumentException("changelog read on an empty table"))
-    require(md.snapshot(fromSnapshotId).nonEmpty || fromSnapshotId == 0,
-      s"unknown or expired snapshot $fromSnapshotId")
-
-    def rel(files: Seq[DataFileMeta]): DataFrame =
-      org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-        spark, sch, table.root, files, specs)
     def tag(df: DataFrame, kind: String, commitId: Long): DataFrame =
       df.withColumn(ChangeTypeCol, lit(kind)).withColumn(CommitCol, lit(commitId))
-
-    // chain walk newest → oldest (same traversal as incrementalFiles)
-    var cursor = md.snapshot(to).getOrElse(
-      throw new IllegalArgumentException(s"unknown snapshot $to"))
-    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var done = false
-    while (!done && cursor.id != fromSnapshotId) {
-      val parent = cursor.parentId.flatMap(md.snapshot)
-      frames ++= commitFrame(table, spark, sch, cursor, parent, rel, tag)
-      cursor.parentId match {
-        case Some(_) if parent.nonEmpty => cursor = parent.get
-        case Some(pid) if pid == fromSnapshotId => done = true
-        case None if fromSnapshotId == 0 => done = true
-        case _ => throw new IllegalArgumentException(
-          s"snapshot chain from $to to $fromSnapshotId broken " +
-            "(expired snapshot, or a rollback onto another branch?)")
-      }
-    }
+    val frames = state.commitsSince(fromSnapshotId, toSnapshotId, "changelog read")._1
+      .flatMap { case (snap, parent) => commitFrame(state, snap, parent, tag) }
 
     // the commit diffs are BATCH subplans; update-image pairing adds a
     // Window which must also stay on the batch side (a Window over a
     // streaming-flagged child would be planned as an unsupported streaming
     // stateful operator) — so pair FIRST, then union in the 0-row
     // streaming-flagged relation that carries the isStreaming bit
-    val batchEmpty = tag(rel(Seq.empty), "insert", 0L).filter(lit(false))
+    val batchEmpty = tag(state.relation(Seq.empty), "insert", 0L).filter(lit(false))
     val union = frames.foldLeft(batchEmpty)(_ unionByName _)
     val paired =
       if (updateImagesOn.isEmpty) union
-      else withUpdateImages(union, updateImagesOn, sch)
+      else withUpdateImages(union, updateImagesOn, state.schema)
     if (!streamingTag) paired
     else paired.unionByName(
-      tag(org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-        spark, sch, table.root, Seq.empty, specs, isStreaming = true), "insert", 0L)
-        .filter(lit(false)))
+      tag(state.relation(Seq.empty, isStreaming = true), "insert", 0L).filter(lit(false)))
   }
 
   /**
@@ -167,39 +139,34 @@ object Changelog {
         .otherwise(col(ChangeTypeCol)))
   }
 
-  /** The full table contents at `snapshotId` as insert events — the
-    * streaming source's initial-snapshot batch in change-rows mode. */
-  def initialSnapshot(table: GraftTable, snapshotId: Long, streamingTag: Boolean,
-      pinned: Option[(StructType, Seq[PartitionSpec])] = None,
-      filesOverride: Option[Seq[DataFileMeta]] = None): DataFrame = {
-    val spark = table.spark
-    val (sch, specs) = pinned.getOrElse((table.schema, table.allPartitionSpecs))
-    val files = filesOverride.getOrElse(table.files(Some(snapshotId)))
-    val df = table.applyTombstones(
-      table.withPositionDeletes(
-        org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-          spark, sch, table.root, files, specs, isStreaming = streamingTag),
-        files, Some(snapshotId)),
-      Some(snapshotId))
-    df.withColumn(ChangeTypeCol, lit("insert")).withColumn(CommitCol, lit(snapshotId))
-  }
+  /** The full contents of `state`'s snapshot (or of its `filesOverride`
+    * subset) as insert events — the streaming source's initial-snapshot
+    * batch in change-rows mode. */
+  def initialSnapshot(state: TableState, streamingTag: Boolean,
+      filesOverride: Option[Seq[DataFileMeta]] = None): DataFrame =
+    state.live(filesOverride.getOrElse(state.files), isStreaming = streamingTag)
+      .withColumn(ChangeTypeCol, lit("insert"))
+      .withColumn(CommitCol, lit(state.snapshot.map(_.id).getOrElse(0L)))
 
   /** Events of ONE commit (empty for row-preserving ops). */
   private def commitFrame(
-      table: GraftTable,
-      spark: SparkSession,
-      sch: StructType,
+      state: TableState,
       snap: Snapshot,
       parent: Option[Snapshot],
-      rel: Seq[DataFileMeta] => DataFrame,
-      tag: (DataFrame, String, Long) => DataFrame): Seq[DataFrame] = snap.operation match {
+      tag: (DataFrame, String, Long) => DataFrame): Seq[DataFrame] = {
+    val table = state.table
+    val sch = state.schema
+    val atSnap = state.at(snap.id)
+    val atParent = state.at(parent.map(_.id))
+    def rel(files: Seq[DataFileMeta]): DataFrame = state.relation(files)
+    snap.operation match {
 
     case "append" | "publish" => // publish = branch cherry-pick: pure additions
       val parentM = parent.map(_.manifests.map(_.path).toSet).getOrElse(Set.empty)
       val files = snap.manifests.filterNot(m => parentM.contains(m.path))
         .flatMap(m => table.readManifest(m.path))
       if (files.isEmpty) Seq.empty
-      else Seq(tag(table.applyTombstones(rel(files), Some(snap.id)), "insert", snap.id))
+      else Seq(tag(atSnap.applyTombstones(rel(files)), "insert", snap.id))
 
     case op if rowPreserving.contains(op) => Seq.empty // incl. materializing rewrites
 
@@ -209,19 +176,18 @@ object Changelog {
         .flatMap(m => table.readManifest(m.path))
       if (newDel.isEmpty || parent.isEmpty) Seq.empty
       else {
-        val keyDf = spark.read.parquet(newDel.map(table.absPath): _*).distinct()
+        val keyDf = table.spark.read.parquet(newDel.map(table.absPath): _*).distinct()
         val keyCols = keyDf.columns.toSeq
         // file pruning by the key set's global per-column [min,max]: one
         // tiny aggregate over the tombstone keys, then the standard
         // min/max file prune — sound (wider bounds only admit more files)
-        val parentFiles = table.files(Some(parent.get.id))
-        val pruned = keyBoundsPredicate(spark, sch, keyDf, keyCols) match {
-          case Some(p) => PredicatePrune.prune(sch, parentFiles, p, table.allPartitionSpecs)
-          case None    => parentFiles
+        val pruned = keyBoundsPredicate(sch, keyDf, keyCols) match {
+          case Some(p) => atParent.planFiles(Some(p))
+          case None    => atParent.files
         }
-        val vis = table.applyTombstones(rel(pruned), Some(parent.get.id))
+        val vis = atParent.applyTombstones(rel(pruned))
         val right =
-          if (newDel.map(_.rows).sum <= table.TombstoneBroadcastRowCap) broadcast(keyDf)
+          if (newDel.map(_.rows).sum <= GraftTable.TombstoneBroadcastRowCap) broadcast(keyDf)
           else keyDf
         Seq(tag(vis.join(right, keyCols, "left_semi"), "delete", snap.id))
       }
@@ -240,14 +206,13 @@ object Changelog {
         .flatMap(m => table.readManifest(m.path))
       val delFrames =
         if (newPd.isEmpty || parent.isEmpty) Seq.empty
-        else Seq(tag(table.rowsAtPositions(sch,
-          table.files(Some(parent.get.id)), newPd), "delete", snap.id))
+        else Seq(tag(state.rowsAtPositions(atParent.files, newPd), "delete", snap.id))
       val parentM = parent.map(_.manifests.map(_.path).toSet).getOrElse(Set.empty)
       val addedFiles = snap.manifests.filterNot(m => parentM.contains(m.path))
         .flatMap(m => table.readManifest(m.path))
       val insFrames =
         if (addedFiles.isEmpty) Seq.empty
-        else Seq(tag(table.applyTombstones(rel(addedFiles), Some(snap.id)), "insert", snap.id))
+        else Seq(tag(atSnap.applyTombstones(rel(addedFiles)), "insert", snap.id))
       delFrames ++ insFrames
 
     case _ => // copy-on-write file replacement: merge / update / delete / overwrite
@@ -272,13 +237,12 @@ object Changelog {
         // delete events were already emitted at their delete-pos commit
         // would re-surface here as spurious deletes. Added files are new
         // and can never be DV-referenced.
-        val remRows = table.applyTombstones(
-          table.withPositionDeletes(rel(removed), removed, parent.map(_.id)),
-          parent.map(_.id))
-        val addRows = table.applyTombstones(rel(added), Some(snap.id))
+        val remRows = atParent.live(removed)
+        val addRows = atSnap.applyTombstones(rel(added))
         val (delRows, insRows) = slimDiff(remRows, addRows, sch)
         Seq(tag(delRows, "delete", snap.id), tag(insRows, "insert", snap.id))
       }
+    }
   }
 
   private val Fp1 = "__cl_fp1"
@@ -372,7 +336,6 @@ object Changelog {
     * key tuple in `keyDf` — the sound file-prune for the delete-mor scan.
     * None when no key column's type supports bounds. */
   private def keyBoundsPredicate(
-      spark: SparkSession,
       sch: StructType,
       keyDf: DataFrame,
       keyCols: Seq[String]): Option[org.apache.spark.sql.Column] = {

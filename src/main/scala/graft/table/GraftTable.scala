@@ -16,6 +16,14 @@ import org.apache.spark.sql.types.StructType
  * immutable files and atomically swaps a metadata pointer, so concurrent
  * readers are snapshot-isolated by construction.
  *
+ * Every read and every operation plans from ONE [[TableState]]
+ * (`table.state`): a committed metadata version, read with one listing and
+ * one parse, from which schema, specs, files and deletes all derive. The
+ * getters below are one-line forwards to a fresh state for callers that
+ * need a single view; an op that needs several pins one state and uses
+ * only it until its commit, which re-reads the latest version per CAS
+ * attempt ([[commitFull]]).
+ *
  * Scale notes (designed for ~10^5 data files / 100 TB):
  *  - data reads go through Spark's vectorized Parquet reader with
  *    whole-stage codegen; this class only plans which files to read;
@@ -50,21 +58,26 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   def metadataAt(version: Int): TableMetadata =
     MetaJson.readTableMetadata(FileIO.readString(s"$metadataDir/v$version.json"))
 
-  def schema: StructType = schemaOf(metadata)
+  /** The latest committed version, pinned at its current snapshot. */
+  def state: TableState = stateFor(metadata)
+
+  private def stateFor(md: TableMetadata): TableState =
+    new TableState(this, md, md.currentSnapshot)
 
   @volatile private var fieldIdConfSet = false
 
-  private def schemaOf(md: TableMetadata): StructType = {
+  /** `md`'s table schema. Field-id column resolution (see
+    * [[GraftTable.withFieldIds]]): when a requested schema carries parquet
+    * field ids, the vectorized reader looks columns up BY ID — what keeps
+    * files written before a RENAME readable (their physical name differs).
+    * Flipped only once a session actually resolves an id-ful graft schema
+    * (every read/merge/stream path passes through here first), so sessions
+    * that never touch such a table keep Spark's default by-name resolution
+    * everywhere. */
+  private[table] def parseSchema(md: TableMetadata): StructType = {
     val s = md.schemaJson
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
       .getOrElse(StructType.fromDDL(md.schemaDdl))
-    // field-id column resolution (see [[GraftTable.withFieldIds]]): when a
-    // requested schema carries parquet field ids, the vectorized reader
-    // looks columns up BY ID — what keeps files written before a RENAME
-    // readable (their physical name differs). Flipped only once a session
-    // actually resolves an id-ful graft schema (every read/merge/stream
-    // path passes through here first), so sessions that never touch such
-    // a table keep Spark's default by-name resolution everywhere.
     if (!fieldIdConfSet && GraftTable.hasFieldIds(s)) {
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
       fieldIdConfSet = true
@@ -72,46 +85,41 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     s
   }
 
-  /** Hidden-partitioning transforms, if the table declares any (see
-    * [[PartitionSpec]]); validated against the schema. */
-  def partitionSpecs: Seq[PartitionSpec] = {
-    val md = metadata
-    specsOf(md, schemaOf(md))
-  }
+  // ---- single-view getters: each reads a fresh state ----------------------
+  // (see [[TableState]] for what each returns; an op that needs several
+  // views pins ONE state instead)
 
-  private def specsOf(md: TableMetadata, sch: StructType): Seq[PartitionSpec] =
-    md.properties.get(PartitionSpec.Property).map(PartitionSpec.parseMulti)
-      .getOrElse(Seq.empty)
-      .map { sp => sp.validate(sch); sp }
-
+  def schema: StructType = state.schema
+  def partitionSpecs: Seq[PartitionSpec] = state.partitionSpecs
   /** First (or only) hidden-partitioning transform. */
   def partitionSpec: Option[PartitionSpec] = partitionSpecs.headOption
+  def allPartitionSpecs: Seq[PartitionSpec] = state.allPartitionSpecs
+  def currentSnapshot: Option[Snapshot] = metadata.currentSnapshot
+  def constraints: Map[String, String] = state.constraints
+  def retired: Set[String] = state.retired
+  def nonconformingFiles(): Seq[DataFileMeta] = state.nonconformingFiles
 
-  /** ACTIVE transforms plus every HISTORICAL generation's (spec evolution):
-    * each data file's path physically encodes the spec generation it was
-    * written under (`gp_bucket_8_url=…` vs `gp_bucket_16_url=…` are
-    * distinct dir names), so pruning and maintenance grouping evaluate the
-    * union and each file answers only for its own generation. Historical
-    * specs whose source column was since renamed/dropped no longer
-    * validate and are silently skipped (their pruning is dead, which is
-    * sound — the files just stop partition-pruning by that transform). */
-  def allPartitionSpecs: Seq[PartitionSpec] = {
-    val md = metadata
-    allSpecsOf(md, schemaOf(md))
+  // the rest take an optional snapshot id (default: the current snapshot)
+  def files(snapshotId: Option[Long] = None): Seq[DataFileMeta] = state.at(snapshotId).files
+  def planFiles(predicate: Option[Column], snapshotId: Option[Long] = None): Seq[DataFileMeta] =
+    state.at(snapshotId).planFiles(predicate)
+  def read(predicate: Option[Column] = None, snapshotId: Option[Long] = None): DataFrame =
+    state.at(snapshotId).read(predicate)
+  def tombstones(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
+    state.at(snapshotId).tombstones
+  def positionDeletes(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
+    state.at(snapshotId).positionDeletes
+  def posDeleteRowCounts(snapshotId: Option[Long] = None): Map[String, Long] =
+    state.at(snapshotId).posDeleteRowCounts
+  /** The `BucketSpec` a scan over a whole snapshot may report — for
+    * front-door relations built outside [[read]] (the DSv1 provider). */
+  def bucketSpec(snapshotId: Option[Long] = None): Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
+    val st = state.at(snapshotId)
+    st.bucketSpec(st.files)
   }
-
-  private def allSpecsOf(md: TableMetadata, sch: StructType): Seq[PartitionSpec] = {
-    val active = specsOf(md, sch)
-    val historical = PartitionSpec.parseHistory(md.properties.get(PartitionSpec.HistoryProperty))
-      .flatMap { gen =>
-        scala.util.Try {
-          PartitionSpec.parseMulti(gen).map { sp => sp.validate(sch); sp }
-        }.getOrElse(Seq.empty)
-      }
-    val activeNames = active.map(_.name).toSet
-    active ++ historical.filterNot(sp => activeNames.contains(sp.name))
-      .groupBy(_.name).map(_._2.head)
-  }
+  def incrementalFiles(fromSnapshotId: Long, toSnapshotId: Option[Long] = None,
+      skipChangeCommits: Boolean = false): (Seq[DataFileMeta], Long) =
+    state.incrementalFiles(fromSnapshotId, toSnapshotId, skipChangeCommits)
 
   /**
    * Partition-spec evolution: replace the ACTIVE transform set (None =
@@ -124,7 +132,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * is rewritten, not in one big bang.
    */
   def setPartitionSpec(spec: Option[String]): TableMetadata = commitMetadataUpdate { md =>
-    val sch = schemaOf(md)
+    val sch = stateFor(md).schema
     spec.foreach(s => PartitionSpec.parseMulti(s).foreach(_.validate(sch)))
     val oldActive = md.properties.get(PartitionSpec.Property)
     if (oldActive == spec) md
@@ -139,38 +147,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
   }
 
-  def currentSnapshot: Option[Snapshot] = metadata.currentSnapshot
-
-  /** All data files of a snapshot (current if unspecified). */
-  def files(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
-    filesOf(metadata, snapshotId)
-
-  private def filesOf(md: TableMetadata, snapshotId: Option[Long]): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => md.snapshot(id).getOrElse(
-        throw new IllegalArgumentException(s"unknown snapshot $id"))
-      case None => md.currentSnapshot.getOrElse(return Seq.empty)
-    }
-    stripUntrustedDecimalBounds(md, snap.manifests.flatMap(m => readManifest(m.path)))
-  }
-
-  /** Decimal bound strings changed space once (parquet stats are UNSCALED;
-    * early manifests stored them verbatim, current ones store the SCALED
-    * decimal). Tables created since carry [[GraftTable.DecimalStatsScaledProp]];
-    * for a table WITHOUT it, decimal bounds are ignored at planning time —
-    * no pruning is always sound, comparing mixed spaces is not. A full
-    * cluster rewrite re-collects stats; users can then set the property. */
-  private def stripUntrustedDecimalBounds(
-      md: TableMetadata, files: Seq[DataFileMeta]): Seq[DataFileMeta] = {
-    if (md.properties.get(GraftTable.DecimalStatsScaledProp).contains("true")) return files
-    val decCols = schemaOf(md).fields.collect {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType] => f.name
-    }.toSet
-    if (decCols.isEmpty) files
-    else files.map(f => f.copy(
-      minValues = f.minValues -- decCols, maxValues = f.maxValues -- decCols))
-  }
-
   def readManifest(relPath: String): Seq[DataFileMeta] =
     FileIO.readString(s"$root/$relPath").linesIterator
       .filter(_.nonEmpty).map(MetaJson.readDataFileMeta).toVector
@@ -182,47 +158,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     ManifestMeta(rel, metas.size, metas.map(_.rows).sum, metas.map(_.bytes).sum)
   }
 
-  // ---- scan planning -------------------------------------------------------
-
-  /** Files that may contain rows matching `predicate` — min/max pruning. */
-  def planFiles(predicate: Option[Column], snapshotId: Option[Long] = None): Seq[DataFileMeta] =
-    planFilesOf(metadata, predicate, snapshotId)
-
-  private def planFilesOf(md: TableMetadata, predicate: Option[Column],
-      snapshotId: Option[Long]): Seq[DataFileMeta] = {
-    val all = filesOf(md, snapshotId)
-    predicate match {
-      case Some(p) =>
-        val sch = schemaOf(md)
-        PredicatePrune.prune(sch, all, p, allSpecsOf(md, sch))
-      case None => all
-    }
-  }
-
-  /**
-   * Snapshot-isolated read via a [[org.apache.spark.sql.graftshim.GraftFileIndex]]-backed
-   * relation: Catalyst pushes the query's own data filters into `listFiles`,
-   * so min/max file skipping happens for ANY predicate later applied to the
-   * returned DataFrame (including through SQL views) — not only the optional
-   * `predicate` argument, which is kept as an eager pre-prune plus residual
-   * filter for callers that want plan-time file counts. Row-group pruning and
-   * residual filtering remain Catalyst + Parquet pushdown.
-   */
-  def read(predicate: Option[Column] = None, snapshotId: Option[Long] = None): DataFrame = {
-    // ONE metadata read per scan: every helper below derives from this md —
-    // the getter-per-helper pattern cost ~7 full metadata parses per read(),
-    // a latency amplifier on an object store (see class scaladoc)
-    val md = metadata
-    val sch = schemaOf(md)
-    val planned = planFilesOf(md, predicate, snapshotId)
-    val df = applyTombstonesOf(md,
-      scanWithPosDeletesOf(md, sch, planned, allSpecsOf(md, sch), snapshotId),
-      snapshotId)
-    predicate match {
-      case Some(p) => df.filter(p)
-      case None    => df
-    }
-  }
+  // ---- time travel ---------------------------------------------------------
 
   def readSnapshot(snapshotId: Long): DataFrame = read(None, Some(snapshotId))
 
@@ -234,13 +170,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * would time-travel onto the abandoned branch). */
   def snapshotAsOf(tsMs: Long): Option[Snapshot] = {
     val md = metadata
-    val chain = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
-    var cur = md.currentSnapshot
-    while (cur.nonEmpty) {
-      chain += cur.get
-      cur = cur.get.parentId.flatMap(md.snapshot)
-    }
-    chain.filter(_.timestampMs <= tsMs).sortBy(s => (s.timestampMs, s.id)).lastOption
+    md.currentSnapshotId.toSeq.flatMap(md.ancestry)
+      .filter(_.timestampMs <= tsMs).sortBy(s => (s.timestampMs, s.id)).lastOption
   }
 
   def readAsOf(tsMs: Long): DataFrame = {
@@ -280,8 +211,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * delete pressure warrants a compaction pass. */
   def deletesDf(snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    (tombstones(snapshotId).map(f => ("equality", f.path, f.rows, f.bytes, f.commitUuid)) ++
-      positionDeletes(snapshotId).map(f => ("position", f.path, f.rows, f.bytes, f.commitUuid)))
+    val st = state.at(snapshotId)
+    (st.tombstones.map(f => ("equality", f.path, f.rows, f.bytes, f.commitUuid)) ++
+      st.positionDeletes.map(f => ("position", f.path, f.rows, f.bytes, f.commitUuid)))
       .toDF("kind", "path", "rows", "bytes", "commit_uuid")
   }
 
@@ -297,12 +229,12 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * measured in the soak). */
   def partitionsDf(snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    // ONE metadata load for both the spec set and the file list — two
-    // loads could pair one version's files with another's specs across a
-    // concurrent spec-evolution commit
-    val md = metadata
-    val specs = allSpecsOf(md, schemaOf(md))
-    filesOf(md, snapshotId)
+    // ONE state for both the spec set and the file list — two loads could
+    // pair one version's files with another's specs across a concurrent
+    // spec-evolution commit
+    val st = state.at(snapshotId)
+    val specs = st.allPartitionSpecs
+    st.files
       .map { f =>
         val pvals = specs.flatMap(sp => sp.dirValue(f.path).map(v => s"${sp.name}=$v"))
         (if (pvals.isEmpty) "<unpartitioned>" else pvals.mkString("/"), f)
@@ -325,45 +257,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   // ---- merge-on-read equality deletes (tombstones) ---------------------------
 
-  /** Tombstone (equality-delete) file metas of a snapshot. */
-  def tombstones(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
-    tombstonesOf(metadata, snapshotId)
-
-  private def tombstonesOf(md: TableMetadata, snapshotId: Option[Long]): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => md.snapshot(id).getOrElse(
-        throw new IllegalArgumentException(s"unknown snapshot $id"))
-      case None => md.currentSnapshot.getOrElse(return Seq.empty)
-    }
-    snap.deleteManifestList.flatMap(m => readManifest(m.path))
-  }
-
-  /** Tombstone sets above this row count anti-join via shuffle instead of
-    * broadcast (a 10^8-key MoR delete must not OOM the driver). */
-  val TombstoneBroadcastRowCap = 4L * 1000 * 1000
-
-  /** Anti-join `df` against the snapshot's tombstone key tuples (joined on
-    * ALL tombstone columns). Broadcast while the set is small (the intended
-    * MoR niche); beyond [[TombstoneBroadcastRowCap]] rows it falls back to a
-    * shuffled anti-join rather than an OOM. No-op when no tombstones exist. */
-  def applyTombstones(df: DataFrame, snapshotId: Option[Long] = None): DataFrame =
-    applyTombstonesOf(metadata, df, snapshotId)
-
-  private def applyTombstonesOf(md: TableMetadata, df: DataFrame,
-      snapshotId: Option[Long]): DataFrame = {
-    val dels = tombstonesOf(md, snapshotId)
-    if (dels.isEmpty) df
-    else {
-      val delDf = spark.read.parquet(dels.map(absPath): _*).distinct()
-      val keys = delDf.columns.toSeq
-      val rows = dels.map(_.rows).sum // exact, from manifest metadata — free
-      val right =
-        if (rows <= TombstoneBroadcastRowCap) org.apache.spark.sql.functions.broadcast(delDf)
-        else delDf
-      df.join(right, keys, "left_anti")
-    }
-  }
-
   /**
    * Merge-on-read equality delete: record the keys as a tombstone file and
    * commit WITHOUT rewriting any data file — at 100 TB you do not rewrite a
@@ -383,13 +276,14 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   def deleteByKeysMoR(keys: DataFrame, summary: Map[String, String] = Map.empty): Snapshot = {
     require(keys.columns.nonEmpty, "tombstone frame needs at least one key column")
     val keyCols = keys.columns.toSeq
-    keyCols.foreach(k => require(schema.fieldNames.contains(k), s"unknown key column $k"))
+    val sch = schema
+    keyCols.foreach(k => require(sch.fieldNames.contains(k), s"unknown key column $k"))
     val uuid = UUID.randomUUID.toString
     val dir = s"$dataDir/$uuid"
     keys.distinct().write.mode("errorifexists").parquet(dir)
     val written = FileIO.listFiles(dir, ".parquet")
     val metas = StatsCollector.collect(
-      spark, StructType(keyCols.map(k => schema(schema.fieldIndex(k)))), root, written, uuid)
+      spark, StructType(keyCols.map(k => sch(sch.fieldIndex(k)))), root, written, uuid)
     commitFull("delete-mor") { parent =>
       // same-key check INSIDE the commit loop: it re-evaluates against the
       // actual parent on every retry, so two racing deletes on different
@@ -412,165 +306,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   // ---- merge-on-read position deletes (deletion vectors) ---------------------
 
-  /** Schema of a position-delete (deletion-vector) file: `_file` is a data
-    * file's table-relative path (= [[DataFileMeta.path]]), `_pos` a 0-based
-    * deleted row position within it (parquet `_metadata.row_index`). */
-  val PosDeleteSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("_file",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("_pos",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-
-  /** Position-delete (deletion-vector) file metas of a snapshot. */
-  def positionDeletes(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
-    posDeletesOf(metadata, snapshotId)
-
-  private def posDeletesOf(md: TableMetadata, snapshotId: Option[Long]): Seq[DataFileMeta] = {
-    val snap = snapshotId match {
-      case Some(id) => md.snapshot(id).getOrElse(
-        throw new IllegalArgumentException(s"unknown snapshot $id"))
-      case None => md.currentSnapshot.getOrElse(return Seq.empty)
-    }
-    snap.posDeleteList.flatMap(m => readManifest(m.path))
-  }
-
-  /** Could any row of DV file `d` reference data file `path`? min/max
-    * prune on `_file` (missing bounds → conservatively yes). */
-  private def dvMayCover(d: DataFileMeta, path: String): Boolean =
-    d.minValues.get("_file").forall(_ <= path) &&
-      d.maxValues.get("_file").forall(path <= _)
-
-  /** `df` — a parquet file-source scan over exactly `filesRead` — without
-    * the rows the snapshot's position deletes remove (no-op when no DV file
-    * can reference those files: the DV `_file` bounds vs the read file
-    * paths). Applied in the scan as a [[DeletionVectors]] bitmap filter.
-    * Every rewrite pass MUST read its input files through this (then commit
-    * via [[replaceFiles]], which drops exactly the rewritten files' DV rows). */
-  def withPositionDeletes(df: DataFrame, filesRead: Seq[DataFileMeta],
-      snapshotId: Option[Long] = None): DataFrame =
-    applyPosDeletes(df, posDeletesOf(metadata, snapshotId), filesRead)
-
-  /** `df` with its (file, row-position) columns materialized as
-    * `_gdv_rel`/`_gdv_idx` — must sit directly above a file-source scan
-    * (where `_metadata` resolves). */
-  private def withPosCols(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("_gdv_rel", DeletionVectors.relPathColumn)
-      .withColumn("_gdv_idx", col("_metadata.row_index"))
-  }
-
-  /** `df` (directly above a file-source scan over `filesRead`) without the
-    * rows deleted by those of `dvs` that may reference `filesRead`: `dv_keep`
-    * over their per-file bitmaps, whatever the DV row count (Roaring
-    * containers hold dense runs in a few bytes per 64K positions).
-    * `keepPosCols` also materializes the surviving rows' `_gdv_rel`/`_gdv_idx`. */
-  private def applyPosDeletes(df: DataFrame, dvs: Seq[DataFileMeta],
-      filesRead: Seq[DataFileMeta], keepPosCols: Boolean = false): DataFrame = {
-    val hit = dvs.filter(d => filesRead.exists(f => dvMayCover(d, f.path)))
-    val kept = if (hit.isEmpty) df else df.filter(DeletionVectors.keep(spark, hit.map(absPath)))
-    if (keepPosCols) withPosCols(kept) else kept
-  }
-
-  /** Like [[withPositionDeletes]] but ALWAYS materializes the scanned rows'
-    * (file, row-position) as `_gdv_rel`/`_gdv_idx` on the result — for
-    * rewriters that need the surviving rows' positions (the MoR merge
-    * records changed target rows as deletion-vector entries). `df` must sit
-    * directly above a file-source scan. */
-  def withPositionDeletesKeepingPos(df: DataFrame, filesRead: Seq[DataFileMeta],
-      snapshotId: Option[Long] = None): DataFrame =
-    applyPosDeletes(df, posDeletesOf(metadata, snapshotId), filesRead, keepPosCols = true)
-
-  /** Snapshot scan with position deletes applied via a SPLIT plan: files no
-    * DV can reference scan untouched (at 100 TB the dominant branch — DVs
-    * cover the trickle-deleted tail); possibly-covered files scan with
-    * (file, row-position) metadata under the `dv_keep` bitmap filter.
-    * Catalyst pushes the query's filters into both branches' file indexes. */
-  private def scanWithPosDeletesOf(md: TableMetadata, sch: StructType,
-      planned: Seq[DataFileMeta], specs: Seq[PartitionSpec],
-      snapshotId: Option[Long]): DataFrame = {
-    // bucket-aware scan: when every planned file is provably bucket-pure and
-    // stamped, the relation reports HashPartitioning(col, n) — attached on
-    // the plain branch only (the DV-filtered branch reads `_metadata`
-    // columns and is union-destined, where the partitioning can't help)
-    val bs = bucketSpecOf(md, sch, planned)
-    def rel(fs: Seq[DataFileMeta], bucketed: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]) =
-      org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-        spark, sch, root, fs, specs, bucketSpec = bucketed)
-    val dvs = posDeletesOf(md, snapshotId)
-    if (dvs.isEmpty) return rel(planned, bs)
-    val (covered, plain) = planned.partition(f => dvs.exists(d => dvMayCover(d, f.path)))
-    if (covered.isEmpty) rel(planned, bs)
-    else {
-      val deleted = applyPosDeletes(rel(covered, None), dvs, covered)
-      if (plain.isEmpty) deleted else rel(plain, None).unionByName(deleted)
-    }
-  }
-
-  /** The `BucketSpec` a scan over exactly `files` may report, or None. Sound
-    * only when the ACTIVE spec carries exactly one bucket transform and EVERY
-    * file is bucket-stamped ([[stampBucketIds]]) consistently with its
-    * partition dir: Spark's bucketed read throws on an unstamped file name
-    * and would silently mis-group rows on a wrong stamp, so this is
-    * all-or-nothing by design. Files from an older spec generation (different
-    * dir name) or written before the spec fail the check and the scan simply
-    * stays unbucketed — a full rewrite (cluster/compact) migrates them.
-    * O(planned files) driver-side string parsing, like all planning here. */
-  /** Public form of [[bucketSpecOf]] over a whole snapshot's files — for
-    * front-door relations built outside [[read]] (the DSv1 provider). */
-  def bucketSpec(snapshotId: Option[Long] = None): Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
-    val md = metadata
-    bucketSpecOf(md, schemaOf(md), filesOf(md, snapshotId))
-  }
-
-  /** [[bucketSpecOf]] over an explicit file subset — for operators that scan
-    * a planned slice of the table (MERGE's touched files): sound because a
-    * bucket-pure file stays bucket-pure in any subset. */
-  def bucketSpecFor(files: Seq[DataFileMeta]): Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
-    val md = metadata
-    bucketSpecOf(md, schemaOf(md), files)
-  }
-
-  private def bucketSpecOf(md: TableMetadata, sch: StructType,
-      files: Seq[DataFileMeta]): Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] = {
-    val sp = activeBucketSpec(md, sch).getOrElse(return None)
-    if (files.nonEmpty && files.forall(f => bucketFileConforms(sp, f)))
-      Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        sp.param.get, Seq(sp.sourceColumn), Nil))
-    else None
-  }
-
-  /** The ACTIVE bucket transform, when the active spec carries exactly one
-    * (the only shape the bucketed-scan gate and [[graft.ops.Rebucket]]
-    * understand). */
-  private def activeBucketSpec(md: TableMetadata, sch: StructType): Option[PartitionSpec] = {
-    val bs = specsOf(md, sch).filter(_.transform == "bucket")
-    if (bs.size == 1) Some(bs.head) else None
-  }
-
-  /** A data file conforms to the active bucket spec iff its path carries the
-    * spec's partition dir with an integral value AND its file name is
-    * bucket-stamped to the same id ([[stampBucketIds]]) — the exact per-file
-    * test the all-or-nothing scan gate ([[bucketSpec]]) applies. */
-  private def bucketFileConforms(sp: PartitionSpec, f: DataFileMeta): Boolean = {
-    val dir = sp.dirValue(f.path).flatMap(v => scala.util.Try(v.toInt).toOption)
-    dir.isDefined && org.apache.spark.sql.graftshim.GraftRelation
-      .bucketIdOf(f.path.substring(f.path.lastIndexOf('/') + 1)) == dir
-  }
-
-  /** Files of the current snapshot that do NOT conform to the active bucket
-    * spec — an older spec generation's dir layout, pre-spec (no dirs), or
-    * unstamped names. Any one of them keeps the bucketed-scan gate off for
-    * every scan that selects it; [[graft.ops.Rebucket.migrate]] rewrites
-    * exactly this set. Empty when the active spec carries no (single) bucket
-    * transform — there is nothing to conform to. */
-  def nonconformingFiles(): Seq[DataFileMeta] = {
-    val md = metadata
-    activeBucketSpec(md, schemaOf(md)) match {
-      case Some(sp) => filesOf(md, None).filterNot(f => bucketFileConforms(sp, f))
-      case None     => Seq.empty
-    }
-  }
-
   /**
    * Merge-on-read POSITION delete (deletion vector): record the row
    * positions matching `predicate` in a (file, pos) delete file and commit
@@ -588,41 +323,14 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    */
   def deleteWherePositional(predicate: Column,
       summary: Map[String, String] = Map.empty): Option[Snapshot] = {
-    import org.apache.spark.sql.functions.col
-    val md = metadata
-    val sch = schemaOf(md)
-    val planned = planFilesOf(md, Some(predicate), None)
+    val st = state
+    val planned = st.planFiles(Some(predicate))
     if (planned.isEmpty) return None
-    val uuid = s"dv-${UUID.randomUUID}"
-    val dir = s"$dataDir/$uuid"
-    val raw = org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-      spark, sch, root, planned, allSpecsOf(md, sch))
-    // positions are computed on the LIVE view (existing DVs and equality
-    // tombstones applied), so re-running the same delete is a no-op commit
-    // and "rows deleted" counts are logical, as in Delta/Iceberg
-    val live = applyTombstonesOf(md,
-      applyPosDeletes(raw, posDeletesOf(md, None), planned, keepPosCols = true), None)
-    live.filter(predicate)
-      .select(col("_gdv_rel").as("_file"), col("_gdv_idx").as("_pos"))
-      .sortWithinPartitions("_file", "_pos") // tight per-DV-file _file bounds
-      .write.mode("errorifexists").parquet(dir)
-    val metas = StatsCollector.collect(
-      spark, PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
-      .filter(_.rows > 0)
-    if (metas.isEmpty) { FileIO.deleteRecursively(dir); return None }
-    // the files the positions actually reference (bounded by touched files):
-    // validated against the commit parent so a concurrent REWRITE of one
-    // (positions now meaningless) forces a replan, while appends / other
-    // deletes race through — file immutability keeps their positions valid
-    val referenced = spark.read.schema(PosDeleteSchema).parquet(dir)
-      .select("_file").distinct().collect().map(_.getString(0))
+    val (metas, referenced) =
+      writePositions(livePositions(st, planned).filter(predicate), s"dv-${UUID.randomUUID}")
+        .getOrElse(return None)
     Some(commitFull("delete-pos") { parent =>
-      val live = parent.toSeq.flatMap(_.manifests).flatMap(m => readManifest(m.path))
-        .map(_.path).toSet
-      val gone = referenced.filterNot(live)
-      require(gone.isEmpty,
-        s"delete-pos planned against files a concurrent commit rewrote " +
-          s"(${gone.take(3).mkString(", ")}${if (gone.length > 3) ", …" else ""}); replan required")
+      requireReferencedLive("delete-pos", st, parent, referenced)
       (parent.map(_.manifests).getOrElse(Seq.empty),
         parent.flatMap(_.deleteManifests),
         Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeManifest(metas)),
@@ -630,6 +338,50 @@ class GraftTable private (val root: String, val spark: SparkSession) {
           "position-deletes-added" -> metas.map(_.rows).sum.toString,
           "position-delete-files" -> referenced.length.toString))
     })
+  }
+
+  /** `planned` (files of `st`) as `st` shows them, with each row's (file,
+    * row-position) as `_gdv_rel`/`_gdv_idx`. Positions are taken on this
+    * LIVE view (existing DVs and equality tombstones applied), so re-running
+    * the same delete is a no-op commit and "rows deleted" counts are
+    * logical, as in Delta/Iceberg. */
+  private def livePositions(st: TableState, planned: Seq[DataFileMeta]): DataFrame =
+    st.applyTombstones(st.withPositionDeletesKeepingPos(st.relation(planned), planned))
+
+  /** Write the positions of `rows` (from [[livePositions]]) as a DV file
+    * under `data/<uuid>`; returns its metas and the data files it references,
+    * or None (the dir removed) when `rows` is empty. */
+  private def writePositions(rows: DataFrame,
+      uuid: String): Option[(Seq[DataFileMeta], Seq[String])] = {
+    import org.apache.spark.sql.functions.col
+    val dir = s"$dataDir/$uuid"
+    rows.select(col("_gdv_rel").as("_file"), col("_gdv_idx").as("_pos"))
+      .sortWithinPartitions("_file", "_pos") // tight per-DV-file _file bounds
+      .write.mode("errorifexists").parquet(dir)
+    val metas = StatsCollector.collect(
+      spark, GraftTable.PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
+      .filter(_.rows > 0)
+    if (metas.isEmpty) { FileIO.deleteRecursively(dir); return None }
+    val referenced = spark.read.schema(GraftTable.PosDeleteSchema).parquet(dir)
+      .select("_file").distinct().collect().map(_.getString(0)).toSeq
+    Some((metas, referenced))
+  }
+
+  /** Positions stay valid while their data files live: fails `op` when a
+    * concurrent commit rewrote a `referenced` file (forcing a replan), while
+    * appends and other deletes race through — file immutability keeps their
+    * positions valid. Reads no manifest while every manifest of the planned
+    * snapshot is still in `parent` (then every planned file is live). */
+  private def requireReferencedLive(op: String, planned: TableState,
+      parent: Option[Snapshot], referenced: Seq[String]): Unit = {
+    val parentManifests = parent.toSeq.flatMap(_.manifests)
+    val kept = parentManifests.map(_.path).toSet
+    if (planned.snapshot.exists(_.manifests.forall(m => kept.contains(m.path)))) return
+    val live = parentManifests.flatMap(m => readManifest(m.path)).map(_.path).toSet
+    val gone = referenced.filterNot(live)
+    require(gone.isEmpty,
+      s"$op planned against files a concurrent commit rewrote " +
+        s"(${gone.take(3).mkString(", ")}${if (gone.length > 3) ", …" else ""}); replan required")
   }
 
   /**
@@ -644,32 +396,19 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   def updateWherePositional(predicate: Column, set: Map[String, Column],
       summary: Map[String, String] = Map.empty): Option[Snapshot] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val md = metadata
-    val sch = schemaOf(md)
+    val st = state
+    val sch = st.schema
     for (c <- set.keys)
       require(sch.fieldNames.contains(c), s"UPDATE of unknown column $c")
-    val planned = planFilesOf(md, Some(predicate), None)
+    val planned = st.planFiles(Some(predicate))
     if (planned.isEmpty) return None
-    val raw = org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-      spark, sch, root, planned, allSpecsOf(md, sch))
-    val live = applyTombstonesOf(md,
-      applyPosDeletes(raw, posDeletesOf(md, None), planned, keepPosCols = true), None)
-    val hit = live.filter(coalesce(predicate, lit(false)))
+    val hit = livePositions(st, planned).filter(coalesce(predicate, lit(false)))
     // ONE scan feeds both outputs: persist the matching rows (the MoR
     // niche is a trickle — small), then project positions and new images
     hit.persist()
     try {
       val uuid = s"dvu-${UUID.randomUUID}"
-      val dvDir = s"$dataDir/$uuid"
-      hit.select(col("_gdv_rel").as("_file"), col("_gdv_idx").as("_pos"))
-        .sortWithinPartitions("_file", "_pos")
-        .write.mode("errorifexists").parquet(dvDir)
-      val dvMetas = StatsCollector.collect(
-        spark, PosDeleteSchema, root, FileIO.listFiles(dvDir, ".parquet"), uuid)
-        .filter(_.rows > 0)
-      if (dvMetas.isEmpty) { FileIO.deleteRecursively(dvDir); return None }
-      val referenced = spark.read.schema(PosDeleteSchema).parquet(dvDir)
-        .select("_file").distinct().collect().map(_.getString(0))
+      val (dvMetas, referenced) = writePositions(hit, uuid).getOrElse(return None)
       val images = hit.select(sch.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(v) => when(coalesce(predicate, lit(false)), v.cast(f.dataType))
@@ -677,14 +416,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
           case None => col(f.name)
         }
       }: _*)
-      val added = writeDataFiles(images, s"update-$uuid")
+      val added = st.writeDataFiles(images, s"update-$uuid")
       Some(commitFull("update-pos") { parent =>
-        val livePaths = parent.toSeq.flatMap(_.manifests).flatMap(m => readManifest(m.path))
-          .map(_.path).toSet
-        val gone = referenced.filterNot(livePaths)
-        require(gone.isEmpty,
-          s"update-pos planned against files a concurrent commit rewrote " +
-            s"(${gone.take(3).mkString(", ")}${if (gone.length > 3) ", …" else ""}); replan required")
+        requireReferencedLive("update-pos", st, parent, referenced)
         (parent.map(_.manifests).getOrElse(Seq.empty) :+ writeManifest(added),
           parent.flatMap(_.deleteManifests),
           Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeManifest(dvMetas)),
@@ -696,29 +430,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     } finally hit.unpersist()
   }
 
-  /** Rows of `files` whose (file, row-position) appears in the given
-    * position-delete entries — the row images a delete-pos commit removed
-    * (the changelog/CDC scan). Touches only the files the DV rows can
-    * reference (bounds prune on `_file`); the negated `dv_keep` bitmap
-    * filter selects the rows. */
-  def rowsAtPositions(sch: StructType, files: Seq[DataFileMeta],
-      dvEntries: Seq[DataFileMeta]): DataFrame = {
-    val covered = files.filter(f => dvEntries.exists(d => dvMayCover(d, f.path)))
-    org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-      spark, sch, root, covered, allPartitionSpecs)
-      .filter(!DeletionVectors.keep(spark, dvEntries.map(absPath)))
-  }
-
-  /** Deleted-row count per data-file path across a snapshot's DV files
-    * (duplicates across DV files count once): the cardinalities of the
-    * cached per-file bitmaps, no Spark job. Drives compaction's
-    * delete-pressure eligibility. */
-  def posDeleteRowCounts(snapshotId: Option[Long] = None): Map[String, Long] = {
-    val dvs = positionDeletes(snapshotId)
-    if (dvs.isEmpty) Map.empty
-    else DeletionVectors.load(spark, dvs.map(absPath)).map { case (f, b) => f -> b.getLongCardinality }
-  }
-
   /**
    * Compact the live position-delete (DV) files — the niche of Iceberg's
    * `rewrite_position_delete_files` — WITHOUT touching any data file.
@@ -728,7 +439,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * from overlapping deletes) grows with the commit rate. One pass reads
    * the live DV rows, dedupes, and rewrites them globally sorted by
    * `(_file, _pos)` into ~`targetBytes` files — so each output DV file
-   * carries a TIGHT contiguous `_file` bounds window and [[dvMayCover]]
+   * carries a TIGHT contiguous `_file` bounds window and [[GraftTable.dvMayCover]]
    * prunes whole DV files per scanned data file. Entries can never
    * reference dead data files ([[rewritePosDeletes]] clears them exactly
    * at each data-file rewrite), and a concurrent DV change between plan
@@ -739,10 +450,10 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    */
   def rewriteDeleteFiles(targetBytes: Long = 8L << 20,
       summary: Map[String, String] = Map.empty): Option[Snapshot] = {
-    val md = metadata
-    val dvs = posDeletesOf(md, None)
+    val st = state
+    val dvs = st.positionDeletes
     if (dvs.size < 2) return None
-    val covered = md.currentSnapshot.toSeq.flatMap(_.posDeleteList).map(_.path).toSet
+    val covered = st.snapshot.toSeq.flatMap(_.posDeleteList).map(_.path).toSet
     val uuid = s"dvc-${UUID.randomUUID}"
     val dir = s"$dataDir/$uuid"
     val nOut = math.max(1L, dvs.map(_.bytes).sum / targetBytes)
@@ -750,13 +461,13 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     // cleanup covers the WRITE failure window too (ENOSPC mid-write would
     // otherwise leak a partial staging dir no maintenance pass reclaims)
     try {
-      spark.read.schema(PosDeleteSchema).parquet(dvs.map(absPath): _*)
+      spark.read.schema(GraftTable.PosDeleteSchema).parquet(dvs.map(absPath): _*)
         .distinct()
         .sort("_file", "_pos") // range exchange: contiguous per-file bounds
         .write.option("maxRecordsPerFile", perFile.toString)
         .mode("errorifexists").parquet(dir)
       val metas = StatsCollector.collect(
-        spark, PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
+        spark, GraftTable.PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
         .filter(_.rows > 0)
       Some(commitFull("rewrite-deletes") { parent =>
         val parentList = parent.toSeq.flatMap(_.posDeleteList)
@@ -777,7 +488,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   /** Parent's position-delete manifests minus rows referencing
     * `removedPaths` (whose rewrite APPLIED those deletes — see
-    * [[withPositionDeletes]]): DV files that cannot reference a removed
+    * [[TableState.withPositionDeletes]]): DV files that cannot reference a removed
     * path are kept verbatim (bounds check, no read); intersecting ones are
     * rewritten without the dead rows and dropped entirely when empty —
     * EXACT per-file clearing, the property equality tombstones can't have.
@@ -788,27 +499,27 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val manifests = parent.map(_.posDeleteList).getOrElse(Seq.empty)
     if (manifests.isEmpty || removedPaths.isEmpty)
       return (parent.flatMap(_.posDeleteManifests), 0L)
-    val (hitM, keptM) = manifests.partition(m =>
-      readManifest(m.path).exists(d => removedPaths.exists(p => dvMayCover(d, p))))
+    def covers(d: DataFileMeta) = removedPaths.exists(p => GraftTable.dvMayCover(d, p))
+    val (hitM, keptM) = manifests.map(m => m -> readManifest(m.path))
+      .partition { case (_, entries) => entries.exists(covers) }
     if (hitM.isEmpty) return (parent.flatMap(_.posDeleteManifests), 0L)
-    val entries = hitM.flatMap(m => readManifest(m.path))
-    val (hit, miss) = entries.partition(d => removedPaths.exists(p => dvMayCover(d, p)))
+    val (hit, miss) = hitM.flatMap(_._2).partition(covers)
     val removedDf = {
       import spark.implicits._
       removedPaths.toSeq.toDF("_gdv_rm")
     }
     val uuid = s"dvrw-${UUID.randomUUID}"
     val dir = s"$dataDir/$uuid"
-    spark.read.schema(PosDeleteSchema).parquet(hit.map(absPath): _*)
+    spark.read.schema(GraftTable.PosDeleteSchema).parquet(hit.map(absPath): _*)
       .join(broadcast(removedDf), col("_file") === col("_gdv_rm"), "left_anti")
       .sortWithinPartitions("_file", "_pos")
       .write.mode("errorifexists").parquet(dir)
     val rewritten = StatsCollector.collect(
-      spark, PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
+      spark, GraftTable.PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
       .filter(_.rows > 0)
     val cleared = hit.map(_.rows).sum - rewritten.map(_.rows).sum
     val survivors = miss ++ rewritten
-    val out = if (survivors.isEmpty) keptM else keptM :+ writeManifest(survivors)
+    val out = keptM.map(_._1) ++ (if (survivors.isEmpty) Nil else Seq(writeManifest(survivors)))
     (if (out.isEmpty) None else Some(out), cleared)
   }
 
@@ -828,73 +539,12 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * throw, directing the caller to a full-table diff.
    */
   def incrementalRead(fromSnapshotId: Long, toSnapshotId: Option[Long] = None): DataFrame = {
-    val (added, to) = incrementalFiles(fromSnapshotId, toSnapshotId)
-    incrementalResult(added, to)
-  }
-
-  /**
-   * The file-level diff behind [[incrementalRead]]: data files APPENDED in
-   * `(fromSnapshotId, to]`, plus the resolved `to` id (so callers apply that
-   * snapshot's tombstones). `skipChangeCommits = true` silently SKIPS
-   * row-changing commits (merge / update / delete / overwrite /
-   * tombstone-materializing rewrites) instead of throwing — the streaming
-   * CDC source's opt-out, mirroring the append-only contract a tailing
-   * consumer accepts: appends land, rewrites of already-delivered rows are
-   * never re-delivered or retracted.
-   */
-  def incrementalFiles(
-      fromSnapshotId: Long,
-      toSnapshotId: Option[Long] = None,
-      skipChangeCommits: Boolean = false): (Seq[DataFileMeta], Long) = {
-    val md = metadata
-    // schema evolution commits reshape METADATA only (stats-key remap);
-    // every row survives them, so incremental readers pass through —
-    // ONE shared op set with the changelog (Changelog.RowPreservingOps)
-    val rowPreserving = Changelog.RowPreservingOps
-    val to = toSnapshotId.orElse(md.currentSnapshotId).getOrElse(
-      throw new IllegalArgumentException("incremental read on an empty table"))
-    require(md.snapshot(fromSnapshotId).nonEmpty || fromSnapshotId == 0,
-      s"unknown or expired snapshot $fromSnapshotId")
-    var cursor = md.snapshot(to).getOrElse(
-      throw new IllegalArgumentException(s"unknown snapshot $to"))
-    val added = scala.collection.mutable.ArrayBuffer.empty[DataFileMeta]
-    while (cursor.id != fromSnapshotId) {
-      cursor.operation match {
-        // "publish" (branch cherry-pick) is append-SHAPED: manifests are
-        // the parent's plus the staged additions, tombstones unchanged
-        case "append" | "publish" =>
-          val parentManifests = cursor.parentId
-            .flatMap(md.snapshot).map(_.manifests.map(_.path).toSet)
-            .getOrElse(Set.empty)
-          for (m <- cursor.manifests if !parentManifests.contains(m.path))
-            added ++= readManifest(m.path)
-        case op if rowPreserving.contains(op) =>
-          // a full cluster rewrite that MATERIALIZED live tombstones removed
-          // rows (a key tombstoned before `from`, re-appended in-range, then
-          // materialized away would otherwise be returned here while read()
-          // at `to` hides it)
-          if (cursor.summary.get("materialized-tombstones").contains("true") && !skipChangeCommits)
-            throw new IllegalArgumentException(
-              s"snapshot ${cursor.id} ('$op') materialized tombstones and is not " +
-                "row-preserving; file-level incremental read is append-only — " +
-                "diff full snapshots instead")
-        case op =>
-          if (!skipChangeCommits)
-            throw new IllegalArgumentException(
-              s"snapshot ${cursor.id} is a row-changing '$op' commit; " +
-                "file-level incremental read is append-only — diff full snapshots " +
-                "instead (streaming readers: option skip-change-commits=true)")
-          // skipped: the change commit's file additions are not emitted
-      }
-      cursor = cursor.parentId.flatMap(md.snapshot).getOrElse {
-        if (cursor.parentId.contains(fromSnapshotId) || (cursor.parentId.isEmpty && fromSnapshotId == 0))
-          return (added.toSeq, to)
-        throw new IllegalArgumentException(
-          s"snapshot chain from $to to $fromSnapshotId broken " +
-            "(expired snapshot, or a rollback onto another branch?)")
-      }
-    }
-    (added.toSeq, to)
+    val st = state
+    val (added, to) = st.incrementalFiles(fromSnapshotId, toSnapshotId)
+    // the consumer must see exactly what `read()` at `to` would show for
+    // these rows (a key tombstoned before `from` and re-appended inside the
+    // range is hidden from full reads, so it must be hidden here too)
+    st.at(to).live(added)
   }
 
   /**
@@ -912,152 +562,25 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    */
   def changes(fromSnapshotId: Long, toSnapshotId: Option[Long] = None,
       updateImagesOn: Seq[String] = Seq.empty): DataFrame =
-    Changelog.changes(this, fromSnapshotId, toSnapshotId,
-      updateImagesOn = updateImagesOn)
-
-  /** Incremental-read result with the `to` snapshot's tombstones applied —
-    * the consumer must see exactly what `read()` at `to` would show for
-    * these rows (a key tombstoned before `from` and re-appended inside the
-    * range is hidden from full reads, so it must be hidden here too). */
-  private def incrementalResult(added: Seq[DataFileMeta], to: Long): DataFrame = {
-    val md = metadata
-    val sch = schemaOf(md)
-    applyTombstonesOf(md,
-      applyPosDeletes(
-        org.apache.spark.sql.graftshim.GraftRelation.dataFrame(
-          spark, sch, root, added, allSpecsOf(md, sch)),
-        posDeletesOf(md, Some(to)), added),
-      Some(to))
-  }
+    Changelog.changes(state, fromSnapshotId, toSnapshotId, updateImagesOn = updateImagesOn)
 
   // ---- writes --------------------------------------------------------------
 
-  /** `df` as [[writeDataFiles]] lays it out: columns in schema order,
-    * each re-aliased with its table field's metadata. */
-  private def writeProjection(sch: StructType, df: DataFrame): DataFrame = {
-    // select in schema order so files are column-identical across commits;
-    // re-aliasing with the table field's METADATA stamps the stable parquet
-    // field id onto every written column (fieldId.write.enabled is on by
-    // default), which is what rename/drop evolution resolves by later
-    val cols = sch.fields.map { f =>
-      // NESTED field ids live in the column's TYPE (StructField metadata
-      // inside the struct), which comes from the incoming frame, not the
-      // top-level alias — cast struct columns to the table's type so
-      // fieldId.write stamps interior ids too. Only when the shapes agree
-      // in order and names (then the positional cast is a pure metadata
-      // reshape, and a no-op if the frame already carries the ids); any
-      // other frame keeps today's behavior.
-      val c = f.dataType match {
-        case st: StructType if df.schema.fields
-            .find(_.name.equalsIgnoreCase(f.name))
-            .exists(d => GraftTable.sameShape(d.dataType, st) && d.dataType != st) =>
-          df.col(f.name).cast(st)
-        case _ => df.col(f.name)
-      }
-      c.as(f.name, f.metadata)
-    }.toSeq
-    df.select(cols: _*)
-  }
-
-  /** The Spark row schema [[writeDataFiles]] would write for `df` now — the
-    * `org.apache.spark.sql.parquet.row.metadata` of its files. Analysis
-    * only, no job. */
-  private[graft] def writeSchema(df: DataFrame): StructType = writeProjection(schema, df).schema
-
-  /** Columns the `bloom-columns` property asks parquet bloom filters for,
-    * in schema spelling. */
-  private[graft] def bloomColumns: Seq[String] = {
-    val md = metadata
-    bloomColumnsOf(md, schemaOf(md))
-  }
-
-  private def bloomColumnsOf(md: TableMetadata, sch: StructType): Seq[String] =
-    md.properties.get(GraftTable.BloomColumnsProp).toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .flatMap(c => sch.fieldNames.find(_.equalsIgnoreCase(c))) // schema spelling
-
-  /**
-   * Write `df` as new data files under a fresh commit directory and collect
-   * their footer stats. Does NOT commit — callers build the snapshot.
-   * Partitioning/file count is the caller's responsibility (e.g.
-   * `repartitionByRange` before calling).
-   */
-  def writeDataFiles(df: DataFrame, commitUuid: String = UUID.randomUUID.toString,
-      maxRecordsPerFile: Long = 0L): Seq[DataFileMeta] = {
-    val dir = s"$dataDir/$commitUuid"
-    // INT96 (Spark's legacy parquet timestamp) carries no min/max stats;
-    // micros are required for warc_ts pruning bounds. Set on the FRAME'S
-    // session, not the table handle's: a streaming micro-batch executes
-    // under MicroBatchExecution's cloned session, whose SQLConf snapshot
-    // never sees a conf set on the original — sink-written files would
-    // silently lose every timestamp bound
-    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val md = metadata // one read: schema + partition specs derive from it
-    val sch = schemaOf(md)
-    val selected = writeProjection(sch, df)
-    // CHECK constraints ride the write pass itself: one codegen'd filter
-    // whose assert_true throws (with the constraint name) on the first
-    // violating row — zero extra scans at any scale. SQL semantics: a NULL
-    // check passes. Existing rows were validated when the constraint was
-    // added, so rewrites of old data can never trip here.
-    val base = GraftTable.constraintsOf(md).foldLeft(selected) {
-      case (d, (name, check)) =>
-        import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
-        d.filter(assert_true(coalesce(expr(check), lit(true)),
-          lit(s"CHECK constraint '$name' violated: $check")).isNull)
-    }
-    // hidden partitioning: group rows by the transforms so each file covers
-    // ONE partition tuple (the derived columns live only in dir names —
-    // partitionBy removes them from file contents, keeping old and new files
-    // column-identical)
-    val specs = specsOf(md, sch)
-    val prepared = specs.foldLeft(base)((df, sp) => df.withColumn(sp.name, sp.column(sch)))
-    val writer = prepared.write
-      // parquet drops chunk stats entirely once min+max exceed ~4 KB, which
-      // silences pruning for document-sized string columns; truncating at
-      // write time (sound: prefix min, incremented-prefix max) keeps bounds
-      // for every string column at any value size
-      .option("parquet.statistics.truncate.length", "64")
-    // per-column parquet BLOOM FILTERS (table property `bloom-columns`,
-    // comma-separated): point lookups / IN probes on a key column skip
-    // row groups whose min/max would admit them — at a 10^12-row corpus
-    // the difference between "read the row group" and "skip it" for the
-    // overwhelming majority of url point queries. Names not (or no
-    // longer, after a rename) in the schema are skipped silently — bloom
-    // is an optimization, never a correctness dependency.
-    val withBloom = bloomColumnsOf(md, sch).foldLeft(writer)((w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
-    // roll to a new file every N records WITHIN a task: sorted partition
-    // runs split into right-sized files without extra partitions (order and
-    // per-file min/max tightness preserved — each file is a sorted run)
-    val withRoll =
-      if (maxRecordsPerFile > 0) withBloom.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      else withBloom
-    (if (specs.isEmpty) withRoll else withRoll.partitionBy(specs.map(_.name): _*))
-      .mode("errorifexists").parquet(dir)
-    val written = GraftTable.stampBucketIds(specs, FileIO.listFilesRecursively(dir, ".parquet"))
-    StatsCollector.collect(spark, sch, root, written, commitUuid)
-  }
-
   /** Append-only commit: parent manifests + one new manifest.
     * `propertyUpdates` land atomically in the same metadata version (e.g.
-    * the streaming batch-id watermark). */
-  /** Write-time clustering (table property `write.sort-order`, a
-    * comma-separated column list): appends sort each task's rows by the
+    * the streaming batch-id watermark).
+    *
+    * Write-time clustering (table property `write.sort-order`, a
+    * comma-separated column list): each task's rows are sorted by the
     * listed columns before writing, so every new file is a sorted run with
     * TIGHT min/max bounds on the sort prefix — incremental clustering paid
     * as one in-task sort (no shuffle, no extra pass), where a full
-    * `OPTIMIZE … ZORDER` rewrite stays the deep-clustering tool. Names not
-    * (or no longer) in the schema are skipped — like `bloom-columns`, an
-    * optimization, never a correctness dependency. */
-  private def applyWriteSortOrder(md: TableMetadata, df: DataFrame): DataFrame = {
-    val cols = md.properties.get(GraftTable.SortOrderProp).toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-      .flatMap(c => schemaOf(md).fieldNames.find(_.equalsIgnoreCase(c)))
-    if (cols.isEmpty) df
-    else df.sortWithinPartitions(cols.map(org.apache.spark.sql.functions.col): _*)
-  }
-
+    * `OPTIMIZE … ZORDER` rewrite stays the deep-clustering tool.
+    * `write.max-records-per-file` rolls each task's (sorted) run into
+    * bounded files — with `write.sort-order` that is what makes the
+    * per-file min/max TIGHT (a sorted task writing one giant file still
+    * spans the full range); also the generic file-size governor for
+    * producers that can't size their partitions. */
   def append(
       df: DataFrame,
       summary: Map[String, String] = Map.empty,
@@ -1065,15 +588,13 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       toBranch: Option[String] = None,
       mergeSchema: Boolean = false): Snapshot = {
     if (mergeSchema) mergeSchemaFor(df)
-    val md = metadata
-    // `write.max-records-per-file` rolls each task's (sorted) run into
-    // bounded files — with `write.sort-order` that is what makes the
-    // per-file min/max TIGHT (a sorted task writing one giant file still
-    // spans the full range); also the generic file-size governor for
-    // producers that can't size their partitions
-    val maxRec = md.properties.get(GraftTable.MaxRecordsPerFileProp)
+    val st = state
+    val maxRec = st.metadata.properties.get(GraftTable.MaxRecordsPerFileProp)
       .map(_.toLong).filter(_ > 0).getOrElse(0L)
-    val metas = writeDataFiles(applyWriteSortOrder(md, df), maxRecordsPerFile = maxRec)
+    val sorted =
+      if (st.writeSortColumns.isEmpty) df
+      else df.sortWithinPartitions(st.writeSortColumns.map(org.apache.spark.sql.functions.col): _*)
+    val metas = st.writeDataFiles(sorted, maxRecordsPerFile = maxRec)
     commit("append", propertyUpdates = propertyUpdates, toBranch = toBranch) { parent =>
       val mf = writeManifest(metas)
       (parent.map(_.manifests).getOrElse(Seq.empty) :+ mf,
@@ -1338,14 +859,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         throw new IllegalArgumentException("cannot fast-forward an empty table"))
       if (mainId == head) md
       else {
-        // walk the branch head's parent chain looking for main's snapshot
-        var cur = md.snapshot(head)
-        var found = false
-        while (cur.nonEmpty && !found) {
-          found = cur.get.parentId.contains(mainId)
-          cur = cur.get.parentId.flatMap(md.snapshot)
-        }
-        require(found,
+        require(md.ancestry(head).exists(_.id == mainId),
           s"cannot fast-forward: main snapshot $mainId is not an ancestor of " +
             s"branch '$branch' head $head — main advanced since the branch " +
             "diverged (publish(branch) cherry-picks staged appends onto the " +
@@ -1391,14 +905,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       val head = r.snapshotId
       val mainId = md.currentSnapshotId.getOrElse(
         throw new IllegalArgumentException("cannot publish onto an empty table"))
-      def ancestorOf(start: Long, target: Long): Boolean = {
-        var cur = md.snapshot(start)
-        while (cur.nonEmpty) {
-          if (cur.get.id == target) return true
-          cur = cur.get.parentId.flatMap(md.snapshot)
-        }
-        false
-      }
+      def ancestorOf(start: Long, target: Long): Boolean = md.ancestry(start).exists(_.id == target)
       if (mainId == head)
         md.copy(refs = Some(md.refMap.updated(branch, RefMeta(head, "branch", Some(head)))))
       else if (ancestorOf(head, mainId))
@@ -1417,14 +924,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         require(ancestorOf(mainId, base),
           s"cannot publish '$branch': its base $base is not an ancestor of main " +
             s"$mainId (main was restored past the divergence point — re-stage)")
-        val chain = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
-        var cur = md.snapshot(head)
-        while (cur.nonEmpty && cur.get.id != base) {
-          chain += cur.get
-          cur = cur.get.parentId.flatMap(md.snapshot)
-        }
-        require(cur.nonEmpty,
+        require(ancestorOf(head, base),
           s"branch '$branch' chain from $head to base $base is broken (expired snapshot?)")
+        val chain = md.ancestry(head).takeWhile(_.id != base)
         chain.foreach(s => require(s.operation == "append",
           s"staged snapshot ${s.id} is a '${s.operation}' commit; " +
             "only appends can be cherry-picked"))
@@ -1474,33 +976,10 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   }
 
   /**
-   * Schema evolution: append a nullable column. Existing data files simply
-   * lack the Parquet column — the reader yields NULL, and stats pruning
-   * treats absent bounds as "unknown", so scans over old files stay sound.
-   * On field-id tables the new column takes a NEVER-REUSED id from the
-   * `next-field-id` counter: a column dropped and re-added under the same
-   * name must NOT resurrect old files' values.
-   */
-  /**
-   * Auto schema evolution (Delta's `mergeSchema`): add, as nullable columns,
-   * every TOP-LEVEL column the incoming frame carries that the table lacks
-   * (session-resolver name matching), so a producer can start shipping a new
-   * field without a coordinated DDL step. Additive only: existing columns
-   * keep their types (a mismatched type still fails the write loudly), new
-   * nested fields inside existing structs are NOT inferred (add those
-   * explicitly — an accidental struct reshape should not mutate the schema),
-   * and [[addColumn]]'s guards apply (retired names refuse; field ids are
-   * never reused). Each add is its own CAS'd metadata commit; old files read
-   * NULL and pruning treats absent bounds as unknown, so scans stay sound.
-   */
-  /** Live CHECK constraints: name → SQL predicate text. */
-  def constraints: Map[String, String] = GraftTable.constraintsOf(metadata)
-
-  /**
    * Add a CHECK constraint (Delta-style data-quality gate): every
    * subsequent write refuses rows for which `check` evaluates to FALSE
    * (NULL passes, SQL semantics) — enforced INLINE in the write pass (one
-   * codegen'd filter inside [[writeDataFiles]]; no extra scan per write).
+   * codegen'd filter inside [[TableState.writeDataFiles]]; no extra scan per write).
    * EXISTING rows are validated here, once, so rewrites (compaction /
    * clustering) can never trip a constraint on pre-existing data. A
    * concurrent write landing during validation forces a loud retry rather
@@ -1510,8 +989,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     require(name.matches("[A-Za-z0-9._-]+"), s"invalid constraint name '$name'")
     val key = GraftTable.ConstraintPrefix + name
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val validatedAt = metadata.currentSnapshotId
-    val violations = read().filter(!coalesce(expr(check), lit(true))).count()
+    val st = state
+    val validatedAt = st.snapshot.map(_.id)
+    val violations = st.read().filter(!coalesce(expr(check), lit(true))).count()
     require(violations == 0,
       s"cannot add CHECK constraint '$name': $violations existing rows violate ($check)")
     commitMetadataUpdate { md =>
@@ -1525,13 +1005,26 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   def dropConstraint(name: String, ifExists: Boolean = false): TableMetadata =
     commitMetadataUpdate { md =>
       val key = GraftTable.ConstraintPrefix + name
-      if (!md.properties.contains(key) && !ifExists)
+      if (!md.properties.contains(key) && !ifExists) {
+        val known = stateFor(md).constraints.keys.toSeq.sorted
         throw new IllegalArgumentException(s"unknown constraint '$name' — known: " +
-          (if (GraftTable.constraintsOf(md).isEmpty) "(none)"
-           else GraftTable.constraintsOf(md).keys.toSeq.sorted.mkString(", ")))
+          (if (known.isEmpty) "(none)" else known.mkString(", ")))
+      }
       md.copy(properties = md.properties - key)
     }
 
+  /**
+   * Auto schema evolution (Delta's `mergeSchema`): add, as nullable columns,
+   * every TOP-LEVEL column the incoming frame carries that the table lacks
+   * (session-resolver name matching), so a producer can start shipping a new
+   * field without a coordinated DDL step. Additive only: existing columns
+   * keep their types (a mismatched type still fails the write loudly), new
+   * nested fields inside existing structs are NOT inferred (add those
+   * explicitly — an accidental struct reshape should not mutate the schema),
+   * and [[addColumn]]'s guards apply (retired names refuse; field ids are
+   * never reused). Each add is its own CAS'd metadata commit; old files read
+   * NULL and pruning treats absent bounds as unknown, so scans stay sound.
+   */
   def mergeSchemaFor(df: DataFrame): Unit = {
     val resolver = spark.sessionState.analyzer.resolver
     val cur = schema
@@ -1540,6 +1033,14 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       .foreach(f => addColumn(f.copy(nullable = true)))
   }
 
+  /**
+   * Schema evolution: append a nullable column. Existing data files simply
+   * lack the Parquet column — the reader yields NULL, and stats pruning
+   * treats absent bounds as "unknown", so scans over old files stay sound.
+   * On field-id tables the new column takes a NEVER-REUSED id from the
+   * `next-field-id` counter: a column dropped and re-added under the same
+   * name must NOT resurrect old files' values.
+   */
   def addColumn(field: org.apache.spark.sql.types.StructField): TableMetadata = {
     require(field.nullable, s"new column ${field.name} must be nullable (old files have no values)")
     require(!field.name.contains("."),
@@ -1547,10 +1048,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         "addField(parentPath, field) (SQL: ADD COLUMNS (struct.leaf TYPE)) to add a " +
         "nested field inside a struct")
     commitMetadataUpdate { md =>
-      val cur = schemaOf(md)
+      val st = stateFor(md)
+      val cur = st.schema
       require(!cur.fieldNames.exists(_.equalsIgnoreCase(field.name)),
         s"column ${field.name} already exists")
-      require(!retiredOf(md).contains(field.name.toLowerCase),
+      require(!st.retired.contains(field.name.toLowerCase),
         s"column name ${field.name} was previously dropped or renamed away; existing " +
           "files still carry a physical column of that name, and parquet filter " +
           "pushdown matches by NAME — rewrite the table (full cluster) to reclaim it")
@@ -1587,7 +1089,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * (their key columns are physical parquet names).
    */
   def renameColumn(from: String, to: String): Snapshot =
-    evolveSchema("rename-column", s"$from->$to", retire = Seq(from)) { sch =>
+    evolveSchema("rename-column", s"$from->$to", retire = Seq(from)) { st =>
+      val sch = st.schema
       val path = resolvePath(sch, from, "RENAME COLUMN")
       require(!to.contains("."), s"RENAME COLUMN to '$to': dotted column names are not supported")
       val fld = fieldAt(sch, path)
@@ -1607,11 +1110,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         s"column $to already exists" +
           (if (path.size > 1) s" in struct ${path.init.mkString(".")}" else ""))
       val newPath = (path.init :+ to).mkString(".")
-      require(!retired.contains(newPath.toLowerCase),
+      require(!st.retired.contains(newPath.toLowerCase),
         s"column name $newPath was previously dropped or renamed away; existing files " +
           "still carry a physical column of that name, and parquet filter pushdown " +
           "matches by NAME — rewrite the table (full cluster) to reclaim it")
-      evolutionGuards(sch, path.head, "rename")
+      evolutionGuards(st, path.head, "rename")
       if (path.size == 1) {
         val idx = sch.fieldIndex(from)
         (StructType(sch.fields.updated(idx, sch.fields(idx).copy(name = to))),
@@ -1641,11 +1144,12 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   def dropColumns(names: Seq[String]): Snapshot = {
     require(names.nonEmpty && names.distinct.size == names.size,
       s"duplicate column in DROP: ${names.mkString(", ")}")
-    evolveSchema("drop-column", names.mkString(","), retire = names) { sch =>
+    evolveSchema("drop-column", names.mkString(","), retire = names) { st =>
+      val sch = st.schema
       val paths = names.map(resolvePath(sch, _, "DROP COLUMN"))
       val (top, nested) = paths.partition(_.size == 1)
       require(sch.fields.length > top.size, "cannot drop every column")
-      paths.foreach(p => evolutionGuards(sch, p.head, "drop"))
+      paths.foreach(p => evolutionGuards(st, p.head, "drop"))
       nested.foreach { p =>
         nestedGuards(sch, p, "drop")
         require(parentStruct(sch, p).fields.length > 1,
@@ -1696,9 +1200,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     require(widens.nonEmpty && widens.map(_._1).distinct.size == widens.size,
       s"duplicate column in widen: ${widens.map(_._1).mkString(", ")}")
     val detail = widens.map { case (n, t) => s"$n->${t.simpleString}" }.mkString(",")
-    evolveSchema("widen-column", detail, retire = Seq.empty) { sch =>
+    evolveSchema("widen-column", detail, retire = Seq.empty) { st =>
       val strip = scala.collection.mutable.Set.empty[String]
-      val next = widens.foldLeft(sch) { case (cur, (name, to)) =>
+      val next = widens.foldLeft(st.schema) { case (cur, (name, to)) =>
         val path = resolvePath(cur, name, "ALTER COLUMN TYPE")
         val from = fieldAt(cur, path).dataType
         require(GraftTable.widenOk((from, to)),
@@ -1706,7 +1210,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
             s"(allowed: integral up-casts, integral→double, float→double)")
         // spec/tombstone guards only — no field-id requirement (the NAME
         // path is unchanged, so old files bind by name at any nesting depth)
-        allPartitionSpecs.find(_.sourceColumn == path.head).foreach(sp =>
+        st.allPartitionSpecs.find(_.sourceColumn == path.head).foreach(sp =>
           throw new IllegalArgumentException(
             s"column ${path.head} drives partition transform $sp — bucket hashes differ " +
               "by type; widen requires a table rewrite"))
@@ -1720,7 +1224,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
           StructType(st.fields.updated(st.fieldIndex(path.last),
             st.fields(st.fieldIndex(path.last)).copy(dataType = to))))
       }
-      require(tombstones().isEmpty,
+      require(st.tombstones.isEmpty,
         "table has live merge-on-read tombstones; materialize them first, then widen")
       (next, if (strip.isEmpty && widens.forall(_._1.contains(".")))
                // all-nested widen touches no stats keys — reuse manifests
@@ -1745,7 +1249,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       s"ADD COLUMNS '${field.name}': the new field name cannot be dotted (give the " +
         "struct path as the parent, e.g. meta.extra adds extra under meta)")
     commitMetadataUpdate { md =>
-      val cur = schemaOf(md)
+      val st = stateFor(md)
+      val cur = st.schema
       val path = resolvePath(cur, parentPath, "ADD COLUMNS")
       val parentField = fieldAt(cur, path)
       val parent = parentField.dataType match {
@@ -1756,7 +1261,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       require(!parent.fieldNames.exists(_.equalsIgnoreCase(field.name)),
         s"field ${field.name} already exists in struct $parentPath")
       val full = (path :+ field.name).mkString(".").toLowerCase
-      require(!retiredOf(md).contains(full),
+      require(!st.retired.contains(full),
         s"field name ${(path :+ field.name).mkString(".")} was previously dropped or " +
           "renamed away; existing files still carry a physical column of that name, and " +
           "parquet filter pushdown matches by NAME — rewrite the table to reclaim it")
@@ -1831,42 +1336,37 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       s"struct ${path.head} predates nested field ids (its interior fields resolve by " +
         s"NAME only); nested $what requires a table rewrite")
 
-  private def evolutionGuards(sch: StructType, colName: String, what: String): Unit = {
-    require(GraftTable.hasFieldIds(sch),
+  private def evolutionGuards(st: TableState, colName: String, what: String): Unit = {
+    require(GraftTable.hasFieldIds(st.schema),
       s"table predates field-id column mapping; $what requires a table rewrite " +
         "(files written without parquet field ids resolve by NAME only)")
     // ALL spec generations: files written under a historical spec still
     // partition-prune by this column's dirs — evolving it away would
     // silently kill that pruning for every pre-evolution file
-    allPartitionSpecs.find(_.sourceColumn == colName).foreach(sp =>
+    st.allPartitionSpecs.find(_.sourceColumn == colName).foreach(sp =>
       throw new IllegalArgumentException(
         s"column $colName drives partition transform $sp (active or historical) — " +
           s"partition directory names are physical; $what requires a table rewrite"))
-    require(tombstones().isEmpty,
+    require(st.tombstones.isEmpty,
       s"table has live merge-on-read tombstones (physical key columns); materialize " +
         s"them first (Cluster.zorderRewrite), then $what")
   }
-
-  /** Names vacated by rename/drop across the table's history (lowercase). */
-  def retired: Set[String] = retiredOf(metadata)
-
-  private def retiredOf(md: TableMetadata): Set[String] =
-    md.properties.get(GraftTable.RetiredColumnsProp)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
 
   /** Shared rename/drop/widen machinery: one commit carrying the new schema,
     * the stats-remapped manifests, and the vacated name's retirement — all
     * atomic (row-preserving — incremental readers pass through it). `f`
     * returning no remap means no manifest stats key is touched (nested-only
     * evolution: nested leaves carry no bounds) — the parent's manifests are
-    * reused verbatim, keeping the commit O(1) regardless of file count. */
+    * reused verbatim, keeping the commit O(1) regardless of file count.
+    * `f` plans against one pinned state, whose snapshot the commit then
+    * requires as its parent. */
   private def evolveSchema(op: String, detail: String, retire: Seq[String])(
-      f: StructType => (StructType, Option[String => Option[String]])): Snapshot = {
-    val md0 = metadata
-    val (nextSchema, remapOpt) = f(schemaOf(md0))
-    commitFull(op, expectedSnapshotId = md0.currentSnapshotId,
+      f: TableState => (StructType, Option[String => Option[String]])): Snapshot = {
+    val st = state
+    val (nextSchema, remapOpt) = f(st)
+    commitFull(op, expectedSnapshotId = st.snapshot.map(_.id),
       propertyUpdates = Map(GraftTable.RetiredColumnsProp ->
-        (retiredOf(md0) ++ retire.map(_.toLowerCase)).toSeq.sorted.mkString(",")),
+        (st.retired ++ retire.map(_.toLowerCase)).toSeq.sorted.mkString(",")),
       schemaUpdate = Some(nextSchema)) { parent =>
       val manifests = remapOpt match {
         case None => parent.map(_.manifests).getOrElse(Seq.empty)
@@ -1907,6 +1407,25 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
 object GraftTable {
 
+  /** Tombstone sets above this row count anti-join via shuffle instead of
+    * broadcast (a 10^8-key MoR delete must not OOM the driver). */
+  val TombstoneBroadcastRowCap = 4L * 1000 * 1000
+
+  /** Schema of a position-delete (deletion-vector) file: `_file` is a data
+    * file's table-relative path (= [[DataFileMeta.path]]), `_pos` a 0-based
+    * deleted row position within it (parquet `_metadata.row_index`). */
+  val PosDeleteSchema: StructType = StructType(Seq(
+    org.apache.spark.sql.types.StructField("_file",
+      org.apache.spark.sql.types.StringType, nullable = false),
+    org.apache.spark.sql.types.StructField("_pos",
+      org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** Could any row of DV file `d` reference data file `path`? min/max
+    * prune on `_file` (missing bounds → conservatively yes). */
+  private[table] def dvMayCover(d: DataFileMeta, path: String): Boolean =
+    d.minValues.get("_file").forall(_ <= path) &&
+      d.maxValues.get("_file").forall(path <= _)
+
   /** Stamp Spark's bucket-id file-name suffix (`part-…_00007.snappy.parquet`)
     * onto freshly written files of a `bucket(n, col)`-partitioned table. The
     * id is the file's OWN partition-dir value — `writeDataFiles`'
@@ -1914,7 +1433,7 @@ object GraftTable {
     * concatenates files of one such dir), so every file is bucket-pure by
     * construction — and the suffix is spelled via Spark's own `BucketingUtils` formatter so
     * write-side stamp and read-side parse can never drift. The stamp is what
-    * lets [[read]] attach a `BucketSpec` ([[bucketSpecOf]]): the scan then
+    * lets a read attach a `BucketSpec` ([[TableState.bucketSpec]]): the scan then
     * reports `HashPartitioning(col, n)` and joins/aggregations on the bucket
     * column skip their shuffle entirely. Renames happen pre-commit inside the
     * fresh commit dir — no reader can ever hold the unstamped name. */
@@ -1959,12 +1478,6 @@ object GraftTable {
     * SQL predicate text. Managed via add/dropConstraint (which validate);
     * raw SET/UNSET TBLPROPERTIES refuses the prefix. */
   val ConstraintPrefix = "constraint."
-
-  private[graft] def constraintsOf(md: TableMetadata): Map[String, String] =
-    md.properties.collect {
-      case (k, v) if k.startsWith(ConstraintPrefix) =>
-        k.stripPrefix(ConstraintPrefix) -> v
-    }
 
   /** Table property: comma-separated columns to write parquet bloom
     * filters for (row-group skipping on point/IN lookups). */

@@ -94,6 +94,11 @@ final case class TableMetadata(
   def currentSnapshot: Option[Snapshot] =
     currentSnapshotId.flatMap(id => snapshots.find(_.id == id))
   def snapshot(id: Long): Option[Snapshot] = snapshots.find(_.id == id)
+  /** Snapshot `id` and its retained ancestors, newest first — the walk ends
+    * at the root or at the first parent no longer retained. */
+  def ancestry(id: Long): Seq[Snapshot] =
+    Iterator.iterate(snapshot(id))(_.flatMap(_.parentId).flatMap(snapshot))
+      .takeWhile(_.nonEmpty).map(_.get).toSeq
   def refMap: Map[String, RefMeta] = refs.getOrElse(Map.empty)
 }
 

@@ -1,0 +1,446 @@
+package graft.table
+
+import java.util.UUID
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.graftshim.GraftRelation
+import org.apache.spark.sql.types.StructType
+
+/**
+ * One committed metadata version of a [[GraftTable]], pinned at one of its
+ * snapshots (the version's current snapshot unless [[at]] moves it).
+ * `table.state` reads it with one `metadata/` listing and one `v<N>.json`
+ * parse; everything else here — schema, partition specs, files, deletes,
+ * the bucket gate, the write layout — derives from that one version, each
+ * computed lazily and at most once.
+ *
+ * Operations pin a state at plan time and use only it until they commit,
+ * so an op can never pair one version's schema or specs with another
+ * version's file list, and planning costs one metadata read however many
+ * views it consults. The commit itself ([[GraftTable.commitFull]]) re-reads
+ * the latest version on every CAS attempt, as it must.
+ */
+final class TableState private[table] (
+    val table: GraftTable,
+    val metadata: TableMetadata,
+    val snapshot: Option[Snapshot],
+    shapeOf: Option[TableState] = None) {
+
+  private def spark = table.spark
+
+  // ---- schema and partition specs ----------------------------------------
+
+  lazy val schema: StructType = shapeOf.fold(table.parseSchema(metadata))(_.schema)
+
+  /** Hidden-partitioning transforms, if the table declares any (see
+    * [[PartitionSpec]]); validated against the schema. */
+  lazy val partitionSpecs: Seq[PartitionSpec] = shapeOf.fold(
+    metadata.properties.get(PartitionSpec.Property).map(PartitionSpec.parseMulti)
+      .getOrElse(Seq.empty).map { sp => sp.validate(schema); sp })(_.partitionSpecs)
+
+  /** ACTIVE transforms plus every HISTORICAL generation's (spec evolution):
+    * each data file's path physically encodes the spec generation it was
+    * written under (`gp_bucket_8_url=…` vs `gp_bucket_16_url=…` are
+    * distinct dir names), so pruning and maintenance grouping evaluate the
+    * union and each file answers only for its own generation. Historical
+    * specs whose source column was since renamed/dropped no longer
+    * validate and are silently skipped (their pruning is dead, which is
+    * sound — the files just stop partition-pruning by that transform). */
+  lazy val allPartitionSpecs: Seq[PartitionSpec] = shapeOf.fold {
+    val historical = PartitionSpec.parseHistory(metadata.properties.get(PartitionSpec.HistoryProperty))
+      .flatMap { gen =>
+        scala.util.Try {
+          PartitionSpec.parseMulti(gen).map { sp => sp.validate(schema); sp }
+        }.getOrElse(Seq.empty)
+      }
+    val activeNames = partitionSpecs.map(_.name).toSet
+    partitionSpecs ++ historical.filterNot(sp => activeNames.contains(sp.name))
+      .groupBy(_.name).map(_._2.head)
+  }(_.allPartitionSpecs)
+
+  /** This version pinned at retained snapshot `snapshotId` (same schema and
+    * specs — time travel within one metadata read). */
+  def at(snapshotId: Long): TableState =
+    new TableState(table, metadata, Some(metadata.snapshot(snapshotId).getOrElse(
+      throw new IllegalArgumentException(s"unknown snapshot $snapshotId"))), Some(this))
+
+  /** [[at]] `snapshotId`, or this state when None. */
+  def at(snapshotId: Option[Long]): TableState = snapshotId.fold(this)(at)
+
+  /** This version's snapshots read through `pinned`'s schema and partition
+    * specs: a streaming source keeps the micro-batch schema it started with
+    * while it tails newer commits (field-id resolution keeps files written
+    * after a rename or drop readable by the older schema). */
+  def withSchemaOf(pinned: TableState): TableState =
+    new TableState(table, metadata, snapshot, Some(pinned))
+
+  // ---- table properties ----------------------------------------------------
+
+  /** Live CHECK constraints: name → SQL predicate text. */
+  lazy val constraints: Map[String, String] = metadata.properties.collect {
+    case (k, v) if k.startsWith(GraftTable.ConstraintPrefix) =>
+      k.stripPrefix(GraftTable.ConstraintPrefix) -> v
+  }
+
+  /** Names vacated by rename/drop across the table's history (lowercase). */
+  lazy val retired: Set[String] = metadata.properties.get(GraftTable.RetiredColumnsProp)
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
+
+  /** Columns the `bloom-columns` property asks parquet bloom filters for,
+    * in schema spelling. */
+  lazy val bloomColumns: Seq[String] = columnList(GraftTable.BloomColumnsProp)
+
+  /** Columns of the `write.sort-order` property, in schema spelling. */
+  lazy val writeSortColumns: Seq[String] = columnList(GraftTable.SortOrderProp)
+
+  /** A comma-separated column-list property resolved against the schema;
+    * names not (or no longer, after a rename) in it are skipped — these
+    * properties steer layout, never correctness. */
+  private def columnList(prop: String): Seq[String] =
+    metadata.properties.get(prop).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+      .flatMap(c => schema.fieldNames.find(_.equalsIgnoreCase(c)))
+
+  // ---- files and deletes ---------------------------------------------------
+
+  /** Data files of the pinned snapshot (empty before the first commit). */
+  lazy val files: Seq[DataFileMeta] =
+    stripUntrustedDecimalBounds(snapshot.toSeq.flatMap(_.manifests).flatMap(m => table.readManifest(m.path)))
+
+  /** Decimal bound strings changed space once (parquet stats are UNSCALED;
+    * early manifests stored them verbatim, current ones store the SCALED
+    * decimal). Tables created since carry [[GraftTable.DecimalStatsScaledProp]];
+    * for a table WITHOUT it, decimal bounds are ignored at planning time —
+    * no pruning is always sound, comparing mixed spaces is not. A full
+    * cluster rewrite re-collects stats; users can then set the property. */
+  private def stripUntrustedDecimalBounds(fs: Seq[DataFileMeta]): Seq[DataFileMeta] = {
+    if (metadata.properties.get(GraftTable.DecimalStatsScaledProp).contains("true")) return fs
+    val decCols = schema.fields.collect {
+      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType] => f.name
+    }.toSet
+    if (decCols.isEmpty) fs
+    else fs.map(f => f.copy(minValues = f.minValues -- decCols, maxValues = f.maxValues -- decCols))
+  }
+
+  /** Files that may contain rows matching `predicate` — min/max pruning. */
+  def planFiles(predicate: Option[Column]): Seq[DataFileMeta] = predicate match {
+    case Some(p) => PredicatePrune.prune(schema, files, p, allPartitionSpecs)
+    case None    => files
+  }
+
+  /** Tombstone (equality-delete) file metas of the pinned snapshot. */
+  lazy val tombstones: Seq[DataFileMeta] =
+    snapshot.toSeq.flatMap(_.deleteManifestList).flatMap(m => table.readManifest(m.path))
+
+  /** Position-delete (deletion-vector) file metas of the pinned snapshot. */
+  lazy val positionDeletes: Seq[DataFileMeta] =
+    snapshot.toSeq.flatMap(_.posDeleteList).flatMap(m => table.readManifest(m.path))
+
+  /** Deleted-row count per data-file path across the DV files (duplicates
+    * across DV files count once): the cardinalities of the cached per-file
+    * bitmaps, no Spark job. Drives compaction's delete-pressure eligibility. */
+  lazy val posDeleteRowCounts: Map[String, Long] =
+    if (positionDeletes.isEmpty) Map.empty
+    else DeletionVectors.load(spark, positionDeletes.map(table.absPath))
+      .map { case (f, b) => f -> b.getLongCardinality }
+
+  // ---- bucket layout -------------------------------------------------------
+
+  /** The ACTIVE bucket transform, when the active spec carries exactly one
+    * (the only shape the bucketed-scan gate and [[graft.ops.Rebucket]]
+    * understand). */
+  private def activeBucketSpec: Option[PartitionSpec] =
+    Some(partitionSpecs.filter(_.transform == "bucket")).filter(_.size == 1).map(_.head)
+
+  /** The `BucketSpec` a scan over exactly `fs` may report, or None. Sound
+    * only when the ACTIVE spec carries exactly one bucket transform and EVERY
+    * file is bucket-stamped ([[GraftTable.stampBucketIds]]) consistently
+    * with its partition dir: Spark's bucketed read throws on an unstamped
+    * file name and would silently mis-group rows on a wrong stamp, so this
+    * is all-or-nothing by design — and sound for any subset (MERGE's
+    * touched files), since a bucket-pure file stays bucket-pure in any
+    * subset. Files from an older spec generation (different dir name) or
+    * written before the spec fail the check and the scan simply stays
+    * unbucketed — a full rewrite (cluster/compact) migrates them.
+    * O(files) driver-side string parsing, like all planning here. */
+  def bucketSpec(fs: Seq[DataFileMeta]): Option[BucketSpec] = {
+    val sp = activeBucketSpec.getOrElse(return None)
+    if (fs.nonEmpty && fs.forall(f => bucketFileConforms(sp, f)))
+      Some(BucketSpec(sp.param.get, Seq(sp.sourceColumn), Nil))
+    else None
+  }
+
+  /** A data file conforms to the active bucket spec iff its path carries the
+    * spec's partition dir with an integral value AND its file name is
+    * bucket-stamped to the same id — the exact per-file test the
+    * all-or-nothing scan gate ([[bucketSpec]]) applies. */
+  private def bucketFileConforms(sp: PartitionSpec, f: DataFileMeta): Boolean = {
+    val dir = sp.dirValue(f.path).flatMap(v => scala.util.Try(v.toInt).toOption)
+    dir.isDefined && GraftRelation.bucketIdOf(f.path.substring(f.path.lastIndexOf('/') + 1)) == dir
+  }
+
+  /** Files that do NOT conform to the active bucket spec — an older spec
+    * generation's dir layout, pre-spec (no dirs), or unstamped names. Any
+    * one of them keeps the bucketed-scan gate off for every scan that
+    * selects it; [[graft.ops.Rebucket.migrate]] rewrites exactly this set.
+    * Empty when the active spec carries no (single) bucket transform —
+    * there is nothing to conform to. */
+  def nonconformingFiles: Seq[DataFileMeta] = activeBucketSpec match {
+    case Some(sp) => files.filterNot(f => bucketFileConforms(sp, f))
+    case None     => Seq.empty
+  }
+
+  // ---- scans ---------------------------------------------------------------
+
+  /** Anti-join `df` against the tombstone key tuples (joined on ALL
+    * tombstone columns). Broadcast while the set is small (the intended
+    * MoR niche); beyond [[GraftTable.TombstoneBroadcastRowCap]] rows it
+    * falls back to a shuffled anti-join rather than an OOM. No-op when no
+    * tombstones exist. */
+  def applyTombstones(df: DataFrame): DataFrame =
+    if (tombstones.isEmpty) df
+    else {
+      val delDf = spark.read.parquet(tombstones.map(table.absPath): _*).distinct()
+      val rows = tombstones.map(_.rows).sum // exact, from manifest metadata — free
+      val right =
+        if (rows <= GraftTable.TombstoneBroadcastRowCap) org.apache.spark.sql.functions.broadcast(delDf)
+        else delDf
+      df.join(right, delDf.columns.toSeq, "left_anti")
+    }
+
+  /** `df` — a parquet file-source scan over exactly `filesRead` — without
+    * the rows the snapshot's position deletes remove: `dv_keep` over the
+    * per-file bitmaps of the DV files whose `_file` bounds may cover a read
+    * file, whatever the DV row count (Roaring containers hold dense runs in
+    * a few bytes per 64K positions); no-op when none can. Every rewrite
+    * pass MUST read its input files through this (then commit via
+    * [[GraftTable.replaceFiles]], which drops exactly the rewritten files'
+    * DV rows). */
+  def withPositionDeletes(df: DataFrame, filesRead: Seq[DataFileMeta]): DataFrame = {
+    val hit = positionDeletes.filter(d => filesRead.exists(f => GraftTable.dvMayCover(d, f.path)))
+    if (hit.isEmpty) df else df.filter(DeletionVectors.keep(spark, hit.map(table.absPath)))
+  }
+
+  /** Like [[withPositionDeletes]] but ALWAYS materializes the surviving
+    * rows' (file, row-position) as `_gdv_rel`/`_gdv_idx` — for rewriters
+    * that need them (the MoR merge records changed target rows as
+    * deletion-vector entries). `df` must sit directly above a file-source
+    * scan, where `_metadata` resolves. */
+  def withPositionDeletesKeepingPos(df: DataFrame, filesRead: Seq[DataFileMeta]): DataFrame =
+    withPositionDeletes(df, filesRead)
+      .withColumn("_gdv_rel", DeletionVectors.relPathColumn)
+      .withColumn("_gdv_idx", org.apache.spark.sql.functions.col("_metadata.row_index"))
+
+  /** A rewrite's input: `fs` as a plain parquet scan in this schema with
+    * their position deletes applied. Callers that materialize the table's
+    * equality deletes wrap it in [[applyTombstones]]. */
+  def readFiles(fs: Seq[DataFileMeta]): DataFrame =
+    withPositionDeletes(spark.read.schema(schema).parquet(fs.map(table.absPath): _*), fs)
+
+  /** The graft relation over exactly `fs` (Catalyst pushes filters into its
+    * file index); no deletes applied. */
+  def relation(fs: Seq[DataFileMeta], isStreaming: Boolean = false,
+      bucketed: Option[BucketSpec] = None): DataFrame =
+    GraftRelation.dataFrame(spark, schema, table.root, fs, allPartitionSpecs,
+      isStreaming = isStreaming, bucketSpec = bucketed)
+
+  /** `fs` (files of the pinned snapshot) as that snapshot shows them: its
+    * position deletes and tombstones applied. */
+  def live(fs: Seq[DataFileMeta], isStreaming: Boolean = false): DataFrame =
+    applyTombstones(withPositionDeletes(relation(fs, isStreaming), fs))
+
+  /**
+   * Snapshot-isolated read of the pinned snapshot: Catalyst pushes the
+   * query's own data filters into the relation's file index, so min/max
+   * file skipping happens for ANY predicate later applied to the returned
+   * DataFrame — `predicate` is an eager pre-prune plus residual filter for
+   * callers that want plan-time file counts. Position deletes use a SPLIT
+   * plan: files no DV can reference scan untouched (at 100 TB the dominant
+   * branch — DVs cover the trickle-deleted tail) and keep the bucketed-scan
+   * gate; possibly-covered files scan under the `dv_keep` bitmap filter.
+   */
+  def read(predicate: Option[Column] = None): DataFrame = {
+    val planned = planFiles(predicate)
+    val (covered, plain) =
+      planned.partition(f => positionDeletes.exists(d => GraftTable.dvMayCover(d, f.path)))
+    val df =
+      if (covered.isEmpty) relation(planned, bucketed = bucketSpec(planned))
+      else {
+        val deleted = withPositionDeletes(relation(covered), covered)
+        if (plain.isEmpty) deleted else relation(plain).unionByName(deleted)
+      }
+    val live = applyTombstones(df)
+    predicate.fold(live)(live.filter)
+  }
+
+  /** Rows of `fs` whose (file, row-position) appears in the given
+    * position-delete entries — the row images a delete-pos commit removed
+    * (the changelog/CDC scan). Touches only the files the DV rows can
+    * reference (bounds prune on `_file`); the negated `dv_keep` bitmap
+    * filter selects the rows. */
+  def rowsAtPositions(fs: Seq[DataFileMeta], dvEntries: Seq[DataFileMeta]): DataFrame =
+    relation(fs.filter(f => dvEntries.exists(d => GraftTable.dvMayCover(d, f.path))))
+      .filter(!DeletionVectors.keep(spark, dvEntries.map(table.absPath)))
+
+  /**
+   * The file-level diff behind [[GraftTable.incrementalRead]]: data files
+   * APPENDED in `(fromSnapshotId, to]` (default: the pinned snapshot), plus
+   * the resolved `to` id (so callers apply that snapshot's deletes).
+   * `skipChangeCommits = true` silently SKIPS row-changing commits (merge /
+   * update / delete / overwrite / tombstone-materializing rewrites) instead
+   * of throwing — the streaming CDC source's opt-out, mirroring the
+   * append-only contract a tailing consumer accepts: appends land, rewrites
+   * of already-delivered rows are never re-delivered or retracted.
+   */
+  def incrementalFiles(
+      fromSnapshotId: Long,
+      toSnapshotId: Option[Long] = None,
+      skipChangeCommits: Boolean = false): (Seq[DataFileMeta], Long) = {
+    val (commits, to) = commitsSince(fromSnapshotId, toSnapshotId, "incremental read")
+    val added = commits.flatMap { case (snap, parent) =>
+      snap.operation match {
+        // "publish" (branch cherry-pick) is append-SHAPED: manifests are
+        // the parent's plus the staged additions, tombstones unchanged
+        case "append" | "publish" =>
+          val parentManifests = parent.map(_.manifests.map(_.path).toSet).getOrElse(Set.empty)
+          snap.manifests.filterNot(m => parentManifests.contains(m.path))
+            .flatMap(m => table.readManifest(m.path))
+        // schema evolution commits reshape METADATA only (stats-key remap);
+        // every row survives them, so incremental readers pass through —
+        // ONE shared op set with the changelog
+        case op if Changelog.RowPreservingOps.contains(op) =>
+          // a full cluster rewrite that MATERIALIZED live tombstones removed
+          // rows (a key tombstoned before `from`, re-appended in-range, then
+          // materialized away would otherwise be returned here while read()
+          // at `to` hides it)
+          if (snap.summary.get("materialized-tombstones").contains("true") && !skipChangeCommits)
+            throw new IllegalArgumentException(
+              s"snapshot ${snap.id} ('$op') materialized tombstones and is not " +
+                "row-preserving; file-level incremental read is append-only — " +
+                "diff full snapshots instead")
+          Nil
+        case op =>
+          if (!skipChangeCommits)
+            throw new IllegalArgumentException(
+              s"snapshot ${snap.id} is a row-changing '$op' commit; " +
+                "file-level incremental read is append-only — diff full snapshots " +
+                "instead (streaming readers: option skip-change-commits=true)")
+          Nil // skipped: the change commit's file additions are not emitted
+      }
+    }
+    (added, to)
+  }
+
+  /** The commits of `(fromSnapshotId, to]` (`to` defaults to the pinned
+    * snapshot), newest first, each with its parent when retained, plus the
+    * resolved `to` id — the chain walk the incremental reader and the
+    * changelog share. Fails on an unknown `from` and on a chain broken by
+    * expiry or a rollback onto another branch. */
+  private[table] def commitsSince(fromSnapshotId: Long, toSnapshotId: Option[Long],
+      what: String): (Seq[(Snapshot, Option[Snapshot])], Long) = {
+    val md = metadata
+    val to = toSnapshotId.orElse(snapshot.map(_.id)).getOrElse(
+      throw new IllegalArgumentException(s"$what on an empty table"))
+    require(md.snapshot(fromSnapshotId).nonEmpty || fromSnapshotId == 0,
+      s"unknown or expired snapshot $fromSnapshotId")
+    require(md.snapshot(to).nonEmpty, s"unknown snapshot $to")
+    val walk = md.ancestry(to)
+    val newer = walk.takeWhile(_.id != fromSnapshotId)
+    require(newer.size < walk.size || (fromSnapshotId == 0 && walk.last.parentId.isEmpty),
+      s"snapshot chain from $to to $fromSnapshotId broken " +
+        "(expired snapshot, or a rollback onto another branch?)")
+    (newer.map(s => s -> s.parentId.flatMap(md.snapshot)), to)
+  }
+
+  // ---- writes --------------------------------------------------------------
+
+  /** `df` as [[writeDataFiles]] lays it out: columns in schema order,
+    * each re-aliased with its table field's metadata. */
+  private def writeProjection(df: DataFrame): DataFrame = {
+    // select in schema order so files are column-identical across commits;
+    // re-aliasing with the table field's METADATA stamps the stable parquet
+    // field id onto every written column (fieldId.write.enabled is on by
+    // default), which is what rename/drop evolution resolves by later
+    val cols = schema.fields.map { f =>
+      // NESTED field ids live in the column's TYPE (StructField metadata
+      // inside the struct), which comes from the incoming frame, not the
+      // top-level alias — cast struct columns to the table's type so
+      // fieldId.write stamps interior ids too. Only when the shapes agree
+      // in order and names (then the positional cast is a pure metadata
+      // reshape, and a no-op if the frame already carries the ids); any
+      // other frame keeps today's behavior.
+      val c = f.dataType match {
+        case st: StructType if df.schema.fields
+            .find(_.name.equalsIgnoreCase(f.name))
+            .exists(d => GraftTable.sameShape(d.dataType, st) && d.dataType != st) =>
+          df.col(f.name).cast(st)
+        case _ => df.col(f.name)
+      }
+      c.as(f.name, f.metadata)
+    }.toSeq
+    df.select(cols: _*)
+  }
+
+  /** The Spark row schema [[writeDataFiles]] would write for `df` — the
+    * `org.apache.spark.sql.parquet.row.metadata` of its files. Analysis
+    * only, no job. */
+  def writeSchema(df: DataFrame): StructType = writeProjection(df).schema
+
+  /**
+   * Write `df` as new data files under a fresh commit directory and collect
+   * their footer stats. Does NOT commit — callers build the snapshot.
+   * Partitioning/file count is the caller's responsibility (e.g.
+   * `repartitionByRange` before calling).
+   */
+  def writeDataFiles(df: DataFrame, commitUuid: String = UUID.randomUUID.toString,
+      maxRecordsPerFile: Long = 0L): Seq[DataFileMeta] = {
+    val dir = s"${table.dataDir}/$commitUuid"
+    // INT96 (Spark's legacy parquet timestamp) carries no min/max stats;
+    // micros are required for warc_ts pruning bounds. Set on the FRAME'S
+    // session, not the table handle's: a streaming micro-batch executes
+    // under MicroBatchExecution's cloned session, whose SQLConf snapshot
+    // never sees a conf set on the original — sink-written files would
+    // silently lose every timestamp bound
+    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // CHECK constraints ride the write pass itself: one codegen'd filter
+    // whose assert_true throws (with the constraint name) on the first
+    // violating row — zero extra scans at any scale. SQL semantics: a NULL
+    // check passes. Existing rows were validated when the constraint was
+    // added, so rewrites of old data can never trip here.
+    val base = constraints.foldLeft(writeProjection(df)) {
+      case (d, (name, check)) =>
+        import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
+        d.filter(assert_true(coalesce(expr(check), lit(true)),
+          lit(s"CHECK constraint '$name' violated: $check")).isNull)
+    }
+    // hidden partitioning: group rows by the transforms so each file covers
+    // ONE partition tuple (the derived columns live only in dir names —
+    // partitionBy removes them from file contents, keeping old and new files
+    // column-identical)
+    val prepared = partitionSpecs.foldLeft(base)((d, sp) => d.withColumn(sp.name, sp.column(schema)))
+    val writer = prepared.write
+      // parquet drops chunk stats entirely once min+max exceed ~4 KB, which
+      // silences pruning for document-sized string columns; truncating at
+      // write time (sound: prefix min, incremented-prefix max) keeps bounds
+      // for every string column at any value size
+      .option("parquet.statistics.truncate.length", "64")
+    // per-column parquet BLOOM FILTERS (table property `bloom-columns`,
+    // comma-separated): point lookups / IN probes on a key column skip
+    // row groups whose min/max would admit them — at a 10^12-row corpus
+    // the difference between "read the row group" and "skip it" for the
+    // overwhelming majority of url point queries
+    val withBloom = bloomColumns.foldLeft(writer)((w, c) =>
+      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
+    // roll to a new file every N records WITHIN a task: sorted partition
+    // runs split into right-sized files without extra partitions (order and
+    // per-file min/max tightness preserved — each file is a sorted run)
+    val withRoll =
+      if (maxRecordsPerFile > 0) withBloom.option("maxRecordsPerFile", maxRecordsPerFile.toString)
+      else withBloom
+    (if (partitionSpecs.isEmpty) withRoll else withRoll.partitionBy(partitionSpecs.map(_.name): _*))
+      .mode("errorifexists").parquet(dir)
+    val written = GraftTable.stampBucketIds(partitionSpecs, FileIO.listFilesRecursively(dir, ".parquet"))
+    StatsCollector.collect(spark, schema, table.root, written, commitUuid)
+  }
+}

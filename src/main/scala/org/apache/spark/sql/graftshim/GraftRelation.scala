@@ -89,7 +89,7 @@ object GraftRelation {
 
   /** HadoopFsRelation over a snapshot's files with metadata file skipping.
     * `bucketSpec`: when the caller can PROVE every file is bucket-pure and
-    * bucket-stamped (see `GraftTable.bucketSpecOf`), the scan reports
+    * bucket-stamped (see `TableState.bucketSpec`), the scan reports
     * `HashPartitioning(col, n)` — joins/aggregations on the bucket column
     * skip their shuffle entirely (storage-partitioned join). */
   def relation(

@@ -82,14 +82,14 @@ class BucketScanSpec extends SparkSuite {
     // plan shape: the bucketed target scan reports HashPartitioning(url, 8),
     // so the full-outer merge join carries exactly ONE exchange (the source)
     val src = Synth.pages(spark, 100, partitions = 2).withColumn("_deleted", lit(false))
-    val scan = graft.ops.Merge.targetScan(t, t.schema, t.files(), Seq("url"))
+    val scan = graft.ops.Merge.targetScan(t.state, t.files(), Seq("url"))
     val joined = scan.alias("t").join(src.alias("s"), scan("url") === src("url"), "full_outer")
     val plan = joined.queryExecution.executedPlan.toString
     assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size === 1,
       s"bucketed merge join must shuffle only the source:\n$plan")
     // composite keys would shuffle both sides — targetScan must not cap the
     // scan at n partitions for a partitioning the join can't use
-    val comp = graft.ops.Merge.targetScan(t, t.schema, t.files(), Seq("url", "lang"))
+    val comp = graft.ops.Merge.targetScan(t.state, t.files(), Seq("url", "lang"))
     val compBuckets = comp.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
     }.collect {

@@ -43,10 +43,10 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   private def commitOverlappingDvs(t: GraftTable, extra: org.apache.spark.sql.Column): Unit = {
     val entries = rawWithPos(t).filter(extra).select("_file", "_pos")
     val uuid = s"dv-${java.util.UUID.randomUUID}"
-    spark.read.schema(t.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
+    spark.read.schema(GraftTable.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
       .unionByName(entries).unionByName(entries)
       .write.parquet(s"${t.dataDir}/$uuid")
-    val metas = StatsCollector.collect(spark, t.PosDeleteSchema, t.root,
+    val metas = StatsCollector.collect(spark, GraftTable.PosDeleteSchema, t.root,
       FileIO.listFiles(s"${t.dataDir}/$uuid", ".parquet"), uuid).filter(_.rows > 0)
     t.commitFull("delete-pos") { parent =>
       (parent.map(_.manifests).getOrElse(Seq.empty), parent.flatMap(_.deleteManifests),
@@ -80,7 +80,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     commitOverlappingDvs(t, bucket(1))
     assert(t.positionDeletes().size >= 2)
     // the anti-join over distinct DV rows every read used before the bitmaps
-    val dvRows = spark.read.schema(t.PosDeleteSchema)
+    val dvRows = spark.read.schema(GraftTable.PosDeleteSchema)
       .parquet(t.positionDeletes().map(t.absPath): _*).distinct()
     val antiJoined = rawWithPos(t).join(dvRows, Seq("_file", "_pos"), "left_anti")
       .drop("_file", "_pos")
@@ -159,7 +159,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val counts = t.posDeleteRowCounts()
     assert(counts.keySet.subsetOf(t.files().map(_.path).toSet), s"unmatched DV paths: ${counts.keySet}")
     assert(counts.values.sum == df.filter(gone).count())
-    assertSameRows(t.rowsAtPositions(t.schema, t.files(), t.positionDeletes()),
+    assertSameRows(t.state.rowsAtPositions(t.files(), t.positionDeletes()),
       df.filter(gone), "rows at the deleted positions")
     Compact.run(t, targetBytes = 256L * 1024 * 1024, deleteRatioThreshold = 0.1)
     assert(t.posDeleteRowCounts().isEmpty, "compaction clears every covered file's DV rows")
@@ -171,7 +171,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     (0 to 2).foreach(k => assert(t.deleteWherePositional(bucket(k)).nonEmpty))
     commitOverlappingDvs(t, bucket(3))
     assert(t.positionDeletes().size >= 4)
-    val want = spark.read.schema(t.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
+    val want = spark.read.schema(GraftTable.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
       .distinct().groupBy("_file").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(want.values.sum > 0)
@@ -193,7 +193,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(t.positionDeletes().nonEmpty)
     // DV _file values name real data files (the rel-path expression matches
     // DataFileMeta.path exactly — the invariant every join/prune rests on)
-    val dvFiles = spark.read.schema(t.PosDeleteSchema)
+    val dvFiles = spark.read.schema(GraftTable.PosDeleteSchema)
       .parquet(t.positionDeletes().map(t.absPath): _*)
       .select("_file").distinct().collect().map(_.getString(0)).toSet
     assert(dvFiles.nonEmpty && dvFiles.subsetOf(preFiles), s"unmatched DV paths: ${dvFiles -- preFiles}")
@@ -342,7 +342,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(dvsIn.size >= 3, s"expected ≥3 DV files, got ${dvsIn.size}")
     val preRead = t.read().localCheckpoint(true)
     val preFiles = t.files().map(_.path).toSet
-    val distinctEntries = spark.read.schema(t.PosDeleteSchema)
+    val distinctEntries = spark.read.schema(GraftTable.PosDeleteSchema)
       .parquet(dvsIn.map(t.absPath): _*).distinct().count()
     val from = t.currentSnapshot.get.id
 
