@@ -755,9 +755,9 @@ object SparkEntry {
       out
     }),
 
-    // q44: DV-file compaction (the rewrite_position_delete_files niche) —
-    // three trickle MoR deletes each land their own DV file; `OPTIMIZE …
-    // REWRITE DELETES` merges them sorted without touching any data file;
+    // q44: DV compaction (the rewrite_position_delete_files niche) —
+    // three trickle MoR deletes each land their own DV blob; `OPTIMIZE …
+    // REWRITE DELETES` ORs them into one without touching any data file;
     // the scan applies the merged DV set identically to the originals.
     "q44_rewrite_deletes" -> ((s, dir) => {
       val ord = t(s, dir, "orders").select(

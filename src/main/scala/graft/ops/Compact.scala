@@ -165,7 +165,7 @@ object Compact {
         FileIO.listFilesRecursively(dirOf(i), ".parquet"), commitUuid(runId, i)), group)
     }
     val copied = copyBins(table, runId, p, pending)
-    copied.keys.toSeq.sorted.foreach(i => log = Maintenance.markDone(table, log, s"group$i"))
+    log = Maintenance.markDone(table, log, copied.keys.toSeq.sorted.map(i => s"group$i"): _*)
     val rewritten = GroupedRewrite.run(spark, "graft-compact", jobParallelism,
       pending.filterNot { case (i, _) => copied.contains(i) }, _ => 1L) { (i, group) =>
       val metas = rewriteBin(st, group, commitUuid(runId, i))

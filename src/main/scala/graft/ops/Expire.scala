@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.table.{FileIO, GraftTable, Snapshot}
+import graft.table.{DeletionVectors, FileIO, GraftTable, Snapshot}
 
 /**
  * Snapshot expiry with retained-snapshot GC: drops old snapshots from table
@@ -61,16 +61,12 @@ object Expire {
     val (kept, dropped) = byId.partition(s => keepIds.contains(s.id))
     if (dropped.isEmpty) return Result(Nil, Nil, Nil)
 
-    // data, merge-on-read tombstone, AND position-delete manifests all
-    // pin their files
-    def allManifests(s: Snapshot) = s.manifests ++ s.deleteManifestList ++ s.posDeleteList
-    // each distinct manifest is read once: snapshots share most of theirs
-    val keptManifests = kept.flatMap(allManifests(_).map(_.path)).toSet
-    val keptFiles = keptManifests.toSeq.flatMap(table.readManifest).map(_.path).toSet
-    val droppedManifests = dropped.flatMap(allManifests(_).map(_.path)).distinct
-      .filterNot(keptManifests.contains)
-    val droppedFiles = droppedManifests.flatMap(table.readManifest).map(_.path).distinct
-      .filterNot(keptFiles.contains)
+    // data, merge-on-read tombstone, AND position-delete manifests all pin
+    // their files; a DV blob goes only when no kept entry references it
+    val keptManifests = manifestsOf(kept)
+    val keptFiles = filesOf(table, keptManifests).toSet
+    val droppedManifests = manifestsOf(dropped).filterNot(keptManifests.contains)
+    val droppedFiles = filesOf(table, droppedManifests).distinct.filterNot(keptFiles.contains)
 
     // keepIds and the GC file sets were planned against `md`; if a writer
     // commits between planning and the CAS (new snapshot, moved pointer,
@@ -89,25 +85,38 @@ object Expire {
     if (raced) return expire(table, retainLast, olderThanMs)
 
     droppedFiles.foreach(p => FileIO.delete(s"${table.root}/$p"))
-    droppedManifests.foreach(p => FileIO.delete(s"${table.root}/$p"))
-    Result(dropped.map(_.id), droppedFiles, droppedManifests)
+    droppedManifests.foreach { case (p, _) => FileIO.delete(s"${table.root}/$p") }
+    Result(dropped.map(_.id), droppedFiles, droppedManifests.map(_._1))
   }
+
+  /** Distinct manifests of `snaps` (snapshots share most of theirs), each
+    * tagged as a DV manifest or not. */
+  private def manifestsOf(snaps: Seq[Snapshot]): Seq[(String, Boolean)] =
+    snaps.flatMap(s => (s.manifests ++ s.deleteManifestList).map(_.path -> false) ++
+      s.posDeleteList.map(_.path -> true)).distinct
+
+  /** Table-relative files `manifests` reference: data and tombstone files,
+    * and DV blobs. */
+  private def filesOf(table: GraftTable, manifests: Seq[(String, Boolean)]): Seq[String] =
+    manifests.flatMap {
+      case (m, false) => table.readManifest(m).map(_.path)
+      case (m, true)  => table.readDvManifest(m).map(_.blob)
+    }
 
   /** Control signal: metadata moved between expiry planning and commit. */
   private object ReplanSignal extends scala.util.control.ControlThrowable
 
   /**
-   * Remove orphan data files: files on disk under `data/` referenced by NO
-   * snapshot — leftovers of crashed maintenance runs that staged output but
-   * never committed. Only files older than `olderThanMs` are touched, so an
-   * IN-FLIGHT run's staging is never deleted (the same grace window
-   * real-world orphan cleanup uses against racing writers).
+   * Remove orphan data files and DV blobs: files on disk under `data/`
+   * referenced by NO snapshot — leftovers of crashed maintenance runs and
+   * deletes that staged output but never committed. Only files older than
+   * `olderThanMs` are touched, so an IN-FLIGHT run's staging is never
+   * deleted (the same grace window real-world orphan cleanup uses against
+   * racing writers).
    */
   def removeOrphans(table: GraftTable, olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
-    val referenced: Set[String] = table.metadata.snapshots
-      .flatMap(s => (s.manifests ++ s.deleteManifestList ++ s.posDeleteList).map(_.path))
-      .distinct.flatMap(table.readManifest)
-      .map(f => s"${table.root}/${f.path}").toSet
+    val referenced: Set[String] = filesOf(table, manifestsOf(table.metadata.snapshots))
+      .map(p => s"${table.root}/$p").toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val orphans = scala.collection.mutable.ArrayBuffer.empty[String]
     val dataRoot = java.nio.file.Paths.get(table.dataDir)
@@ -117,7 +126,7 @@ object Expire {
         stream.forEach { p =>
           if (java.nio.file.Files.isRegularFile(p)) {
             val abs = p.toString
-            val isData = abs.endsWith(".parquet")
+            val isData = abs.endsWith(".parquet") || abs.endsWith(DeletionVectors.BlobSuffix)
             if (isData && !referenced.contains(abs) &&
                 java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) {
               orphans += abs

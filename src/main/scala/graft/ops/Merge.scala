@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.run.{Lineage, Maintenance}
-import graft.table.{Bounds, DataFileMeta, GraftTable, Snapshot, TableState}
+import graft.table.{Bounds, DataFileMeta, DeletionVectors, GraftTable, Snapshot, TableState}
 
 /**
  * MERGE INTO with copy-on-write file replacement.
@@ -716,7 +716,7 @@ object Merge {
   /**
    * Merge-on-read output assembly (Iceberg's `write.merge.mode =
    * merge-on-read`): changed target rows' (file, position) tuples become a
-   * deletion-vector file and the updated/inserted images a plain append —
+   * deletion-vector blob and the updated/inserted images a plain append —
    * ONE `merge-pos` commit, no touched file rewritten. The join and image
    * projection are EXACTLY the copy-on-write path's (same clause matrix,
    * same semantics); only the output shape differs, so a trickle upsert on
@@ -751,17 +751,9 @@ object Merge {
     // cheap side of re-running the full-outer join twice
     changed.persist()
     try {
-      val dvUuid = s"dvm-$runId"
-      val dvDir = s"${table.dataDir}/$dvUuid"
-      graft.table.FileIO.deleteRecursively(dvDir) // crashed earlier attempt
-      changed.filter(col("_dv"))
-        .select(col("_gdv_rel").as("_file"), col("_gdv_idx").as("_pos"))
-        .sortWithinPartitions("_file", "_pos")
-        .write.mode("errorifexists").parquet(dvDir)
-      val dvMetas = graft.table.StatsCollector.collect(
-        spark, GraftTable.PosDeleteSchema, table.root,
-        graft.table.FileIO.listFiles(dvDir, ".parquet"), dvUuid)
-        .filter(_.rows > 0)
+      // a crashed earlier attempt's blob is overwritten in place
+      val dvs = DeletionVectors.write(table.root, s"dvm-$runId",
+        DeletionVectors.collect(changed.filter(col("_dv"))))
       val outUuid = s"merge-$runId"
       graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
       val outCols = st.schema.fieldNames.toSeq
@@ -771,13 +763,12 @@ object Merge {
         changed.filter(col("_wr")).select(outCols.map(col): _*)
           .sortWithinPartitions(keyCols.map(col): _*),
         outUuid).filter(_.rows > 0)
-      if (dvMetas.isEmpty && added.isEmpty) {
+      if (dvs.isEmpty && added.isEmpty) {
         // no-op MoR merge (e.g. a delete-only batch over absent keys):
-        // clean the unreferenced staging dirs, then COMMIT an empty
+        // clean the unreferenced staging dir, then COMMIT an empty
         // merge-pos snapshot — same externally-observable behavior as the
         // CoW path's empty commit, and markCommitted keeps the runId
         // idempotently re-runnable (a bare return would strand its StepLog)
-        graft.table.FileIO.deleteRecursively(dvDir)
         graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
       }
       val committed = table.commitFull("merge-pos", expectedSnapshotId = st.snapshot.map(_.id),
@@ -786,9 +777,9 @@ object Merge {
             (if (added.nonEmpty) Seq(table.writeManifest(added)) else Nil),
           parent.flatMap(_.deleteManifests),
           Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) ++
-            (if (dvMetas.nonEmpty) Seq(table.writeManifest(dvMetas)) else Nil)),
+            (if (dvs.nonEmpty) Seq(table.writeDvManifest(dvs)) else Nil)),
           Map("run-id" -> runId, "touched-files" -> touched.size.toString,
-            "position-deletes-added" -> dvMetas.map(_.rows).sum.toString,
+            "position-deletes-added" -> dvs.map(_.cardinality).sum.toString,
             "added-files" -> added.size.toString,
             "added-rows" -> added.map(_.rows).sum.toString))
       }

@@ -128,19 +128,19 @@ object Demo {
     t.updateWherePositional(col("lang") === "it", Map("lang" -> lit("it-updated")))
     val nIt = t.read().filter(col("lang") === "it-updated").count()
     println(s"[demo] DV-deleted $nFr rows, DV-updated $nIt rows, " +
-      s"${t.positionDeletes().size} DV files")
+      s"${t.positionDeletes().size} DV blobs")
     check("DV delete+update rewrite no data file")(
       dvFilesBefore.subsetOf(t.files().map(_.path).toSet))
     check("DV delete hides rows; DV update keeps count")(
       t.read().count() == afterSql - nFr &&
         t.read().filter(col("lang") === "it").count() == 0)
     val preDvCompact = t.read().count()
-    // DV-file compaction first: merge the accumulated per-commit DV files
-    // (no data file touched, scan identical) — the steady-state maintenance
+    // DV compaction first: merge the accumulated per-commit DV blobs into
+    // one (no data file touched, scan identical) — the steady-state maintenance
     // between delete-pressure materializations
     val dvFilesIn = t.positionDeletes().size
     val rdRes = t.rewriteDeleteFiles()
-    check("DV-file rewrite merges delete files, scan unchanged")(
+    check("DV rewrite merges DV blobs, scan unchanged")(
       dvFilesIn < 2 || (rdRes.nonEmpty && t.positionDeletes().size < dvFilesIn &&
         t.read().count() == preDvCompact &&
         dvFilesBefore.subsetOf(t.files().map(_.path).toSet)))

@@ -124,10 +124,13 @@ object Maintenance {
   def save(table: GraftTable, log: StepLog): Unit =
     FileIO.writeString(logPath(table, log.runId), MetaJson.write(log))
 
-  def markDone(table: GraftTable, log: StepLog, step: String): StepLog = {
-    val next = log.copy(doneSteps = (log.doneSteps :+ step).distinct)
-    save(table, next); next
-  }
+  /** `log` with `steps` done, written once (not at all for no steps). */
+  def markDone(table: GraftTable, log: StepLog, steps: String*): StepLog =
+    if (steps.isEmpty) log
+    else {
+      val next = log.copy(doneSteps = (log.doneSteps ++ steps).distinct)
+      save(table, next); next
+    }
 
   def markCommitted(table: GraftTable, log: StepLog, snapshotId: Long): StepLog = {
     val next = log.copy(committedSnapshotId = Some(snapshotId))

@@ -183,7 +183,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     require(st.tombstones.isEmpty,
       "snapshot has live merge-on-read tombstones, which a raw file relation cannot apply; " +
         "read via GraftTable.read (applies them) or materialize with Cluster.zorderRewrite")
-    require(st.positionDeletes.isEmpty,
+    require(st.dvEntries.isEmpty,
       "snapshot has live position deletes (deletion vectors), which a raw file relation " +
         "cannot apply; read via GraftTable.read / SQL (applies them) or compact the files")
     GraftRelation.relation(spark, st.schema, root, st.files, st.allPartitionSpecs,

@@ -45,9 +45,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       """(?:\s+(ZORDER)(?:\s+(HILBERT))?(?:\s+BY\s*\(([^)]*)\))?)?(?:\s+(INCREMENTAL))?\s*;?\s*""").r
   private val VacuumRe =
     """(?is)\s*VACUUM\s+graft\s*\.\s*`([^`]+)`\s*(?:RETAIN\s+(\d+)\s+SNAPSHOTS)?\s*;?\s*""".r
-  // DV-file compaction (Iceberg's rewrite_position_delete_files niche):
-  // merges the accumulated per-commit DV files, dedupes entries, restores
-  // tight per-file _file bounds — no data file touched
+  // DV compaction (Iceberg's rewrite_position_delete_files niche): ORs the
+  // accumulated per-commit DV entries into one blob — no data file touched
   private val RewriteDeletesRe =
     """(?is)\s*OPTIMIZE\s+graft\s*\.\s*`([^`]+)`\s+REWRITE\s+DELETES\s*;?\s*""".r
   // bucket-layout migration after partition-spec evolution: rewrites only
@@ -246,8 +245,8 @@ case class GraftVacuumCommand(path: String, retain: Int) extends LeafRunnableCom
 }
 
 /** `OPTIMIZE graft.`path` REWRITE DELETES` — compact the accumulated
-  * position-delete (DV) files ([[graft.table.GraftTable.rewriteDeleteFiles]]):
-  * rows -1 when fewer than 2 live DV files (no-op). */
+  * deletion-vector blobs into one ([[graft.table.GraftTable.rewriteDeleteFiles]]):
+  * snapshot_id -1 when fewer than 2 live blobs (no-op). */
 case class GraftRewriteDeletesCommand(path: String) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(
     AttributeReference("snapshot_id", LongType)(),

@@ -203,7 +203,7 @@ object Changelog {
       // then labels matching keys as pre/post images).
       val parentPd = parent.map(_.posDeleteList.map(_.path).toSet).getOrElse(Set.empty)
       val newPd = snap.posDeleteList.filterNot(m => parentPd.contains(m.path))
-        .flatMap(m => table.readManifest(m.path))
+        .flatMap(m => table.readDvManifest(m.path))
       val delFrames =
         if (newPd.isEmpty || parent.isEmpty) Seq.empty
         else Seq(tag(state.rowsAtPositions(atParent.files, newPd), "delete", snap.id))

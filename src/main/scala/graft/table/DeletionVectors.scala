@@ -1,14 +1,6 @@
 package graft.table
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -19,15 +11,26 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /**
- * Position deletes (deletion vectors) as one 64-bit Roaring bitmap per data
- * file — the Iceberg v3 DV shape (https://iceberg.apache.org/spec/#deletion-vectors)
- * over graft's `(_file, _pos)` parquet delete files.
+ * Position deletes (deletion vectors): the deleted row positions of one data
+ * file as one serialized 64-bit Roaring bitmap, the Iceberg v3 DV shape
+ * (https://iceberg.apache.org/spec/#deletion-vectors). The only place that
+ * knows the bytes: everything else handles [[DvMeta]] entries and
+ * in-memory [[Bitmaps]].
  *
- * Planning reads each DV file once with parquet-hadoop (footer pool of
- * [[StatsCollector]], the session's Hadoop conf) and caches its per-file
- * bitmaps by ABSOLUTE path in a bounded in-process LRU. DV files are
- * write-once under a fresh UUID dir, so an entry can never go stale: a table
- * dropped and recreated at the same root writes its DVs under new dirs.
+ * A DV-writing commit gathers its positions per data file in one Spark job
+ * ([[collect]]), writes all its bitmaps back to back into one blob file
+ * `data/<commit-uuid>/deletes.dv`, and records one [[DvMeta]] per data file
+ * ([[write]]). Entries are additive: a later delete of the same file adds
+ * another entry, and readers OR a file's entries. A rewrite of a data file
+ * drops its entries from the manifests, and the blob stays until no kept
+ * entry references it (expiry).
+ *
+ * Planning reads each bitmap once and caches it by blob ABSOLUTE path and
+ * offset in a bounded in-process LRU. Blobs are write-once under a fresh
+ * commit dir, so an entry can never go stale: a table dropped and recreated
+ * at the same root writes its DVs under new dirs. Blob reads are data-plane
+ * reads, like the parquet reads of data and tombstone files: they bypass
+ * [[FileIO]] and its metadata-call counter.
  *
  * Scans apply the bitmaps through [[DvKeep]], a codegen'd
  * `dv_keep(_metadata.file_path, _metadata.row_index)` filter that resolves
@@ -41,25 +44,27 @@ object DeletionVectors {
     * row positions. Cached maps are SHARED: never mutate a bitmap in one. */
   type Bitmaps = Map[String, Roaring64Bitmap]
 
-  /** Cache bound: estimated bitmap + key bytes held across all tables. A DV
-    * file larger than the whole budget is read but never cached. */
+  /** File-name suffix of a DV blob (orphan GC sweeps it with `.parquet`). */
+  val BlobSuffix = ".dv"
+
+  /** Cache bound: estimated bitmap + key bytes held across all tables. A
+    * bitmap larger than the whole budget is read but never cached. */
   private val CacheBudgetBytes = 64L << 20
 
-  private final case class Entry(bitmaps: Bitmaps, bytes: Long)
+  private final case class Entry(bitmap: Roaring64Bitmap, bytes: Long)
 
   private val cache = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true)
   private var cachedBytes = 0L
 
-  private def cached(absPath: String): Option[Bitmaps] = cache.synchronized {
-    Option(cache.get(absPath)).map(_.bitmaps)
+  private def cached(key: String): Option[Roaring64Bitmap] = cache.synchronized {
+    Option(cache.get(key)).map(_.bitmap)
   }
 
-  private def remember(absPath: String, bitmaps: Bitmaps): Unit = {
-    val bytes = bitmaps.iterator.map { case (f, b) => 2L * f.length + b.serializedSizeInBytes() }.sum
+  private def remember(key: String, bitmap: Roaring64Bitmap, bytes: Long): Unit = {
     if (bytes > CacheBudgetBytes) return
     cache.synchronized {
-      if (!cache.containsKey(absPath)) {
-        cache.put(absPath, Entry(bitmaps, bytes))
+      if (!cache.containsKey(key)) {
+        cache.put(key, Entry(bitmap, bytes))
         cachedBytes += bytes
         val it = cache.values.iterator
         while (cachedBytes > CacheBudgetBytes && it.hasNext) {
@@ -70,92 +75,99 @@ object DeletionVectors {
     }
   }
 
-  /** Union of the bitmaps of the DV files at `absPaths` (duplicate
-    * `(_file, _pos)` entries across files count once). Uncached files are
-    * read in parallel on the footer pool. */
-  def load(spark: SparkSession, absPaths: Seq[String]): Bitmaps = {
-    val hits = absPaths.distinct.map(p => p -> cached(p))
-    val missing = hits.collect { case (p, None) => p }
-    val read =
-      if (missing.isEmpty) Map.empty[String, Bitmaps]
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = StatsCollector.footerPool
-        val conf = spark.sessionState.newHadoopConf()
-        Await.result(Future.sequence(missing.map(p => Future(p -> readFile(conf, p)))),
-          Duration.Inf).toMap
-      }
-    read.foreach { case (p, bms) => remember(p, bms) }
-    union(hits.map { case (p, hit) => hit.getOrElse(read(p)) })
+  private def serialize(b: Roaring64Bitmap): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(Math.toIntExact(b.serializedSizeInBytes()))
+    b.serialize(buf)
+    buf.array()
   }
 
-  private def union(parts: Seq[Bitmaps]): Bitmaps = parts.filter(_.nonEmpty) match {
-    case Seq()     => Map.empty
-    case Seq(only) => only
-    case many =>
-      many.flatMap(_.toSeq).groupBy(_._1).map {
-        case (f, Seq((_, b))) => f -> b
-        case (f, bs) =>
-          val out = new Roaring64Bitmap()
-          bs.foreach { case (_, b) => out.or(b) }
-          f -> out
-      }
+  private def deserialize(bytes: Array[Byte]): Roaring64Bitmap = {
+    val b = new Roaring64Bitmap()
+    b.deserialize(java.nio.ByteBuffer.wrap(bytes))
+    b
   }
 
-  /** Read one DV parquet file into per-data-file bitmaps: column readers
-    * over each row group, no per-row objects. Null cells (never written by
-    * graft) are skipped. */
-  private def readFile(conf: Configuration, absPath: String): Bitmaps = {
-    val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
-    // explicit options: `open(file)` alone builds a fresh Configuration per file
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(absPath), conf),
-      HadoopReadOptions.builder(conf).build())
-    try {
-      val meta = reader.getFooter.getFileMetaData
-      val schema = meta.getSchema
-      val fileCol = schema.getColumnDescription(Array("_file"))
-      val posCol = schema.getColumnDescription(Array("_pos"))
-      val converter = new GroupRecordConverter(schema).getRootConverter
-      var pages = reader.readNextRowGroup()
-      while (pages != null) {
-        val store = new ColumnReadStoreImpl(pages, converter, schema, meta.getCreatedBy)
-        val files = store.getColumnReader(fileCol)
-        val poss = store.getColumnReader(posCol)
-        var lastFile: Binary = null
-        var cur: Roaring64Bitmap = null
-        var i = 0L
-        while (i < pages.getRowCount) {
-          val fileSet = files.getCurrentDefinitionLevel == fileCol.getMaxDefinitionLevel
-          val posSet = poss.getCurrentDefinitionLevel == posCol.getMaxDefinitionLevel
-          if (fileSet && posSet) {
-            val f = files.getBinary
-            if (lastFile == null || !f.equals(lastFile)) {
-              lastFile = f.copy()
-              cur = out.getOrElseUpdate(f.toStringUsingUTF8, new Roaring64Bitmap())
-            }
-            cur.addLong(poss.getLong)
-          }
-          files.consume()
-          poss.consume()
-          i += 1
-        }
-        pages = reader.readNextRowGroup()
-      }
-    } finally reader.close()
-    out.foreach(_._2.runOptimize())
-    out.toMap
+  /** Cache key of `e`'s bitmap under table `root`. */
+  private def keyOf(root: String, e: DvMeta): String = s"$root/${e.blob}#${e.offset}"
+
+  /** The positions of `rows`, per data file: `_gdv_rel`/`_gdv_idx` as
+    * [[TableState.withPositionDeletesKeepingPos]] adds them. ONE Spark job:
+    * each task builds its partition's bitmaps and ships them serialized. */
+  def collect(rows: DataFrame): Bitmaps = {
+    import rows.sparkSession.implicits._
+    val parts = rows.select("_gdv_rel", "_gdv_idx").as[(String, Long)].mapPartitions { it =>
+      val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
+      it.foreach { case (f, pos) => out.getOrElseUpdate(f, new Roaring64Bitmap()).addLong(pos) }
+      out.iterator.map { case (f, b) => b.runOptimize(); (f, serialize(b)) }
+    }.collect()
+    union(parts.toSeq.map { case (f, bytes) => f -> deserialize(bytes) })
   }
+
+  /** Write `bitmaps` back to back into one blob under `data/<commitUuid>/`
+    * of table `root`; returns one entry per data file (none, and no file,
+    * when `bitmaps` is empty). */
+  def write(root: String, commitUuid: String, bitmaps: Bitmaps): Seq[DvMeta] = {
+    if (bitmaps.isEmpty) return Seq.empty
+    val blob = s"data/$commitUuid/deletes$BlobSuffix"
+    val out = new java.io.ByteArrayOutputStream()
+    val entries = bitmaps.toSeq.sortBy(_._1).map { case (f, b) =>
+      val bytes = serialize(b)
+      val e = DvMeta(f, blob, out.size.toLong, bytes.length.toLong, b.getLongCardinality, commitUuid)
+      out.write(bytes)
+      e
+    }
+    FileIO.writeBytes(s"$root/$blob", out.toByteArray)
+    entries
+  }
+
+  /** Union per data file of the bitmaps `entries` (of table `root`) name;
+    * positions repeated across entries count once. Uncached bitmaps are
+    * read with one open per blob. */
+  def load(root: String, entries: Seq[DvMeta]): Bitmaps = {
+    val hits = entries.distinct.map(e => e -> cached(keyOf(root, e)))
+    val read = hits.collect { case (e, None) => e }.groupBy(_.blob).flatMap { case (blob, es) =>
+      val bytes = readRanges(s"$root/$blob", es.map(e => (e.offset, Math.toIntExact(e.length))))
+      es.zip(bytes).map { case (e, b) =>
+        val (key, bm) = (keyOf(root, e), deserialize(b))
+        remember(key, bm, b.length + 2L * key.length)
+        e -> bm
+      }
+    }
+    union(hits.map { case (e, hit) => e.dataFile -> hit.getOrElse(read(e)) })
+  }
+
+  /** The bytes at each `(offset, length)` of one blob, in one open. */
+  private def readRanges(path: String, ranges: Seq[(Long, Int)]): Seq[Array[Byte]] = {
+    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(path))
+    try ranges.map { case (offset, length) =>
+      val buf = java.nio.ByteBuffer.allocate(length)
+      while (buf.hasRemaining)
+        if (ch.read(buf, offset + buf.position()) < 0)
+          throw new java.io.EOFException(s"$path ends before ${offset + length}")
+      buf.array()
+    } finally ch.close()
+  }
+
+  /** OR of the bitmaps given per data file. */
+  private def union(parts: Seq[(String, Roaring64Bitmap)]): Bitmaps =
+    parts.groupBy(_._1).map {
+      case (f, Seq((_, b))) => f -> b
+      case (f, bs) =>
+        val out = new Roaring64Bitmap()
+        bs.foreach { case (_, b) => out.or(b) }
+        out.runOptimize()
+        f -> out
+    }
 
   /** `dv_keep(_metadata.file_path, _metadata.row_index)` over the bitmaps
-    * of the DV files at `absPaths` — true for rows none of them deletes.
+    * `entries` (of table `root`) name — true for rows none of them deletes.
     * Must sit directly above a file-source scan (where `_metadata`
     * resolves). */
-  def keep(spark: SparkSession, absPaths: Seq[String]): Column = {
+  def keep(root: String, entries: Seq[DvMeta]): Column = {
     import org.apache.spark.sql.functions.col
     Shims.column(DvKeep(Shims.expression(col("_metadata.file_path")),
       Shims.expression(col("_metadata.row_index")),
-      new DvSet(absPaths.distinct.sorted, load(spark, absPaths))))
+      new DvSet(entries.map(keyOf(root, _)).distinct.sorted, load(root, entries))))
   }
 
   /** Table-relative data-file path (= [[DataFileMeta.path]]) of a scanned
@@ -179,8 +191,8 @@ object DeletionVectors {
   }
 }
 
-/** The bitmaps a [[DvKeep]] probes. Equal when built from the same DV file
-  * set (bitmaps are a pure function of immutable files), so plan
+/** The bitmaps a [[DvKeep]] probes. Equal when built from the same DV
+  * entries (bitmaps are a pure function of immutable blobs), so plan
   * comparison never walks bitmap contents; prints as a one-line summary. */
 final class DvSet(val key: Seq[String], val bitmaps: DeletionVectors.Bitmaps) extends Serializable {
 
@@ -193,7 +205,7 @@ final class DvSet(val key: Seq[String], val bitmaps: DeletionVectors.Bitmaps) ex
     case _        => false
   }
   override def hashCode: Int = key.hashCode
-  override def toString: String = s"${key.size} DV files over ${bitmaps.size} data files"
+  override def toString: String = s"${key.size} DVs over ${bitmaps.size} data files"
 }
 
 /** `dv_keep(file_path, row_index)` → false iff the row's position is set in

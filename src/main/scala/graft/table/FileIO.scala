@@ -31,12 +31,16 @@ object FileIO {
   def mkdirs(path: String): Unit = { tick(); Files.createDirectories(Paths.get(path)) }
 
   /** Overwrite-in-place via temp + atomic rename (for hints/step logs). */
-  def writeString(path: String, content: String): Unit = {
+  def writeString(path: String, content: String): Unit =
+    writeBytes(path, content.getBytes(StandardCharsets.UTF_8))
+
+  /** [[writeString]] for bytes: a reader never sees a partial file. */
+  def writeBytes(path: String, content: Array[Byte]): Unit = {
     tick()
     val target = Paths.get(path)
     Files.createDirectories(target.getParent)
     val tmp = target.resolveSibling(target.getFileName.toString + "." + java.util.UUID.randomUUID + ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, content)
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 

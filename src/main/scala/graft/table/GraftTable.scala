@@ -147,15 +147,42 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
   }
 
+  /** The entries of a data or tombstone manifest, parsed at most once per
+    * JVM while the bounded parse cache holds them: manifests are write-once
+    * under fresh UUID names, so a cached parse never goes stale. */
   def readManifest(relPath: String): Seq[DataFileMeta] =
-    FileIO.readString(s"$root/$relPath").linesIterator
-      .filter(_.nonEmpty).map(MetaJson.readDataFileMeta).toVector
+    GraftTable.manifestCache(s"$root/$relPath")(
+      readLines(relPath).map(MetaJson.readDataFileMeta))
+
+  /** The entries of a deletion-vector manifest, cached like [[readManifest]].
+    * Fails on a manifest of graft's earlier parquet DV format (lines naming
+    * `(_file, _pos)` parquet files) rather than reading it as no deletes. */
+  def readDvManifest(relPath: String): Seq[DvMeta] =
+    GraftTable.dvManifestCache(s"$root/$relPath")(readLines(relPath).map { line =>
+      val e = MetaJson.readDvMeta(line)
+      if (e.blob == null || e.dataFile == null)
+        throw new IllegalStateException(s"$root/$relPath is a position-delete manifest of " +
+          "the old parquet deletion-vector format ((_file, _pos) parquet files); this " +
+          "version reads only Roaring-blob DV entries and cannot apply its deletes")
+      e
+    })
+
+  private def readLines(relPath: String): Vector[String] =
+    FileIO.readString(s"$root/$relPath").linesIterator.filter(_.nonEmpty).toVector
 
   /** Write a manifest for `metas`; returns its ManifestMeta. */
-  def writeManifest(metas: Seq[DataFileMeta]): ManifestMeta = {
+  def writeManifest(metas: Seq[DataFileMeta]): ManifestMeta =
+    writeLines(metas, metas.map(_.rows).sum, metas.map(_.bytes).sum)
+
+  /** Write a deletion-vector manifest for `entries`: rows are their
+    * cardinalities, bytes their blob lengths. */
+  def writeDvManifest(entries: Seq[DvMeta]): ManifestMeta =
+    writeLines(entries, entries.map(_.cardinality).sum, entries.map(_.length).sum)
+
+  private def writeLines(entries: Seq[AnyRef], rows: Long, bytes: Long): ManifestMeta = {
     val rel = s"metadata/manifest-${UUID.randomUUID}.json"
-    FileIO.writeString(s"$root/$rel", metas.map(MetaJson.write).mkString("\n"))
-    ManifestMeta(rel, metas.size, metas.map(_.rows).sum, metas.map(_.bytes).sum)
+    FileIO.writeString(s"$root/$rel", entries.map(MetaJson.write).mkString("\n"))
+    ManifestMeta(rel, entries.size, rows, bytes)
   }
 
   // ---- time travel ---------------------------------------------------------
@@ -206,7 +233,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   /** The current (or a pinned) snapshot's live merge-on-read delete files
     * as a DataFrame (``graft.`/path`.deletes`` metadata table): equality
-    * tombstone files and position-delete (DV) files, with per-file row/byte
+    * tombstone files and deletion-vector blobs, with per-file row/byte
     * counts — the observability a 100 TB operator needs to decide when
     * delete pressure warrants a compaction pass. */
   def deletesDf(snapshotId: Option[Long] = None): DataFrame = {
@@ -308,7 +335,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   /**
    * Merge-on-read POSITION delete (deletion vector): record the row
-   * positions matching `predicate` in a (file, pos) delete file and commit
+   * positions matching `predicate` as per-file bitmaps and commit
    * WITHOUT rewriting any data file — at 100 TB a trickle delete must not
    * rewrite 1 GB files for a few rows each (the same niche as
    * [[deleteByKeysMoR]], re-imagining the reference's incremental delete
@@ -326,17 +353,17 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val st = state
     val planned = st.planFiles(Some(predicate))
     if (planned.isEmpty) return None
-    val (metas, referenced) =
-      writePositions(livePositions(st, planned).filter(predicate), s"dv-${UUID.randomUUID}")
-        .getOrElse(return None)
+    val entries = DeletionVectors.write(root, s"dv-${UUID.randomUUID}",
+      DeletionVectors.collect(livePositions(st, planned).filter(predicate)))
+    if (entries.isEmpty) return None
     Some(commitFull("delete-pos") { parent =>
-      requireReferencedLive("delete-pos", st, parent, referenced)
+      requireReferencedLive("delete-pos", st, parent, entries)
       (parent.map(_.manifests).getOrElse(Seq.empty),
         parent.flatMap(_.deleteManifests),
-        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeManifest(metas)),
+        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeDvManifest(entries)),
         summary ++ Map("predicate" -> predicate.toString,
-          "position-deletes-added" -> metas.map(_.rows).sum.toString,
-          "position-delete-files" -> referenced.length.toString))
+          "position-deletes-added" -> entries.map(_.cardinality).sum.toString,
+          "position-delete-files" -> entries.length.toString))
     })
   }
 
@@ -348,37 +375,18 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   private def livePositions(st: TableState, planned: Seq[DataFileMeta]): DataFrame =
     st.applyTombstones(st.withPositionDeletesKeepingPos(st.relation(planned), planned))
 
-  /** Write the positions of `rows` (from [[livePositions]]) as a DV file
-    * under `data/<uuid>`; returns its metas and the data files it references,
-    * or None (the dir removed) when `rows` is empty. */
-  private def writePositions(rows: DataFrame,
-      uuid: String): Option[(Seq[DataFileMeta], Seq[String])] = {
-    import org.apache.spark.sql.functions.col
-    val dir = s"$dataDir/$uuid"
-    rows.select(col("_gdv_rel").as("_file"), col("_gdv_idx").as("_pos"))
-      .sortWithinPartitions("_file", "_pos") // tight per-DV-file _file bounds
-      .write.mode("errorifexists").parquet(dir)
-    val metas = StatsCollector.collect(
-      spark, GraftTable.PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
-      .filter(_.rows > 0)
-    if (metas.isEmpty) { FileIO.deleteRecursively(dir); return None }
-    val referenced = spark.read.schema(GraftTable.PosDeleteSchema).parquet(dir)
-      .select("_file").distinct().collect().map(_.getString(0)).toSeq
-    Some((metas, referenced))
-  }
-
   /** Positions stay valid while their data files live: fails `op` when a
-    * concurrent commit rewrote a `referenced` file (forcing a replan), while
-    * appends and other deletes race through — file immutability keeps their
-    * positions valid. Reads no manifest while every manifest of the planned
-    * snapshot is still in `parent` (then every planned file is live). */
+    * concurrent commit rewrote a data file of `entries` (forcing a replan),
+    * while appends and other deletes race through — file immutability keeps
+    * their positions valid. Reads no manifest while every manifest of the
+    * planned snapshot is still in `parent` (then every planned file is live). */
   private def requireReferencedLive(op: String, planned: TableState,
-      parent: Option[Snapshot], referenced: Seq[String]): Unit = {
+      parent: Option[Snapshot], entries: Seq[DvMeta]): Unit = {
     val parentManifests = parent.toSeq.flatMap(_.manifests)
     val kept = parentManifests.map(_.path).toSet
     if (planned.snapshot.exists(_.manifests.forall(m => kept.contains(m.path)))) return
     val live = parentManifests.flatMap(m => readManifest(m.path)).map(_.path).toSet
-    val gone = referenced.filterNot(live)
+    val gone = entries.map(_.dataFile).filterNot(live)
     require(gone.isEmpty,
       s"$op planned against files a concurrent commit rewrote " +
         s"(${gone.take(3).mkString(", ")}${if (gone.length > 3) ", …" else ""}); replan required")
@@ -408,7 +416,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     hit.persist()
     try {
       val uuid = s"dvu-${UUID.randomUUID}"
-      val (dvMetas, referenced) = writePositions(hit, uuid).getOrElse(return None)
+      val entries = DeletionVectors.write(root, uuid, DeletionVectors.collect(hit))
+      if (entries.isEmpty) return None
       val images = hit.select(sch.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(v) => when(coalesce(predicate, lit(false)), v.cast(f.dataType))
@@ -418,109 +427,72 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       }: _*)
       val added = st.writeDataFiles(images, s"update-$uuid")
       Some(commitFull("update-pos") { parent =>
-        requireReferencedLive("update-pos", st, parent, referenced)
+        requireReferencedLive("update-pos", st, parent, entries)
         (parent.map(_.manifests).getOrElse(Seq.empty) :+ writeManifest(added),
           parent.flatMap(_.deleteManifests),
-          Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeManifest(dvMetas)),
+          Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeDvManifest(entries)),
           summary ++ Map("predicate" -> predicate.toString,
             "set-columns" -> set.keys.toSeq.sorted.mkString(","),
-            "position-deletes-added" -> dvMetas.map(_.rows).sum.toString,
+            "position-deletes-added" -> entries.map(_.cardinality).sum.toString,
             "updated-rows" -> added.map(_.rows).sum.toString))
       })
     } finally hit.unpersist()
   }
 
   /**
-   * Compact the live position-delete (DV) files — the niche of Iceberg's
+   * Compact the live deletion-vector blobs — the niche of Iceberg's
    * `rewrite_position_delete_files` — WITHOUT touching any data file.
-   * Every MoR delete/update/merge commit adds its own small DV file, and a
-   * covered read unions their bitmaps, so between delete-pressure
-   * compactions the DV file count (and duplicate `(_file,_pos)` entries
-   * from overlapping deletes) grows with the commit rate. One pass reads
-   * the live DV rows, dedupes, and rewrites them globally sorted by
-   * `(_file, _pos)` into ~`targetBytes` files — so each output DV file
-   * carries a TIGHT contiguous `_file` bounds window and [[GraftTable.dvMayCover]]
-   * prunes whole DV files per scanned data file. Entries can never
-   * reference dead data files ([[rewritePosDeletes]] clears them exactly
-   * at each data-file rewrite), and a concurrent DV change between plan
-   * and commit aborts loudly (the covered manifests must all still be
-   * live). Commits as row-preserving `rewrite-deletes`: invisible to
-   * changelog and incremental readers, like compact/cluster. Returns None
-   * below 2 live DV files.
+   * Every MoR delete/update/merge commit writes its own small blob and adds
+   * one entry per data file, and a read ORs a file's entries, so between
+   * delete-pressure compactions the blob and entry counts grow with the
+   * commit rate. One driver-side pass ORs each data file's live entries
+   * into one bitmap and writes them all into one blob. Entries never name
+   * dead data files ([[replaceFiles]] drops them at each data-file rewrite),
+   * and a concurrent DV change between plan and commit aborts loudly (the
+   * covered manifests must all still be live). Commits as row-preserving
+   * `rewrite-deletes`: invisible to changelog and incremental readers, like
+   * compact/cluster. Returns None below 2 live blobs.
    */
-  def rewriteDeleteFiles(targetBytes: Long = 8L << 20,
-      summary: Map[String, String] = Map.empty): Option[Snapshot] = {
+  def rewriteDeleteFiles(summary: Map[String, String] = Map.empty): Option[Snapshot] = {
     val st = state
-    val dvs = st.positionDeletes
-    if (dvs.size < 2) return None
+    val blobsIn = st.positionDeletes.size
+    if (blobsIn < 2) return None
     val covered = st.snapshot.toSeq.flatMap(_.posDeleteList).map(_.path).toSet
     val uuid = s"dvc-${UUID.randomUUID}"
-    val dir = s"$dataDir/$uuid"
-    val nOut = math.max(1L, dvs.map(_.bytes).sum / targetBytes)
-    val perFile = math.max(1L, dvs.map(_.rows).sum / nOut) // pre-dedup upper bound
-    // cleanup covers the WRITE failure window too (ENOSPC mid-write would
-    // otherwise leak a partial staging dir no maintenance pass reclaims)
     try {
-      spark.read.schema(GraftTable.PosDeleteSchema).parquet(dvs.map(absPath): _*)
-        .distinct()
-        .sort("_file", "_pos") // range exchange: contiguous per-file bounds
-        .write.option("maxRecordsPerFile", perFile.toString)
-        .mode("errorifexists").parquet(dir)
-      val metas = StatsCollector.collect(
-        spark, GraftTable.PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
-        .filter(_.rows > 0)
+      val entries = DeletionVectors.write(root, uuid, DeletionVectors.load(root, st.dvEntries))
       Some(commitFull("rewrite-deletes") { parent =>
         val parentList = parent.toSeq.flatMap(_.posDeleteList)
         require(covered.subsetOf(parentList.map(_.path).toSet),
           "rewrite-deletes planned against DV manifests a concurrent commit " +
-            "replaced (a data-file rewrite cleared some of their rows); re-run")
+            "replaced (a data-file rewrite cleared some of their entries); re-run")
         val kept = parentList.filterNot(m => covered.contains(m.path))
         (parent.map(_.manifests).getOrElse(Seq.empty),
           parent.flatMap(_.deleteManifests),
-          Some(kept ++ (if (metas.isEmpty) Seq.empty else Seq(writeManifest(metas)))),
+          Some(kept :+ writeDvManifest(entries)),
           summary ++ Map(
-            "dv-files-in" -> dvs.size.toString,
-            "dv-files-out" -> metas.size.toString,
-            "dv-rows-out" -> metas.map(_.rows).sum.toString))
+            "dv-files-in" -> blobsIn.toString,
+            "dv-files-out" -> "1",
+            "dv-rows-out" -> entries.map(_.cardinality).sum.toString))
       })
-    } catch { case e: Throwable => FileIO.deleteRecursively(dir); throw e }
+    } catch { case e: Throwable => FileIO.deleteRecursively(s"$dataDir/$uuid"); throw e }
   }
 
-  /** Parent's position-delete manifests minus rows referencing
-    * `removedPaths` (whose rewrite APPLIED those deletes — see
-    * [[TableState.withPositionDeletes]]): DV files that cannot reference a removed
-    * path are kept verbatim (bounds check, no read); intersecting ones are
-    * rewritten without the dead rows and dropped entirely when empty —
-    * EXACT per-file clearing, the property equality tombstones can't have.
-    * Returns (new manifest list, DV rows cleared). */
-  private def rewritePosDeletes(parent: Option[Snapshot],
-      removedPaths: Set[String]): (Option[Seq[ManifestMeta]], Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val manifests = parent.map(_.posDeleteList).getOrElse(Seq.empty)
-    if (manifests.isEmpty || removedPaths.isEmpty)
-      return (parent.flatMap(_.posDeleteManifests), 0L)
-    def covers(d: DataFileMeta) = removedPaths.exists(p => GraftTable.dvMayCover(d, p))
-    val (hitM, keptM) = manifests.map(m => m -> readManifest(m.path))
-      .partition { case (_, entries) => entries.exists(covers) }
-    if (hitM.isEmpty) return (parent.flatMap(_.posDeleteManifests), 0L)
-    val (hit, miss) = hitM.flatMap(_._2).partition(covers)
-    val removedDf = {
-      import spark.implicits._
-      removedPaths.toSeq.toDF("_gdv_rm")
+  /** `manifests` without the entries `gone` selects, driver-side: a
+    * manifest with none keeps as is, one with some is rewritten with the
+    * rest, or dropped when none remain. Returns the new list and the
+    * removed entries. */
+  private def dropEntries[T](manifests: Seq[ManifestMeta], read: String => Seq[T],
+      write: Seq[T] => ManifestMeta)(gone: T => Boolean): (Seq[ManifestMeta], Seq[T]) = {
+    val kept = Seq.newBuilder[ManifestMeta]
+    val removed = Seq.newBuilder[T]
+    for (m <- manifests) {
+      val (g, stay) = read(m.path).partition(gone)
+      removed ++= g
+      if (g.isEmpty) kept += m
+      else if (stay.nonEmpty) kept += write(stay)
     }
-    val uuid = s"dvrw-${UUID.randomUUID}"
-    val dir = s"$dataDir/$uuid"
-    spark.read.schema(GraftTable.PosDeleteSchema).parquet(hit.map(absPath): _*)
-      .join(broadcast(removedDf), col("_file") === col("_gdv_rm"), "left_anti")
-      .sortWithinPartitions("_file", "_pos")
-      .write.mode("errorifexists").parquet(dir)
-    val rewritten = StatsCollector.collect(
-      spark, GraftTable.PosDeleteSchema, root, FileIO.listFiles(dir, ".parquet"), uuid)
-      .filter(_.rows > 0)
-    val cleared = hit.map(_.rows).sum - rewritten.map(_.rows).sum
-    val survivors = miss ++ rewritten
-    val out = keptM.map(_._1) ++ (if (survivors.isEmpty) Nil else Seq(writeManifest(survivors)))
-    (if (out.isEmpty) None else Some(out), cleared)
+    (kept.result(), removed.result())
   }
 
   /**
@@ -619,32 +591,26 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       clearDeletes: Boolean = false,
       propertyUpdates: Map[String, String] = Map.empty): Snapshot =
     commitFull(op, expectedSnapshotId, propertyUpdates) { parent =>
-      val parentManifests = parent.map(_.manifests).getOrElse(Seq.empty)
-      val kept = scala.collection.mutable.ArrayBuffer.empty[ManifestMeta]
-      var removedCount = 0
-      for (m <- parentManifests) {
-        val entries = readManifest(m.path)
-        val (gone, stay) = entries.partition(e => removedPaths.contains(e.path))
-        removedCount += gone.size
-        if (gone.isEmpty) kept += m
-        else if (stay.nonEmpty) kept += writeManifest(stay)
-      }
-      require(removedCount == removedPaths.size,
-        s"$op: ${removedPaths.size - removedCount} files to remove not present in current snapshot (concurrent rewrite?)")
-      val manifests = if (added.nonEmpty) kept.toSeq :+ writeManifest(added) else kept.toSeq
+      val (kept, gone) = dropEntries(parent.map(_.manifests).getOrElse(Seq.empty),
+        readManifest, writeManifest)(e => removedPaths.contains(e.path))
+      require(gone.size == removedPaths.size,
+        s"$op: ${removedPaths.size - gone.size} files to remove not present in current snapshot (concurrent rewrite?)")
+      val manifests = if (added.nonEmpty) kept :+ writeManifest(added) else kept
       // materializing live tombstones physically REMOVES rows, so the commit
       // is not row-preserving even under a "cluster" op — flagged in the
       // summary so incrementalRead treats it as row-changing
       val materialized = clearDeletes && parent.exists(_.deleteManifestList.nonEmpty)
       // position deletes clear EXACTLY per rewritten file (the rewrite read
-      // those files through withPositionDeletes, so their DV rows are
+      // those files through withPositionDeletes, so their DV entries are
       // applied); untouched files keep theirs — no full-coverage condition
-      val (posDeletes, dvCleared) = rewritePosDeletes(parent, removedPaths)
+      val (posDeletes, dvGone) = dropEntries(parent.map(_.posDeleteList).getOrElse(Seq.empty),
+        readDvManifest, writeDvManifest)(e => removedPaths.contains(e.dataFile))
+      val dvCleared = dvGone.map(_.cardinality).sum
       // clearDeletes: ONLY sound when the rewrite read every current data
       // file with tombstones applied (full-table cluster rewrite)
       (manifests,
         if (clearDeletes) None else parent.flatMap(_.deleteManifests),
-        posDeletes,
+        Some(posDeletes),
         summary ++ (if (materialized) Map("materialized-tombstones" -> "true") else Map.empty) ++
           (if (dvCleared > 0) Map("materialized-position-deletes" -> dvCleared.toString) else Map.empty) ++ Map(
           "removed-files" -> removedPaths.size.toString,
@@ -1380,7 +1346,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
               nullCounts = remap(e.nullCounts))))
           }
       }
-      // DV files have their own fixed (_file, _pos) schema — column
+      // DV entries name data files and positions, not columns — column
       // evolution never touches them; carry forward verbatim
       (manifests, parent.flatMap(_.deleteManifests),
         parent.flatMap(_.posDeleteManifests), Map(op -> detail))
@@ -1411,20 +1377,29 @@ object GraftTable {
     * broadcast (a 10^8-key MoR delete must not OOM the driver). */
   val TombstoneBroadcastRowCap = 4L * 1000 * 1000
 
-  /** Schema of a position-delete (deletion-vector) file: `_file` is a data
-    * file's table-relative path (= [[DataFileMeta.path]]), `_pos` a 0-based
-    * deleted row position within it (parquet `_metadata.row_index`). */
-  val PosDeleteSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField("_file",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("_pos",
-      org.apache.spark.sql.types.LongType, nullable = false)))
+  /** Parsed manifests by absolute path, LRU, bounded by the total entry
+    * count it holds (a manifest larger than the bound is parsed, never
+    * cached). Entries never go stale: manifest names are fresh UUIDs. */
+  private final class ParseCache[T](maxEntries: Int) {
+    private val lru = new java.util.LinkedHashMap[String, Vector[T]](64, 0.75f, true)
+    private var held = 0L
 
-  /** Could any row of DV file `d` reference data file `path`? min/max
-    * prune on `_file` (missing bounds → conservatively yes). */
-  private[table] def dvMayCover(d: DataFileMeta, path: String): Boolean =
-    d.minValues.get("_file").forall(_ <= path) &&
-      d.maxValues.get("_file").forall(path <= _)
+    def apply(absPath: String)(parse: => Vector[T]): Vector[T] = {
+      val hit = lru.synchronized(lru.get(absPath))
+      if (hit != null) return hit
+      val parsed = parse
+      if (parsed.size <= maxEntries) lru.synchronized {
+        held += parsed.size - Option(lru.put(absPath, parsed)).fold(0)(_.size)
+        val it = lru.values.iterator
+        while (held > maxEntries && it.hasNext) { held -= it.next().size; it.remove() }
+      }
+      parsed
+    }
+  }
+
+  private val ManifestCacheEntries = 100000
+  private val manifestCache = new ParseCache[DataFileMeta](ManifestCacheEntries)
+  private val dvManifestCache = new ParseCache[DvMeta](ManifestCacheEntries)
 
   /** Stamp Spark's bucket-id file-name suffix (`part-…_00007.snappy.parquet`)
     * onto freshly written files of a `bucket(n, col)`-partitioned table. The

@@ -17,8 +17,11 @@ import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModul
  * Layout under a table root:
  * {{{
  *   data/<commit-uuid>/part-*.parquet        immutable data files
+ *   data/<commit-uuid>/deletes.dv            deletion-vector blob: serialized
+ *                                            Roaring bitmaps, back to back
  *   metadata/v<N>.json                       full table metadata, version N
- *   metadata/manifest-<uuid>.json            list of DataFileMeta (JSON lines)
+ *   metadata/manifest-<uuid>.json            list of DataFileMeta (JSON lines),
+ *                                            or of DvMeta for a DV manifest
  *   metrics/                                 lineage/metrics parquet table
  *   maintenance/<runId>.json                 resumable step logs
  * }}}
@@ -35,6 +38,19 @@ final case class DataFileMeta(
     maxValues: Map[String, String],
     @JsonDeserialize(contentAs = classOf[java.lang.Long])
     nullCounts: Map[String, Long],
+    commitUuid: String)
+
+/** One deletion vector: the deleted row positions of data file `dataFile`
+  * (table-relative, = [[DataFileMeta.path]]) as a serialized Roaring bitmap
+  * at `[offset, offset + length)` of blob file `blob` (table-relative).
+  * `cardinality` is the bitmap's position count. Entries are additive: a
+  * data file's deleted set is the union of all its live entries. */
+final case class DvMeta(
+    dataFile: String,
+    blob: String,
+    offset: Long,
+    length: Long,
+    cardinality: Long,
     commitUuid: String)
 
 final case class ManifestMeta(
@@ -54,11 +70,10 @@ final case class Snapshot(
     // merge-on-read equality-delete (tombstone) manifests; Option so
     // pre-MoR metadata JSON deserializes as None
     deleteManifests: Option[Seq[ManifestMeta]] = None,
-    // merge-on-read POSITION-delete (deletion-vector) manifests: parquet
-    // files of (_file, _pos) rows naming deleted row positions of specific
-    // data files. File-scoped (later appends unaffected) and exactly
-    // clearable per rewritten file — unlike equality tombstones. Option so
-    // pre-DV metadata JSON deserializes as None
+    // merge-on-read POSITION-delete (deletion-vector) manifests: DvMeta
+    // lines, one per data file a commit deleted rows of. File-scoped (later
+    // appends unaffected) and exactly clearable per rewritten file — unlike
+    // equality tombstones. Option so pre-DV metadata JSON deserializes as None
     posDeleteManifests: Option[Seq[ManifestMeta]] = None) {
   def deleteManifestList: Seq[ManifestMeta] = deleteManifests.getOrElse(Seq.empty)
   def posDeleteList: Seq[ManifestMeta] = posDeleteManifests.getOrElse(Seq.empty)
@@ -112,6 +127,7 @@ object MetaJson {
   def write(v: Any): String = mapper.writeValueAsString(v)
   def readTableMetadata(s: String): TableMetadata = mapper.readValue[TableMetadata](s)
   def readDataFileMeta(s: String): DataFileMeta = mapper.readValue[DataFileMeta](s)
+  def readDvMeta(s: String): DvMeta = mapper.readValue[DvMeta](s)
   def readStepLog(s: String): StepLog = mapper.readValue[StepLog](s)
 }
 

@@ -133,17 +133,24 @@ final class TableState private[table] (
   lazy val tombstones: Seq[DataFileMeta] =
     snapshot.toSeq.flatMap(_.deleteManifestList).flatMap(m => table.readManifest(m.path))
 
-  /** Position-delete (deletion-vector) file metas of the pinned snapshot. */
-  lazy val positionDeletes: Seq[DataFileMeta] =
-    snapshot.toSeq.flatMap(_.posDeleteList).flatMap(m => table.readManifest(m.path))
+  /** Deletion-vector entries of the pinned snapshot, one or more per data
+    * file with deleted rows (see [[DeletionVectors]]). */
+  lazy val dvEntries: Seq[DvMeta] =
+    snapshot.toSeq.flatMap(_.posDeleteList).flatMap(m => table.readDvManifest(m.path))
 
-  /** Deleted-row count per data-file path across the DV files (duplicates
-    * across DV files count once): the cardinalities of the cached per-file
-    * bitmaps, no Spark job. Drives compaction's delete-pressure eligibility. */
+  /** The live DV blob files as file metas: `rows` sums their live entries'
+    * cardinalities and `bytes` their lengths. */
+  lazy val positionDeletes: Seq[DataFileMeta] =
+    dvEntries.groupBy(_.blob).toSeq.sortBy(_._1).map { case (blob, es) =>
+      DataFileMeta(blob, es.map(_.cardinality).sum, es.map(_.length).sum,
+        Map.empty, Map.empty, Map.empty, es.head.commitUuid)
+    }
+
+  /** Deleted-row count per data-file path (positions repeated across
+    * entries count once): the cardinalities of the cached per-file bitmap
+    * unions, no Spark job. Drives compaction's delete-pressure eligibility. */
   lazy val posDeleteRowCounts: Map[String, Long] =
-    if (positionDeletes.isEmpty) Map.empty
-    else DeletionVectors.load(spark, positionDeletes.map(table.absPath))
-      .map { case (f, b) => f -> b.getLongCardinality }
+    DeletionVectors.load(table.root, dvEntries).map { case (f, b) => f -> b.getLongCardinality }
 
   // ---- bucket layout -------------------------------------------------------
 
@@ -211,15 +218,15 @@ final class TableState private[table] (
 
   /** `df` — a parquet file-source scan over exactly `filesRead` — without
     * the rows the snapshot's position deletes remove: `dv_keep` over the
-    * per-file bitmaps of the DV files whose `_file` bounds may cover a read
-    * file, whatever the DV row count (Roaring containers hold dense runs in
-    * a few bytes per 64K positions); no-op when none can. Every rewrite
-    * pass MUST read its input files through this (then commit via
-    * [[GraftTable.replaceFiles]], which drops exactly the rewritten files'
-    * DV rows). */
+    * bitmaps of the read files' DV entries, whatever the DV row count
+    * (Roaring containers hold dense runs in a few bytes per 64K positions);
+    * no-op when no read file has one. Every rewrite pass MUST read its input
+    * files through this (then commit via [[GraftTable.replaceFiles]], which
+    * drops exactly the rewritten files' DV entries). */
   def withPositionDeletes(df: DataFrame, filesRead: Seq[DataFileMeta]): DataFrame = {
-    val hit = positionDeletes.filter(d => filesRead.exists(f => GraftTable.dvMayCover(d, f.path)))
-    if (hit.isEmpty) df else df.filter(DeletionVectors.keep(spark, hit.map(table.absPath)))
+    val read = filesRead.map(_.path).toSet
+    val hit = dvEntries.filter(e => read.contains(e.dataFile))
+    if (hit.isEmpty) df else df.filter(DeletionVectors.keep(table.root, hit))
   }
 
   /** Like [[withPositionDeletes]] but ALWAYS materializes the surviving
@@ -255,33 +262,26 @@ final class TableState private[table] (
    * query's own data filters into the relation's file index, so min/max
    * file skipping happens for ANY predicate later applied to the returned
    * DataFrame — `predicate` is an eager pre-prune plus residual filter for
-   * callers that want plan-time file counts. Position deletes use a SPLIT
-   * plan: files no DV can reference scan untouched (at 100 TB the dominant
-   * branch — DVs cover the trickle-deleted tail) and keep the bucketed-scan
-   * gate; possibly-covered files scan under the `dv_keep` bitmap filter.
+   * callers that want plan-time file counts. Position deletes apply as the
+   * `dv_keep` bitmap filter over the ONE scan of all planned files: a file
+   * without DV entries costs the probe one path compare per row, less than
+   * a second scan node would, and the scan keeps the bucketed-scan gate.
    */
   def read(predicate: Option[Column] = None): DataFrame = {
     val planned = planFiles(predicate)
-    val (covered, plain) =
-      planned.partition(f => positionDeletes.exists(d => GraftTable.dvMayCover(d, f.path)))
-    val df =
-      if (covered.isEmpty) relation(planned, bucketed = bucketSpec(planned))
-      else {
-        val deleted = withPositionDeletes(relation(covered), covered)
-        if (plain.isEmpty) deleted else relation(plain).unionByName(deleted)
-      }
+    val df = withPositionDeletes(relation(planned, bucketed = bucketSpec(planned)), planned)
     val live = applyTombstones(df)
     predicate.fold(live)(live.filter)
   }
 
-  /** Rows of `fs` whose (file, row-position) appears in the given
-    * position-delete entries — the row images a delete-pos commit removed
-    * (the changelog/CDC scan). Touches only the files the DV rows can
-    * reference (bounds prune on `_file`); the negated `dv_keep` bitmap
-    * filter selects the rows. */
-  def rowsAtPositions(fs: Seq[DataFileMeta], dvEntries: Seq[DataFileMeta]): DataFrame =
-    relation(fs.filter(f => dvEntries.exists(d => GraftTable.dvMayCover(d, f.path))))
-      .filter(!DeletionVectors.keep(spark, dvEntries.map(table.absPath)))
+  /** Rows of `fs` at the positions `entries` delete — the row images a
+    * delete-pos commit removed (the changelog/CDC scan). Touches only the
+    * entries' data files; the negated `dv_keep` bitmap filter selects the
+    * rows. */
+  def rowsAtPositions(fs: Seq[DataFileMeta], entries: Seq[DvMeta]): DataFrame = {
+    val named = entries.map(_.dataFile).toSet
+    relation(fs.filter(f => named.contains(f.path))).filter(!DeletionVectors.keep(table.root, entries))
+  }
 
   /**
    * The file-level diff behind [[GraftTable.incrementalRead]]: data files

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 import graft.SparkSuite
 import graft.ops.{Cluster, Compact, Expire, Merge}
@@ -37,20 +38,32 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       .withColumn("_file", DeletionVectors.relPathColumn)
       .withColumn("_pos", col("_metadata.row_index"))
 
-  /** Commit one more DV file that repeats every live DV entry, plus the
-    * positions of `extra`'s rows twice — overlapping `(_file, _pos)` entries
-    * across and within DV files. */
+  /** Every live DV entry's positions as `(_file, _pos)` rows, each entry
+    * read on its own: positions repeated across entries stay repeated. */
+  private def dvRows(t: GraftTable): DataFrame = {
+    import spark.implicits._
+    t.state.dvEntries.flatMap(e => DeletionVectors.load(t.root, Seq(e)).toSeq.flatMap {
+      case (f, b) => b.toArray.toSeq.map(f -> _)
+    }).toDF("_file", "_pos")
+  }
+
+  /** Commit one more DV blob that repeats every live DV entry, plus a
+    * second blob with the positions of `extra`'s rows, which the first one
+    * also holds — overlapping entries across and within one commit. */
   private def commitOverlappingDvs(t: GraftTable, extra: org.apache.spark.sql.Column): Unit = {
-    val entries = rawWithPos(t).filter(extra).select("_file", "_pos")
-    val uuid = s"dv-${java.util.UUID.randomUUID}"
-    spark.read.schema(GraftTable.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
-      .unionByName(entries).unionByName(entries)
-      .write.parquet(s"${t.dataDir}/$uuid")
-    val metas = StatsCollector.collect(spark, GraftTable.PosDeleteSchema, t.root,
-      FileIO.listFiles(s"${t.dataDir}/$uuid", ".parquet"), uuid).filter(_.rows > 0)
+    val more = DeletionVectors.collect(rawWithPos(t).filter(extra)
+      .select(col("_file").as("_gdv_rel"), col("_pos").as("_gdv_idx")))
+    val live = DeletionVectors.load(t.root, t.state.dvEntries)
+    val all = (live.keySet ++ more.keySet).map { f =>
+      val b = new Roaring64Bitmap()
+      (live.get(f) ++ more.get(f)).foreach(b.or)
+      f -> b
+    }.toMap
+    val entries = DeletionVectors.write(t.root, s"dv-${java.util.UUID.randomUUID}", all) ++
+      DeletionVectors.write(t.root, s"dv-${java.util.UUID.randomUUID}", more)
     t.commitFull("delete-pos") { parent =>
       (parent.map(_.manifests).getOrElse(Seq.empty), parent.flatMap(_.deleteManifests),
-        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ t.writeManifest(metas)), Map.empty)
+        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ t.writeDvManifest(entries)), Map.empty)
     }
   }
 
@@ -80,9 +93,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     commitOverlappingDvs(t, bucket(1))
     assert(t.positionDeletes().size >= 2)
     // the anti-join over distinct DV rows every read used before the bitmaps
-    val dvRows = spark.read.schema(GraftTable.PosDeleteSchema)
-      .parquet(t.positionDeletes().map(t.absPath): _*).distinct()
-    val antiJoined = rawWithPos(t).join(dvRows, Seq("_file", "_pos"), "left_anti")
+    val antiJoined = rawWithPos(t).join(dvRows(t).distinct(), Seq("_file", "_pos"), "left_anti")
       .drop("_file", "_pos")
     assertSameRows(t.read(), antiJoined, "bitmap read vs distinct anti-join")
     assertSameRows(t.read(), pre.filter(!(bucket(0) || bucket(1))), "overlapping DVs")
@@ -113,17 +124,17 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("DV bitmaps round-trip positions at and above 2^31") {
     import spark.implicits._
-    val dir = tmpDir("graft-dvbig")
+    val root = tmpDir("graft-dvbig")
     val big = Seq(0L, 7L, (1L << 31) - 1, 1L << 31, (1L << 31) + 5, (1L << 40) + 3, Long.MaxValue)
-    (big.map(p => ("data/a.parquet", p)) :+ (("data/b.parquet", 1L << 32)))
-      .toDF("_file", "_pos").coalesce(1).write.parquet(dir)
-    val file = FileIO.listFiles(dir, ".parquet").head
-    val bms = DeletionVectors.load(spark, Seq(file))
+    val entries = DeletionVectors.write(root, "dv-big", DeletionVectors.collect(
+      (big.map(p => ("data/a.parquet", p)) :+ (("data/b.parquet", 1L << 32)))
+        .toDF("_gdv_rel", "_gdv_idx").repartition(3)))
+    val bms = DeletionVectors.load(root, entries)
     assert(bms("data/a.parquet").toArray.toSeq == big)
     assert(bms("data/b.parquet").toArray.toSeq == Seq(1L << 32))
     // the probe sees the same positions
     val keep = DvKeep(BoundReference(0, StringType, nullable = false),
-      BoundReference(1, LongType, nullable = false), new DvSet(Seq(file), bms))
+      BoundReference(1, LongType, nullable = false), new DvSet(entries.map(_.blob), bms))
     def kept(path: String, pos: Long) = keep.eval(InternalRow(UTF8String.fromString(path), pos))
     assert(kept("file:/x/t/data/a.parquet", (1L << 31) + 5) == false)
     assert(kept("file:/x/t/data/a.parquet", (1L << 31) + 6) == true)
@@ -134,11 +145,10 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   test("dense DV runs above the old 4M-row join cap load as compact bitmaps") {
     // one memory policy for every DV consumer: the per-file bitmaps, at any
     // DV row count — Roaring run containers keep dense deletes small
-    val dir = tmpDir("graft-dvdense")
+    val root = tmpDir("graft-dvdense")
     val n = 5L * 1000 * 1000
-    spark.range(n).select(lit("data/a.parquet").as("_file"), col("id").as("_pos"))
-      .coalesce(1).write.parquet(dir)
-    val bms = DeletionVectors.load(spark, FileIO.listFiles(dir, ".parquet"))
+    val bms = DeletionVectors.load(root, DeletionVectors.write(root, "dv-dense", DeletionVectors.collect(
+      spark.range(n).select(lit("data/a.parquet").as("_gdv_rel"), col("id").as("_gdv_idx")))))
     assert(bms("data/a.parquet").getLongCardinality == n)
     assert(bms("data/a.parquet").serializedSizeInBytes() < 4096)
   }
@@ -159,7 +169,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val counts = t.posDeleteRowCounts()
     assert(counts.keySet.subsetOf(t.files().map(_.path).toSet), s"unmatched DV paths: ${counts.keySet}")
     assert(counts.values.sum == df.filter(gone).count())
-    assertSameRows(t.state.rowsAtPositions(t.files(), t.positionDeletes()),
+    assertSameRows(t.state.rowsAtPositions(t.files(), t.state.dvEntries),
       df.filter(gone), "rows at the deleted positions")
     Compact.run(t, targetBytes = 256L * 1024 * 1024, deleteRatioThreshold = 0.1)
     assert(t.posDeleteRowCounts().isEmpty, "compaction clears every covered file's DV rows")
@@ -171,8 +181,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     (0 to 2).foreach(k => assert(t.deleteWherePositional(bucket(k)).nonEmpty))
     commitOverlappingDvs(t, bucket(3))
     assert(t.positionDeletes().size >= 4)
-    val want = spark.read.schema(GraftTable.PosDeleteSchema).parquet(t.positionDeletes().map(t.absPath): _*)
-      .distinct().groupBy("_file").count().collect()
+    val want = dvRows(t).distinct().groupBy("_file").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(want.values.sum > 0)
     assert(t.posDeleteRowCounts() == want)
@@ -193,9 +202,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(t.positionDeletes().nonEmpty)
     // DV _file values name real data files (the rel-path expression matches
     // DataFileMeta.path exactly — the invariant every join/prune rests on)
-    val dvFiles = spark.read.schema(GraftTable.PosDeleteSchema)
-      .parquet(t.positionDeletes().map(t.absPath): _*)
-      .select("_file").distinct().collect().map(_.getString(0)).toSet
+    val dvFiles = dvRows(t).select("_file").distinct().collect().map(_.getString(0)).toSet
     assert(dvFiles.nonEmpty && dvFiles.subsetOf(preFiles), s"unmatched DV paths: ${dvFiles -- preFiles}")
 
     // full scan = pre-delete scan minus matching rows
@@ -319,6 +326,44 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(t.read().count() == expectedCount)
   }
 
+  test("orphan GC collects a never-committed DV blob and keeps the live one") {
+    val t = freshTable(1000)
+    assert(t.deleteWherePositional(col("lang") === "en").nonEmpty)
+    val live = t.positionDeletes().map(t.absPath)
+    val expected = t.read().localCheckpoint(true)
+    // a delete that wrote its blob and died before committing
+    val staged = DeletionVectors.write(t.root, "dv-crashed",
+      Map(t.files().head.path -> Roaring64Bitmap.bitmapOf(0L, 1L)))
+    val stagedPath = s"${t.root}/${staged.head.blob}"
+    assert(new java.io.File(stagedPath).exists)
+    val removed = Expire.removeOrphans(t, olderThanMs = -1000)
+    assert(removed == Seq(stagedPath), s"removed $removed")
+    assert(!new java.io.File(stagedPath).exists, "the uncommitted blob must be collected")
+    assert(live.forall(p => new java.io.File(p).exists), "the live blob must survive")
+    assertSameRows(t.read(), expected, "read after orphan GC")
+  }
+
+  test("a snapshot holding parquet-format DV entries fails loudly, never reads as no deletes") {
+    val t = freshTable(500)
+    // a DV manifest line of the old format: a DataFileMeta naming a
+    // (_file, _pos) parquet file, with no blob fields
+    val old = DataFileMeta("data/dv-old/part-00000.parquet", 3L, 900L,
+      Map("_file" -> "data/a", "_pos" -> "0"), Map("_file" -> "data/z", "_pos" -> "9"),
+      Map("_file" -> 0L, "_pos" -> 0L), "dv-old")
+    t.commitFull("delete-pos") { parent =>
+      (parent.map(_.manifests).getOrElse(Seq.empty), parent.flatMap(_.deleteManifests),
+        Some(Seq(t.writeManifest(Seq(old)))), Map.empty)
+    }
+    for ((what, attempt) <- Seq[(String, () => Any)](
+        "read" -> (() => t.read().count()),
+        "position deletes" -> (() => t.positionDeletes()),
+        "compaction plan" -> (() => Compact.plan(t, 256L * 1024 * 1024)),
+        "expiry" -> (() => Expire.expire(t, retainLast = 1)))) {
+      val e = intercept[IllegalStateException](attempt())
+      assert(e.getMessage.contains("old parquet deletion-vector format"), s"$what: ${e.getMessage}")
+    }
+  }
+
   test("raw graft-format relation refuses a DV snapshot; SQL read applies it") {
     val t = freshTable(1000)
     assert(t.deleteWherePositional(col("lang") === "en").nonEmpty)
@@ -342,8 +387,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(dvsIn.size >= 3, s"expected ≥3 DV files, got ${dvsIn.size}")
     val preRead = t.read().localCheckpoint(true)
     val preFiles = t.files().map(_.path).toSet
-    val distinctEntries = spark.read.schema(GraftTable.PosDeleteSchema)
-      .parquet(dvsIn.map(t.absPath): _*).distinct().count()
+    val distinctEntries = dvRows(t).distinct().count()
     val from = t.currentSnapshot.get.id
 
     val snap = t.rewriteDeleteFiles()
