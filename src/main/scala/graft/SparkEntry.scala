@@ -639,9 +639,9 @@ object SparkEntry {
 
     // q40: branch cherry-pick publish replayed relationally — stage two
     // appends on a branch while main diverges (append + compaction rewrite
-    // + MoR tombstones on staged keys), then PUBLISH: the final state must
-    // equal main ∪ staged minus tombstoned keys, with the tombstones
-    // suppressing staged rows exactly as they would a plain append's
+    // + a MoR key delete naming staged keys and main's own), then PUBLISH:
+    // the final state must equal main minus its deleted keys ∪ staged, the
+    // delete applying on main and never leaking into the staged rows
     "q40_branch_publish" -> ((s, dir) => {
       import s.implicits._
       val ord = t(s, dir, "orders").select(
@@ -653,12 +653,13 @@ object SparkEntry {
       s.sql(s"ALTER TABLE graft.`$root` CREATE BRANCH wap").collect()
       tbl.append(slice(1).coalesce(4), toBranch = Some("wap"))
       tbl.append(slice(2).coalesce(4), toBranch = Some("wap"))
-      // main diverges: an append, a compaction rewrite, and equality-delete
-      // tombstones hitting keys the branch staged
+      // main diverges: an append, a compaction rewrite, and a key delete of
+      // the `% 5 = 0` keys of slice 1 (staged on the branch) and slice 3
+      // (main's own)
       tbl.append(slice(3).coalesce(8))
       s.sql(s"OPTIMIZE graft.`$root`").collect()
-      tbl.deleteByKeysMoR(
-        slice(1).filter(pmod(col("o_orderkey"), lit(5)) === 0).select("o_orderkey"))
+      tbl.deleteByKeysMoR(slice(1).unionByName(slice(3))
+        .filter(pmod(col("o_orderkey"), lit(5)) === 0).select("o_orderkey"))
       s.sql(s"ALTER TABLE graft.`$root` PUBLISH BRANCH wap").collect()
       val out = s.sql(s"SELECT * FROM graft.`$root`")
         .groupBy(pmod(col("o_orderkey"), lit(4)).as("slice"))
@@ -726,7 +727,7 @@ object SparkEntry {
     // q43: merge-on-read positional lifecycle — a deletion-vector DELETE and
     // a positional UPDATE land without rewriting any data file; a later
     // append re-ships rows matching the deleted predicate (file-scoped DVs
-    // must not touch them — equality tombstones would); compaction then
+    // must not touch them); compaction then
     // materializes and clears the DVs. The final state replays relationally.
     "q43_positional_mor" -> ((s, dir) => {
       val ord = t(s, dir, "orders").select(
@@ -1351,14 +1352,15 @@ object SparkEntry {
         |SELECT count(*), CAST(sum(o_orderkey) AS BIGINT), round(sum(price), 2), 'head'
         |FROM (SELECT * FROM a UNION ALL SELECT * FROM b)""".stripMargin,
 
-    // q40: final state after a cherry-pick publish = main slices (0,3) ∪
-    // staged slices (1,2) minus the keys main tombstoned during staging
+    // q40: final state after a cherry-pick publish = main slices (0,3)
+    // minus the slice-3 keys main deleted during staging ∪ staged slices
+    // (1,2), untouched by that delete
     "q40_branch_publish" ->
       """SELECT o_orderkey % 4 AS slice, count(*) AS n_rows,
         |       CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
         |       round(sum(CAST(o_totalprice AS DOUBLE)), 2) AS price_sum
         |FROM orders
-        |WHERE NOT (o_orderkey % 4 = 1 AND o_orderkey % 5 = 0)
+        |WHERE NOT (o_orderkey % 4 = 3 AND o_orderkey % 5 = 0)
         |GROUP BY 1""".stripMargin,
 
     // q41: replaceWhere backfill = matching rows re-priced, others verbatim

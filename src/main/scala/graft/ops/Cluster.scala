@@ -223,10 +223,9 @@ object Cluster {
         return graft.table.StatsCollector.collect(spark, schema, table.root,
           FileIO.listFilesRecursively(dir, ".parquet"), s"$commitUuid-p$gi")
       FileIO.deleteRecursively(dir)
-      // MoR deletes are applied during the rewrite; a FULL rewrite
-      // (onlyFiles empty) then clears equality tombstones at commit, and
-      // position deletes clear per rewritten file in replaceFiles
-      val df = st.applyTombstones(st.readFiles(gInputs))
+      // deletion vectors apply during the rewrite and clear per rewritten
+      // file in replaceFiles
+      val df = st.readFiles(gInputs)
       val gBytes = gInputs.map(_.bytes).sum
       val rowsTotal = gInputs.map(_.rows).sum
       val nOut = math.max(1, math.ceil(gBytes.toDouble / targetFileBytes).toInt)
@@ -334,7 +333,7 @@ object Cluster {
       GroupedRewrite.run(spark, "graft-cluster", jobParallelism, groups,
         g => math.ceil(g.map(_.bytes).sum.toDouble / targetFileBytes).toLong)(rewriteGroup)
 
-    // drop all-empty outputs (a fully-tombstoned partition group writes a
+    // drop all-empty outputs (a fully-deleted partition group writes a
     // 0-row, bound-less file — unprunable manifest noise)
     val added = perGroup.flatMap(_._1).filter(_.rows > 0)
     val removed = inputs.map(_.path).toSet
@@ -342,9 +341,7 @@ object Cluster {
       Map("run-id" -> runId,
         "zdims" -> zdimsStr,
         "bits" -> dims.effectiveBits.toString, "curve" -> dims.curve),
-      expectedSnapshotId = Some(snap.id),
-      // a full rewrite read every file with tombstones applied → clear them
-      clearDeletes = onlyFiles.isEmpty)
+      expectedSnapshotId = Some(snap.id))
     Maintenance.markCommitted(table, log, committed.id)
     // lineage per GROUP: an output derives only from its own partition
     // group's inputs (whole-rewrite attribution was wrong for multi-group)

@@ -23,8 +23,8 @@ import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot, S
  * A bin whose rows need no change is COPIED: its files' parquet row groups
  * are concatenated without decoding (parquet-hadoop's `ParquetRewriter`,
  * page indexes and bloom filters included), and all such bins run as one
- * Spark job with one task per bin. That needs no live equality tombstones,
- * no DV rows in the bin's files, all files in one partition dir of the
+ * Spark job with one task per bin. That needs no DV rows in the bin's
+ * files, all files in one partition dir of the
  * active spec, and every input footer equal to what [[rewriteBin]] would
  * write today (parquet schema, Spark row schema with field ids, codec,
  * bloom columns) — so the copy equals today's rewrite except for row-group
@@ -66,8 +66,7 @@ object Compact {
     // WHERE-scoped maintenance: only files whose stats range intersects the
     // predicate are candidates — at 100 TB you compact the hot partition,
     // not the table. Rewrites are row-preserving for ANY file subset, so
-    // scoping never affects correctness (and a scoped pass never clears
-    // tombstones — the full-coverage check below compares against ALL files)
+    // scoping never affects correctness
     val all = st.planFiles(predicate)
     val threshold = (targetBytes * smallFileFraction).toLong
     // delete pressure: a file whose position-deleted row share reaches
@@ -84,13 +83,9 @@ object Compact {
     val small = (all.filter(_.bytes < threshold) ++
       all.filter(f => pressured.contains(f.path) && f.bytes >= threshold))
       .groupBy(_.path).map(_._2.head).toSeq
-    // with live MoR tombstones a rewrite has a second purpose — applying
-    // them — so singleton groups stay in the plan and a full-coverage pass
-    // can materialize-and-clear the tombstone set (see run()); without
-    // tombstones a one-file group has nothing to gain and is dropped —
-    // unless it is delete-pressured (the rewrite clears its DV rows)
-    val tombstonesLive = st.tombstones.nonEmpty
-    if (small.isEmpty || (small.size < 2 && !tombstonesLive && pressured.isEmpty)) return None
+    // a one-file group has nothing to gain and is dropped — unless it is
+    // delete-pressured (the rewrite clears its DV rows)
+    if (small.isEmpty || (small.size < 2 && pressured.isEmpty)) return None
     val sortCol = orderBy.getOrElse(st.schema.fields.head.name)
     val dt = st.schema.fields.find(_.name == sortCol).map(_.dataType)
     val ordered = (dt match {
@@ -125,8 +120,7 @@ object Compact {
       }
       if (cur.nonEmpty) groups += cur
     }
-    val useful = (if (tombstonesLive) groups
-      else groups.filter(g => g.size >= 2 || g.exists(f => pressured.contains(f.path)))).toSeq
+    val useful = groups.filter(g => g.size >= 2 || g.exists(f => pressured.contains(f.path))).toSeq
     if (useful.isEmpty) None else Some(Plan(st, useful))
   }
 
@@ -176,25 +170,16 @@ object Compact {
       pending.collect { case (i, group) if copied.contains(i) => (Seq(copied(i)), group) } ++
       rewritten
 
-    // drop all-empty outputs: a group whose every row was tombstoned
+    // drop all-empty outputs: a group whose every row was deleted
     // writes a 0-row, bound-less parquet file — unprunable manifest
     // noise (same rule as Merge/deleteWhere)
     val added = finished.flatMap(_._1).filter(_.rows > 0)
     val removed = p.groups.flatten.map(_.path).toSet
     val sourcesPerOutput = finished
       .flatMap { case (outs, srcs) => outs.filter(_.rows > 0).map(o => o.path -> srcs) }.toMap
-    // full-coverage pass: when every data file of the planned snapshot was
-    // rewritten (tombstones applied per group above), the tombstones are
-    // fully materialized and the commit clears them — otherwise they stay
-    // live (untouched files may still hold tombstoned keys) and MERGE
-    // remains blocked until a full cluster rewrite OR a compact-all runs.
-    // Sound against races: replaceFiles requires the parent to still BE the
-    // planned snapshot, so a tombstone added after planning fails the
-    // commit instead of being silently cleared.
-    val clearDeletes = st.tombstones.nonEmpty && removed == st.files.map(_.path).toSet
     val snap = table.replaceFiles(removed, added, "compact",
       Map("run-id" -> runId, "groups" -> p.groups.size.toString),
-      expectedSnapshotId = Some(p.snapshotId), clearDeletes = clearDeletes)
+      expectedSnapshotId = Some(p.snapshotId))
     Maintenance.markCommitted(table, log, snap.id)
     Lineage.record(spark, table, runId, snap.id, "compact", added, sourcesPerOutput,
       (System.nanoTime() - t0) / 1000000)
@@ -206,17 +191,15 @@ object Compact {
   private[graft] def rewriteBin(table: GraftTable, group: Seq[DataFileMeta],
       commitUuid: String): Seq[DataFileMeta] = rewriteBin(table.state, group, commitUuid)
 
-  /** Spark path for one bin of `st`: read → apply live MoR deletes → write
-    * as one file (`coalesce(1)`: one read→write task, no shuffle). */
+  /** Spark path for one bin of `st`: read → apply the files' deletion
+    * vectors (cleared by replaceFiles) → write as one file (`coalesce(1)`:
+    * one read→write task, no shuffle). */
   private def rewriteBin(st: TableState, group: Seq[DataFileMeta],
       commitUuid: String): Seq[DataFileMeta] = {
     val spark = st.table.spark
     FileIO.deleteRecursively(s"${st.table.dataDir}/$commitUuid") // partial attempt from a crashed run
     spark.sparkContext.setJobDescription(s"compact group $commitUuid (${group.size} files)")
-    // equality tombstones stay live in the commit (other files may still
-    // hold tombstoned keys); POSITION deletes of exactly these files are
-    // applied here and cleared by replaceFiles
-    try st.writeDataFiles(st.applyTombstones(st.readFiles(group)).coalesce(1), commitUuid)
+    try st.writeDataFiles(st.readFiles(group).coalesce(1), commitUuid)
     finally spark.sparkContext.setJobDescription(null) // pool threads are reused across groups
   }
 
@@ -235,8 +218,8 @@ object Compact {
   private final case class CopyTask(group: Int, inputs: Seq[String], dir: String,
       subPath: String, commitUuid: String)
 
-  /** Copy every bin of `pending` whose rows need no change — no live
-    * equality tombstones, no DV rows in its files, all files in one
+  /** Copy every bin of `pending` whose rows need no change — no DV rows
+    * in its files, all files in one
     * partition dir of the active spec, as planned in `plan` — by
     * concatenating its files' parquet row groups: ONE Spark job, one task
     * per bin, no decoding. Each task also checks its inputs' footers against
@@ -246,7 +229,7 @@ object Compact {
   private[graft] def copyBins(table: GraftTable, runId: String, plan: Plan,
       pending: Seq[(Int, Seq[DataFileMeta])]): Map[Int, DataFileMeta] = {
     val st = plan.state
-    if (pending.isEmpty || st.tombstones.nonEmpty) return Map.empty
+    if (pending.isEmpty) return Map.empty
     val specs = st.partitionSpecs
     val tasks = pending.flatMap { case (i, group) =>
       val subs = group.map(f => subPathOf(specs, f)).distinct

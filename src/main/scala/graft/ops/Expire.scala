@@ -61,8 +61,8 @@ object Expire {
     val (kept, dropped) = byId.partition(s => keepIds.contains(s.id))
     if (dropped.isEmpty) return Result(Nil, Nil, Nil)
 
-    // data, merge-on-read tombstone, AND position-delete manifests all pin
-    // their files; a DV blob goes only when no kept entry references it
+    // data AND DV manifests both pin their files; a DV blob goes only when
+    // no kept entry references it
     val keptManifests = manifestsOf(kept)
     val keptFiles = filesOf(table, keptManifests).toSet
     val droppedManifests = manifestsOf(dropped).filterNot(keptManifests.contains)
@@ -92,11 +92,12 @@ object Expire {
   /** Distinct manifests of `snaps` (snapshots share most of theirs), each
     * tagged as a DV manifest or not. */
   private def manifestsOf(snaps: Seq[Snapshot]): Seq[(String, Boolean)] =
-    snaps.flatMap(s => (s.manifests ++ s.deleteManifestList).map(_.path -> false) ++
-      s.posDeleteList.map(_.path -> true)).distinct
+    snaps.flatMap { s =>
+      s.requireNoEqualityDeletes()
+      s.manifests.map(_.path -> false) ++ s.posDeleteList.map(_.path -> true)
+    }.distinct
 
-  /** Table-relative files `manifests` reference: data and tombstone files,
-    * and DV blobs. */
+  /** Table-relative files `manifests` reference: data files and DV blobs. */
   private def filesOf(table: GraftTable, manifests: Seq[(String, Boolean)]): Seq[String] =
     manifests.flatMap {
       case (m, false) => table.readManifest(m).map(_.path)

@@ -266,8 +266,6 @@ object Merge {
     // resume short-circuit FIRST: an already-committed merge must stay
     // idempotently re-runnable even if a MoR delete landed afterwards
     log.committedSnapshotId.foreach(id => return st.metadata.snapshot(id).get)
-    require(st.tombstones.isEmpty,
-      "table has live merge-on-read tombstones; materialize them first (Cluster.zorderRewrite) — equality deletes apply to future rows and would silently suppress merged keys")
     val snap = st.snapshot
     // resume identity (same guard as Compact/Cluster): a crashed run's
     // rewrite output is only reusable against the snapshot it was planned
@@ -775,7 +773,6 @@ object Merge {
           propertyUpdates = propertyUpdates) { parent =>
         (parent.map(_.manifests).getOrElse(Seq.empty) ++
             (if (added.nonEmpty) Seq(table.writeManifest(added)) else Nil),
-          parent.flatMap(_.deleteManifests),
           Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) ++
             (if (dvs.nonEmpty) Seq(table.writeDvManifest(dvs)) else Nil)),
           Map("run-id" -> runId, "touched-files" -> touched.size.toString,
@@ -807,8 +804,6 @@ object Merge {
     val schema = st.schema
     for (c <- set.keys)
       require(schema.fieldNames.contains(c), s"UPDATE of unknown column $c")
-    require(st.tombstones.isEmpty,
-      "table has live merge-on-read tombstones; materialize them first (Cluster.zorderRewrite)")
     val snap = st.snapshot
     val touched = st.planFiles(Some(predicate))
     if (touched.isEmpty) return snap.getOrElse(throw new IllegalStateException("empty table"))
@@ -876,10 +871,6 @@ object Merge {
    * match the predicate — a misplaced row would silently land outside the
    * region the caller believes they replaced. The full validation scan is
    * one parallel count over the incoming frame.
-   *
-   * Live tombstones carry forward: they apply to the new rows exactly as
-   * they would to a plain append's (equality deletes have no sequence
-   * numbers); replaced files simply stop mattering to them.
    */
   def replaceWhere(
       table: GraftTable,

@@ -31,8 +31,8 @@ import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot}
  *
  * Groups are one per old partition tuple (never mixing spec generations),
  * run concurrently like Compact/Cluster, resumable per group at the commit
- * boundary, with MoR tombstones and deletion vectors applied to rewritten
- * rows exactly as compaction applies them.
+ * boundary, with deletion vectors applied to rewritten rows exactly as
+ * compaction applies them.
  */
 object Rebucket {
 
@@ -109,10 +109,9 @@ object Rebucket {
         return graft.table.StatsCollector.collect(spark, schema, table.root,
           FileIO.listFilesRecursively(dir, ".parquet"), commitUuid)
       FileIO.deleteRecursively(dir)
-      // rewritten rows absorb live MoR deletes: equality tombstones apply
-      // here (and stay live for untouched files), position deletes of
-      // exactly these files apply here and are cleared by replaceFiles
-      val df = st.applyTombstones(st.readFiles(g))
+      // rewritten rows absorb the files' deletion vectors, which
+      // replaceFiles then clears
+      val df = st.readFiles(g)
       val bytes = g.map(_.bytes).sum
       val rows = g.map(_.rows).sum
       // right-sized rolls from REAL row counts (never derived from a file
@@ -159,18 +158,13 @@ object Rebucket {
         }
       })(rewriteGroup)
 
-    // a fully-tombstoned group writes 0-row, bound-less files — drop them
+    // a fully-deleted group writes 0-row, bound-less files — drop them
     val added = perGroup.flatMap(_._1).filter(_.rows > 0)
     val removed = inputs.map(_.path).toSet
-    // full-coverage pass (every file was nonconforming and got rewritten
-    // with tombstones applied) may clear the tombstone set — same race
-    // guard as Compact: replaceFiles requires the parent to still be the
-    // planned snapshot
-    val clearDeletes = st.tombstones.nonEmpty && removed == st.files.map(_.path).toSet
     val committed = table.replaceFiles(removed, added, "rebucket",
       Map("run-id" -> runId, "groups" -> groups.size.toString,
         "bucket-spec" -> sp.toString),
-      expectedSnapshotId = Some(snap.id), clearDeletes = clearDeletes)
+      expectedSnapshotId = Some(snap.id))
     Maintenance.markCommitted(table, log, committed.id)
     val sourcesPerOutput = perGroup
       .flatMap { case (outs, srcs) => outs.filter(_.rows > 0).map(o => o.path -> srcs) }.toMap

@@ -91,19 +91,20 @@ object Demo {
     check("merge row count plausible")(afterMerge < beforeCount + nUrls / 10 && afterMerge > 0)
     check("merge snapshot isolation")(t.readSnapshot(preMerge).count() == beforeCount)
 
-    // 4b. merge-on-read delete: tombstones hide rows with zero file rewrites,
-    // then a full cluster rewrite materializes them away
+    // 4b. merge-on-read key delete: deletion vectors hide rows with zero
+    // file rewrites, then a full cluster rewrite materializes them away
     val dataFilesBeforeMor = t.files().map(_.path).toSet
     val morVictims = t.read().select("url").orderBy(desc("url")).limit(250)
     t.deleteByKeysMoR(morVictims)
     val afterMor = t.read().count()
-    println(s"[demo] MoR-deleted 250 keys → $afterMor rows, ${t.tombstones().size} tombstone files")
-    check("MoR delete rewrites no data file")(t.files().map(_.path).toSet == dataFilesBeforeMor)
-    check("MoR delete hides rows")(afterMor == afterMerge - 250)
+    println(s"[demo] MoR-deleted 250 keys → $afterMor rows, " +
+      s"${t.posDeleteRowCounts().size} files with DV entries")
+    check("MoR key delete rewrites no data file")(t.files().map(_.path).toSet == dataFilesBeforeMor)
+    check("MoR key delete hides rows")(afterMor == afterMerge - 250)
     Cluster.zorderRewrite(t, Cluster.ZDims(),
       targetFileBytes = math.max(128L * 1024, tableBytes / 32),
       saltThresholdRows = nUrls / 4, runId = "mor-materialize")
-    check("cluster materializes tombstones")(t.tombstones().isEmpty &&
+    check("cluster clears the key delete's DV entries")(t.positionDeletes().isEmpty &&
       t.read().count() == afterMor)
     val afterMorMat = afterMor
 

@@ -152,15 +152,12 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
           val added = st.writeDataFiles(data)
           // pin the planned-against snapshot: a concurrent append between
           // files() and commit must force a replan, not silently survive
-          // inside the "overwritten" table. clearDeletes: every file a
-          // tombstone could apply to is replaced, so carrying tombstones
-          // forward would suppress matching keys in the brand-new data.
-          tbl.replaceFiles(old, added, "overwrite",
-            expectedSnapshotId = expected, clearDeletes = true)
+          // inside the "overwritten" table
+          tbl.replaceFiles(old, added, "overwrite", expectedSnapshotId = expected)
         }
     }
     val st = GraftTable.load(spark, root).state
-    // no tombstone guard here: Spark's SaveIntoDataSourceCommand discards
+    // no delete guard here: Spark's SaveIntoDataSourceCommand discards
     // this relation (the write already committed; throwing would fail a
     // successful append) — readers come back through the RelationProvider
     // path above, which enforces it
@@ -180,9 +177,6 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
           s"no snapshot committed at or before $ts")).id
       })
     val st = table.state.at(snapshotId)
-    require(st.tombstones.isEmpty,
-      "snapshot has live merge-on-read tombstones, which a raw file relation cannot apply; " +
-        "read via GraftTable.read (applies them) or materialize with Cluster.zorderRewrite")
     require(st.dvEntries.isEmpty,
       "snapshot has live position deletes (deletion vectors), which a raw file relation " +
         "cannot apply; read via GraftTable.read / SQL (applies them) or compact the files")

@@ -187,8 +187,7 @@ case class GraftOptimizeCommand(path: String, zorder: Boolean, hilbert: Boolean,
   override def run(session: SparkSession): Seq[Row] = {
     val t = GraftTable.load(session, path)
     // WHERE → candidate files by metadata-bounds intersection; a rewrite of
-    // any subset is row-preserving, so scoping is always sound (and a
-    // scoped pass never clears MoR tombstones — full-coverage gated)
+    // any subset is row-preserving, so scoping is always sound
     val pred = where.map(org.apache.spark.sql.functions.expr)
     if (incremental && !zorder) throw new IllegalArgumentException(
       "OPTIMIZE ... INCREMENTAL applies to ZORDER clustering " +
@@ -293,12 +292,11 @@ case class GraftDescribeDetailCommand(path: String) extends LeafRunnableCommand 
     AttributeReference("num_files", LongType)(),
     // PHYSICAL parquet rows — merge-on-read deletes hide rows at scan time
     // without touching files, so live `count(*)` can be lower; the
-    // delete-side columns below carry that signal instead of silently
+    // delete-side column below carries that signal instead of silently
     // overstating a "row count"
     AttributeReference("num_data_rows", LongType)(),
     AttributeReference("size_bytes", LongType)(),
     AttributeReference("num_position_delete_entries", LongType)(),
-    AttributeReference("num_equality_delete_files", LongType)(),
     AttributeReference("num_snapshots", LongType)(),
     AttributeReference("partition_spec", StringType)(),
     AttributeReference("cluster_columns", StringType)(),
@@ -319,7 +317,6 @@ case class GraftDescribeDetailCommand(path: String) extends LeafRunnableCommand 
       files.map(_.rows).sum,
       files.map(_.bytes).sum,
       snap.map(id => t.positionDeletes(Some(id)).map(_.rows).sum).getOrElse(0L),
-      snap.map(id => t.tombstones(Some(id)).size.toLong).getOrElse(0L),
       md.snapshots.size.toLong,
       md.properties.getOrElse(graft.table.PartitionSpec.Property, ""),
       md.properties.getOrElse(GraftTable.ClusterColumnsProp, ""),

@@ -27,10 +27,11 @@ import graft.table.{Bounds, DataFileMeta}
  *  - grouping must be empty, aggregates unfiltered, non-DISTINCT, and only
  *    Count/Min/Max over a bare column (or count of a non-null literal);
  *  - the child must be the bare graft relation (possibly through a
- *    column-pruning Project) — any Filter / tombstone anti-join / streaming
- *    flag on top disqualifies the subtree, so MoR deletes and predicates
- *    are never miscounted (`GraftTable.read` attaches the tombstone join
- *    inside the DataFrame it returns, above this relation);
+ *    column-pruning Project) — any Filter (the deletion-vector `dv_keep`
+ *    filter included) / streaming flag on top disqualifies the subtree, so
+ *    MoR deletes and predicates are never miscounted (`GraftTable.read`
+ *    attaches the DV filter inside the DataFrame it returns, above this
+ *    relation);
  *  - `count(col)` needs a null count recorded for the column in EVERY file
  *    (files written before the column was added have none → fall back);
  *  - `min/max(col)` is restricted to types whose manifest bounds are exact:

@@ -31,7 +31,7 @@ import graft.table.GraftTable
  * turn them into plain relations. SELECT resolves to the engine's
  * snapshot-isolated read plan — the GraftFileIndex underneath turns the
  * query's own pushed-down filters into min/max + transform file skipping,
- * and merge-on-read tombstones are applied, identical to the programmatic
+ * and merge-on-read deletion vectors are applied, identical to the programmatic
  * `table.read()`.
  */
 case class GraftRelationRule(session: SparkSession) extends Rule[LogicalPlan] {

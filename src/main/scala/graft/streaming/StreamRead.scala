@@ -36,7 +36,7 @@ import graft.table.{DataFileMeta, GraftTable, TableState}
  *    the append-only contract a tailing consumer accepts (rewrites of
  *    already-delivered rows are never re-delivered or retracted);
  *  - `change-rows`: `true` switches to ROW-LEVEL CDC — every commit
- *    (including merges, deletes, and tombstones) is delivered as
+ *    (including merges and deletes) is delivered as
  *    insert/delete row images with `_change_type`/`_commit_snapshot_id`
  *    columns ([[graft.table.Changelog]]); the initial batch is the table
  *    contents as insert events. Folding the events in commit order
@@ -58,9 +58,9 @@ import graft.table.{DataFileMeta, GraftTable, TableState}
  *    the atomic unit of the chain diff).
  *
  * Semantics notes:
- *  - each batch applies the `to` snapshot's TOMBSTONES (merge-on-read
- *    equality deletes) via the same anti-join as batch reads, so a key
- *    tombstoned before the batch's snapshot is never delivered;
+ *  - each batch applies the `to` snapshot's deletion vectors via the same
+ *    in-scan filter as batch reads, so a row deleted before the batch's
+ *    snapshot is never delivered;
  *  - a [[GraftTable.rollback]] that moves the current snapshot behind a
  *    delivered offset fails the query (offsets must not regress);
  *  - snapshot EXPIRY that garbage-collects a file appended-then-rewritten
@@ -257,7 +257,7 @@ class GraftStreamSource(
   }
 
   /** One initial-load chunk: files [from, until) of the pinned snapshot's
-    * path-ordered list, with its tombstones applied — in change-rows mode
+    * path-ordered list, with its deletes applied — in change-rows mode
     * tagged as insert events at that snapshot, otherwise plain rows. */
   private def initialChunk(snap: Long, from: Long, until: Long): DataFrame = {
     val chunk = initFiles(snap).slice(from.toInt, until.toInt)
@@ -277,7 +277,7 @@ class GraftStreamSource(
       case Some(from) if from == endId =>
         // defensive empty batch (recovery can hand equal start/end): build it
         // over ZERO files — the full-table variant would pay manifest parsing
-        // plus tombstone/DV footer reads just to filter everything out
+        // plus DV reads just to filter everything out
         graft.table.Changelog.initialSnapshot(st.at(endId), streamingTag = true,
           filesOverride = Some(Seq.empty))
           .filter(lit(false))
@@ -290,10 +290,9 @@ class GraftStreamSource(
     }
 
   /** Micro-batch DataFrame over `files` with the merge-on-read deletes of
-    * `st`'s snapshot applied — equality tombstones (a stream-static
-    * anti-join) AND position deletes (the in-scan DV bitmap filter). A row
-    * deleted positionally before its file is delivered must not reach the
-    * consumer, exactly as `read()` at that snapshot would hide it. */
+    * `st`'s snapshot applied (the in-scan DV bitmap filter). A row deleted
+    * before its file is delivered must not reach the consumer, exactly as
+    * `read()` at that snapshot would hide it. */
   private def streamingDf(st: TableState, files: Seq[DataFileMeta]): DataFrame =
     st.live(files, isStreaming = true)
 

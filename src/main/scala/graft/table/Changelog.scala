@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 /**
  * Row-level CDC: per-commit INSERT/DELETE row images (a Delta-CDF-style
- * changelog) for any snapshot range — including merge / update / delete /
- * tombstone commits that the file-level [[GraftTable.incrementalRead]]
+ * changelog) for any snapshot range — including the merge / update /
+ * delete commits that the file-level [[GraftTable.incrementalRead]]
  * cannot express. This restores the one capability of the reference the
  * append-only diff lacked: its incremental loads received HBase delete
  * markers via raw scans (`job/JobUtil.java:573-576`, validity checks
@@ -22,15 +22,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * (proved in StreamCdcSpec).
  *
  * Per-commit semantics (chain-walked like [[TableState.incrementalFiles]]):
- *  - append       → the committed files' rows as inserts, with the commit's
- *                   own tombstones applied (a key tombstoned earlier is
- *                   invisible in that snapshot, so it must not be delivered);
- *  - delete-mor   → the parent-visible rows matching the NEWLY added
- *                   tombstone keys, as deletes (file pruning via the key
- *                   set's min/max bounds — the tombstone niche is small);
+ *  - append       → the committed files' rows as inserts;
  *  - delete-pos   → the rows at the NEWLY recorded (file, position) delete
  *                   tuples, as deletes (scan touches only the referenced
- *                   files; positions were taken on the parent-visible view);
+ *                   files; positions were taken on the parent-visible view)
+ *                   — predicate and key deletes alike;
  *  - update-pos / merge-pos → the same DV-delta deletes plus the appended
  *                   updated/inserted images as inserts (pairing labels
  *                   in-place changes pre/post);
@@ -41,17 +37,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  *    row changes; cost scales with the commit's touched files, never the
  *    table — and only CHANGED rows' full images ever enter a shuffle.
  *  - compact / cluster / rewrite-manifests / schema evolution → nothing.
- *    This INCLUDES tombstone-materializing rewrites: physically applying
- *    already-delivered equality deletes changes no logical row (their
- *    delete events were emitted at the delete-mor commit) — so changelog
- *    mode has no analog of incrementalRead's materialization refusal.
+ *    A rewrite that applies deletion vectors changes no logical row (their
+ *    delete events were emitted at the delete-pos commit).
  *
  * Scale shape: each commit contributes one bounded subplan (its own added/
  * removed files); the CoW diff shuffles 16-byte row fingerprints, not row
- * images ([[slimDiff]]); tombstone key
- * joins broadcast below [[GraftTable.TombstoneBroadcastRowCap]]. Nothing
- * scans the full table except a delete-mor whose keys span every file's
- * bounds — inherent to equality deletes.
+ * images ([[slimDiff]]). Nothing scans the full table.
  */
 object Changelog {
 
@@ -156,7 +147,6 @@ object Changelog {
       tag: (DataFrame, String, Long) => DataFrame): Seq[DataFrame] = {
     val table = state.table
     val sch = state.schema
-    val atSnap = state.at(snap.id)
     val atParent = state.at(parent.map(_.id))
     def rel(files: Seq[DataFileMeta]): DataFrame = state.relation(files)
     snap.operation match {
@@ -166,37 +156,15 @@ object Changelog {
       val files = snap.manifests.filterNot(m => parentM.contains(m.path))
         .flatMap(m => table.readManifest(m.path))
       if (files.isEmpty) Seq.empty
-      else Seq(tag(atSnap.applyTombstones(rel(files)), "insert", snap.id))
+      else Seq(tag(rel(files), "insert", snap.id))
 
-    case op if rowPreserving.contains(op) => Seq.empty // incl. materializing rewrites
-
-    case "delete-mor" =>
-      val parentDel = parent.map(_.deleteManifestList.map(_.path).toSet).getOrElse(Set.empty)
-      val newDel = snap.deleteManifestList.filterNot(m => parentDel.contains(m.path))
-        .flatMap(m => table.readManifest(m.path))
-      if (newDel.isEmpty || parent.isEmpty) Seq.empty
-      else {
-        val keyDf = table.spark.read.parquet(newDel.map(table.absPath): _*).distinct()
-        val keyCols = keyDf.columns.toSeq
-        // file pruning by the key set's global per-column [min,max]: one
-        // tiny aggregate over the tombstone keys, then the standard
-        // min/max file prune — sound (wider bounds only admit more files)
-        val pruned = keyBoundsPredicate(sch, keyDf, keyCols) match {
-          case Some(p) => atParent.planFiles(Some(p))
-          case None    => atParent.files
-        }
-        val vis = atParent.applyTombstones(rel(pruned))
-        val right =
-          if (newDel.map(_.rows).sum <= GraftTable.TombstoneBroadcastRowCap) broadcast(keyDf)
-          else keyDf
-        Seq(tag(vis.join(right, keyCols, "left_semi"), "delete", snap.id))
-      }
+    case op if rowPreserving.contains(op) => Seq.empty // incl. DV-applying rewrites
 
     case "delete-pos" | "update-pos" | "merge-pos" =>
       // position-delete / MoR-update commit: the removed row images are the
       // rows at the NEWLY recorded (file, position) tuples. Positions were
-      // computed on the parent-visible view (the writers apply live
-      // tombstones + DVs first), so the rows at those positions are exactly
+      // computed on the parent-visible view (the writers apply live DVs
+      // first), so the rows at those positions are exactly
       // the logical delete set; the scan touches only the referenced files. An
       // update-pos commit additionally appended the updated images — those
       // files are pure additions and emit as inserts (update-image pairing
@@ -212,7 +180,7 @@ object Changelog {
         .flatMap(m => table.readManifest(m.path))
       val insFrames =
         if (addedFiles.isEmpty) Seq.empty
-        else Seq(tag(atSnap.applyTombstones(rel(addedFiles)), "insert", snap.id))
+        else Seq(tag(rel(addedFiles), "insert", snap.id))
       delFrames ++ insFrames
 
     case _ => // copy-on-write file replacement: merge / update / delete / overwrite
@@ -238,7 +206,7 @@ object Changelog {
         // would re-surface here as spurious deletes. Added files are new
         // and can never be DV-referenced.
         val remRows = atParent.live(removed)
-        val addRows = atSnap.applyTombstones(rel(added))
+        val addRows = rel(added)
         val (delRows, insRows) = slimDiff(remRows, addRows, sch)
         Seq(tag(delRows, "delete", snap.id), tag(insRows, "insert", snap.id))
       }
@@ -330,24 +298,5 @@ object Changelog {
         .withColumn("_cl_i", explode(sequence(lit(1L), abs(col("_cl_n")))))
         .select(cols.map(col): _*)
     (images(rem, col("_cl_n") > 0L), images(add, col("_cl_n") < 0L))
-  }
-
-  /** Conjunction of per-column [min,max] range predicates covering every
-    * key tuple in `keyDf` — the sound file-prune for the delete-mor scan.
-    * None when no key column's type supports bounds. */
-  private def keyBoundsPredicate(
-      sch: StructType,
-      keyDf: DataFrame,
-      keyCols: Seq[String]): Option[org.apache.spark.sql.Column] = {
-    val usable = keyCols.filter(c =>
-      sch.fields.find(_.name == c).exists(f => Bounds.supported(f.dataType)))
-    if (usable.isEmpty) return None
-    val aggs = usable.flatMap(c => Seq(min(col(c)).as(s"_mn_$c"), max(col(c)).as(s"_mx_$c")))
-    val row = keyDf.agg(aggs.head, aggs.tail: _*).collect()(0)
-    if (row.anyNull) return None // empty key set or all-null keys: no prune
-    val preds = usable.zipWithIndex.map { case (c, i) =>
-      col(c) >= lit(row.get(2 * i)) && col(c) <= lit(row.get(2 * i + 1))
-    }
-    Some(preds.reduce(_ && _))
   }
 }

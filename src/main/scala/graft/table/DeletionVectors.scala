@@ -29,7 +29,7 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
  * offset in a bounded in-process LRU. Blobs are write-once under a fresh
  * commit dir, so an entry can never go stale: a table dropped and recreated
  * at the same root writes its DVs under new dirs. Blob reads are data-plane
- * reads, like the parquet reads of data and tombstone files: they bypass
+ * reads, like the parquet reads of data files: they bypass
  * [[FileIO]] and its metadata-call counter.
  *
  * Scans apply the bitmaps through [[DvKeep]], a codegen'd

@@ -105,8 +105,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     state.at(snapshotId).planFiles(predicate)
   def read(predicate: Option[Column] = None, snapshotId: Option[Long] = None): DataFrame =
     state.at(snapshotId).read(predicate)
-  def tombstones(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
-    state.at(snapshotId).tombstones
   def positionDeletes(snapshotId: Option[Long] = None): Seq[DataFileMeta] =
     state.at(snapshotId).positionDeletes
   def posDeleteRowCounts(snapshotId: Option[Long] = None): Map[String, Long] =
@@ -147,7 +145,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
   }
 
-  /** The entries of a data or tombstone manifest, parsed at most once per
+  /** The entries of a data manifest, parsed at most once per
     * JVM while the bounded parse cache holds them: manifests are write-once
     * under fresh UUID names, so a cached parse never goes stale. */
   def readManifest(relPath: String): Seq[DataFileMeta] =
@@ -231,17 +229,14 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }.toDF("path", "rows", "bytes", "commit_uuid", "min_values", "max_values", "null_counts")
   }
 
-  /** The current (or a pinned) snapshot's live merge-on-read delete files
-    * as a DataFrame (``graft.`/path`.deletes`` metadata table): equality
-    * tombstone files and deletion-vector blobs, with per-file row/byte
-    * counts — the observability a 100 TB operator needs to decide when
-    * delete pressure warrants a compaction pass. */
+  /** The current (or a pinned) snapshot's live deletion-vector blobs as a
+    * DataFrame (``graft.`/path`.deletes`` metadata table), with per-blob
+    * live row and byte counts — the observability a 100 TB operator needs
+    * to decide when delete pressure warrants a compaction pass. */
   def deletesDf(snapshotId: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val st = state.at(snapshotId)
-    (st.tombstones.map(f => ("equality", f.path, f.rows, f.bytes, f.commitUuid)) ++
-      st.positionDeletes.map(f => ("position", f.path, f.rows, f.bytes, f.commitUuid)))
-      .toDF("kind", "path", "rows", "bytes", "commit_uuid")
+    state.at(snapshotId).positionDeletes.map(f => (f.path, f.rows, f.bytes, f.commitUuid))
+      .toDF("path", "rows", "bytes", "commit_uuid")
   }
 
   /** Per-partition file aggregates (``graft.`/path`.partitions`` metadata
@@ -282,56 +277,41 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       snapshotId: Option[Long] = None): org.apache.spark.sql.Dataset[T] =
     read(predicate, snapshotId).as[T]
 
-  // ---- merge-on-read equality deletes (tombstones) ---------------------------
+  // ---- merge-on-read deletes (deletion vectors) ------------------------------
 
   /**
-   * Merge-on-read equality delete: record the keys as a tombstone file and
-   * commit WITHOUT rewriting any data file — at 100 TB you do not rewrite a
-   * 1 GB file to delete three rows. Every read path anti-joins the
-   * tombstones; compaction applies them to the files it rewrites; the
-   * full-table cluster rewrite materializes and clears them.
+   * Merge-on-read KEY delete: remove the rows live now whose `keys` columns
+   * equal a tuple of `keys`, as deletion-vector positions, WITHOUT
+   * rewriting any data file — at 100 TB you do not rewrite a 1 GB file to
+   * delete three rows. The keys are evaluated once; MERGE's interval-index
+   * probe ([[graft.ops.Merge.touchedFiles]]) narrows the scan to the files
+   * whose key bounds may hold one (every live file when a key type has no
+   * bounds), and a semi-join of those files' live positions with the keys
+   * picks the rows.
    *
-   * Semantics (equality delete, no sequence numbers): a tombstoned key is
-   * suppressed in ALL data — including rows appended later — until the
-   * tombstones are materialized away. MERGE refuses to run while tombstones
-   * are live for this reason.
-   *
-   * `keys` columns name the (possibly composite) key — every column must
-   * exist in the table schema, and all live tombstones of a table must use
-   * the SAME column set (applyTombstones anti-joins on one column list).
+   * Semantics (Iceberg's sequence numbers): the delete removes the rows
+   * live when it commits; rows committed later with the same key — by
+   * append, branch publish, MERGE or overwrite — are visible. A NULL key
+   * matches nothing. Commits as `delete-pos` (summary `delete-key`), like
+   * [[deleteWherePositional]]; None when no live row matches.
    */
-  def deleteByKeysMoR(keys: DataFrame, summary: Map[String, String] = Map.empty): Snapshot = {
-    require(keys.columns.nonEmpty, "tombstone frame needs at least one key column")
+  def deleteByKeysMoR(keys: DataFrame, summary: Map[String, String] = Map.empty): Option[Snapshot] = {
+    require(keys.columns.nonEmpty, "key frame needs at least one key column")
     val keyCols = keys.columns.toSeq
-    val sch = schema
+    val st = state
+    val sch = st.schema
     keyCols.foreach(k => require(sch.fieldNames.contains(k), s"unknown key column $k"))
-    val uuid = UUID.randomUUID.toString
-    val dir = s"$dataDir/$uuid"
-    keys.distinct().write.mode("errorifexists").parquet(dir)
-    val written = FileIO.listFiles(dir, ".parquet")
-    val metas = StatsCollector.collect(
-      spark, StructType(keyCols.map(k => sch(sch.fieldIndex(k)))), root, written, uuid)
-    commitFull("delete-mor") { parent =>
-      // same-key check INSIDE the commit loop: it re-evaluates against the
-      // actual parent on every retry, so two racing deletes on different
-      // columns cannot both land (check-then-act outside the loop would let
-      // applyTombstones silently drop one set — it anti-joins on one list)
-      for (existing <- parent.toSeq.flatMap(_.deleteManifestList)
-             .flatMap(m => readManifest(m.path)).headOption) {
-        val existingKeys = spark.read.parquet(absPath(existing)).columns.toSeq
-        require(existingKeys == keyCols,
-          s"table already has tombstones on '${existingKeys.mkString(",")}'; materialize them " +
-            s"(cluster rewrite) before deleting on '${keyCols.mkString(",")}'")
-      }
-      (parent.map(_.manifests).getOrElse(Seq.empty),
-        Some(parent.map(_.deleteManifestList).getOrElse(Seq.empty) :+ writeManifest(metas)),
-        parent.flatMap(_.posDeleteManifests),
-        summary ++ Map("delete-key" -> keyCols.mkString(","),
-          "tombstones-added" -> metas.map(_.rows).sum.toString))
-    }
+    // ONE evaluation: the probe and the join must see the same key set even
+    // when `keys` is a non-deterministic query over this very table
+    val ks = keys.distinct().localCheckpoint()
+    val planned =
+      if (keyCols.forall(k => Bounds.supported(sch(k).dataType)))
+        graft.ops.Merge.touchedFiles(st, ks, keyCols)
+      else st.files
+    if (planned.isEmpty) return None
+    commitPositionDeletes(st, livePositions(st, planned).join(ks, keyCols, "left_semi"),
+      summary + ("delete-key" -> keyCols.mkString(",")))
   }
-
-  // ---- merge-on-read position deletes (deletion vectors) ---------------------
 
   /**
    * Merge-on-read POSITION delete (deletion vector): record the row
@@ -341,27 +321,34 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * [[deleteByKeysMoR]], re-imagining the reference's incremental delete
    * delivery, `adapter/HBaseSourceTableAdapter.java:592-604`).
    *
-   * Unlike equality tombstones, position deletes are FILE-SCOPED: any
-   * predicate is allowed (not just keys), rows appended LATER are
-   * unaffected, MERGE keeps running, and a rewrite clears exactly the
-   * rewritten files' delete rows — they compose with every maintenance op
-   * instead of blocking it. Cost: one metadata-pruned scan of the candidate
-   * files to record positions. Returns None when no row matches.
+   * Position deletes are FILE-SCOPED: any predicate is allowed, rows
+   * appended LATER are unaffected, MERGE keeps running, and a rewrite
+   * clears exactly the rewritten files' delete rows — they compose with
+   * every maintenance op instead of blocking it. Cost: one metadata-pruned
+   * scan of the candidate files to record positions. Returns None when no
+   * row matches.
    */
   def deleteWherePositional(predicate: Column,
       summary: Map[String, String] = Map.empty): Option[Snapshot] = {
     val st = state
     val planned = st.planFiles(Some(predicate))
     if (planned.isEmpty) return None
-    val entries = DeletionVectors.write(root, s"dv-${UUID.randomUUID}",
-      DeletionVectors.collect(livePositions(st, planned).filter(predicate)))
+    commitPositionDeletes(st, livePositions(st, planned).filter(predicate),
+      summary + ("predicate" -> predicate.toString))
+  }
+
+  /** Record `hit` (rows of [[livePositions]] over files of `st`) as one DV
+    * blob and commit it as `delete-pos` — one Spark job to gather the
+    * positions, none inside the commit. None when `hit` is empty. */
+  private def commitPositionDeletes(st: TableState, hit: DataFrame,
+      summary: Map[String, String]): Option[Snapshot] = {
+    val entries = DeletionVectors.write(root, s"dv-${UUID.randomUUID}", DeletionVectors.collect(hit))
     if (entries.isEmpty) return None
     Some(commitFull("delete-pos") { parent =>
       requireReferencedLive("delete-pos", st, parent, entries)
       (parent.map(_.manifests).getOrElse(Seq.empty),
-        parent.flatMap(_.deleteManifests),
         Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeDvManifest(entries)),
-        summary ++ Map("predicate" -> predicate.toString,
+        summary ++ Map(
           "position-deletes-added" -> entries.map(_.cardinality).sum.toString,
           "position-delete-files" -> entries.length.toString))
     })
@@ -369,11 +356,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   /** `planned` (files of `st`) as `st` shows them, with each row's (file,
     * row-position) as `_gdv_rel`/`_gdv_idx`. Positions are taken on this
-    * LIVE view (existing DVs and equality tombstones applied), so re-running
-    * the same delete is a no-op commit and "rows deleted" counts are
-    * logical, as in Delta/Iceberg. */
+    * LIVE view (existing DVs applied), so re-running the same delete is a
+    * no-op commit and "rows deleted" counts are logical, as in
+    * Delta/Iceberg. */
   private def livePositions(st: TableState, planned: Seq[DataFileMeta]): DataFrame =
-    st.applyTombstones(st.withPositionDeletesKeepingPos(st.relation(planned), planned))
+    st.withPositionDeletesKeepingPos(st.relation(planned), planned)
 
   /** Positions stay valid while their data files live: fails `op` when a
     * concurrent commit rewrote a data file of `entries` (forcing a replan),
@@ -429,7 +416,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       Some(commitFull("update-pos") { parent =>
         requireReferencedLive("update-pos", st, parent, entries)
         (parent.map(_.manifests).getOrElse(Seq.empty) :+ writeManifest(added),
-          parent.flatMap(_.deleteManifests),
           Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeDvManifest(entries)),
           summary ++ Map("predicate" -> predicate.toString,
             "set-columns" -> set.keys.toSeq.sorted.mkString(","),
@@ -468,7 +454,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
             "replaced (a data-file rewrite cleared some of their entries); re-run")
         val kept = parentList.filterNot(m => covered.contains(m.path))
         (parent.map(_.manifests).getOrElse(Seq.empty),
-          parent.flatMap(_.deleteManifests),
           Some(kept :+ writeDvManifest(entries)),
           summary ++ Map(
             "dv-files-in" -> blobsIn.toString,
@@ -514,8 +499,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val st = state
     val (added, to) = st.incrementalFiles(fromSnapshotId, toSnapshotId)
     // the consumer must see exactly what `read()` at `to` would show for
-    // these rows (a key tombstoned before `from` and re-appended inside the
-    // range is hidden from full reads, so it must be hidden here too)
+    // these rows
     st.at(to).live(added)
   }
 
@@ -524,7 +508,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * DELETE row images ([[Changelog.ChangeTypeCol]] / [[Changelog.CommitCol]]
    * columns appended to the table schema) — the change-capture mode that
    * handles the row-CHANGING commits [[incrementalRead]] must refuse (merge /
-   * update / delete / tombstone commits), at the cost of computing each such
+   * update / delete commits), at the cost of computing each such
    * commit's removed-vs-added row diff. Fold in commit order to materialize.
    * Streaming form: `readStream.format("graft").option("change-rows", true)`.
    *
@@ -588,7 +572,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       op: String,
       summary: Map[String, String] = Map.empty,
       expectedSnapshotId: Option[Long] = None,
-      clearDeletes: Boolean = false,
       propertyUpdates: Map[String, String] = Map.empty): Snapshot =
     commitFull(op, expectedSnapshotId, propertyUpdates) { parent =>
       val (kept, gone) = dropEntries(parent.map(_.manifests).getOrElse(Seq.empty),
@@ -596,23 +579,15 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       require(gone.size == removedPaths.size,
         s"$op: ${removedPaths.size - gone.size} files to remove not present in current snapshot (concurrent rewrite?)")
       val manifests = if (added.nonEmpty) kept :+ writeManifest(added) else kept
-      // materializing live tombstones physically REMOVES rows, so the commit
-      // is not row-preserving even under a "cluster" op — flagged in the
-      // summary so incrementalRead treats it as row-changing
-      val materialized = clearDeletes && parent.exists(_.deleteManifestList.nonEmpty)
       // position deletes clear EXACTLY per rewritten file (the rewrite read
       // those files through withPositionDeletes, so their DV entries are
       // applied); untouched files keep theirs — no full-coverage condition
       val (posDeletes, dvGone) = dropEntries(parent.map(_.posDeleteList).getOrElse(Seq.empty),
         readDvManifest, writeDvManifest)(e => removedPaths.contains(e.dataFile))
       val dvCleared = dvGone.map(_.cardinality).sum
-      // clearDeletes: ONLY sound when the rewrite read every current data
-      // file with tombstones applied (full-table cluster rewrite)
       (manifests,
-        if (clearDeletes) None else parent.flatMap(_.deleteManifests),
         Some(posDeletes),
-        summary ++ (if (materialized) Map("materialized-tombstones" -> "true") else Map.empty) ++
-          (if (dvCleared > 0) Map("materialized-position-deletes" -> dvCleared.toString) else Map.empty) ++ Map(
+        summary ++ (if (dvCleared > 0) Map("materialized-position-deletes" -> dvCleared.toString) else Map.empty) ++ Map(
           "removed-files" -> removedPaths.size.toString,
           "added-files" -> added.size.toString,
           "added-rows" -> added.map(_.rows).sum.toString,
@@ -624,8 +599,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * and returns (manifest list, summary). On a lost race: appends re-apply
    * against the new parent; rewrites require the parent they planned against
    * (`expectedSnapshotId`) and fail fast otherwise — the caller replans.
-   * Parent tombstones are carried forward unchanged; use [[commitFull]] to
-   * alter them.
+   * Parent deletion vectors are carried forward unchanged; use
+   * [[commitFull]] to alter them.
    */
   def commit(op: String, expectedSnapshotId: Option[Long] = None,
       propertyUpdates: Map[String, String] = Map.empty,
@@ -633,17 +608,17 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       build: Option[Snapshot] => (Seq[ManifestMeta], Map[String, String])): Snapshot =
     commitFull(op, expectedSnapshotId, propertyUpdates, toBranch = toBranch) { parent =>
       val (manifests, summary) = build(parent)
-      (manifests, parent.flatMap(_.deleteManifests), parent.flatMap(_.posDeleteManifests), summary)
+      (manifests, parent.flatMap(_.posDeleteManifests), summary)
     }
 
-  /** [[commit]] with explicit control of the delete-manifest (tombstone)
-    * list of the new snapshot. `schemaUpdate` lands the new table schema
-    * atomically in the same metadata version (rename/drop evolution). */
+  /** [[commit]] with explicit control of the DV-manifest list of the new
+    * snapshot. `schemaUpdate` lands the new table schema atomically in the
+    * same metadata version (rename/drop evolution). */
   def commitFull(op: String, expectedSnapshotId: Option[Long] = None,
       propertyUpdates: Map[String, String] = Map.empty,
       schemaUpdate: Option[StructType] = None,
       toBranch: Option[String] = None)(
-      build: Option[Snapshot] => (Seq[ManifestMeta], Option[Seq[ManifestMeta]], Option[Seq[ManifestMeta]], Map[String, String])): Snapshot = {
+      build: Option[Snapshot] => (Seq[ManifestMeta], Option[Seq[ManifestMeta]], Map[String, String])): Snapshot = {
     require(toBranch.isEmpty || schemaUpdate.isEmpty,
       s"$op: schema evolution commits to main only, not a branch")
     var attempts = 0
@@ -665,7 +640,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       for (expected <- expectedSnapshotId)
         require(parent.map(_.id).contains(expected),
           s"$op planned against snapshot $expected but current is ${parent.map(_.id)}: concurrent commit, replan required")
-      val (manifests, deleteManifests, posDeletes, summary) = build(parent)
+      parent.foreach(_.requireNoEqualityDeletes())
+      val (manifests, posDeletes, summary) = build(parent)
       val snap = Snapshot(
         id = md.lastSnapshotId + 1,
         parentId = parent.map(_.id),
@@ -673,7 +649,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         operation = op,
         manifests = manifests,
         summary = summary ++ toBranch.map("branch" -> _),
-        deleteManifests = deleteManifests.filter(_.nonEmpty),
         posDeleteManifests = posDeletes.filter(_.nonEmpty))
       val next = md.copy(
         currentSnapshotId = if (toBranch.isEmpty) Some(snap.id) else md.currentSnapshotId,
@@ -846,9 +821,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * re-anchoring it onto a different parent cannot change a row) and
    * main-side rewrites touched disjoint files, so without this the common
    * case — a compaction/cluster/merge landing on main mid-staging — forced
-   * a full re-stage. Equality-delete semantics are preserved: tombstones
-   * added on main during staging suppress matching staged keys exactly as
-   * they would suppress a plain append's rows.
+   * a full re-stage. Deletes committed on main during staging never touch
+   * the staged rows: a deletion vector names main's own files, so a staged
+   * row whose key main deleted stays visible, as a later append's would.
    *
    * Refusals (each a measured hazard, not caution):
    *  - a schema-evolution commit newer than the branch base — rename/drop
@@ -903,6 +878,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         }
         val mainHead = md.snapshot(mainId).getOrElse(throw new IllegalStateException(
           s"main snapshot $mainId is not retained"))
+        mainHead.requireNoEqualityDeletes()
         val snap = Snapshot(
           id = md.lastSnapshotId + 1,
           parentId = Some(mainId),
@@ -915,11 +891,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
             "added-files" -> addedManifests.map(_.fileCount).sum.toString,
             "added-rows" -> addedManifests.map(_.rows).sum.toString,
             "added-bytes" -> addedManifests.map(_.bytes).sum.toString),
-          deleteManifests = mainHead.deleteManifests,
           // main's position deletes reference main's files, all of which
           // remain; staged files are NEW files no DV can reference — so the
-          // carry-forward is exact (file-scoped semantics, unlike the
-          // equality tombstones above, which do suppress staged keys)
+          // carry-forward is exact
           posDeleteManifests = mainHead.posDeleteManifests)
         md.copy(
           currentSnapshotId = Some(snap.id),
@@ -1051,8 +1025,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    *
    * Refused when: the table predates field ids (files resolve by name — a
    * rename would silently NULL old files' data); the column drives a hidden
-   * partition transform (directory names are physical); tombstones are live
-   * (their key columns are physical parquet names).
+   * partition transform (directory names are physical).
    */
   def renameColumn(from: String, to: String): Snapshot =
     evolveSchema("rename-column", s"$from->$to", retire = Seq(from)) { st =>
@@ -1174,7 +1147,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         require(GraftTable.widenOk((from, to)),
           s"cannot widen ${from.simpleString} to ${to.simpleString} for $name " +
             s"(allowed: integral up-casts, integral→double, float→double)")
-        // spec/tombstone guards only — no field-id requirement (the NAME
+        // spec guard only — no field-id requirement (the NAME
         // path is unchanged, so old files bind by name at any nesting depth)
         st.allPartitionSpecs.find(_.sourceColumn == path.head).foreach(sp =>
           throw new IllegalArgumentException(
@@ -1190,8 +1163,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
           StructType(st.fields.updated(st.fieldIndex(path.last),
             st.fields(st.fieldIndex(path.last)).copy(dataType = to))))
       }
-      require(st.tombstones.isEmpty,
-        "table has live merge-on-read tombstones; materialize them first, then widen")
       (next, if (strip.isEmpty && widens.forall(_._1.contains(".")))
                // all-nested widen touches no stats keys — reuse manifests
                None
@@ -1313,9 +1284,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       throw new IllegalArgumentException(
         s"column $colName drives partition transform $sp (active or historical) — " +
           s"partition directory names are physical; $what requires a table rewrite"))
-    require(st.tombstones.isEmpty,
-      s"table has live merge-on-read tombstones (physical key columns); materialize " +
-        s"them first (Cluster.zorderRewrite), then $what")
   }
 
   /** Shared rename/drop/widen machinery: one commit carrying the new schema,
@@ -1348,8 +1316,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       }
       // DV entries name data files and positions, not columns — column
       // evolution never touches them; carry forward verbatim
-      (manifests, parent.flatMap(_.deleteManifests),
-        parent.flatMap(_.posDeleteManifests), Map(op -> detail))
+      (manifests, parent.flatMap(_.posDeleteManifests), Map(op -> detail))
     }
   }
 
@@ -1372,10 +1339,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 }
 
 object GraftTable {
-
-  /** Tombstone sets above this row count anti-join via shuffle instead of
-    * broadcast (a 10^8-key MoR delete must not OOM the driver). */
-  val TombstoneBroadcastRowCap = 4L * 1000 * 1000
 
   /** Parsed manifests by absolute path, LRU, bounded by the total entry
     * count it holds (a manifest larger than the bound is parsed, never

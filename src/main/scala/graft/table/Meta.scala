@@ -1,5 +1,6 @@
 package graft.table
 
+import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
@@ -64,19 +65,30 @@ final case class Snapshot(
     @JsonDeserialize(contentAs = classOf[java.lang.Long])
     parentId: Option[Long],
     timestampMs: Long,
-    operation: String, // append | compact | cluster | merge | delete-mor | expire | rewrite-manifests | rewrite-deletes | …
+    operation: String, // append | compact | cluster | merge | delete-pos | expire | rewrite-manifests | rewrite-deletes | …
     manifests: Seq[ManifestMeta],
     summary: Map[String, String],
-    // merge-on-read equality-delete (tombstone) manifests; Option so
-    // pre-MoR metadata JSON deserializes as None
-    deleteManifests: Option[Seq[ManifestMeta]] = None,
-    // merge-on-read POSITION-delete (deletion-vector) manifests: DvMeta
-    // lines, one per data file a commit deleted rows of. File-scoped (later
-    // appends unaffected) and exactly clearable per rewritten file — unlike
-    // equality tombstones. Option so pre-DV metadata JSON deserializes as None
-    posDeleteManifests: Option[Seq[ManifestMeta]] = None) {
-  def deleteManifestList: Seq[ManifestMeta] = deleteManifests.getOrElse(Seq.empty)
+    // merge-on-read deletes: deletion-vector manifests of DvMeta lines, one
+    // per data file a commit deleted rows of. File-scoped (later appends
+    // unaffected) and exactly clearable per rewritten file. Option so
+    // pre-DV metadata JSON deserializes as None
+    posDeleteManifests: Option[Seq[ManifestMeta]] = None,
+    // equality-delete ("tombstone") manifests of graft's removed key-delete
+    // format: read only so [[requireNoEqualityDeletes]] can refuse such a
+    // snapshot, never written
+    @JsonInclude(JsonInclude.Include.NON_ABSENT)
+    deleteManifests: Option[Seq[ManifestMeta]] = None) {
   def posDeleteList: Seq[ManifestMeta] = posDeleteManifests.getOrElse(Seq.empty)
+
+  /** Fails on a snapshot written with equality-delete manifests: this
+    * version does not read that format, and planning the snapshot without
+    * its key tombstones would bring the deleted rows back. */
+  def requireNoEqualityDeletes(): Unit =
+    if (deleteManifests.exists(_.nonEmpty))
+      throw new IllegalStateException(s"snapshot $id lists equality-delete (key tombstone) " +
+        "manifests, a merge-on-read delete format this version no longer reads; planning " +
+        "it without them would bring deleted rows back — rewrite the table with the " +
+        "version that wrote it (a full cluster rewrite materializes the tombstones)")
 }
 
 /** Named snapshot reference: pins `snapshotId` against expiry and names it

@@ -104,9 +104,16 @@ final class TableState private[table] (
 
   // ---- files and deletes ---------------------------------------------------
 
+  /** The pinned snapshot (none before the first commit), refused when it
+    * lists manifests of the removed equality-delete format. */
+  private lazy val readableSnapshot: Seq[Snapshot] = {
+    snapshot.foreach(_.requireNoEqualityDeletes())
+    snapshot.toSeq
+  }
+
   /** Data files of the pinned snapshot (empty before the first commit). */
   lazy val files: Seq[DataFileMeta] =
-    stripUntrustedDecimalBounds(snapshot.toSeq.flatMap(_.manifests).flatMap(m => table.readManifest(m.path)))
+    stripUntrustedDecimalBounds(readableSnapshot.flatMap(_.manifests).flatMap(m => table.readManifest(m.path)))
 
   /** Decimal bound strings changed space once (parquet stats are UNSCALED;
     * early manifests stored them verbatim, current ones store the SCALED
@@ -129,14 +136,10 @@ final class TableState private[table] (
     case None    => files
   }
 
-  /** Tombstone (equality-delete) file metas of the pinned snapshot. */
-  lazy val tombstones: Seq[DataFileMeta] =
-    snapshot.toSeq.flatMap(_.deleteManifestList).flatMap(m => table.readManifest(m.path))
-
   /** Deletion-vector entries of the pinned snapshot, one or more per data
     * file with deleted rows (see [[DeletionVectors]]). */
   lazy val dvEntries: Seq[DvMeta] =
-    snapshot.toSeq.flatMap(_.posDeleteList).flatMap(m => table.readDvManifest(m.path))
+    readableSnapshot.flatMap(_.posDeleteList).flatMap(m => table.readDvManifest(m.path))
 
   /** The live DV blob files as file metas: `rows` sums their live entries'
     * cardinalities and `bytes` their lengths. */
@@ -200,22 +203,6 @@ final class TableState private[table] (
 
   // ---- scans ---------------------------------------------------------------
 
-  /** Anti-join `df` against the tombstone key tuples (joined on ALL
-    * tombstone columns). Broadcast while the set is small (the intended
-    * MoR niche); beyond [[GraftTable.TombstoneBroadcastRowCap]] rows it
-    * falls back to a shuffled anti-join rather than an OOM. No-op when no
-    * tombstones exist. */
-  def applyTombstones(df: DataFrame): DataFrame =
-    if (tombstones.isEmpty) df
-    else {
-      val delDf = spark.read.parquet(tombstones.map(table.absPath): _*).distinct()
-      val rows = tombstones.map(_.rows).sum // exact, from manifest metadata — free
-      val right =
-        if (rows <= GraftTable.TombstoneBroadcastRowCap) org.apache.spark.sql.functions.broadcast(delDf)
-        else delDf
-      df.join(right, delDf.columns.toSeq, "left_anti")
-    }
-
   /** `df` — a parquet file-source scan over exactly `filesRead` — without
     * the rows the snapshot's position deletes remove: `dv_keep` over the
     * bitmaps of the read files' DV entries, whatever the DV row count
@@ -240,8 +227,7 @@ final class TableState private[table] (
       .withColumn("_gdv_idx", org.apache.spark.sql.functions.col("_metadata.row_index"))
 
   /** A rewrite's input: `fs` as a plain parquet scan in this schema with
-    * their position deletes applied. Callers that materialize the table's
-    * equality deletes wrap it in [[applyTombstones]]. */
+    * their position deletes applied. */
   def readFiles(fs: Seq[DataFileMeta]): DataFrame =
     withPositionDeletes(spark.read.schema(schema).parquet(fs.map(table.absPath): _*), fs)
 
@@ -253,9 +239,9 @@ final class TableState private[table] (
       isStreaming = isStreaming, bucketSpec = bucketed)
 
   /** `fs` (files of the pinned snapshot) as that snapshot shows them: its
-    * position deletes and tombstones applied. */
+    * position deletes applied. */
   def live(fs: Seq[DataFileMeta], isStreaming: Boolean = false): DataFrame =
-    applyTombstones(withPositionDeletes(relation(fs, isStreaming), fs))
+    withPositionDeletes(relation(fs, isStreaming), fs)
 
   /**
    * Snapshot-isolated read of the pinned snapshot: Catalyst pushes the
@@ -269,8 +255,7 @@ final class TableState private[table] (
    */
   def read(predicate: Option[Column] = None): DataFrame = {
     val planned = planFiles(predicate)
-    val df = withPositionDeletes(relation(planned, bucketed = bucketSpec(planned)), planned)
-    val live = applyTombstones(df)
+    val live = withPositionDeletes(relation(planned, bucketed = bucketSpec(planned)), planned)
     predicate.fold(live)(live.filter)
   }
 
@@ -288,7 +273,7 @@ final class TableState private[table] (
    * APPENDED in `(fromSnapshotId, to]` (default: the pinned snapshot), plus
    * the resolved `to` id (so callers apply that snapshot's deletes).
    * `skipChangeCommits = true` silently SKIPS row-changing commits (merge /
-   * update / delete / overwrite / tombstone-materializing rewrites) instead
+   * update / delete / overwrite) instead
    * of throwing — the streaming CDC source's opt-out, mirroring the
    * append-only contract a tailing consumer accepts: appends land, rewrites
    * of already-delivered rows are never re-delivered or retracted.
@@ -301,7 +286,7 @@ final class TableState private[table] (
     val added = commits.flatMap { case (snap, parent) =>
       snap.operation match {
         // "publish" (branch cherry-pick) is append-SHAPED: manifests are
-        // the parent's plus the staged additions, tombstones unchanged
+        // the parent's plus the staged additions, deletes unchanged
         case "append" | "publish" =>
           val parentManifests = parent.map(_.manifests.map(_.path).toSet).getOrElse(Set.empty)
           snap.manifests.filterNot(m => parentManifests.contains(m.path))
@@ -309,17 +294,7 @@ final class TableState private[table] (
         // schema evolution commits reshape METADATA only (stats-key remap);
         // every row survives them, so incremental readers pass through —
         // ONE shared op set with the changelog
-        case op if Changelog.RowPreservingOps.contains(op) =>
-          // a full cluster rewrite that MATERIALIZED live tombstones removed
-          // rows (a key tombstoned before `from`, re-appended in-range, then
-          // materialized away would otherwise be returned here while read()
-          // at `to` hides it)
-          if (snap.summary.get("materialized-tombstones").contains("true") && !skipChangeCommits)
-            throw new IllegalArgumentException(
-              s"snapshot ${snap.id} ('$op') materialized tombstones and is not " +
-                "row-preserving; file-level incremental read is append-only — " +
-                "diff full snapshots instead")
-          Nil
+        case op if Changelog.RowPreservingOps.contains(op) => Nil
         case op =>
           if (!skipChangeCommits)
             throw new IllegalArgumentException(
@@ -350,6 +325,7 @@ final class TableState private[table] (
     require(newer.size < walk.size || (fromSnapshotId == 0 && walk.last.parentId.isEmpty),
       s"snapshot chain from $to to $fromSnapshotId broken " +
         "(expired snapshot, or a rollback onto another branch?)")
+    newer.foreach(_.requireNoEqualityDeletes())
     (newer.map(s => s -> s.parentId.flatMap(md.snapshot)), to)
   }
 

@@ -76,14 +76,24 @@ class CompactCopySpec extends SparkSuite {
     assert(t.read().filter(col("url") === victim).count() == 0)
   }
 
-  test("a snapshot with live equality tombstones takes the Spark path for every bin") {
-    val t = pagesTable("graft-copy-tomb", 6)
+  test("a key delete sends only the bin holding the deleted row down the Spark path") {
+    val t = pagesTable("graft-copy-key", 6)
     val victim = t.read().select("url").orderBy("url").head().getString(0)
     t.deleteByKeysMoR(spark.createDataFrame(Seq(Tuple1(victim))).toDF("url"))
+    val hit = t.posDeleteRowCounts().keySet
+    assert(hit.size == 1, "the key delete records positions in one file")
     val expected = t.read().localCheckpoint(true)
-    Compact.run(t, Big, "tomb", Some("url"))
-    assert(compacted(t).nonEmpty && compacted(t).forall(rowGroups(t, _) == 1))
-    assertSameRows(t.read(), expected, "tombstoned")
+    val target = (t.files().map(_.bytes).max * 2.5).toLong
+    val p = Compact.plan(t, target, Some("url")).get
+    assert(p.groups.size >= 2)
+    Compact.run(t, target, "key", Some("url"))
+    for ((g, i) <- p.groups.zipWithIndex) {
+      val out = compacted(t).filter(_.commitUuid == s"compact-key-g$i").head
+      val want = if (g.exists(f => hit.contains(f.path))) 1 else g.map(rowGroups(t, _)).sum
+      assert(rowGroups(t, out) == want, s"bin $i")
+    }
+    assert(t.positionDeletes().isEmpty)
+    assertSameRows(t.read(), expected, "key-deleted")
   }
 
   test("a bin with an added column takes the Spark path") {

@@ -112,7 +112,7 @@ class MetadataAggSpec extends SparkSuite {
     val t = freshTable()
     t.deleteByKeysMoR(spark.range(10).select((col("id") * 10).as("k")))
     val agg = t.read().agg(count(lit(1)).as("n"))
-    assert(!noScan(agg), "tombstone anti-join must force a scan")
+    assert(!noScan(agg), "the deletion-vector filter must force a scan")
     assert(agg.collect()(0).getLong(0) == 990)
   }
 

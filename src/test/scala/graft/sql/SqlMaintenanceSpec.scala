@@ -152,15 +152,18 @@ class SqlMaintenanceSpec extends SparkSuite {
     assert(t.read().agg(bit_xor(xxhash64(col("url"), col("text"), col("lang"))))
       .head().getLong(0) == pre, "scoped maintenance preserves every row")
 
-    // a scoped pass must NOT clear live MoR tombstones (non-matching files
-    // may still hold tombstoned keys)
+    // a scoped pass must keep the MoR deletes of the files outside its
+    // predicate
     import spark.implicits._
     val dead = t.read().filter(col("lang") === "bb").select("url").as[String].take(3).toSeq
     // the same url can exist under both langs — the key delete hides all of them
     val expected = 1600 - t.read().filter(col("url").isin(dead: _*)).count()
     t.deleteByKeysMoR(dead.toDF("url"))
+    val bbDeleted = t.posDeleteRowCounts().keySet.intersect(bbPaths)
+    assert(bbDeleted.nonEmpty)
     spark.sql(s"OPTIMIZE graft.`${t.root}` WHERE lang = 'aa'").collect()
-    assert(t.tombstones().nonEmpty, "scoped compact must keep the tombstone set live")
+    assert(bbDeleted.subsetOf(t.posDeleteRowCounts().keySet),
+      "scoped compact must keep the DV entries of files outside the predicate")
     assert(t.read().count() == expected)
 
     // WHERE + ZORDER: scoped clustering rewrites only matching files

@@ -68,7 +68,7 @@ class ChangelogSpec extends SparkSuite {
     assertSameRows(fold(t.readSnapshot(from), ev), t.read(), "merge fold")
   }
 
-  test("delete-mor emits visible row images; hidden appends and materialization emit nothing") {
+  test("key delete emits visible row images; resurrected rows emit inserts; cluster emits nothing") {
     val t = GraftTable.create(spark, tmpDir("chg-mor"), Synth.pageSchema)
     t.append(Synth.pages(spark, 300, hosts = 6, partitions = 2))
     val from = t.currentSnapshot.get.id
@@ -76,17 +76,17 @@ class ChangelogSpec extends SparkSuite {
     val victims = base.select("url").orderBy("url").limit(20).localCheckpoint(true)
 
     t.deleteByKeysMoR(victims)                       // 20 delete events
-    val resurrect = base.join(victims, Seq("url"), "inner").limit(5)
-    t.append(resurrect)                              // hidden by tombstones: NO events
-    t.deleteByKeysMoR(victims.limit(3))              // keys already hidden: NO events
-    Cluster.zorderRewrite(t, Cluster.ZDims(), targetFileBytes = 1L << 20) // materializes: NO events
+    val resurrect = base.join(victims.orderBy("url").limit(5), Seq("url"), "inner")
+    t.append(resurrect)                              // visible again: 5 insert events
+    t.deleteByKeysMoR(victims.orderBy("url").limit(3)) // 3 of the resurrected: 3 delete events
+    Cluster.zorderRewrite(t, Cluster.ZDims(), targetFileBytes = 1L << 20) // applies DVs: NO events
     t.append(Synth.pages(spark, 40, hosts = 6, partitions = 1, seed = 9)) // 40 inserts
 
     val ev = t.changes(from).localCheckpoint(true)
     val byType = counts(ev)
-    assert(byType("delete") === 20L, s"one delete image per tombstoned visible row: $byType")
-    assert(byType.getOrElse("insert", 0L) === 40L,
-      s"hidden append and materialization emit nothing: $byType")
+    assert(byType("delete") === 23L, s"one delete image per deleted visible row: $byType")
+    assert(byType.getOrElse("insert", 0L) === 45L,
+      s"the resurrecting append and the last append emit inserts, the cluster nothing: $byType")
     // delete images are full rows of the pre-delete snapshot
     assert(ev.filter(col(Changelog.ChangeTypeCol) === "delete")
       .join(victims, Seq("url"), "left_anti").count() === 0)

@@ -12,9 +12,9 @@ import graft.run.Synth
 
 /**
  * A commit is metadata only: rewriting files that carry live deletion
- * vectors drops their DV entries with a manifest edit, so no Spark job
- * starts inside [[GraftTable.commitFull]] — not once per CAS attempt, not
- * at all.
+ * vectors drops their DV entries with a manifest edit, and a key delete
+ * commits the DV blob it already wrote, so no Spark job starts inside
+ * [[GraftTable.commitFull]] — not once per CAS attempt, not at all.
  */
 class CommitJobsSpec extends SparkSuite {
 
@@ -88,5 +88,18 @@ class CommitJobsSpec extends SparkSuite {
     assert(inside.isEmpty, s"${inside.size} jobs inside commitFull:\n${inside.mkString("\n\n")}")
     assert(t.positionDeletes().isEmpty)
     assertSameRows(t.read(), expected, "read after compaction")
+  }
+
+  test("a second deleteByKeysMoR over a live key delete starts no Spark job inside commitFull") {
+    val t = GraftTable.create(spark, tmpDir("graft-commit-jobs-keys"), Synth.pageSchema)
+    t.append(Synth.pages(spark, 2000, partitions = 8))
+    import spark.implicits._
+    val urls = t.read().select("url").orderBy("url").limit(20).as[String].collect().toSeq
+    val expected = t.read().filter(!col("url").isin(urls: _*)).localCheckpoint(true)
+    t.deleteByKeysMoR(urls.take(10).toDF("url"))
+    val (all, inside) = jobs(t.deleteByKeysMoR(urls.drop(10).toDF("url")))
+    assert(all.nonEmpty, "the listener sees the key delete's jobs")
+    assert(inside.isEmpty, s"${inside.size} jobs inside commitFull:\n${inside.mkString("\n\n")}")
+    assertSameRows(t.read(), expected, "read after both key deletes")
   }
 }

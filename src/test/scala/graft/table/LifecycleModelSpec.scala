@@ -33,8 +33,7 @@ class LifecycleModelSpec extends SparkSuite {
         if (round == 1) Map(PartitionSpec.Property -> "bucket(4, url)")
         else Map.empty[String, String]
       val tbl = GraftTable.create(spark, tmpDir(s"model-$round"), Synth.pageSchema, props)
-      val rows = mutable.Buffer.empty[MRow] // multiset of live-stored rows
-      val tombstones = mutable.Set.empty[String]
+      val rows = mutable.Buffer.empty[MRow] // multiset of visible rows
       var nextBatch = 0
       // the text column's CURRENT name — random renames retire the old one,
       // and every later op must compose with the evolved schema
@@ -56,7 +55,7 @@ class LifecycleModelSpec extends SparkSuite {
         tbl.renameColumn(textName, "content"); textName = "content"
       }
 
-      def visible: Seq[MRow] = rows.filterNot(r => tombstones.contains(r.url)).toSeq
+      def visible: Seq[MRow] = rows.toSeq
 
       val steps = 10 + rnd.nextInt(4)
       val oplog = mutable.Buffer.empty[String]
@@ -65,30 +64,21 @@ class LifecycleModelSpec extends SparkSuite {
         oplog += (op match {
           case 11 => // GENERIC multi-column cluster (ZDims.columns) — full
             // rewrite through the order-preserving embeddings; composes with
-            // the bucketed round's per-dir groups and materializes like case 4
+            // the bucketed round's per-dir groups
             Cluster.zorderRewrite(tbl,
               Cluster.ZDims(columns = Seq("url", "warc_ts")),
               targetFileBytes = 1L << 20, runId = s"model-g$round-${oplog.size}")
-            val kept = rows.filterNot(r => tombstones.contains(r.url))
-            rows.clear(); rows ++= kept
-            tombstones.clear()
             "clusterGeneric"
           case 12 => // bucket-count evolution + incremental layout migration:
             // flip bucket(4)↔bucket(8) (covers the zero-shuffle divisible
             // grow AND the redistribute shrink), then REBUCKET the
-            // nonconforming slice; a full-coverage pass materializes
+            // nonconforming slice
             if (round != 1) "rebucketSkip(unbucketed)"
             else {
               val cur = tbl.partitionSpecs.find(_.transform == "bucket").get.param.get
               val next = if (cur == 4) 8 else 4
               tbl.setPartitionSpec(Some(s"bucket($next, url)"))
-              val full = tbl.nonconformingFiles().size == tbl.files().size
               Rebucket.migrate(tbl, runId = s"model-rb$round-${oplog.size}")
-              if (full && tombstones.nonEmpty) {
-                val kept = rows.filterNot(r => tombstones.contains(r.url))
-                rows.clear(); rows ++= kept
-                tombstones.clear()
-              }
               s"rebucket($cur->$next)"
             }
           case 10 => // DV-file compaction: merges delete files, rows untouched
@@ -101,9 +91,7 @@ class LifecycleModelSpec extends SparkSuite {
             if (candidates.isEmpty) "noop" else {
               val picked = rnd.shuffle(candidates).take(1 + rnd.nextInt(8)).toSet
               tbl.deleteWherePositional(col("url").isin(picked.toSeq: _*))
-              // file-scoped physical delete of LIVE rows only (positions are
-              // taken on the tombstone-applied view)
-              val kept = rows.filterNot(r => picked.contains(r.url) && !tombstones.contains(r.url))
+              val kept = rows.filterNot(r => picked.contains(r.url))
               rows.clear(); rows ++= kept
               s"dvDelete(${picked.size})"
             }
@@ -114,54 +102,50 @@ class LifecycleModelSpec extends SparkSuite {
               tbl.updateWherePositional(col("url").isin(picked.toSeq: _*),
                 Map(textName -> concat(lit("PUP:"), col(textName))))
               val updated = rows.map { r =>
-                if (picked.contains(r.url) && !tombstones.contains(r.url))
-                  MRow(r.url, s"PUP:${r.text}") else r
+                if (picked.contains(r.url)) MRow(r.url, s"PUP:${r.text}") else r
               }
               rows.clear(); rows ++= updated
               s"dvUpdate(${picked.size})"
             }
           case 7 => // schema evolution mid-lifecycle: rename the text column
-            if (tombstones.nonEmpty) "renameSkipped(tombstones)"
-            else {
-              val to = s"text_$nextBatch"; nextBatch += 1
-              tbl.renameColumn(textName, to)
-              textName = to
-              s"rename($to)"
-            }
+            val to = s"text_$nextBatch"; nextBatch += 1
+            tbl.renameColumn(textName, to)
+            textName = to
+            s"rename($to)"
           case 6 => // ANSI merge: update + delete + insert in one pass
-            if (tombstones.nonEmpty) "mergeSkipped(tombstones)" // merge refuses, by design
-            else {
-              val shuffled = rnd.shuffle(visible)
-              val upd = shuffled.take(1 + rnd.nextInt(6))
-              val del = shuffled.drop(upd.size).take(rnd.nextInt(4))
-              val tag = s"m$nextBatch"; nextBatch += 1
-              val ins = (0 until 1 + rnd.nextInt(4)).map(i => MRow(s"$tag/u$i", s"INS-$tag-$i"))
-              val ts = new java.sql.Timestamp(1735689600000L)
-              val html = Array[Byte](1, 2)
-              val src = (
-                upd.map(r => (r.url, ts, html, s"UPD-${r.text}", "en", false)) ++
-                del.map(r => (r.url, ts, html, "DEL", "en", true)) ++
-                ins.map(r => (r.url, ts, html, r.text, "en", false)))
-                .toDF("url", "warc_ts", "html", textName, "lang", "_deleted")
-              // mode is semantics-free (asserted here across random op mixes):
-              // MoR lands DV entries + appends, CoW rewrites touched files
-              graft.ops.Merge.into(tbl, src, Seq("url"), latestWins = false,
-                mode = if (rnd.nextBoolean()) "merge-on-read" else "copy-on-write")
-              val updMap = upd.map(r => r.url -> s"UPD-${r.text}").toMap
-              val delSet = del.map(_.url).toSet
-              val newRows = rows.toSeq
-                .map(r => updMap.get(r.url).fold(r)(t => MRow(r.url, t)))
-                .filterNot(r => delSet.contains(r.url)) ++ ins
-              rows.clear(); rows ++= newRows
-              s"merge(u=${upd.size},d=${del.size},i=${ins.size})"
-            }
+            val shuffled = rnd.shuffle(visible)
+            val upd = shuffled.take(1 + rnd.nextInt(6))
+            val del = shuffled.drop(upd.size).take(rnd.nextInt(4))
+            val tag = s"m$nextBatch"; nextBatch += 1
+            val ins = (0 until 1 + rnd.nextInt(4)).map(i => MRow(s"$tag/u$i", s"INS-$tag-$i"))
+            val ts = new java.sql.Timestamp(1735689600000L)
+            val html = Array[Byte](1, 2)
+            val src = (
+              upd.map(r => (r.url, ts, html, s"UPD-${r.text}", "en", false)) ++
+              del.map(r => (r.url, ts, html, "DEL", "en", true)) ++
+              ins.map(r => (r.url, ts, html, r.text, "en", false)))
+              .toDF("url", "warc_ts", "html", textName, "lang", "_deleted")
+            // mode is semantics-free (asserted here across random op mixes):
+            // MoR lands DV entries + appends, CoW rewrites touched files
+            graft.ops.Merge.into(tbl, src, Seq("url"), latestWins = false,
+              mode = if (rnd.nextBoolean()) "merge-on-read" else "copy-on-write")
+            val updMap = upd.map(r => r.url -> s"UPD-${r.text}").toMap
+            val delSet = del.map(_.url).toSet
+            val newRows = rows.toSeq
+              .map(r => updMap.get(r.url).fold(r)(t => MRow(r.url, t)))
+              .filterNot(r => delSet.contains(r.url)) ++ ins
+            rows.clear(); rows ++= newRows
+            s"merge(u=${upd.size},d=${del.size},i=${ins.size})"
           case 0 | 1 => appendBatch()
-          case 2 => // MoR delete a sample of currently-visible keys
+          case 2 => // MoR key delete of a sample of currently-visible keys:
+            // removes their visible rows at once (later rows with the same
+            // key would be visible again)
             val candidates = visible.map(_.url).distinct
             if (candidates.isEmpty) "noop" else {
               val picked = rnd.shuffle(candidates).take(1 + rnd.nextInt(8))
               tbl.deleteByKeysMoR(picked.toDF("url"))
-              tombstones ++= picked
+              val kept = rows.filterNot(r => picked.contains(r.url))
+              rows.clear(); rows ++= kept
               s"morDelete(${picked.size})"
             }
           case 3 =>
@@ -170,11 +154,6 @@ class LifecycleModelSpec extends SparkSuite {
           case 4 =>
             Cluster.zorderRewrite(tbl, Cluster.ZDims(), targetFileBytes = 1L << 20,
               runId = s"model-$round-${oplog.size}")
-            // full rewrite materializes: tombstoned rows physically gone
-            val kept = rows.filterNot(r => tombstones.contains(r.url))
-            rows.clear()
-            rows ++= kept
-            tombstones.clear()
             "clusterFull"
           case 5 =>
             Expire.expire(tbl, retainLast = 2)

@@ -62,7 +62,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val entries = DeletionVectors.write(t.root, s"dv-${java.util.UUID.randomUUID}", all) ++
       DeletionVectors.write(t.root, s"dv-${java.util.UUID.randomUUID}", more)
     t.commitFull("delete-pos") { parent =>
-      (parent.map(_.manifests).getOrElse(Seq.empty), parent.flatMap(_.deleteManifests),
+      (parent.map(_.manifests).getOrElse(Seq.empty),
         Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ t.writeDvManifest(entries)), Map.empty)
     }
   }
@@ -351,7 +351,7 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       Map("_file" -> "data/a", "_pos" -> "0"), Map("_file" -> "data/z", "_pos" -> "9"),
       Map("_file" -> 0L, "_pos" -> 0L), "dv-old")
     t.commitFull("delete-pos") { parent =>
-      (parent.map(_.manifests).getOrElse(Seq.empty), parent.flatMap(_.deleteManifests),
+      (parent.map(_.manifests).getOrElse(Seq.empty),
         Some(Seq(t.writeManifest(Seq(old)))), Map.empty)
     }
     for ((what, attempt) <- Seq[(String, () => Any)](
@@ -560,22 +560,23 @@ class PosDeleteSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     val u = t.read().select("url").orderBy("url").limit(1).collect()(0).getString(0)
     t.deleteByKeysMoR(Seq(u).toDF("url"))
     t.deleteWherePositional(col("lang") === "en")
-    val inv = spark.sql(s"SELECT kind, rows FROM graft.`${t.root}`.deletes").collect()
-    assert(inv.exists(_.getString(0) == "equality") && inv.exists(_.getString(0) == "position"))
-    assert(inv.filter(_.getString(0) == "position").map(_.getLong(1)).sum ==
-      t.positionDeletes().map(_.rows).sum)
+    val deletes = spark.sql(s"SELECT * FROM graft.`${t.root}`.deletes")
+    assert(deletes.columns.toSeq == Seq("path", "rows", "bytes", "commit_uuid"))
+    val inv = deletes.collect()
+    assert(inv.length == 2, "one blob per delete commit")
+    assert(inv.map(_.getAs[Long]("rows")).sum == t.positionDeletes().map(_.rows).sum)
   }
 
   test("positional delete composes with equality tombstones and appends race through") {
     val t = freshTable(2000)
-    // equality tombstone on one url + DV on a predicate: both apply
+    // key delete on one url + DV on a predicate: both apply
     val u = t.read().select("url").orderBy(desc("url")).limit(1).collect()(0).getString(0)
     import spark.implicits._
     t.deleteByKeysMoR(Seq(u).toDF("url"))
     val preDv = t.read()
     val pred = col("lang") === "en"
     assert(t.deleteWherePositional(pred).nonEmpty)
-    assertSameRows(t.read(), preDv.filter(!pred), "tombstone + DV scan")
+    assertSameRows(t.read(), preDv.filter(!pred), "key delete + DV scan")
     // an append AFTER the DV commit races through (file immutability keeps
     // recorded positions valid) and its rows are untouched by the DV
     t.append(Synth.pages(spark, 300, seed = 7L))

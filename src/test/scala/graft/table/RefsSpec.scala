@@ -122,7 +122,7 @@ class RefsSpec extends SparkSuite {
     // schema evolution never lands on a branch
     intercept[IllegalArgumentException](tbl.commitFull(
       "rename-column", toBranch = Some("late"),
-      schemaUpdate = Some(tbl.schema))(p => (p.get.manifests, None, None, Map.empty)))
+      schemaUpdate = Some(tbl.schema))(p => (p.get.manifests, None, Map.empty)))
   }
 
   test("VACUUM mid-staging keeps the whole staged chain publishable") {
@@ -202,22 +202,25 @@ class RefsSpec extends SparkSuite {
     intercept[IllegalArgumentException](tbl.publish("ev"))
   }
 
-  test("tombstones added on main mid-staging suppress matching published keys") {
+  test("a key delete on main mid-staging hides main's rows, never the published staged ones") {
     val tbl = GraftTable.create(spark, tmpDir("refs-cherry-ts"), Synth.pageSchema)
     tbl.append(batch("base", 50))
     tbl.createBranch("wap")
     val staged = batch("s1", 20)
     tbl.append(staged, toBranch = Some("wap"))
-    // main diverges AND MoR-deletes 5 of the urls the branch staged —
-    // equality deletes have no sequence numbers: the published rows must be
-    // suppressed exactly as a plain append's would be
+    // main diverges AND MoR-deletes 5 of the urls the branch staged plus 3
+    // of its own — a delete removes the rows live on main when it commits
+    // (sequence-number semantics), so the published staged rows stay
     tbl.append(batch("m1", 10))
     val victims = staged.select("url").limit(5).collect().map(_.getString(0)).toSeq
+    val mainVictims = tbl.read().select("url").orderBy("url").limit(3)
+      .collect().map(_.getString(0)).toSeq
     import spark.implicits._
-    tbl.deleteByKeysMoR(victims.toDF("url"))
+    tbl.deleteByKeysMoR((victims ++ mainVictims).toDF("url"))
     tbl.publish("wap")
-    assert(tbl.read().count() == 50 + 10 + 20 - 5)
-    assert(tbl.read().where(col("url").isin(victims: _*)).count() == 0)
+    assert(tbl.read().count() == 50 + 10 - 3 + 20)
+    assert(tbl.read().where(col("url").isin(victims: _*)).count() == 5)
+    assert(tbl.read().where(col("url").isin(mainVictims: _*)).count() == 0)
   }
 
   test("VACUUM mid-staging with an advanced main keeps cherry-pick publishable") {
