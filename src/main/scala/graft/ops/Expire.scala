@@ -108,17 +108,21 @@ object Expire {
   private object ReplanSignal extends scala.util.control.ControlThrowable
 
   /**
-   * Remove orphan data files and DV blobs: files on disk under `data/`
-   * referenced by NO snapshot — leftovers of crashed maintenance runs and
-   * deletes that staged output but never committed. Only files older than
-   * `olderThanMs` are touched, so an IN-FLIGHT run's staging is never
-   * deleted (the same grace window real-world orphan cleanup uses against
-   * racing writers).
+   * Remove orphan files: data files and DV blobs under `data/`, and data and
+   * DV manifests under `metadata/`, referenced by NO snapshot — leftovers of
+   * crashed maintenance runs, deletes that staged output but never
+   * committed, and the manifests a commit attempt wrote before it lost its
+   * CAS race. Only files older than `olderThanMs` are touched, so an
+   * IN-FLIGHT run's staging is never deleted (the same grace window
+   * real-world orphan cleanup uses against racing writers).
    */
   def removeOrphans(table: GraftTable, olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
-    val referenced: Set[String] = filesOf(table, manifestsOf(table.metadata.snapshots))
+    val manifests = manifestsOf(table.metadata.snapshots)
+    val referenced: Set[String] = filesOf(table, manifests)
       .map(p => s"${table.root}/$p").toSet
+    val referencedManifests = manifests.map(_._1).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
+    def stale(p: java.nio.file.Path) = java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
     val orphans = scala.collection.mutable.ArrayBuffer.empty[String]
     val dataRoot = java.nio.file.Paths.get(table.dataDir)
     if (java.nio.file.Files.isDirectory(dataRoot)) {
@@ -128,17 +132,19 @@ object Expire {
           if (java.nio.file.Files.isRegularFile(p)) {
             val abs = p.toString
             val isData = abs.endsWith(".parquet") || abs.endsWith(DeletionVectors.BlobSuffix)
-            if (isData && !referenced.contains(abs) &&
-                java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff) {
-              orphans += abs
-            }
+            if (isData && !referenced.contains(abs) && stale(p)) orphans += abs
           }
         }
       } finally stream.close()
     }
+    // manifests compare by table-relative name, the form snapshots store
+    for (abs <- FileIO.listFiles(s"${table.root}/metadata", ".json")) {
+      val name = abs.substring(abs.lastIndexOf('/') + 1)
+      if (name.startsWith("manifest-") && !referencedManifests.contains(s"metadata/$name") &&
+          stale(java.nio.file.Paths.get(abs))) orphans += abs
+    }
     orphans.foreach(FileIO.delete)
     // prune now-empty commit directories
-    FileIO.listFiles(table.dataDir) // no-op touch; directories cleaned below
     val dirStream = java.nio.file.Files.list(dataRoot)
     try {
       dirStream.forEach { d =>
@@ -167,9 +173,9 @@ object ManifestRewrite {
     if (snap.manifests.size <= 1) return None
     val entries = st.files
     val groups = entries.grouped(math.max(1, entriesPerManifest)).toSeq
-    val committed = table.commit("rewrite-manifests", Some(snap.id)) { _ =>
+    val committed = table.commitFull("rewrite-manifests", Some(snap.id)) { parent =>
       val manifests = groups.map(table.writeManifest)
-      (manifests, Map(
+      (manifests, parent.flatMap(_.posDeleteManifests), Map(
         "manifests-before" -> snap.manifests.size.toString,
         "manifests-after" -> manifests.size.toString,
         "files" -> entries.size.toString))

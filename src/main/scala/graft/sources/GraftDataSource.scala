@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.streaming.{GraftStreamSink, GraftStreamSource}
-import graft.table.{FileIO, GraftTable}
+import graft.table.GraftTable
 
 /**
  * `spark.read.format("graft").load(root)` — the SQL-facing front door of the
@@ -100,7 +100,7 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
     val root = parameters.getOrElse("path",
       throw new IllegalArgumentException("graft sink requires a path: df.write.format(\"graft\").save(<table root>)"))
     val spark = sqlContext.sparkSession
-    val exists = FileIO.exists(s"$root/metadata/v1.json")
+    val exists = GraftTable.exists(root)
     // table properties honored when THIS write creates the table (e.g.
     // .option("partition-spec", "bucket(64, url), days(warc_ts)")); on an
     // existing table a DIFFERENT requested spec is an error, not a silent

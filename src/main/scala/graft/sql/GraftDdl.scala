@@ -141,7 +141,7 @@ case class GraftCreateTableCommand(
   override val output: Seq[Attribute] = Seq.empty
 
   override def run(session: SparkSession): Seq[Row] = {
-    if (FileIO.exists(s"$path/metadata/v1.json")) {
+    if (GraftTable.exists(path)) {
       if (ignoreIfExists) return Seq.empty
       throw new IllegalArgumentException(s"graft table already exists at $path")
     }
@@ -259,7 +259,7 @@ case class GraftUnsetPropertiesCommand(
 case class GraftDropTableCommand(path: String, ifExists: Boolean) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq.empty
   override def run(session: SparkSession): Seq[Row] = {
-    if (!FileIO.exists(s"$path/metadata/v1.json")) {
+    if (!GraftTable.exists(path)) {
       if (ifExists) return Seq.empty
       throw new IllegalArgumentException(s"no graft table at $path")
     }

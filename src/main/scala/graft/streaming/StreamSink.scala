@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.graftshim.Shims
 
-import graft.table.{FileIO, GraftTable}
+import graft.table.GraftTable
 
 /**
  * DSv1 streaming sink: `df.writeStream.format("graft").option(
@@ -36,11 +36,11 @@ class GraftStreamSink(
     // re-analyzed by a batch writer — re-plan over the computed rows
     val batch = Shims.batchDataFrame(data)
     val table =
-      if (FileIO.exists(s"$root/metadata/v1.json")) GraftTable.load(spark, root)
+      if (GraftTable.exists(root)) GraftTable.load(spark, root)
       else try GraftTable.create(spark, root, batch.schema) catch {
         // two queries bootstrapping one new table: the create CAS loser
         // must fall back to load, not fail its batch
-        case e: Exception if FileIO.exists(s"$root/metadata/v1.json") =>
+        case e: Exception if GraftTable.exists(root) =>
           GraftTable.load(spark, root)
       }
     StreamIngest.appendBatch(table, batch, batchId, prop, legacyProps)

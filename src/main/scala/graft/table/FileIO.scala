@@ -30,7 +30,7 @@ object FileIO {
 
   def mkdirs(path: String): Unit = { tick(); Files.createDirectories(Paths.get(path)) }
 
-  /** Overwrite-in-place via temp + atomic rename (for hints/step logs). */
+  /** Overwrite-in-place via temp + atomic rename (manifests, step logs). */
   def writeString(path: String, content: String): Unit =
     writeBytes(path, content.getBytes(StandardCharsets.UTF_8))
 

@@ -33,30 +33,15 @@ import org.apache.spark.sql.types.StructType
  */
 class GraftTable private (val root: String, val spark: SparkSession) {
 
-  private def metadataDir = s"$root/metadata"
-  private def hintPath = s"$metadataDir/version-hint.text"
   def dataDir = s"$root/data"
   def metricsDir = s"$root/metrics"
 
   // ---- metadata access -----------------------------------------------------
 
-  /** Latest committed version number (source of truth: max vN.json present).
-    * ONE directory listing — the previous hint-then-probe loop cost
-    * O(commits since hint) existence checks per metadata read, a latency
-    * amplifier on an object store where each probe is a round trip. */
-  def currentVersion: Int = {
-    val versions = FileIO.listFiles(metadataDir, ".json").flatMap { p =>
-      val name = p.substring(p.lastIndexOf('/') + 1)
-      if (name.startsWith("v")) name.stripPrefix("v").stripSuffix(".json").toIntOption
-      else None
-    }
-    if (versions.isEmpty) 1 else versions.max
-  }
+  /** Latest committed version number: ONE `metadata/` listing (see [[Commit]]). */
+  def currentVersion: Int = Commit.latest(root)
 
-  def metadata: TableMetadata = metadataAt(currentVersion)
-
-  def metadataAt(version: Int): TableMetadata =
-    MetaJson.readTableMetadata(FileIO.readString(s"$metadataDir/v$version.json"))
+  def metadata: TableMetadata = Commit.read(root)._2
 
   /** The latest committed version, pinned at its current snapshot. */
   def state: TableState = stateFor(metadata)
@@ -551,9 +536,10 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       if (st.writeSortColumns.isEmpty) df
       else df.sortWithinPartitions(st.writeSortColumns.map(org.apache.spark.sql.functions.col): _*)
     val metas = st.writeDataFiles(sorted, maxRecordsPerFile = maxRec)
-    commit("append", propertyUpdates = propertyUpdates, toBranch = toBranch) { parent =>
+    commitFull("append", propertyUpdates = propertyUpdates, toBranch = toBranch) { parent =>
       val mf = writeManifest(metas)
       (parent.map(_.manifests).getOrElse(Seq.empty) :+ mf,
+        parent.flatMap(_.posDeleteManifests),
         summary ++ Map(
           "added-files" -> metas.size.toString,
           "added-rows" -> metas.map(_.rows).sum.toString,
@@ -595,25 +581,14 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
 
   /**
-   * Optimistic-concurrency commit loop. `build` receives the parent snapshot
-   * and returns (manifest list, summary). On a lost race: appends re-apply
-   * against the new parent; rewrites require the parent they planned against
-   * (`expectedSnapshotId`) and fail fast otherwise — the caller replans.
-   * Parent deletion vectors are carried forward unchanged; use
-   * [[commitFull]] to alter them.
+   * Optimistic-concurrency commit of one snapshot. `build` receives the
+   * parent snapshot and returns (manifest list, DV-manifest list, summary);
+   * [[Commit.update]] re-runs it per CAS attempt. On a lost race: appends
+   * re-apply against the new parent; rewrites require the parent they
+   * planned against (`expectedSnapshotId`) and fail fast otherwise — the
+   * caller replans. `schemaUpdate` lands the new table schema atomically in
+   * the same metadata version (rename/drop evolution).
    */
-  def commit(op: String, expectedSnapshotId: Option[Long] = None,
-      propertyUpdates: Map[String, String] = Map.empty,
-      toBranch: Option[String] = None)(
-      build: Option[Snapshot] => (Seq[ManifestMeta], Map[String, String])): Snapshot =
-    commitFull(op, expectedSnapshotId, propertyUpdates, toBranch = toBranch) { parent =>
-      val (manifests, summary) = build(parent)
-      (manifests, parent.flatMap(_.posDeleteManifests), summary)
-    }
-
-  /** [[commit]] with explicit control of the DV-manifest list of the new
-    * snapshot. `schemaUpdate` lands the new table schema atomically in the
-    * same metadata version (rename/drop evolution). */
   def commitFull(op: String, expectedSnapshotId: Option[Long] = None,
       propertyUpdates: Map[String, String] = Map.empty,
       schemaUpdate: Option[StructType] = None,
@@ -621,11 +596,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       build: Option[Snapshot] => (Seq[ManifestMeta], Option[Seq[ManifestMeta]], Map[String, String])): Snapshot = {
     require(toBranch.isEmpty || schemaUpdate.isEmpty,
       s"$op: schema evolution commits to main only, not a branch")
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val v = currentVersion
-      val md = metadataAt(v)
+    Commit.update(root, op) { md =>
       // a branch commit's parent is the BRANCH head; main's pointer is
       // untouched — the snapshot joins the log, only the ref moves
       val parent = toBranch match {
@@ -650,7 +621,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         manifests = manifests,
         summary = summary ++ toBranch.map("branch" -> _),
         posDeleteManifests = posDeletes.filter(_.nonEmpty))
-      val next = md.copy(
+      md.copy(
         currentSnapshotId = if (toBranch.isEmpty) Some(snap.id) else md.currentSnapshotId,
         snapshots = md.snapshots :+ snap,
         lastSnapshotId = snap.id,
@@ -665,13 +636,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
           // as the divergence point and mis-pin expiry / mislead publish
           md.refMap.updated(b, RefMeta(snap.id, "branch", r.baseSnapshotId))
         }.map(Some(_)).getOrElse(md.refs))
-      if (FileIO.putIfAbsent(s"$metadataDir/v${v + 1}.json", MetaJson.write(next))) {
-        FileIO.writeString(hintPath, (v + 1).toString)
-        return snap
-      }
-      // lost the race; loop re-reads and (for appends) re-applies
-    }
-    throw new IllegalStateException(s"$op: commit failed after 10 attempts")
+    }.snapshots.last
   }
 
   /**
@@ -1320,20 +1285,10 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
   }
 
-  /** Rewrite the full snapshot list (snapshot expiry). */
-  def commitMetadataUpdate(f: TableMetadata => TableMetadata): TableMetadata = {
-    var attempts = 0
-    while (attempts < 10) {
-      attempts += 1
-      val v = currentVersion
-      val next = f(metadataAt(v))
-      if (FileIO.putIfAbsent(s"$metadataDir/v${v + 1}.json", MetaJson.write(next))) {
-        FileIO.writeString(hintPath, (v + 1).toString)
-        return next
-      }
-    }
-    throw new IllegalStateException("metadata update failed after 10 attempts")
-  }
+  /** Commit `f` of the latest metadata (refs, properties, snapshot
+    * expiry); `f` re-runs per CAS attempt. */
+  def commitMetadataUpdate(f: TableMetadata => TableMetadata): TableMetadata =
+    Commit.update(root, "metadata update")(f)
 
   def absPath(f: DataFileMeta): String = s"$root/${f.path}"
 }
@@ -1536,7 +1491,7 @@ object GraftTable {
       root: String,
       schema: StructType,
       properties: Map[String, String] = Map.empty): GraftTable = {
-    require(!FileIO.exists(s"$root/metadata/v1.json"), s"table already exists at $root")
+    require(!exists(root), s"table already exists at $root")
     // validate declared hidden-partitioning specs before anything is written
     properties.get(PartitionSpec.Property).foreach { s =>
       PartitionSpec.parseMulti(s).foreach(_.validate(schema))
@@ -1554,16 +1509,17 @@ object GraftTable {
         (DecimalStatsScaledProp -> "true"),
       schemaJson = Some(withIds.json))
     FileIO.mkdirs(s"$root/data")
-    require(FileIO.putIfAbsent(s"$root/metadata/v1.json", MetaJson.write(md)),
-      s"concurrent create at $root")
-    FileIO.writeString(s"$root/metadata/version-hint.text", "1")
+    require(Commit.create(root, md), s"concurrent create at $root")
     new GraftTable(root, spark)
   }
 
   def load(spark: SparkSession, root: String): GraftTable = {
-    require(FileIO.exists(s"$root/metadata/v1.json"), s"no graft table at $root")
+    require(exists(root), s"no graft table at $root")
     new GraftTable(root, spark)
   }
+
+  /** True when `root` holds a graft table: any committed version, one listing. */
+  def exists(root: String): Boolean = Commit.versions(root).nonEmpty
 
   def createOrReplace(
       spark: SparkSession,

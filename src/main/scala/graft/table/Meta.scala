@@ -20,7 +20,9 @@ import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModul
  *   data/<commit-uuid>/part-*.parquet        immutable data files
  *   data/<commit-uuid>/deletes.dv            deletion-vector blob: serialized
  *                                            Roaring bitmaps, back to back
- *   metadata/v<N>.json                       full table metadata, version N
+ *   metadata/v<N>.json                       full table metadata, version N;
+ *                                            the last 100 versions are kept
+ *                                            (see [[Commit]])
  *   metadata/manifest-<uuid>.json            list of DataFileMeta (JSON lines),
  *                                            or of DvMeta for a DV manifest
  *   metrics/                                 lineage/metrics parquet table

@@ -46,14 +46,11 @@ class TableSpec extends SparkSuite {
     val root = tmpDir("graft-o1meta")
     val t = GraftTable.create(spark, root, Synth.pageSchema)
     (1 to 12).foreach(i => t.append(Synth.pages(spark, 20, partitions = 1, seed = i)))
-    // stale hint simulates a reader that last saw v1: the old probe loop
-    // would pay one existence check per commit since then
-    FileIO.writeString(s"$root/metadata/version-hint.text", "1")
     val before = FileIO.opCount.get()
     val v = t.currentVersion
     val ops = FileIO.opCount.get() - before
     assert(v === 13, s"12 appends after create → v13, got $v")
-    assert(ops <= 2, s"currentVersion must be O(1) FileIO calls, used $ops")
+    assert(ops <= 1, s"currentVersion must be one FileIO call, used $ops")
   }
 
   test("as-of time travel ignores branches abandoned by rollback") {
