@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -15,10 +15,13 @@ import graft.table.{DataFileMeta, FileIO, GraftTable, Snapshot, TableState}
  * generalization of the reference's rowkey-prefix scan pruning
  * (`sql/HQLEngine.java:136-155`) to multiple dimensions.
  *
- * Scale design — the rewrite is exactly TWO jobs over the data:
- *  1. a key-only sample scan (column-pruned: url/lang/warc_ts, never
- *     html/text) that yields BOTH the equi-depth range boundaries and the
- *     heavy-host set (sample frequency × 1/fraction estimates row counts);
+ * Scale design — each rewrite group is exactly TWO passes over the data:
+ *  1. ONE sketch aggregate over an uncached key-only Bernoulli sample
+ *     (column-pruned: url/lang/warc_ts, never html/text): a
+ *     `percentile_approx` for the equi-depth range boundaries and an
+ *     `approx_top_k` for the heavy-host set (sample count × 1/fraction
+ *     estimates row counts) — one Spark query, no cache, no driver sort
+ *     ([[sketch]]); a group that writes one file skips it;
  *  2. the real pass: z-key + salt computed in codegen, ONE steered hash
  *     exchange ([[RangeShuffle]] — no repartitionByRange double-scan),
  *     in-partition sort, parquet write.
@@ -50,14 +53,12 @@ object Cluster {
   }
 
   /** Hard ceiling on the boundary/heavy-host sample size, independent of
-    * table size. The sample is never collected — boundaries come from a
-    * distributed `percentile_approx` sketch and heavy hosts from a
-    * sample-side aggregate, so the driver holds O(nPart + heavy hosts),
-    * not O(sample) — which is why this cap can sit at 8M (the old
-    * driver-collected Row[] capped at 2M ≈ 200 MB of driver arrays; the cap
-    * now only bounds executor cache, and the 4× larger sample makes
-    * heavy-host detection proportionally less noisy at 10^12 rows: a
-    * threshold-sized host expects ~16 sample hits instead of ~4). */
+    * table size. The sample is neither cached nor collected — it streams
+    * into the map side of one sketch aggregate, so the driver holds
+    * O(nPart + k) values, not O(sample). The cap therefore bounds only the
+    * rows the sketches ingest (and so their accuracy), not any memory:
+    * 8M keeps heavy-host detection quiet at 10^12 rows, where a
+    * threshold-sized host expects ~16 sample hits. */
   val MaxSampleRows: Long = 8000000L
 
   /** Range-partition count for a rewrite: scales with the cluster (4 waves
@@ -212,8 +213,9 @@ object Cluster {
          .toSeq.sortBy(_._1).map(_._2))
         .zipWithIndex.map(_.swap)
 
-    /** One group's rewrite: sample -> boundaries+heavy hosts -> steered
-      * range exchange -> in-partition sort -> rolled write. Returns the
+    /** One group's rewrite: one sketch aggregate over a key sample ->
+      * boundaries + heavy groups -> steered range exchange ->
+      * in-partition sort -> rolled write. Returns the
       * group's output file metas (footers read once, inside the group's
       * own parallel slot). */
     def rewriteGroup(gi: Int, gInputs: Seq[DataFileMeta]): Seq[DataFileMeta] = {
@@ -231,10 +233,10 @@ object Cluster {
       val nOut = math.max(1, math.ceil(gBytes.toDouble / targetFileBytes).toInt)
 
       // key plan: page-default dims or generic user columns — either way ONE
-      // codegen'd Long key, a salt-grouping column for heavy-tie detection,
-      // and a per-row salt source that splits those ties. Bounds come from
-      // file metadata in the common case (no scan).
-      val (zC: Column, saltGroupC: Column, saltRowC: Column) =
+      // codegen'd Long key of `keyBits` bits, a salt-grouping column for
+      // heavy-tie detection, and a per-row salt source that splits those
+      // ties. Bounds come from file metadata in the common case (no scan).
+      val (zC: Column, saltGroupC: Column, saltRowC: Column, keyBits: Int) =
         if (clusterCols.nonEmpty) {
           val dcols = genericDimCols(schema, clusterCols, dims.effectiveBits, df, gInputs)
           val z =
@@ -248,10 +250,10 @@ object Cluster {
             .filter(f => graft.table.Bounds.supported(f.dataType)).map(f => col(f.name))
           val saltSrc =
             if (hashable.isEmpty) spark_partition_id().cast("long") else xxhash64(hashable: _*)
-          (z, z, saltSrc)
+          (z, z, saltSrc, clusterCols.size * dims.effectiveBits)
         } else {
           val bounds = boundsFromMeta(df, gInputs)
-          (zkeyCol(dims, bounds), hostCol(col("url")), xxhash64(col("url")))
+          (zkeyCol(dims, bounds), hostCol(col("url")), xxhash64(col("url")), 3 * dims.bitsPerDim)
         }
 
       // the shuffle fans out to nPart range partitions (cluster-sized, NOT
@@ -260,61 +262,17 @@ object Cluster {
       // tight per-file bounds — so boundary count and driver sample stay
       // bounded however big the table is
       val nPart = math.max(1, math.min(nOut, maxShufflePartitions(spark)))
-      // ONE key-only sample scan yields both range boundaries and the
-      // heavy-host set (an exact groupBy(host) would mean collecting every
-      // distinct host — unbounded at web scale; the sample estimate is
-      // rows ≈ sampleCount / fraction and only needs the heavy tail)
-      val fraction = sampleFraction(nPart, rowsTotal)
-      // NOTE: no `.limit()` before the aggregates — CollectLimit executes
-      // the scan in sequential incremental partition batches (1, 4, 16, …),
-      // which serializes the sample pass and was measured to halve 8-core
-      // cluster throughput; the fraction alone bounds the expected sample
-      // size. The sample itself STAYS DISTRIBUTED (persisted sample-sized):
-      // boundaries come from a percentile_approx quantile sketch and heavy
-      // hosts from a groupBy over the sample, so the driver receives
-      // O(nPart + heavy hosts) values — the previous collect() held up to
-      // 2M Row[] (~200 MB of z+host arrays) on the driver.
-      // sample BELOW the key projection: Bernoulli sampling picks the same
-      // rows regardless of what is projected above it, but Catalyst does
-      // not push a non-trivial projection under Sample — with the select
-      // first, the z-key (host extraction + packing + bit interleave) ran
-      // on EVERY row of the group just to keep ~fraction of the results.
-      // Sampling first computes the key only for sampled rows (~1-3% at
-      // bench scale); column pruning still reaches the scan (ColumnPruning
-      // inserts the narrow projection below Sample).
-      val sampled = df
-        .sample(withReplacement = false, fraction, seed = 42)
-        .select(zC.as("z"), saltGroupC.as("g"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // a one-file group needs no boundaries, and a salt cannot split its
+      // single range partition: no sketch at all
       val (heavy: Seq[Any], bds: Array[Long]) =
-        try {
-          val hh = sampled.groupBy("g").count()
-            .filter(col("count").cast("double") / lit(fraction) > saltThresholdRows)
-            .select("g").orderBy("g").collect().map(_.get(0)).toSeq
-          val b: Array[Long] =
-            if (nPart <= 1) Array.empty
-            else {
-              val qs = (1 until nPart).map(_.toDouble / nPart)
-              // sketch resolution must exceed the quantile spacing or
-              // adjacent boundaries collapse and distinct() under-partitions
-              val accuracy = math.max(10000, nPart * 4)
-              val row = sampled.agg(
-                percentile_approx(col("z"), typedLit(qs), lit(accuracy)).as("q")).head()
-              if (row.isNullAt(0)) Array.empty
-              else row.getSeq[Long](0).distinct.sorted.toArray
-            }
-          (hh, b)
-        } finally sampled.unpersist() // also on failure: 8M cached rows must not leak
+        if (nPart <= 1) (Nil, Array.empty[Long])
+        else {
+          spark.sparkContext.setJobDescription(s"zorder-sketch $runId group $gi")
+          sketch(df, zC, saltGroupC, nPart, rowsTotal, saltThresholdRows)
+        }
 
-      // salt-perturbed key: XOR flips only the low bits (noise bits of the
-      // last dimension), so heavy ties get up to nSalts distinct keys
-      // that equi-depth boundaries can split, without hurting clustering
-      val saltC =
-        if (heavy.isEmpty) lit(0)
-        else when(saltGroupC.isInCollection(heavy),
-          pmod(saltRowC, lit(nSalts.toLong)).cast("int")).otherwise(lit(0))
-      val salted = df.withColumn("_zkey", zC).withColumn("_salt", saltC)
-        .withColumn("_zs", col("_zkey").bitwiseXOR(col("_salt").cast("long")))
+      val salted = df.withColumn("_zs",
+        zC.bitwiseXOR(saltCol(saltGroupC, heavy, saltRowC, nSalts, keyBits)))
 
       spark.sparkContext.setJobDescription(
         s"zorder-rewrite $runId group $gi (${gInputs.size} files, $nOut out, $nPart partitions)")
@@ -322,7 +280,7 @@ object Cluster {
         .sortWithinPartitions(col("_zs"))
       val rowsPerFile = if (nOut > nPart) math.max(1L, rowsTotal / nOut) else 0L
       // writeDataFiles collects the fresh footers already — reuse them
-      val metas = st.writeDataFiles(sorted, s"$commitUuid-p$gi", rowsPerFile) // selects schema cols, dropping _zkey/_salt/_zs
+      val metas = st.writeDataFiles(sorted, s"$commitUuid-p$gi", rowsPerFile) // selects schema cols, dropping _zs
       synchronized { log = Maintenance.markDone(table, log, s"part$gi") }
       metas
     }
@@ -500,13 +458,71 @@ object Cluster {
     }
   }
 
-  /** Adds `_zkey` and `_salt` (nonzero only for heavy hosts). */
-  def withZKey(df: DataFrame, dims: ZDims, bounds: ZBounds,
-      heavyHosts: Seq[String], nSalts: Int): DataFrame = {
-    val saltExpr =
-      if (heavyHosts.isEmpty) lit(0)
-      else when(hostCol(col("url")).isInCollection(heavyHosts),
-        pmod(xxhash64(col("url")), lit(nSalts.toLong)).cast("int")).otherwise(lit(0))
-    df.withColumn("_zkey", zkeyCol(dims, bounds)).withColumn("_salt", saltExpr)
+  /** Spark's ceiling on `approx_top_k`'s tracked items, and so on its k. */
+  private val MaxItemsTracked = 1000000
+
+  /**
+   * Range boundaries and heavy salt groups of one rewrite group, from ONE
+   * aggregate over a Bernoulli sample of its keys: `percentile_approx` over
+   * the z-key gives the nPart-1 equi-depth boundaries, and `approx_top_k`
+   * (a frequent-items sketch) over the salt group gives the groups whose
+   * estimated rows (sample count / fraction) exceed `saltThresholdRows`.
+   * The sample is never cached and never collected: the scan runs once, as
+   * the aggregate's map stage, and the driver receives O(nPart + k) values.
+   *
+   * k is the bound on heavy groups, ⌈rowsTotal / saltThresholdRows⌉ + 1,
+   * capped at [[MaxItemsTracked]]. While the sample holds no more distinct
+   * groups than the sketch tracks (max(10000, 8k) — true in every test and
+   * benchmark workload) its counts are exact, so the heavy set is exactly
+   * what a groupBy over the same sample finds. Above that the counts are
+   * upper-bound estimates whose error stays under a third of the threshold,
+   * so the sketch can only add borderline groups: a little extra salting,
+   * never a wrong row.
+   */
+  private def sketch(df: DataFrame, z: Column, g: Column, nPart: Int, rowsTotal: Long,
+      saltThresholdRows: Long): (Seq[Any], Array[Long]) = {
+    val fraction = sampleFraction(nPart, rowsTotal)
+    val qs = (1 until nPart).map(_.toDouble / nPart)
+    // sketch resolution must exceed the quantile spacing or adjacent
+    // boundaries collapse and distinct() under-partitions
+    val accuracy = math.max(10000, nPart * 4)
+    val threshold = math.max(1L, saltThresholdRows)
+    val k = math.min(MaxItemsTracked.toLong, (rowsTotal + threshold - 1) / threshold + 1).toInt
+    val tracked = math.min(MaxItemsTracked.toLong, math.max(10000L, 8L * k)).toInt
+    // NOTE: no `.limit()` before the aggregate — CollectLimit executes the
+    // scan in sequential incremental partition batches (1, 4, 16, …), which
+    // was measured to halve 8-core cluster throughput; the fraction alone
+    // bounds the expected sample size. Sample BELOW the key projection:
+    // Catalyst does not push a non-trivial projection under Sample, so with
+    // the select first the z-key would run on every row of the group;
+    // column pruning still reaches the scan.
+    val row = df.sample(withReplacement = false, fraction, seed = 42)
+      .select(z.as("z"), g.as("g"))
+      .agg(percentile_approx(col("z"), typedLit(qs), lit(accuracy)),
+        call_function("approx_top_k", col("g"), lit(k), lit(tracked)))
+      .head()
+    val bounds =
+      if (row.isNullAt(0)) Array.empty[Long] else row.getSeq[Long](0).distinct.sorted.toArray
+    val heavy =
+      if (row.isNullAt(1)) Nil
+      else row.getSeq[Row](1)
+        .filter(r => !r.isNullAt(0) && r.getLong(1) / fraction > saltThresholdRows)
+        .map(_.get(0)).sortBy(String.valueOf)
+    (heavy, bounds)
   }
+
+  /** Salt for a `keyBits`-bit z-key: `rowSalt mod nSalts` for rows whose
+    * `group` is heavy, 0 otherwise, shifted to the lowest bits a range
+    * boundary can resolve. XORed into the key it flips only low bits
+    * (noise bits of every dimension), so a heavy tie gets up to nSalts
+    * distinct keys that range boundaries can split, without hurting
+    * clustering. The shift exists because `percentile_approx` ranks keys
+    * as doubles: a boundary resolves only a key's top 53 bits, so salts in
+    * the bits below that all land on one side of the boundary their tie
+    * rounds to (a 60-bit page key moved in steps of 64–128). */
+  private[ops] def saltCol(group: Column, heavy: Seq[Any], rowSalt: Column, nSalts: Int,
+      keyBits: Int): Column =
+    if (heavy.isEmpty) lit(0L)
+    else when(group.isInCollection(heavy),
+      shiftleft(pmod(rowSalt, lit(nSalts.toLong)), math.max(0, keyBits - 53))).otherwise(lit(0L))
 }

@@ -36,9 +36,10 @@ import graft.table.{DataFileMeta, FileIO, GraftTable, PartitionSpec, Snapshot, S
  * [[GroupedRewrite]].
  *
  * Resumable: every bin writes to a staging directory keyed by
- * (runId, bin index); a rerun after a crash reuses any bin directory
- * that completed (`_SUCCESS`) and re-executes the rest, then commits once
- * (checkpoint-resume per the north rule).
+ * (runId, bin index); a rerun after a crash reuses any bin whose step the
+ * run's log records as done and whose staged output is still there,
+ * re-executes the rest, then commits once (checkpoint-resume per the north
+ * rule).
  */
 object Compact {
 
@@ -150,13 +151,15 @@ object Compact {
     val st = p.state
     val schema = st.schema
     def dirOf(i: Int) = s"${table.dataDir}/${commitUuid(runId, i)}"
-    val (resumed, pending) = p.groups.zipWithIndex.map(_.swap).partition { case (i, _) =>
-      log.doneSteps.contains(s"group$i") && FileIO.exists(s"${dirOf(i)}/_SUCCESS")
-    }
-    // a completed group of a crashed run: reuse its staged output
+    // a completed group of a crashed run: reuse its staged output. A step is
+    // logged only after its bin's output is complete (a Spark job commit or
+    // a copy's atomic rename), so the log entry plus the files suffice
+    val staged = p.groups.indices.filter(i => log.doneSteps.contains(s"group$i"))
+      .map(i => i -> FileIO.listFilesRecursively(dirOf(i), ".parquet"))
+      .filter(_._2.nonEmpty).toMap
+    val (resumed, pending) = p.groups.zipWithIndex.map(_.swap).partition(g => staged.contains(g._1))
     val reused = resumed.map { case (i, group) =>
-      (StatsCollector.collect(spark, schema, table.root,
-        FileIO.listFilesRecursively(dirOf(i), ".parquet"), commitUuid(runId, i)), group)
+      (StatsCollector.collect(spark, schema, table.root, staged(i), commitUuid(runId, i)), group)
     }
     val copied = copyBins(table, runId, p, pending)
     log = Maintenance.markDone(table, log, copied.keys.toSeq.sorted.map(i => s"group$i"): _*)
@@ -250,7 +253,10 @@ object Compact {
       new SparkToParquetSchemaConverter(micros).convert(rowSchema).toString,
       new ParquetOptions(Map.empty[String, String], sqlConf).compressionCodecClassName,
       st.bloomColumns.toSet, specs)
-    tasks.foreach(t => FileIO.deleteRecursively(t.dir)) // partial attempt from a crashed run
+    // partial attempts of a crashed run: one listing of data/ finds the bin
+    // dirs that exist, and only those are deleted
+    val existing = FileIO.listDirs(table.dataDir).map(d => d.substring(d.lastIndexOf('/') + 1)).toSet
+    tasks.filter(t => existing.contains(t.commitUuid)).foreach(t => FileIO.deleteRecursively(t.dir))
     spark.sparkContext.setJobDescription(s"compact $runId copy ${tasks.size} bins")
     val results =
       try spark.sparkContext.parallelize(tasks, tasks.size).map(copyBin(expect, _)).collect()
@@ -296,7 +302,8 @@ object Compact {
     // one name per bin, whichever attempt writes it: each attempt writes a
     // private temp file (not `.parquet`, so never listed as data) and
     // renames it atomically onto the name, so the bin dir never holds a
-    // partial file or a second data file from a failed or speculative attempt
+    // partial file or a second data file from a failed or speculative
+    // attempt — the rename alone makes the bin's output all-or-nothing
     val out = GraftTable.bucketStamped(expect.specs,
       outDir.resolve(s"part-00000-${task.commitUuid}.c000${codec.getExtension}.parquet").toString)
     val tmp = s"$out.${UUID.randomUUID}.tmp"
@@ -308,7 +315,6 @@ object Compact {
       new LocalOutputFile(Paths.get(tmp))).build())
     try rewriter.processBlocks() finally rewriter.close()
     FileIO.rename(tmp, out)
-    FileIO.writeString(s"${task.dir}/_SUCCESS", "")
     Some(StatsCollector.readOne(expect.schema, expect.root, out, task.commitUuid))
   }
 }

@@ -115,46 +115,65 @@ object Expire {
    * CAS race. Only files older than `olderThanMs` are touched, so an
    * IN-FLIGHT run's staging is never deleted (the same grace window
    * real-world orphan cleanup uses against racing writers).
+   *
+   * The write debris around data files goes too, under the same window:
+   * the Hadoop `.crc` sidecar of every orphaned data file, and every
+   * `_SUCCESS` marker, `.crc` sidecar and `.tmp` file of a commit
+   * directory that holds no referenced data file (what [[Expire.expire]]
+   * leaves of a directory whose files it deleted, or a crashed copy's temp
+   * file). A live file's sidecar is never touched. Directories this
+   * leaves empty are pruned. Returns the orphaned data files, DV blobs and
+   * manifests; the debris is not listed.
    */
   def removeOrphans(table: GraftTable, olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
     val manifests = manifestsOf(table.metadata.snapshots)
     val referenced: Set[String] = filesOf(table, manifests)
       .map(p => s"${table.root}/$p").toSet
     val referencedManifests = manifests.map(_._1).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
-    def stale(p: java.nio.file.Path) = java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
+    def stale(p: Path) = Files.getLastModifiedTime(p).toMillis < cutoff
     val orphans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val dataRoot = java.nio.file.Paths.get(table.dataDir)
-    if (java.nio.file.Files.isDirectory(dataRoot)) {
-      val stream = java.nio.file.Files.walk(dataRoot)
-      try {
-        stream.forEach { p =>
-          if (java.nio.file.Files.isRegularFile(p)) {
-            val abs = p.toString
-            val isData = abs.endsWith(".parquet") || abs.endsWith(DeletionVectors.BlobSuffix)
-            if (isData && !referenced.contains(abs) && stale(p)) orphans += abs
-          }
-        }
-      } finally stream.close()
+    val dataRoot = Paths.get(table.dataDir)
+    val files: Seq[Path] =
+      if (!Files.isDirectory(dataRoot)) Nil
+      else {
+        val stream = Files.walk(dataRoot)
+        try stream.iterator().asScala.filter(Files.isRegularFile(_)).toVector
+        finally stream.close()
+      }
+    def isData(p: Path) = p.toString.endsWith(".parquet") || p.toString.endsWith(DeletionVectors.BlobSuffix)
+    // the commit directory (first level under data/) a file belongs to
+    def commitDir(p: Path) = dataRoot.resolve(dataRoot.relativize(p).getName(0))
+    val (data, other) = files.partition(isData)
+    val liveDirs = data.filter(p => referenced.contains(p.toString)).map(commitDir).toSet
+    val orphanData = data.filter(p => !referenced.contains(p.toString) && stale(p))
+    orphans ++= orphanData.map(_.toString)
+    val sidecars = orphanData.map(p => p.resolveSibling(s".${p.getFileName}.crc")).toSet
+    val debris = other.filter { p =>
+      val name = p.getFileName.toString
+      val kind = name == "_SUCCESS" || name.endsWith(".crc") || name.endsWith(".tmp")
+      (sidecars.contains(p) || (kind && !liveDirs.contains(commitDir(p)))) && stale(p)
     }
     // manifests compare by table-relative name, the form snapshots store
     for (abs <- FileIO.listFiles(s"${table.root}/metadata", ".json")) {
       val name = abs.substring(abs.lastIndexOf('/') + 1)
       if (name.startsWith("manifest-") && !referencedManifests.contains(s"metadata/$name") &&
-          stale(java.nio.file.Paths.get(abs))) orphans += abs
+          stale(Paths.get(abs))) orphans += abs
     }
     orphans.foreach(FileIO.delete)
-    // prune now-empty commit directories
-    val dirStream = java.nio.file.Files.list(dataRoot)
-    try {
-      dirStream.forEach { d =>
-        if (java.nio.file.Files.isDirectory(d)) {
-          val ls = java.nio.file.Files.list(d)
-          val empty = try !ls.findFirst().isPresent finally ls.close()
-          if (empty) java.nio.file.Files.deleteIfExists(d)
-        }
-      }
-    } finally dirStream.close()
+    debris.foreach(p => FileIO.delete(p.toString))
+    // prune, deepest first, every directory this pass emptied (with its
+    // emptied parents) and every empty commit directory; a directory that
+    // gained an entry meanwhile (a racing writer) refuses the delete
+    val emptied = (orphanData ++ debris).flatMap { p =>
+      Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != dataRoot).toSeq
+    }
+    val commitDirs = FileIO.listDirs(table.dataDir).map(Paths.get(_))
+    (emptied ++ commitDirs).distinct.sortBy(-_.getNameCount).foreach { d =>
+      try Files.deleteIfExists(d) catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+    }
     orphans.toSeq
   }
 }

@@ -115,11 +115,11 @@ object Maintenance {
     if (FileIO.exists(p)) Some(MetaJson.readStepLog(FileIO.readString(p))) else None
   }
 
+  /** The run's stored log on a resume, else a fresh one. A fresh log is
+    * first written with its first done step: a log without steps records
+    * nothing a rerun could use. */
   def start(table: GraftTable, runId: String, op: String): StepLog =
-    load(table, runId).getOrElse {
-      val log = StepLog(runId, op, System.currentTimeMillis(), Seq.empty, None)
-      save(table, log); log
-    }
+    load(table, runId).getOrElse(StepLog(runId, op, System.currentTimeMillis(), Seq.empty, None))
 
   def save(table: GraftTable, log: StepLog): Unit =
     FileIO.writeString(logPath(table, log.runId), MetaJson.write(log))

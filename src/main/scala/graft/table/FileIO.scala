@@ -80,7 +80,13 @@ object FileIO {
     }
   }
 
-  def listFiles(dir: String, suffix: String = ""): Seq[String] = {
+  def listFiles(dir: String, suffix: String = ""): Seq[String] =
+    list(dir, f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(suffix))
+
+  /** Subdirectories of `dir`, sorted (empty when `dir` does not exist). */
+  def listDirs(dir: String): Seq[String] = list(dir, Files.isDirectory(_))
+
+  private def list(dir: String, keep: java.nio.file.Path => Boolean): Seq[String] = {
     tick()
     val p = Paths.get(dir)
     if (!Files.isDirectory(p)) Seq.empty
@@ -88,9 +94,7 @@ object FileIO {
       val stream = Files.list(p)
       try {
         import scala.jdk.CollectionConverters._
-        stream.iterator().asScala
-          .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(suffix))
-          .map(_.toString).toVector.sorted
+        stream.iterator().asScala.filter(keep).map(_.toString).toVector.sorted
       } finally stream.close()
     }
   }

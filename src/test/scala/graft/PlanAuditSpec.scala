@@ -56,9 +56,9 @@ class PlanAuditSpec extends SparkSuite {
 
   test("zorder write path stays in whole-stage codegen up to the exchange") {
     val df = Synth.pages(spark, 1000, partitions = 2)
-    val salted = graft.ops.Cluster.withZKey(df, graft.ops.Cluster.ZDims(),
-      graft.ops.Cluster.computeBounds(df), Seq.empty, 16)
-    val p = salted.queryExecution.executedPlan.toString
+    val keyed = df.withColumn("_zs", graft.ops.Cluster.zkeyCol(graft.ops.Cluster.ZDims(),
+      graft.ops.Cluster.computeBounds(df)))
+    val p = keyed.queryExecution.executedPlan.toString
     assert(p.contains("*("), s"zkey projection must be codegen'd:\n$p")
   }
 }

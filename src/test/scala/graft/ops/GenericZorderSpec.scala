@@ -105,6 +105,9 @@ class GenericZorderSpec extends SparkSuite {
     assertSameRows(t.read(), pre, "skewed cluster")
     assert(t.planFiles(Some(col("pk") === 999L)).size < t.files().size,
       "tail keys still prune around the heavy tie")
+    val tiedFiles = spark.read.parquet(t.files().map(t.absPath): _*).filter(col("pk") === 7L)
+      .select(input_file_name()).distinct().count()
+    assert(tiedFiles > 1, s"the salted tie must span several files, got $tiedFiles")
   }
 
   test("SQL front door: OPTIMIZE ... ZORDER BY (cols) on a non-page schema") {

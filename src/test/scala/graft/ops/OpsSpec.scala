@@ -200,17 +200,33 @@ class ClusterSpec extends SparkSuite {
   }
 
   test("salting splits a pathologically hot host across partitions") {
-    import spark.implicits._
-    // one host dominating: without salt all its rows share a zkey prefix
-    val hot = Synth.pages(spark, 5000, hosts = 2, partitions = 4)
-    val salted = Cluster.withZKey(hot, Cluster.ZDims(), Cluster.computeBounds(hot),
-      heavyHosts = Seq("host-1.example.com"), nSalts = 8)
-    val salts = salted.filter(Cluster.hostCol($"url") === "host-1.example.com")
-      .select("_salt").distinct().count()
-    assert(salts > 1, "hot host must receive multiple salt values")
-    val cold = salted.filter(Cluster.hostCol($"url") =!= "host-1.example.com")
-      .select("_salt").distinct().collect().map(_.getInt(0)).toSeq
-    assert(cold == Seq(0), "non-heavy hosts keep salt 0 (deterministic layout)")
+    // the hot host's rows also share lang and warc_ts, so all of them carry
+    // ONE z-key: range boundaries alone keep such a tie in one partition,
+    // and only a detected heavy host's salt can split it
+    val pages = Synth.pages(spark, 5000, hosts = 2, partitions = 4)
+    val hot = pages.groupBy(Cluster.hostCol(col("url")).as("h")).count()
+      .orderBy(col("count").desc).head().getString(0)
+    val isHot = Cluster.hostCol(col("url")) === hot
+    val df = pages
+      .withColumn("lang", when(isHot, lit("en")).otherwise(col("lang")))
+      .withColumn("warc_ts", when(isHot, lit(java.sql.Timestamp.valueOf("2025-01-03 00:00:00")))
+        .otherwise(col("warc_ts")))
+    def filesHoldingHot(saltThresholdRows: Long): Long = {
+      val t = GraftTable.create(spark, tmpDir("graft-salt"), Synth.pageSchema)
+      t.append(df)
+      val pre = t.read().localCheckpoint(true)
+      // ~8 output files: below the partition cap, so no record rolling
+      val target = t.files().map(_.bytes).sum / 8
+      assert(Cluster.zorderRewrite(t, targetFileBytes = target,
+        saltThresholdRows = saltThresholdRows).nonEmpty)
+      assertSameRows(t.read(), pre, s"salted cluster ($saltThresholdRows)")
+      spark.read.parquet(t.files().map(t.absPath): _*).filter(isHot)
+        .select(input_file_name()).distinct().count()
+    }
+    assert(filesHoldingHot(saltThresholdRows = 1000L) > 1,
+      "a hot host detected from the sample must span several output files")
+    assert(filesHoldingHot(saltThresholdRows = 1000000L) == 1,
+      "below the threshold the tie stays in one range partition")
   }
 }
 
@@ -747,6 +763,38 @@ class ExpireSpec extends SparkSuite {
     assert(removed.toSet == stagedFiles.toSet)
     assert(t.read().count() == 500)
     assert(t.files().forall(f => graft.table.FileIO.exists(t.absPath(f))))
+  }
+
+  test("orphan GC leaves no write debris behind expired and crashed commits") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val t = GraftTable.create(spark, tmpDir("graft-orphan-debris"), Synth.pageSchema)
+    t.append(Synth.pages(spark, 1000, partitions = 4))
+    t.append(Synth.pages(spark, 1000, partitions = 4, seed = 7))
+    assert(Compact.run(t, targetBytes = 64L * 1024 * 1024).nonEmpty)
+    assert(Cluster.zorderRewrite(t, targetFileBytes = t.files().map(_.bytes).sum / 3).nonEmpty)
+    assert(Expire.expire(t, retainLast = 1).deletedDataFiles.nonEmpty)
+    // a crashed copy attempt: its temp file, with no data file beside it
+    val tmp = Paths.get(s"${t.dataDir}/compact-crashed-g0/part-00000-compact-crashed-g0.parquet.x.tmp")
+    Files.createDirectories(tmp.getParent)
+    Files.write(tmp, Array[Byte](1, 2, 3))
+    def tree(): Set[String] = {
+      val s = Files.walk(Paths.get(t.dataDir))
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).map(_.toString).toSet finally s.close()
+    }
+    val live = t.files().map(t.absPath).toSet
+    val liveDirs = live.map(p => Paths.get(p).getParent.toString)
+    val liveDebris = tree().filter(p => liveDirs.contains(Paths.get(p).getParent.toString)) -- live
+    val expected = t.read().localCheckpoint(true)
+    assert(tree().exists(p => !liveDirs.contains(Paths.get(p).getParent.toString)),
+      "expired and crashed commits leave files outside the live dirs")
+
+    assert(Expire.removeOrphans(t, olderThanMs = -1000).isEmpty, "no orphaned data file")
+    assert(tree() == live ++ liveDebris, s"left behind: ${tree() -- live -- liveDebris}")
+    val dirs = Files.list(Paths.get(t.dataDir))
+    try assert(dirs.iterator().asScala.map(_.toString).toSet == liveDirs, "empty commit dirs pruned")
+    finally dirs.close()
+    assertSameRows(t.read(), expected, "read after orphan GC")
   }
 
   test("manifest rewrite preserves the file set exactly") {
