@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -55,11 +56,29 @@ import graft.table.{Bounds, DataFileMeta, DeletionVectors, GraftTable, Snapshot,
  *  - `_insw_<col>` boolean: per-row assignment mask for `_ins_<col>`,
  *    symmetric to `_setw_<col>` (multiple insert clauses).
  *
- * Scale design: touched-file planning broadcasts only the per-file
- * [min,max] key intervals (tiny), maps each source key tuple to overlapping
- * files and collects just the distinct file ids; the join runs as a
- * Catalyst-planned sort-merge join (asserted in tests via the physical
- * plan); untouched files are carried into the new snapshot unchanged.
+ * Scale design: touched-file planning ships only the per-file [min,max]
+ * key intervals (tiny), maps each source key tuple to overlapping files and
+ * collects one file-id set per source partition (one Spark job, no
+ * exchange); the join runs as a Catalyst-planned sort-merge join (asserted
+ * in tests via the physical plan); untouched files are carried into the
+ * new snapshot unchanged.
+ *
+ * Merge-on-read (`mode = "merge-on-read"`) has two plans with the same
+ * clause semantics ([[clauses]] is the one clause matrix both evaluate):
+ *  - the DRIVER plan, for a small source: when the optimizer's size
+ *    estimate of the normalized source is within
+ *    `spark.sql.autoBroadcastJoinThreshold` (`-1` turns it off), the merge
+ *    collects the source, probes touched files on the driver, scans them
+ *    once for the rows whose keys the source names, pairs and applies the
+ *    clauses on the driver, and writes the images — at most three Spark
+ *    jobs, nothing persisted;
+ *  - the JOIN plan, for everything else: the full-outer join of the
+ *    source against the touched files, as copy-on-write runs it. NOT
+ *    MATCHED BY SOURCE clauses (they need every candidate file's rows),
+ *    key columns whose source and target types differ, and key types whose
+ *    driver-side equality is not Spark's (float, double, binary, nested)
+ *    always take it.
+ * The `merge-pos` snapshot's summary names the plan (`merge-plan`).
  */
 object Merge {
 
@@ -122,7 +141,7 @@ object Merge {
     if (bounded.isEmpty) return files
     // interval-stabbing index (sorted mins + prefix-max of maxes): O(log
     // files + overlaps) per key instead of a linear scan of every file —
-    // the index itself is file-count-bounded and broadcast once
+    // the index itself is file-count-bounded and ships once per probe
     val index = new IntervalIndex(leadDt,
       bounded.zipWithIndex.map { case (f, i) => (f.minValues(lead), f.maxValues(lead), i) })
     // residual key columns: per-file bounds arrays (null = no bounds = keep)
@@ -145,46 +164,27 @@ object Merge {
     val fileBuckets: Array[Array[Int]] = bucketSpecs.map(sp =>
       bounded.map(f => sp.dirValue(f.path)
         .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(-1)).toArray).toArray
-    val bcIdx = spark.sparkContext.broadcast(index)
-    val bcRes = spark.sparkContext.broadcast((resDts.toArray, resMin, resMax))
-    val bcBuckets = spark.sparkContext.broadcast(fileBuckets)
-    val overlap = udf { (r: org.apache.spark.sql.Row) =>
-      if (r.isNullAt(0)) Seq.empty[Int]
-      else {
-        val (rdts, rmin, rmax) = bcRes.value
-        val fb = bcBuckets.value
-        val bOff = 1 + rdts.length
-        bcIdx.value.overlapping(r.getString(0)).filter { fid =>
-          var ok = true
-          var j = 0
-          while (ok && j < rdts.length) {
-            if (!r.isNullAt(j + 1)) {
-              val v = r.getString(j + 1)
-              val lo = rmin(j)(fid); val hi = rmax(j)(fid)
-              if (lo != null && Bounds.compare(rdts(j), v, lo) < 0) ok = false
-              else if (hi != null && Bounds.compare(rdts(j), v, hi) > 0) ok = false
-            }
-            j += 1
-          }
-          var s = 0
-          while (ok && s < fb.length) {
-            val b = fb(s)(fid)
-            if (b >= 0 && !r.isNullAt(bOff + s) && r.getInt(bOff + s) != b) ok = false
-            s += 1
-          }
-          ok
-        }
-      }
-    }
+    val candidates = new TouchedCandidates(index, resDts.toArray, resMin, resMax, fileBuckets)
     val keyStruct = struct(
       keyCols.zip(dts).map { case (k, dt) => canonicalKey(col(k), dt) } ++
         bucketSpecs.map { sp =>
           val dt = schema.fields.find(_.name == sp.sourceColumn).get.dataType
           pmod(hash(col(sp.sourceColumn).cast(dt)), lit(sp.param.get))
         }: _*)
-    val touchedIds = sourceKeys
-      .select(explode(overlap(keyStruct)).as("fid"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val probe = sourceKeys.select(keyStruct)
+    val touchedIds: Set[Int] = probe.queryExecution.optimizedPlan match {
+      // a local key set (a collected merge source): ConvertToLocalRelation
+      // has already folded the key projection, so the probe runs here, no job
+      case _: LocalRelation => probe.collect().iterator.flatMap(r => candidates(r.getStruct(0))).toSet
+      // one job, no exchange: each task ships its partition's id set
+      case _ =>
+        import spark.implicits._
+        probe.mapPartitions { rows =>
+          val ids = scala.collection.mutable.BitSet.empty
+          rows.foreach(r => ids ++= candidates(r.getStruct(0)))
+          Iterator.single(ids.toArray)
+        }.collect().iterator.flatten.toSet
+    }
     bounded.zipWithIndex.collect { case (f, i) if touchedIds.contains(i) => f } ++ unbounded
   }
 
@@ -281,32 +281,25 @@ object Merge {
     keyCols.foreach(k => require(cols.contains(k), s"no key column $k in table schema"))
 
     val hasDeleted = source.columns.contains("_deleted")
-    // column-level row images (see class doc): `_set_*` narrows the update
-    // image to assigned columns, `_ins_*` narrows the insert image
-    val setCols = source.columns.collect { case c if c.startsWith("_set_") => c.stripPrefix("_set_") }.toSet
-    val insCols = source.columns.collect { case c if c.startsWith("_ins_") => c.stripPrefix("_ins_") }.toSet
-    // per-row assignment masks (see class doc) — emitted when several
-    // clauses assign different column sets
-    val setwCols = source.columns.collect { case c if c.startsWith("_setw_") => c.stripPrefix("_setw_") }.toSet
-    val inswCols = source.columns.collect { case c if c.startsWith("_insw_") => c.stripPrefix("_insw_") }.toSet
-    require(setwCols.subsetOf(setCols) && inswCols.subsetOf(insCols),
+    val src0 = if (hasDeleted) source else source.withColumn("_deleted", lit(false))
+    val nmbsSetCols: Set[String] = notMatchedBySourceSet.map(_._2.keySet).getOrElse(Set.empty)
+    val sh = Shape(schema, keyCols, versionCol, latestWins, src0.columns.toSeq,
+      spark.sessionState.analyzer.resolver, notMatchedBySourceDelete.nonEmpty,
+      notMatchedBySourceSet.nonEmpty, nmbsSetCols)
+    require(sh.setwCols.subsetOf(sh.setCols) && sh.inswCols.subsetOf(sh.insCols),
       "mask columns (_setw_/_insw_) require matching _set_/_ins_ image columns")
-    (setCols ++ insCols).foreach(c =>
+    (sh.setCols ++ sh.insCols).foreach(c =>
       require(cols.contains(c), s"MERGE action assigns unknown column $c"))
-    setCols.intersect(keyCols.toSet).headOption.foreach(c =>
+    sh.setCols.intersect(keyCols.toSet).headOption.foreach(c =>
       throw new IllegalArgumentException(
         s"MERGE UPDATE must not assign key column $c (rewrite the row via DELETE + INSERT)"))
-    val src0 = if (hasDeleted) source else source.withColumn("_deleted", lit(false))
+    nmbsSetCols.foreach(c => require(cols.contains(c), s"NOT MATCHED BY SOURCE assigns unknown column $c"))
+    nmbsSetCols.intersect(keyCols.toSet).headOption.foreach(c =>
+      throw new IllegalArgumentException(s"NOT MATCHED BY SOURCE must not assign key column $c"))
     val keyC = keyCols.map(col)
-    val srcUncached =
-      if (latestWins) {
-        // latest change per key tuple: greatest version wins; delete beats
-        // upsert on ties
-        val w = Window.partitionBy(keyC: _*)
-          .orderBy(col(versionCol).desc, col("_deleted").desc)
-        src0.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-      } else src0 // ANSI: cardinality is checked against MATCHED keys below
+    val srcUncached = if (latestWins) latestPerKey(src0, sh) else src0
+    if (mor && !nmbs && plansOnDriver(spark, sh, srcUncached))
+      return mergeOnReadOnDriver(st, sh, src0, runId, log, t0, propertyUpdates)
     // ONE materialization of the normalized source for ANSI merges:
     // touched-file planning, the ANSI cardinality check and the full-outer
     // rewrite join all consume it, and uncached each re-executed the whole
@@ -331,11 +324,6 @@ object Merge {
       else srcUncached
     try {
 
-    val nmbsSetCols: Set[String] = notMatchedBySourceSet.map(_._2.keySet).getOrElse(Set.empty)
-    nmbsSetCols.foreach(c => require(cols.contains(c), s"NOT MATCHED BY SOURCE assigns unknown column $c"))
-    nmbsSetCols.intersect(keyCols.toSet).headOption.foreach(c =>
-      throw new IllegalArgumentException(s"NOT MATCHED BY SOURCE must not assign key column $c"))
-
     val leadDt = schema.fields.find(_.name == keyCols.head).get.dataType
     // `_noop` rows join (their targets are "matched by source") but must
     // not WIDEN the rewrite: a file is only touched by keys some clause
@@ -346,10 +334,10 @@ object Merge {
     // and planning on src0 turns the planning pass into a column-pruned
     // key scan instead of a full execution of the dedup window (which
     // then runs exactly once, inside the rewrite join). Duplicate keys
-    // are harmless to touchedFiles (it distincts file ids).
+    // are harmless to touchedFiles (it collects a set of file ids).
     val planSrc =
       if (latestWins) src0
-      else if (src.columns.contains("_noop")) src.filter(!coalesce(col("_noop"), lit(false)))
+      else if (sh.hasNoop) src.filter(!coalesce(col("_noop"), lit(false)))
       else src
     // ANSI duplicate-key probe launched CONCURRENTLY with touched-file
     // planning (guide §2.6 — overlap independent jobs): both consume only
@@ -360,7 +348,7 @@ object Merge {
       if (latestWins) None
       else {
         val noopFlag =
-          if (src.columns.contains("_noop")) coalesce(col("_noop"), lit(false)) else lit(false)
+          if (sh.hasNoop) coalesce(col("_noop"), lit(false)) else lit(false)
         val dupsDf = src.groupBy(keyC: _*)
           .agg(count(lit(1)).as("_cnt"),
             sum(when(noopFlag, 0L).otherwise(1L)).as("_modifying"))
@@ -417,7 +405,7 @@ object Merge {
       // exist at all. (A .limit(1).collect() would run the groupBy through
       // CollectLimit's sequential partition batches.)
       val noopFlag =
-        if (src.columns.contains("_noop")) coalesce(col("_noop"), lit(false)) else lit(false)
+        if (sh.hasNoop) coalesce(col("_noop"), lit(false)) else lit(false)
       val dups = src.groupBy(keyC: _*)
         .agg(count(lit(1)).as("_cnt"),
           sum(when(noopFlag, 0L).otherwise(1L)).as("_modifying"))
@@ -429,9 +417,7 @@ object Merge {
         val offending = dups.select(keyC: _*).join(
           base.select(keyC: _*), keyCols, "left_semi")
         for (ex <- offending.limit(1).collect().headOption)
-          throw new IllegalArgumentException(
-            s"MERGE source has multiple rows for matched key '${ex.toSeq.mkString(",")}' " +
-              s"(a target row must not be modified by more than one source row)")
+          throw duplicateKeyError(ex.toSeq)
       }
     }
 
@@ -469,64 +455,14 @@ object Merge {
     // in the rewrite output (keys where any duplicate MODIFIES errored
     // above; latestWins dedups by version window instead)
     val srcJ =
-      if (!latestWins && src.columns.contains("_noop")) {
+      if (!latestWins && sh.hasNoop) {
         val noopC = coalesce(col("_noop"), lit(false))
         src.filter(!noopC).unionByName(src.filter(noopC).dropDuplicates(keyCols))
       } else src
     val s = srcJ.withColumn("_s_present", lit(true)).alias("s")
     val joinCond = keyCols.map(k => t(k) === s(k)).reduce(_ && _)
     val joined = t.join(s, joinCond, "full_outer")
-    val sP = coalesce(s("_s_present"), lit(false))
-    val tP = coalesce(t("_t_present"), lit(false))
-    val del = coalesce(s("_deleted"), lit(false))
-    val noop =
-      if (source.columns.contains("_noop")) coalesce(s("_noop"), lit(false)) else lit(false)
-    val applies =
-      if (latestWins) sP && tP && s(versionCol) >= t(versionCol)
-      else sP && tP
-    // unmatched target rows: kept, unless a NOT MATCHED BY SOURCE DELETE fires
-    val keepUnmatchedTarget =
-      notMatchedBySourceDelete.map(_ => !t("_nmbs_del")).getOrElse(lit(true))
-    val keep = when(!sP, keepUnmatchedTarget)
-      .when(applies && del, lit(false)) // newest change is a delete
-      .when(!tP && del, lit(false)) // delete for an absent key: no-op
-      .when(!tP && noop, lit(false)) // presence assertion for an absent key
-      .otherwise(lit(true))
-    // a source may legitimately omit schema columns it never writes (e.g. a
-    // column-level UPDATE with no INSERT clause): full-row images read
-    // missing source columns as typed NULLs — the branches referencing them
-    // are unreachable for such sources, but Catalyst resolves them anyway.
-    // Membership follows the session resolver (case-insensitive by default),
-    // like the column resolution s(c) itself performs.
-    val resolver = spark.sessionState.analyzer.resolver
-    val srcCols = src.columns.toSeq
-    def sOr(c: String, dt: org.apache.spark.sql.types.DataType): Column =
-      if (srcCols.exists(resolver(_, c))) s(c) else lit(null).cast(dt)
-    val imageCols: Seq[Column] = schema.fields.toSeq.map { f =>
-        val c = f.name
-        val updImage = if (setCols.isEmpty) sOr(c, f.dataType)
-          else if (setCols.contains(c)) {
-            val v = s(s"_set_$c").cast(f.dataType)
-            // per-row mask: the firing clause may not assign this column
-            if (setwCols.contains(c))
-              when(coalesce(s(s"_setw_$c"), lit(false)), v).otherwise(t(c))
-            else v
-          } else t(c)
-        val insImage = if (insCols.isEmpty) sOr(c, f.dataType)
-          else if (insCols.contains(c)) {
-            val v = s(s"_ins_$c").cast(f.dataType)
-            if (inswCols.contains(c))
-              when(coalesce(s(s"_insw_$c"), lit(false)), v) // else NULL
-            else v
-          } else if (keyCols.contains(c)) s(c) // key columns always carry over
-          else lit(null).cast(f.dataType)
-        val withMain = when(applies && !del && !noop, updImage)
-          .when(!tP && sP, insImage) // insert (del rows were filtered above)
-        (if (nmbsSetCols.contains(c))
-          withMain.when(!sP && t("_nmbs_upd"), t(s"_tset_$c").cast(f.dataType))
-        else withMain)
-          .otherwise(t(c)).as(c)
-      }
+    val c = clauses(sh, t(_), s(_))
 
     val totalBytes = math.max(touched.map(_.bytes).sum, 1L)
     // Size the JOIN shuffle by DATA, not the session's partition default:
@@ -581,27 +517,34 @@ object Merge {
       }
     }
 
-    // the MoR branch runs the SAME full-outer SMJ, so it needs the same
-    // data-sized shuffle (the CLAUDE.md sort-heavy-op rule): without it a
-    // 10 GB MoR merge sorts ~300 MB per task at session-default partitions
+    // merge-on-read over the join: the SAME full-outer SMJ, so it needs the
+    // same data-sized shuffle (the sort-heavy-op rule): without it a 10 GB
+    // MoR merge sorts ~300 MB per task at session-default partitions
     if (mor)
       return withJoinShuffleSizedByData {
-        mergeOnRead(st, joined, imageCols, keyCols, runId, log, touched,
-          sP, tP, del, noop, applies,
-          nmbsDel = if (notMatchedBySourceDelete.nonEmpty) coalesce(t("_nmbs_del"), lit(false)) else lit(false),
-          nmbsUpd = if (notMatchedBySourceSet.nonEmpty) coalesce(t("_nmbs_upd"), lit(false)) else lit(false),
-          posRel = t("_gdv_rel"), posIdx = t("_gdv_idx"), t0 = t0,
-          propertyUpdates = propertyUpdates)
+        val changed = joined.filter(c.dvRow || c.writeRow)
+          .select(c.image ++ Seq(t("_gdv_rel").as("_gdv_rel"), t("_gdv_idx").as("_gdv_idx"),
+            c.dvRow.as("_dv"), c.writeRow.as("_wr")): _*)
+        // ONE join execution feeds both outputs: the changed set is the MoR
+        // niche (small relative to touched bytes), so persisting it is the
+        // cheap side of re-running the full-outer join twice
+        changed.persist()
+        try commitMergePos(st, sh, runId, log, touched,
+            DeletionVectors.collect(changed.filter(col("_dv"))),
+            Some(changed.filter(col("_wr")).select(cols.map(col): _*)), "join", t0, propertyUpdates)
+        finally changed.unpersist()
       }
 
     val merged = joined
-      .filter(keep)
-      .select(imageCols: _*)
+      .filter(c.keep)
+      .select(c.image: _*)
 
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     val commitUuid = s"merge-$runId"
     val dir = s"${table.dataDir}/$commitUuid"
-    if (!(log.doneSteps.contains("rewrite") && graft.table.FileIO.exists(s"$dir/_SUCCESS"))) withJoinShuffleSizedByData {
+    val written: Option[Seq[DataFileMeta]] =
+      if (log.doneSteps.contains("rewrite") && graft.table.FileIO.exists(s"$dir/_SUCCESS")) None
+      else withJoinShuffleSizedByData {
       graft.table.FileIO.deleteRecursively(dir)
       spark.sparkContext.setJobDescription(s"merge $runId (${touched.size} touched files)")
       // range-partition the merged output on the leading key WITHOUT sampling
@@ -634,14 +577,14 @@ object Merge {
             else boundStrs.reduce(graft.functions.OrderedEncoding.lcp(_, _)).length
           case _ => 0
         }
-        // binary, nested: no Long-sized encoding — forType returns None and
-        // the merge output hash-scatters instead (wide decimals p <= 38
-        // steer via the monotone nearest-double embedding since r6).
-        // BooleanType is encodable but its 2-value key space degenerates
-        // equi-depth boundaries to <=2 populated partitions — a
-        // boolean-leading merge would funnel its whole sort through 1-2
-        // tasks; hash scatter keeps the rewrite parallel (range bounds on
-        // a 2-value lead key carry no pruning power anyway)
+        // every key type touchedFiles accepts (Bounds.supported: no binary,
+        // no nested) has a Long-sized encoding — wide decimals p <= 38 steer
+        // via the monotone nearest-double embedding since r6. BooleanType
+        // is encodable but its 2-value key space degenerates equi-depth
+        // boundaries to <=2 populated partitions — a boolean-leading merge
+        // would funnel its whole sort through 1-2 tasks; hash scatter keeps
+        // the rewrite parallel (range bounds on a 2-value lead key carry no
+        // pruning power anyway)
         leadDt match {
           case BooleanType => None
           case _ => graft.functions.OrderedEncoding.forType(leadDt, col(keyCols.head), lcpLen)
@@ -686,14 +629,17 @@ object Merge {
       val touchedRows = touched.map(_.rows).sum
       val rollRecords = if (nOut <= 1 || touchedRows == 0) 0L
         else math.max(1L, touchedRows / nOut)
-      st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid,
+      val metas = st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid,
         maxRecordsPerFile = rollRecords)
       Maintenance.markDone(table, log, "rewrite")
+      Some(metas)
     }
-    // drop all-empty outputs (an empty range partition writes a 0-row file
-    // with no stats — pure planning overhead in the manifest)
-    val added = graft.table.StatsCollector.collect(
-      spark, schema, table.root, graft.table.FileIO.listFilesRecursively(dir, ".parquet"), commitUuid)
+    // the footers of a rewrite staged by an earlier, crashed attempt are
+    // read back from its dir; drop all-empty outputs (an empty range
+    // partition writes a 0-row file with no stats — pure planning overhead
+    // in the manifest)
+    val added = written.getOrElse(graft.table.StatsCollector.collect(
+      spark, schema, table.root, graft.table.FileIO.listFilesRecursively(dir, ".parquet"), commitUuid))
       .filter(_.rows > 0)
     val committed = table.replaceFiles(touched.map(_.path).toSet, added, "merge",
       Map("run-id" -> runId, "touched-files" -> touched.size.toString),
@@ -711,80 +657,284 @@ object Merge {
     }
   }
 
-  /**
-   * Merge-on-read output assembly (Iceberg's `write.merge.mode =
-   * merge-on-read`): changed target rows' (file, position) tuples become a
-   * deletion-vector blob and the updated/inserted images a plain append —
-   * ONE `merge-pos` commit, no touched file rewritten. The join and image
-   * projection are EXACTLY the copy-on-write path's (same clause matrix,
-   * same semantics); only the output shape differs, so a trickle upsert on
-   * a 100 TB table writes the changed rows, not the touched files. A later
-   * delete-pressure compaction (or any rewrite) materializes the DVs.
-   */
-  private def mergeOnRead(
-      st: TableState,
-      joined: DataFrame,
-      imageCols: Seq[Column],
+  /** What a merge's source and clauses look like: the table, the keys, the
+    * semantics, and the reserved columns (see the class doc) the normalized
+    * source carries. */
+  private final case class Shape(
+      schema: StructType,
       keyCols: Seq[String],
-      runId: String,
-      log: graft.table.StepLog,
-      touched: Seq[DataFileMeta],
-      sP: Column, tP: Column, del: Column, noop: Column, applies: Column,
-      nmbsDel: Column, nmbsUpd: Column,
-      posRel: Column, posIdx: Column, t0: Long,
-      propertyUpdates: Map[String, String] = Map.empty): Snapshot = {
-    val table = st.table
-    val spark = table.spark
+      versionCol: String,
+      latestWins: Boolean,
+      srcCols: Seq[String],
+      resolver: (String, String) => Boolean,
+      nmbsDelete: Boolean,
+      nmbsUpdate: Boolean,
+      nmbsSetCols: Set[String]) {
+    private def reserved(prefix: String): Set[String] =
+      srcCols.collect { case c if c.startsWith(prefix) => c.stripPrefix(prefix) }.toSet
+    /** `_set_<c>`: column-level update image; `_setw_<c>` its per-row mask. */
+    val setCols: Set[String] = reserved("_set_")
+    val setwCols: Set[String] = reserved("_setw_")
+    /** `_ins_<c>`: column-level insert image; `_insw_<c>` its per-row mask. */
+    val insCols: Set[String] = reserved("_ins_")
+    val inswCols: Set[String] = reserved("_insw_")
+    val hasNoop: Boolean = srcCols.contains("_noop")
+    /** Whether the source has column `c`, under the session resolver
+      * (case-insensitive by default), like resolving `s(c)` itself. */
+    def srcHas(c: String): Boolean = srcCols.exists(resolver(_, c))
+  }
+
+  /** The clause matrix of a merge over one row of its full-outer (target,
+    * source) pairing: which target rows stay in a rewrite (`keep`), which
+    * leave their file as a DV entry (`dvRow`), which pairs append an image
+    * (`writeRow`), and the image itself, one column per table column. */
+  private final case class Clauses(keep: Column, dvRow: Column, writeRow: Column, image: Seq[Column])
+
+  /** [[Clauses]] over accessors of one pair: `t(c)`/`s(c)` read the
+    * target/source column `c`, and `_t_present`/`_s_present` say which sides
+    * exist. The join plan evaluates it over the joined rows and the driver
+    * plan over a local relation of the pairs it found, so both plans share
+    * every clause's semantics. */
+  private def clauses(sh: Shape, t: String => Column, s: String => Column): Clauses = {
+    val sP = coalesce(s("_s_present"), lit(false))
+    val tP = coalesce(t("_t_present"), lit(false))
+    val del = coalesce(s("_deleted"), lit(false))
+    val noop = if (sh.hasNoop) coalesce(s("_noop"), lit(false)) else lit(false)
+    val applies =
+      if (sh.latestWins) sP && tP && s(sh.versionCol) >= t(sh.versionCol)
+      else sP && tP
+    val nmbsDel = if (sh.nmbsDelete) coalesce(t("_nmbs_del"), lit(false)) else lit(false)
+    val nmbsUpd = if (sh.nmbsUpdate) coalesce(t("_nmbs_upd"), lit(false)) else lit(false)
+    // unmatched target rows: kept, unless a NOT MATCHED BY SOURCE DELETE fires
+    val keep = when(!sP, !nmbsDel)
+      .when(applies && del, lit(false)) // newest change is a delete
+      .when(!tP && del, lit(false)) // delete for an absent key: no-op
+      .when(!tP && noop, lit(false)) // presence assertion for an absent key
+      .otherwise(lit(true))
+    // a source may legitimately omit schema columns it never writes (e.g. a
+    // column-level UPDATE with no INSERT clause): full-row images read
+    // missing source columns as typed NULLs — the branches referencing them
+    // are unreachable for such sources, but Catalyst resolves them anyway
+    def sOr(c: String, dt: DataType): Column = if (sh.srcHas(c)) s(c) else lit(null).cast(dt)
+    val image = sh.schema.fields.toSeq.map { f =>
+      val c = f.name
+      val updImage = if (sh.setCols.isEmpty) sOr(c, f.dataType)
+        else if (sh.setCols.contains(c)) {
+          val v = s(s"_set_$c").cast(f.dataType)
+          // per-row mask: the firing clause may not assign this column
+          if (sh.setwCols.contains(c))
+            when(coalesce(s(s"_setw_$c"), lit(false)), v).otherwise(t(c))
+          else v
+        } else t(c)
+      val insImage = if (sh.insCols.isEmpty) sOr(c, f.dataType)
+        else if (sh.insCols.contains(c)) {
+          val v = s(s"_ins_$c").cast(f.dataType)
+          if (sh.inswCols.contains(c))
+            when(coalesce(s(s"_insw_$c"), lit(false)), v) // else NULL
+          else v
+        } else if (sh.keyCols.contains(c)) s(c) // key columns always carry over
+        else lit(null).cast(f.dataType)
+      val withMain = when(applies && !del && !noop, updImage)
+        .when(!tP && sP, insImage) // insert (del rows were filtered above)
+      (if (sh.nmbsSetCols.contains(c))
+        withMain.when(!sP && nmbsUpd, t(s"_tset_$c").cast(f.dataType))
+      else withMain)
+        .otherwise(t(c)).as(c)
+    }
+    // merge-on-read: a target row leaves its file iff a matched clause fires
+    // for it (update OR delete) or a NOT MATCHED BY SOURCE action hits it;
+    // an image is appended for updates and inserts (deletes only produce
+    // the DV entry)
     val matchedFires = applies && !noop
-    // a target row leaves its file iff a matched clause fires for it (update
-    // OR delete) or a NOT MATCHED BY SOURCE action hits it; an image is
-    // appended for updates and inserts (deletes only produce the DV entry)
     val dvRow = tP && (matchedFires || (!sP && (nmbsDel || nmbsUpd)))
     val writeRow = (matchedFires && !del) || (!tP && sP && !del && !noop) || (!sP && nmbsUpd)
-    val changed = joined.filter(dvRow || writeRow)
-      .select(imageCols ++ Seq(posRel.as("_gdv_rel"), posIdx.as("_gdv_idx"),
-        dvRow.as("_dv"), writeRow.as("_wr")): _*)
-    // ONE join execution feeds both outputs: the changed set is the MoR
-    // niche (small relative to touched bytes), so persisting it is the
-    // cheap side of re-running the full-outer join twice
-    changed.persist()
-    try {
-      // a crashed earlier attempt's blob is overwritten in place
-      val dvs = DeletionVectors.write(table.root, s"dvm-$runId",
-        DeletionVectors.collect(changed.filter(col("_dv"))))
-      val outUuid = s"merge-$runId"
+    Clauses(keep, dvRow, writeRow, image)
+  }
+
+  /** The latest change per key tuple: greatest version wins; delete beats
+    * upsert on ties. */
+  private def latestPerKey(df: DataFrame, sh: Shape): DataFrame = {
+    val w = Window.partitionBy(sh.keyCols.map(col): _*)
+      .orderBy(col(sh.versionCol).desc, col("_deleted").desc)
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+  }
+
+  private def duplicateKeyError(key: Seq[Any]): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"MERGE source has multiple rows for matched key '${key.mkString(",")}' " +
+        s"(a target row must not be modified by more than one source row)")
+
+  /** Whether a merge-on-read merge of the normalized source `src` plans on
+    * the driver ([[mergeOnReadOnDriver]]): the optimizer's size estimate of
+    * `src` is within `spark.sql.autoBroadcastJoinThreshold` (`-1` turns the
+    * driver plan off), and every key column has the target's type and a
+    * type whose driver-side equality is Spark's join equality (no float or
+    * double: NaN and -0.0; no binary or nested type). NOT MATCHED BY SOURCE
+    * merges never get here: they need every candidate file's rows. */
+  private def plansOnDriver(spark: org.apache.spark.sql.SparkSession, sh: Shape,
+      src: DataFrame): Boolean = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    def driverEquality(dt: DataType): Boolean = dt match {
+      case FloatType | DoubleType => false
+      case st: StringType => org.apache.spark.sql.graftshim.Shims.binaryEquality(st)
+      case other => Bounds.supported(other)
+    }
+    threshold >= 0 &&
+      sh.keyCols.forall { k =>
+        val dt = sh.schema(k).dataType
+        driverEquality(dt) && src.schema.fields.exists(f => sh.resolver(f.name, k) && f.dataType == dt)
+      } &&
+      src.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+  }
+
+  /**
+   * The merge-on-read merge of a small source, planned on the driver in at
+   * most three Spark jobs: collect the normalized source; scan the touched
+   * files once for the live rows whose keys the source names; write the
+   * images. Everything between runs on the driver with no job: the
+   * touched-file probe over the collected keys, the pairing of source rows
+   * with matched rows (a NULL key never matches), the ANSI duplicate-key
+   * check, the clause matrix ([[clauses]] over a local relation of the
+   * pairs — the optimizer folds a Filter or Project over a LocalRelation
+   * into a new LocalRelation) and the DV bitmaps.
+   */
+  private def mergeOnReadOnDriver(st: TableState, sh: Shape, src0: DataFrame, runId: String,
+      log: graft.table.StepLog, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
+    import scala.jdk.CollectionConverters._
+    val spark = st.table.spark
+    val schema = st.schema
+    val keyCols = sh.keyCols
+    // one partition satisfies the version window's distribution: the window
+    // runs without an exchange
+    val srcDf = if (sh.latestWins) latestPerKey(src0.coalesce(1), sh) else src0
+    val srcRows = srcDf.collect().toSeq
+    val srcSchema = srcDf.schema
+    val srcKeyIdx = keyCols.map(k => srcSchema.fieldNames.indexWhere(sh.resolver(_, k)))
+    // key tuples compare as JVM values: the gate admits only key types whose
+    // JVM equality is Spark's, and equal source and target types (so equal
+    // decimal scales); a tuple with a NULL never matches
+    def keyOf(r: Row, idx: Seq[Int]): Option[Seq[Any]] = Some(idx.map(r.get)).filterNot(_.contains(null))
+    val noopIdx = srcSchema.fieldNames.indexOf("_noop")
+    def isNoop(r: Row): Boolean = noopIdx >= 0 && !r.isNullAt(noopIdx) && r.getBoolean(noopIdx)
+    // `_noop` rows never widen the touched set: no clause fires for them
+    val probeKeys = srcRows.filterNot(isNoop).flatMap(r => keyOf(r, srcKeyIdx)).distinct
+    val touched = touchedFiles(st, spark.createDataFrame(probeKeys.map(Row.fromSeq).asJava,
+      StructType(keyCols.zip(srcKeyIdx).map { case (k, i) => srcSchema(i).copy(name = k) })), keyCols)
+    // the matched target rows, grouped by key tuple: key, version and
+    // position, plus every target column when an update image keeps some
+    val tNeeded = (keyCols ++
+      (if (sh.setCols.nonEmpty) schema.fieldNames.toSeq
+      else Seq(sh.versionCol).filter(_ => sh.latestWins))).distinct
+    val matched: Map[Seq[Any], Seq[Row]] =
+      if (touched.isEmpty || probeKeys.isEmpty) Map.empty
+      else {
+        // one IN set per key column: a superset of the key tuples, pushed
+        // into the scan; the pairing below matches whole tuples
+        val inKeys = keyCols.indices.map(j => col(keyCols(j)).isInCollection(probeKeys.map(_(j)).distinct))
+          .reduce(_ && _)
+        st.withPositionDeletesKeepingPos(targetScan(st, touched, keyCols), touched)
+          .filter(inKeys).select((tNeeded ++ Seq("_gdv_rel", "_gdv_idx")).map(col): _*)
+          .collect().toSeq.groupBy(r => keyOf(r, keyCols.indices))
+          .collect { case (Some(k), rs) => k -> rs }
+      }
+    if (!sh.latestWins)
+      srcRows.groupBy(r => keyOf(r, srcKeyIdx)).collectFirst {
+        case (Some(k), rs) if rs.size > 1 && rs.exists(!isNoop(_)) && matched.contains(k) => k
+      }.foreach(k => throw duplicateKeyError(k))
+    // the pairs, as the full-outer join would emit them minus unmatched
+    // target rows (no clause acts on those without NOT MATCHED BY SOURCE):
+    // target columns at _t<i> (those not read stay NULL), then presence and
+    // position; source columns at _s<j>, then presence
+    val tNames = schema.fieldNames.toSeq ++ Seq("_t_present", "_gdv_rel", "_gdv_idx")
+    val sNames = srcSchema.fieldNames.toSeq :+ "_s_present"
+    val tSlots = tNeeded.map(schema.fieldNames.indexOf(_)) ++ (schema.size + 1 to schema.size + 2)
+    def targetSide(r: Row): Array[Any] = {
+      val out = new Array[Any](tNames.size)
+      tSlots.zipWithIndex.foreach { case (slot, j) => out(slot) = r.get(j) }
+      out(schema.size) = true
+      out
+    }
+    val absent = new Array[Any](tNames.size)
+    val pairRows = srcRows.flatMap { r =>
+      val sSide = r.toSeq :+ true
+      keyOf(r, srcKeyIdx).flatMap(matched.get) match {
+        case Some(ts) => ts.map(t => Row.fromSeq(targetSide(t).toSeq ++ sSide))
+        case None => Seq(Row.fromSeq(absent.toSeq ++ sSide))
+      }
+    }
+    val pairSchema = StructType(
+      (schema.fields.map(_.dataType) ++ Seq(BooleanType, StringType, LongType)).zipWithIndex
+        .map { case (dt, i) => StructField(s"_t$i", dt) } ++
+        (srcSchema.fields.map(_.dataType) :+ BooleanType).zipWithIndex
+          .map { case (dt, j) => StructField(s"_s$j", dt) })
+    def side(names: Seq[String], prefix: String)(c: String): Column = {
+      val i = names.indexWhere(sh.resolver(_, c))
+      require(i >= 0, s"no column $c on the merge's $prefix side")
+      col(s"$prefix$i")
+    }
+    val c = clauses(sh, side(tNames, "_t"), side(sNames, "_s"))
+    val n = schema.size
+    val changed = spark.createDataFrame(pairRows.asJava, pairSchema)
+      .filter(c.dvRow || c.writeRow)
+      .select(c.image ++ Seq(col(s"_t${n + 1}"), col(s"_t${n + 2}"),
+        c.dvRow.as("_dv"), c.writeRow.as("_wr")): _*)
+    val rows = changed.collect()
+    def flag(r: Row, i: Int): Boolean = !r.isNullAt(i) && r.getBoolean(i)
+    val images = rows.filter(flag(_, n + 3)).map(r => Row.fromSeq(r.toSeq.take(n))).toSeq
+    commitMergePos(st, sh, runId, log, touched,
+      DeletionVectors.of(rows.iterator.filter(flag(_, n + 2)).map(r => (r.getString(n), r.getLong(n + 1)))),
+      Some(images).filter(_.nonEmpty).map(is =>
+        spark.createDataFrame(is.asJava, StructType(changed.schema.take(n))).coalesce(1)),
+      "driver", t0, propertyUpdates)
+  }
+
+  /**
+   * Merge-on-read output (Iceberg's `write.merge.mode = merge-on-read`):
+   * the changed target rows' DV `bitmaps` become one blob and the updated
+   * and inserted `images` (None: none) a plain append — ONE `merge-pos`
+   * commit, no touched file rewritten, so a trickle upsert on a 100 TB
+   * table writes the changed rows, not the touched files. A later
+   * delete-pressure compaction (or any rewrite) materializes the DVs.
+   * Both merge-on-read plans commit here; the summary's `merge-plan`
+   * names which one ran (`join` or `driver`).
+   */
+  private def commitMergePos(st: TableState, sh: Shape, runId: String, log: graft.table.StepLog,
+      touched: Seq[DataFileMeta], bitmaps: DeletionVectors.Bitmaps, images: Option[DataFrame],
+      plan: String, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
+    val table = st.table
+    // a crashed earlier attempt's blob is overwritten in place
+    val dvs = DeletionVectors.write(table.root, s"dvm-$runId", bitmaps)
+    val outUuid = s"merge-$runId"
+    graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
+    // appended images sort by key within each task: new files carry tight
+    // key bounds for the NEXT merge's touchedFiles pruning
+    val added = images.toSeq.flatMap(df =>
+      st.writeDataFiles(df.sortWithinPartitions(sh.keyCols.map(col): _*), outUuid))
+      .filter(_.rows > 0)
+    if (dvs.isEmpty && added.isEmpty) {
+      // no-op MoR merge (e.g. a delete-only batch over absent keys):
+      // clean the unreferenced staging dir, then COMMIT an empty
+      // merge-pos snapshot — same externally-observable behavior as the
+      // CoW path's empty commit, and markCommitted keeps the runId
+      // idempotently re-runnable (a bare return would strand its StepLog)
       graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
-      val outCols = st.schema.fieldNames.toSeq
-      // appended images sort by key within each task: new files carry tight
-      // key bounds for the NEXT merge's touchedFiles pruning
-      val added = st.writeDataFiles(
-        changed.filter(col("_wr")).select(outCols.map(col): _*)
-          .sortWithinPartitions(keyCols.map(col): _*),
-        outUuid).filter(_.rows > 0)
-      if (dvs.isEmpty && added.isEmpty) {
-        // no-op MoR merge (e.g. a delete-only batch over absent keys):
-        // clean the unreferenced staging dir, then COMMIT an empty
-        // merge-pos snapshot — same externally-observable behavior as the
-        // CoW path's empty commit, and markCommitted keeps the runId
-        // idempotently re-runnable (a bare return would strand its StepLog)
-        graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
-      }
-      val committed = table.commitFull("merge-pos", expectedSnapshotId = st.snapshot.map(_.id),
-          propertyUpdates = propertyUpdates) { parent =>
-        (parent.map(_.manifests).getOrElse(Seq.empty) ++
-            (if (added.nonEmpty) Seq(table.writeManifest(added)) else Nil),
-          Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) ++
-            (if (dvs.nonEmpty) Seq(table.writeDvManifest(dvs)) else Nil)),
-          Map("run-id" -> runId, "touched-files" -> touched.size.toString,
-            "position-deletes-added" -> dvs.map(_.cardinality).sum.toString,
-            "added-files" -> added.size.toString,
-            "added-rows" -> added.map(_.rows).sum.toString))
-      }
-      Maintenance.markCommitted(table, log, committed.id)
-      Lineage.record(spark, table, runId, committed.id, "merge-pos", added,
-        added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
-      committed
-    } finally changed.unpersist()
+    }
+    val committed = table.commitFull("merge-pos", expectedSnapshotId = st.snapshot.map(_.id),
+        propertyUpdates = propertyUpdates) { parent =>
+      (parent.map(_.manifests).getOrElse(Seq.empty) ++
+          (if (added.nonEmpty) Seq(table.writeManifest(added)) else Nil),
+        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) ++
+          (if (dvs.nonEmpty) Seq(table.writeDvManifest(dvs)) else Nil)),
+        Map("run-id" -> runId, "touched-files" -> touched.size.toString,
+          "merge-plan" -> plan,
+          "position-deletes-added" -> dvs.map(_.cardinality).sum.toString,
+          "added-files" -> added.size.toString,
+          "added-rows" -> added.map(_.rows).sum.toString))
+    }
+    Maintenance.markCommitted(table, log, committed.id)
+    Lineage.record(table.spark, table, runId, committed.id, "merge-pos", added,
+      added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
+    committed
   }
 
   /**
@@ -909,4 +1059,43 @@ object Merge {
       added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
     committed
   }
+}
+
+/** The candidate files of one canonical key row of [[Merge.touchedFiles]]
+  * (leading key, residual keys, then one bucket id per bucket spec): the
+  * interval index stabs the leading key, then the residual bounds and the
+  * bucket dirs filter its window. Serializable: the probe job ships it in
+  * its task binary, and a driver-side probe calls it directly. */
+private final class TouchedCandidates(
+    index: IntervalIndex,
+    resDts: Array[DataType],
+    resMin: Array[Array[String]],
+    resMax: Array[Array[String]],
+    fileBuckets: Array[Array[Int]]) extends Serializable {
+
+  def apply(r: org.apache.spark.sql.Row): Seq[Int] =
+    if (r.isNullAt(0)) Seq.empty
+    else {
+      val bOff = 1 + resDts.length
+      index.overlapping(r.getString(0)).filter { fid =>
+        var ok = true
+        var j = 0
+        while (ok && j < resDts.length) {
+          if (!r.isNullAt(j + 1)) {
+            val v = r.getString(j + 1)
+            val lo = resMin(j)(fid); val hi = resMax(j)(fid)
+            if (lo != null && Bounds.compare(resDts(j), v, lo) < 0) ok = false
+            else if (hi != null && Bounds.compare(resDts(j), v, hi) > 0) ok = false
+          }
+          j += 1
+        }
+        var s = 0
+        while (ok && s < fileBuckets.length) {
+          val b = fileBuckets(s)(fid)
+          if (b >= 0 && !r.isNullAt(bOff + s) && r.getInt(bOff + s) != b) ok = false
+          s += 1
+        }
+        ok
+      }
+    }
 }

@@ -18,7 +18,7 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
  * in-memory [[Bitmaps]].
  *
  * A DV-writing commit gathers its positions per data file in one Spark job
- * ([[collect]]), writes all its bitmaps back to back into one blob file
+ * ([[collect]]) or on the driver ([[of]]), writes all its bitmaps back to back into one blob file
  * `data/<commit-uuid>/deletes.dv`, and records one [[DvMeta]] per data file
  * ([[write]]). Entries are additive: a later delete of the same file adds
  * another entry, and readers OR a file's entries. A rewrite of a data file
@@ -90,15 +90,22 @@ object DeletionVectors {
   /** Cache key of `e`'s bitmap under table `root`. */
   private def keyOf(root: String, e: DvMeta): String = s"$root/${e.blob}#${e.offset}"
 
+  /** The bitmaps of `positions`, each a (data file, row position) pair. */
+  def of(positions: IterableOnce[(String, Long)]): Bitmaps = {
+    val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
+    positions.iterator.foreach { case (f, pos) => out.getOrElseUpdate(f, new Roaring64Bitmap()).addLong(pos) }
+    out.valuesIterator.foreach(_.runOptimize())
+    out.toMap
+  }
+
   /** The positions of `rows`, per data file: `_gdv_rel`/`_gdv_idx` as
     * [[TableState.withPositionDeletesKeepingPos]] adds them. ONE Spark job:
-    * each task builds its partition's bitmaps and ships them serialized. */
+    * each task builds its partition's bitmaps ([[of]]) and ships them
+    * serialized. */
   def collect(rows: DataFrame): Bitmaps = {
     import rows.sparkSession.implicits._
     val parts = rows.select("_gdv_rel", "_gdv_idx").as[(String, Long)].mapPartitions { it =>
-      val out = scala.collection.mutable.HashMap.empty[String, Roaring64Bitmap]
-      it.foreach { case (f, pos) => out.getOrElseUpdate(f, new Roaring64Bitmap()).addLong(pos) }
-      out.iterator.map { case (f, b) => b.runOptimize(); (f, serialize(b)) }
+      of(it).iterator.map { case (f, b) => (f, serialize(b)) }
     }.collect()
     union(parts.toSeq.map { case (f, bytes) => f -> deserialize(bytes) })
   }

@@ -22,6 +22,10 @@ object Shims {
     }
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** Whether values of `dt` are equal exactly when their bytes are (the
+    * default UTF8_BINARY collation), so JVM string equality is Spark's. */
+  def binaryEquality(dt: org.apache.spark.sql.types.StringType): Boolean = dt.supportsBinaryEquality
+
   /**
    * Resolve a user predicate against `schema` via the real analyzer (a
    * Filter over a dummy LocalRelation), then fold constant subtrees. This

@@ -35,6 +35,27 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
       .map(c => c.getPath.toDotString -> (c.getBloomFilterOffset >= 0)).toMap)
   }
 
+  /** Descriptions of the jobs `body` starts, and the number of RDD blocks
+    * stored meanwhile (a persisted RDD caches one per computed partition). */
+  def sparkJobs(body: => Any): (Seq[String], Int) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val rddBlocks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        ()
+      }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD) { rddBlocks.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(listener)
+    (descs.asScala.toSeq, rddBlocks.get)
+  }
+
   /** multiset equality of two DataFrames */
   def assertSameRows(a: DataFrame, b: DataFrame, hint: String = ""): Unit = {
     val extraA = a.exceptAll(b).count()

@@ -1,11 +1,5 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
-
 import graft.SparkSuite
 import graft.run.Synth
 import graft.table.GraftTable
@@ -18,25 +12,6 @@ import graft.table.GraftTable
  */
 class ClusterJobsSpec extends SparkSuite {
 
-  /** Descriptions of the jobs `body` starts, and the number of RDD blocks
-    * stored meanwhile (a persisted RDD caches one per computed partition). */
-  private def jobs(body: => Any): (Seq[String], Int) = {
-    val descs = new ConcurrentLinkedQueue[String]()
-    val rddBlocks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        descs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-        ()
-      }
-      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
-        if (e.blockUpdatedInfo.blockId.isRDD) { rddBlocks.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(500) } finally spark.sparkContext.removeSparkListener(listener)
-    (descs.asScala.toSeq, rddBlocks.get)
-  }
-
   private def pagesTable(name: String): GraftTable = {
     val t = GraftTable.create(spark, tmpDir(name), Synth.pageSchema)
     t.append(Synth.pages(spark, 3000, partitions = 6))
@@ -48,7 +23,7 @@ class ClusterJobsSpec extends SparkSuite {
     val expected = t.read().localCheckpoint(true)
     val target = t.files().map(_.bytes).sum / 6
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (descs, rddBlocks) = jobs(assert(Cluster.zorderRewrite(t, targetFileBytes = target,
+    val (descs, rddBlocks) = sparkJobs(assert(Cluster.zorderRewrite(t, targetFileBytes = target,
       runId = "jobs").nonEmpty))
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore, "no RDD left persisted")
     assert(rddBlocks == 0, s"$rddBlocks RDD blocks cached during the rewrite")
@@ -61,7 +36,7 @@ class ClusterJobsSpec extends SparkSuite {
   test("a one-file group runs only its write jobs") {
     val t = pagesTable("graft-cluster-jobs-one")
     val expected = t.read().localCheckpoint(true)
-    val (descs, _) = jobs(assert(Cluster.zorderRewrite(t, runId = "one").nonEmpty))
+    val (descs, _) = sparkJobs(assert(Cluster.zorderRewrite(t, runId = "one").nonEmpty))
     assert(t.files().size == 1)
     assert(descs.nonEmpty && descs.forall(_.startsWith("zorder-rewrite one")),
       s"jobs:\n${descs.mkString("\n")}")

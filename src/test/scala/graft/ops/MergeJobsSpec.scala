@@ -1,0 +1,78 @@
+package graft.ops
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSuite
+import graft.run.Synth
+import graft.table.GraftTable
+
+/**
+ * The Spark-job budget of a MERGE of a small change batch, read from
+ * parquet like a CDC landing zone. Merge-on-read plans on the driver:
+ * collect the source, scan the touched files for the matched rows, write
+ * the images — three jobs, no cached RDD. Copy-on-write runs the one-job
+ * touched-file probe, then its join and rewrite. With
+ * `spark.sql.autoBroadcastJoinThreshold = -1` merge-on-read takes the join
+ * plan, with the same result.
+ */
+class MergeJobsSpec extends SparkSuite {
+
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  private lazy val data: DataFrame = Synth.pages(spark, 600, partitions = 4).localCheckpoint(true)
+
+  private def table(name: String): GraftTable = {
+    val t = GraftTable.create(spark, tmpDir(name), Synth.pageSchema)
+    t.append(data.repartition(6))
+    t
+  }
+
+  /** 30 re-crawled urls, 10 of them deletes, plus 5 new urls, as parquet. */
+  private def changes(): DataFrame = {
+    val dir = tmpDir("graft-merge-jobs-src")
+    data.filter(regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long") % 20 === 0)
+      .withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAYS"))
+      .withColumn("text", concat(col("text"), lit("#1")))
+      .withColumn("_deleted", regexp_extract(col("url"), "/p/(\\d+)$", 1).cast("long") % 60 === 0)
+      .unionByName(data.limit(5).withColumn("url", concat(col("url"), lit("/new")))
+        .withColumn("_deleted", lit(false)))
+      .coalesce(2).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def dvRows(t: GraftTable): Long = t.positionDeletes().map(_.rows).sum
+
+  test("a small-source merge-on-read merge runs at most 3 jobs, caches nothing, and equals the join plan") {
+    val (driver, join) = (table("graft-merge-jobs-driver"), table("graft-merge-jobs-join"))
+    val src = changes()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (descs, rddBlocks) = sparkJobs {
+      assert(Merge.into(driver, src, mode = "merge-on-read").summary("merge-plan") == "driver")
+    }
+    assert(descs.size <= 3, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(rddBlocks == 0, s"$rddBlocks RDD blocks cached during the merge")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore, "no RDD left persisted")
+    spark.conf.set(Threshold, "-1")
+    try assert(Merge.into(join, src, mode = "merge-on-read").summary("merge-plan") == "join")
+    finally spark.conf.unset(Threshold)
+    assertSameRows(driver.read(), join.read(), "driver plan vs join plan")
+    assert(dvRows(driver) == dvRows(join) && dvRows(driver) == 30)
+  }
+
+  test("a copy-on-write merge runs at most 4 jobs") {
+    val t = table("graft-merge-jobs-cow")
+    val src = changes()
+    val (descs, _) = sparkJobs(Merge.into(t, src))
+    assert(descs.size <= 4, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(t.read().count() == 600 - 10 + 5)
+  }
+
+  test("the touched-file probe of a 4-partition source runs one job") {
+    val t = table("graft-merge-jobs-probe")
+    val keys = data.select("url")
+    assert(keys.rdd.getNumPartitions == 4)
+    val (descs, _) = sparkJobs(assert(Merge.touchedFiles(t, keys, "url").size == t.files().size))
+    assert(descs.size == 1, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+  }
+}

@@ -64,8 +64,8 @@ class TableStateSpec extends SparkSuite {
     assert(fileio("the parent snapshot's files") { st.at(st.snapshot.get.parentId.get).files } > 0)
   }
 
-  test("merge FileIO stays bounded: copy-on-write 17, merge-on-read 25") {
-    for ((mode, bound) <- Seq(CoW -> 17, MoR -> 25)) {
+  test("merge FileIO stays bounded: copy-on-write 14, merge-on-read 25") {
+    for ((mode, bound) <- Seq(CoW -> 14, MoR -> 25)) {
       val t = fixture(mode)
       val n = fileio(s"$mode merge")(Merge.into(t, upsert(5), Seq("url"), mode = mode))
       assert(n <= bound, s"$mode merge made $n FileIO calls")
