@@ -316,8 +316,8 @@ object SparkEntry {
           col("_fp").getItem(0).as("fp_min"))
     }),
 
-    // multimodal stub: binary column + arithmetic metadata (plumbing mirror;
-    // batched Dataset path exercised in MultimodalSpec)
+    // multimodal stub: a binary column and arithmetic metadata, in plain
+    // Spark functions
     "q23_multimodal_meta" -> ((s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("media"))

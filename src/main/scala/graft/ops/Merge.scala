@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.run.{Lineage, Maintenance}
+import graft.run.Maintenance
 import graft.table.{Bounds, DataFileMeta, DeletionVectors, GraftTable, Snapshot, TableState}
 
 /**
@@ -540,115 +540,107 @@ object Merge {
       .select(c.image: _*)
 
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val commitUuid = s"merge-$runId"
-    val dir = s"${table.dataDir}/$commitUuid"
-    val written: Option[Seq[DataFileMeta]] =
-      if (log.doneSteps.contains("rewrite") && graft.table.FileIO.exists(s"$dir/_SUCCESS")) None
+    RowLevel.rewrite(st, "merge", runId, touched,
+        Map("run-id" -> runId, "touched-files" -> touched.size.toString), t0, Some(log),
+        propertyUpdates) { commitUuid =>
+      val dir = s"${table.dataDir}/$commitUuid"
+      // the footers of a rewrite staged by an earlier, crashed attempt are
+      // read back from its dir (the writer drops all-empty outputs: an empty
+      // range partition writes a 0-row file with no stats)
+      if (log.doneSteps.contains("rewrite") && graft.table.FileIO.exists(s"$dir/_SUCCESS"))
+        graft.table.StatsCollector.collect(
+          spark, schema, table.root, graft.table.FileIO.listFilesRecursively(dir, ".parquet"), commitUuid)
       else withJoinShuffleSizedByData {
-      graft.table.FileIO.deleteRecursively(dir)
-      spark.sparkContext.setJobDescription(s"merge $runId (${touched.size} touched files)")
-      // range-partition the merged output on the leading key WITHOUT sampling
-      // the child (repartitionByRange would re-execute the full-outer join
-      // just to pick boundaries): equi-depth boundaries come from the touched
-      // files' key bounds weighted by row counts — free, from metadata.
-      // EVERY supported key type maps into an order-preserving Long space
-      // matching its canonical bound encoding (strings → 8-byte packed
-      // prefix, timestamps → epoch micros, dates → epoch days, integrals
-      // verbatim), so post-merge files carry TIGHT per-file key bounds and
-      // the NEXT merge's touchedFiles interval index prunes — a hash
-      // scatter would leave every output file spanning the whole key space
-      // (type table + shared-prefix strip live in OrderedEncoding — the
-      // same embedding generic Z-order clustering range-scales by, so one
-      // bit-identity contract covers every range-layout pass)
-      val steer: Option[(Column, String => Long)] = {
-        // an 8-char pack cannot see past a long SHARED prefix — web URLs
-        // all start "https://…", which pinned every packed key to one
-        // value and collapsed a 10 GB merge output into ONE file (found
-        // by the 10× soak). Strip the touched files' common bound prefix
-        // before packing, on both the row side and the metadata side
-        // (bounds are prefix-truncated, so their lcp is a prefix of every
-        // key's — sound). Keys outside the prefix (new inserts) only
-        // loosen bounds, never correctness.
-        val lcpLen = leadDt match {
-          case StringType =>
-            val boundStrs = touched.flatMap(f =>
-              f.minValues.get(keyCols.head) ++ f.maxValues.get(keyCols.head))
-            if (boundStrs.isEmpty) 0
-            else boundStrs.reduce(graft.functions.OrderedEncoding.lcp(_, _)).length
-          case _ => 0
+        graft.table.FileIO.deleteRecursively(dir)
+        spark.sparkContext.setJobDescription(s"merge $runId (${touched.size} touched files)")
+        // range-partition the merged output on the leading key WITHOUT sampling
+        // the child (repartitionByRange would re-execute the full-outer join
+        // just to pick boundaries): equi-depth boundaries come from the touched
+        // files' key bounds weighted by row counts — free, from metadata.
+        // EVERY supported key type maps into an order-preserving Long space
+        // matching its canonical bound encoding (strings → 8-byte packed
+        // prefix, timestamps → epoch micros, dates → epoch days, integrals
+        // verbatim), so post-merge files carry TIGHT per-file key bounds and
+        // the NEXT merge's touchedFiles interval index prunes — a hash
+        // scatter would leave every output file spanning the whole key space
+        // (type table + shared-prefix strip live in OrderedEncoding — the
+        // same embedding generic Z-order clustering range-scales by, so one
+        // bit-identity contract covers every range-layout pass)
+        val steer: Option[(Column, String => Long)] = {
+          // an 8-char pack cannot see past a long SHARED prefix — web URLs
+          // all start "https://…", which pinned every packed key to one
+          // value and collapsed a 10 GB merge output into ONE file (found
+          // by the 10× soak). Strip the touched files' common bound prefix
+          // before packing, on both the row side and the metadata side
+          // (bounds are prefix-truncated, so their lcp is a prefix of every
+          // key's — sound). Keys outside the prefix (new inserts) only
+          // loosen bounds, never correctness.
+          val lcpLen = leadDt match {
+            case StringType =>
+              val boundStrs = touched.flatMap(f =>
+                f.minValues.get(keyCols.head) ++ f.maxValues.get(keyCols.head))
+              if (boundStrs.isEmpty) 0
+              else boundStrs.reduce(graft.functions.OrderedEncoding.lcp(_, _)).length
+            case _ => 0
+          }
+          // every key type touchedFiles accepts (Bounds.supported: no binary,
+          // no nested) has a Long-sized encoding — wide decimals p <= 38 steer
+          // via the monotone nearest-double embedding since r6. BooleanType
+          // is encodable but its 2-value key space degenerates equi-depth
+          // boundaries to <=2 populated partitions — a boolean-leading merge
+          // would funnel its whole sort through 1-2 tasks; hash scatter keeps
+          // the rewrite parallel (range bounds on a 2-value lead key carry no
+          // pruning power anyway)
+          leadDt match {
+            case BooleanType => None
+            case _ => graft.functions.OrderedEncoding.forType(leadDt, col(keyCols.head), lcpLen)
+          }
         }
-        // every key type touchedFiles accepts (Bounds.supported: no binary,
-        // no nested) has a Long-sized encoding — wide decimals p <= 38 steer
-        // via the monotone nearest-double embedding since r6. BooleanType
-        // is encodable but its 2-value key space degenerates equi-depth
-        // boundaries to <=2 populated partitions — a boolean-leading merge
-        // would funnel its whole sort through 1-2 tasks; hash scatter keeps
-        // the rewrite parallel (range bounds on a 2-value lead key carry no
-        // pruning power anyway)
-        leadDt match {
-          case BooleanType => None
-          case _ => graft.functions.OrderedEncoding.forType(leadDt, col(keyCols.head), lcpLen)
+        val bds = steer.map { case (_, enc) =>
+          RangeShuffle.boundariesFromFileMeta(touched, keyCols.head, nOut, enc)
         }
+        val out =
+          if (nOut <= 1) merged
+          // bucket-on-key table: every output row's final key equals the side
+          // it joined from (image key = coalesce(t.key, s.key)), and both join
+          // inputs are HashPartitioning(key, n) — target via the bucketed scan,
+          // source shuffled to match — so each join partition IS one bucket.
+          // Catalyst reports UnknownPartitioning for a full-outer join (the
+          // per-side key attributes null-extend), but the PHYSICAL placement
+          // is exact, so the range exchange is pure waste here: writing the
+          // join output directly gives one partitionBy dir per task, and the
+          // in-partition sort + record rolling below still produce key-ordered
+          // files with tight per-file bounds WITHIN each bucket (what the next
+          // merge's interval index stabs). Net shuffle of a bucketed merge:
+          // the source rows, nothing else.
+          else if (bucketedOnKey) merged
+          else (steer, bds) match {
+            // missing/collapsed boundaries (no bounds, or a keyspace the
+            // packed encoding cannot discriminate): range steering would
+            // write a handful of oversized files — scatter instead
+            case (Some((kc, _)), Some(b)) if b.length >= math.max(1, nOut / 4) =>
+              RangeShuffle.byRange(merged, kc, b)
+            case _ => merged.repartition(nOut, keyC: _*)
+          }
+        // in-partition sort + record rolling (the compact/cluster recipe):
+        // when a Z-ordered table leaves the metadata boundaries too coarse
+        // to cut nOut ranges (every touched file spans the whole key space),
+        // each steered partition still splits into right-sized files, and
+        // the sort makes every rolled file a key-ordered run with TIGHT
+        // min/max bounds — what the NEXT merge's interval index prunes by.
+        // Rolling is sized from the TOUCHED rows and only engages when the
+        // rewrite wants several files: an insert-only merge has zero touched
+        // rows (nOut = 1) and an unconditional roll of max(1, 0/1) = 1 would
+        // write one parquet file PER ROW
+        val touchedRows = touched.map(_.rows).sum
+        val rollRecords = if (nOut <= 1 || touchedRows == 0) 0L
+          else math.max(1L, touchedRows / nOut)
+        val metas = st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid,
+          maxRecordsPerFile = rollRecords)
+        Maintenance.markDone(table, log, "rewrite")
+        metas
       }
-      val bds = steer.map { case (_, enc) =>
-        RangeShuffle.boundariesFromFileMeta(touched, keyCols.head, nOut, enc)
-      }
-      val out =
-        if (nOut <= 1) merged
-        // bucket-on-key table: every output row's final key equals the side
-        // it joined from (image key = coalesce(t.key, s.key)), and both join
-        // inputs are HashPartitioning(key, n) — target via the bucketed scan,
-        // source shuffled to match — so each join partition IS one bucket.
-        // Catalyst reports UnknownPartitioning for a full-outer join (the
-        // per-side key attributes null-extend), but the PHYSICAL placement
-        // is exact, so the range exchange is pure waste here: writing the
-        // join output directly gives one partitionBy dir per task, and the
-        // in-partition sort + record rolling below still produce key-ordered
-        // files with tight per-file bounds WITHIN each bucket (what the next
-        // merge's interval index stabs). Net shuffle of a bucketed merge:
-        // the source rows, nothing else.
-        else if (bucketedOnKey) merged
-        else (steer, bds) match {
-          // missing/collapsed boundaries (no bounds, or a keyspace the
-          // packed encoding cannot discriminate): range steering would
-          // write a handful of oversized files — scatter instead
-          case (Some((kc, _)), Some(b)) if b.length >= math.max(1, nOut / 4) =>
-            RangeShuffle.byRange(merged, kc, b)
-          case _ => merged.repartition(nOut, keyC: _*)
-        }
-      // in-partition sort + record rolling (the compact/cluster recipe):
-      // when a Z-ordered table leaves the metadata boundaries too coarse
-      // to cut nOut ranges (every touched file spans the whole key space),
-      // each steered partition still splits into right-sized files, and
-      // the sort makes every rolled file a key-ordered run with TIGHT
-      // min/max bounds — what the NEXT merge's interval index prunes by.
-      // Rolling is sized from the TOUCHED rows and only engages when the
-      // rewrite wants several files: an insert-only merge has zero touched
-      // rows (nOut = 1) and an unconditional roll of max(1, 0/1) = 1 would
-      // write one parquet file PER ROW
-      val touchedRows = touched.map(_.rows).sum
-      val rollRecords = if (nOut <= 1 || touchedRows == 0) 0L
-        else math.max(1L, touchedRows / nOut)
-      val metas = st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid,
-        maxRecordsPerFile = rollRecords)
-      Maintenance.markDone(table, log, "rewrite")
-      Some(metas)
     }
-    // the footers of a rewrite staged by an earlier, crashed attempt are
-    // read back from its dir; drop all-empty outputs (an empty range
-    // partition writes a 0-row file with no stats — pure planning overhead
-    // in the manifest)
-    val added = written.getOrElse(graft.table.StatsCollector.collect(
-      spark, schema, table.root, graft.table.FileIO.listFilesRecursively(dir, ".parquet"), commitUuid))
-      .filter(_.rows > 0)
-    val committed = table.replaceFiles(touched.map(_.path).toSet, added, "merge",
-      Map("run-id" -> runId, "touched-files" -> touched.size.toString),
-      expectedSnapshotId = snap.map(_.id),
-      propertyUpdates = propertyUpdates)
-    Maintenance.markCommitted(table, log, committed.id)
-    Lineage.record(spark, table, runId, committed.id, "merge", added,
-      added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
-    committed
     } finally {
       // release the one-merge source cache and the job label (a stale
       // description would mislabel every later job in the session's UI)
@@ -888,54 +880,20 @@ object Merge {
       "driver", t0, propertyUpdates)
   }
 
-  /**
-   * Merge-on-read output (Iceberg's `write.merge.mode = merge-on-read`):
-   * the changed target rows' DV `bitmaps` become one blob and the updated
-   * and inserted `images` (None: none) a plain append — ONE `merge-pos`
-   * commit, no touched file rewritten, so a trickle upsert on a 100 TB
-   * table writes the changed rows, not the touched files. A later
-   * delete-pressure compaction (or any rewrite) materializes the DVs.
-   * Both merge-on-read plans commit here; the summary's `merge-plan`
-   * names which one ran (`join` or `driver`).
-   */
+  /** Both merge-on-read plans commit here, one `merge-pos` commit of the
+    * changed rows' DV `bitmaps` and the `images` (None: none), sorted by key
+    * within each task for tight key bounds; `merge-plan` names the plan. */
   private def commitMergePos(st: TableState, sh: Shape, runId: String, log: graft.table.StepLog,
       touched: Seq[DataFileMeta], bitmaps: DeletionVectors.Bitmaps, images: Option[DataFrame],
-      plan: String, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
-    val table = st.table
-    // a crashed earlier attempt's blob is overwritten in place
-    val dvs = DeletionVectors.write(table.root, s"dvm-$runId", bitmaps)
-    val outUuid = s"merge-$runId"
-    graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
-    // appended images sort by key within each task: new files carry tight
-    // key bounds for the NEXT merge's touchedFiles pruning
-    val added = images.toSeq.flatMap(df =>
-      st.writeDataFiles(df.sortWithinPartitions(sh.keyCols.map(col): _*), outUuid))
-      .filter(_.rows > 0)
-    if (dvs.isEmpty && added.isEmpty) {
-      // no-op MoR merge (e.g. a delete-only batch over absent keys):
-      // clean the unreferenced staging dir, then COMMIT an empty
-      // merge-pos snapshot — same externally-observable behavior as the
-      // CoW path's empty commit, and markCommitted keeps the runId
-      // idempotently re-runnable (a bare return would strand its StepLog)
-      graft.table.FileIO.deleteRecursively(s"${table.dataDir}/$outUuid")
+      plan: String, t0: Long, propertyUpdates: Map[String, String]): Snapshot =
+    RowLevel.mergeOnRead(st, "merge-pos", runId, touched, bitmaps,
+        images.map(_.sortWithinPartitions(sh.keyCols.map(col): _*)), t0,
+        st.snapshot.map(_.id), Some(log), propertyUpdates) { added =>
+      Map("run-id" -> runId, "touched-files" -> touched.size.toString,
+        "merge-plan" -> plan,
+        "added-files" -> added.size.toString,
+        "added-rows" -> added.map(_.rows).sum.toString)
     }
-    val committed = table.commitFull("merge-pos", expectedSnapshotId = st.snapshot.map(_.id),
-        propertyUpdates = propertyUpdates) { parent =>
-      (parent.map(_.manifests).getOrElse(Seq.empty) ++
-          (if (added.nonEmpty) Seq(table.writeManifest(added)) else Nil),
-        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) ++
-          (if (dvs.nonEmpty) Seq(table.writeDvManifest(dvs)) else Nil)),
-        Map("run-id" -> runId, "touched-files" -> touched.size.toString,
-          "merge-plan" -> plan,
-          "position-deletes-added" -> dvs.map(_.cardinality).sum.toString,
-          "added-files" -> added.size.toString,
-          "added-rows" -> added.map(_.rows).sum.toString))
-    }
-    Maintenance.markCommitted(table, log, committed.id)
-    Lineage.record(table.spark, table, runId, committed.id, "merge-pos", added,
-      added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
-    committed
-  }
 
   /**
    * Copy-on-write UPDATE WHERE: rewrites only files that may contain
@@ -947,34 +905,8 @@ object Merge {
       table: GraftTable,
       predicate: Column,
       set: Map[String, Column],
-      runId: String = java.util.UUID.randomUUID.toString): Snapshot = {
-    val spark = table.spark
-    val t0 = System.nanoTime()
-    val st = table.state
-    val schema = st.schema
-    for (c <- set.keys)
-      require(schema.fieldNames.contains(c), s"UPDATE of unknown column $c")
-    val snap = st.snapshot
-    val touched = st.planFiles(Some(predicate))
-    if (touched.isEmpty) return snap.getOrElse(throw new IllegalStateException("empty table"))
-    val hit = coalesce(predicate, lit(false))
-    val df = st.readFiles(touched)
-      .select(schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(v) => when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None    => col(f.name)
-        }
-      }: _*)
-    val commitUuid = s"update-$runId"
-    val added = st.writeDataFiles(df, commitUuid)
-    val committed = table.replaceFiles(touched.map(_.path).toSet, added, "update",
-      Map("run-id" -> runId, "predicate" -> predicate.toString,
-        "set-columns" -> set.keys.toSeq.sorted.mkString(",")),
-      expectedSnapshotId = snap.map(_.id))
-    Lineage.record(spark, table, runId, committed.id, "update", added,
-      added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
-    committed
-  }
+      runId: String = java.util.UUID.randomUUID.toString): Snapshot =
+    orCurrent(table, RowLevel.where(table, predicate, Some(set), RowLevel.CopyOnWrite, runId))
 
   /**
    * Copy-on-write DELETE WHERE: rewrites only files that may contain
@@ -985,25 +917,12 @@ object Merge {
   def deleteWhere(
       table: GraftTable,
       predicate: Column,
-      runId: String = java.util.UUID.randomUUID.toString): Snapshot = {
-    val spark = table.spark
-    val t0 = System.nanoTime()
-    val st = table.state
-    val snap = st.snapshot
-    val touched = st.planFiles(Some(predicate))
-    if (touched.isEmpty) return snap.getOrElse(throw new IllegalStateException("empty table"))
-    val df = st.readFiles(touched).filter(!coalesce(predicate, lit(false)))
-    val commitUuid = s"delete-$runId"
-    val metas = st.writeDataFiles(df, commitUuid)
-    // drop all-empty outputs (predicate matched an entire file)
-    val added = metas.filter(_.rows > 0)
-    val committed = table.replaceFiles(touched.map(_.path).toSet, added, "delete",
-      Map("run-id" -> runId, "predicate" -> predicate.toString),
-      expectedSnapshotId = snap.map(_.id))
-    Lineage.record(spark, table, runId, committed.id, "delete", added,
-      added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
-    committed
-  }
+      runId: String = java.util.UUID.randomUUID.toString): Snapshot =
+    orCurrent(table, RowLevel.where(table, predicate, None, RowLevel.CopyOnWrite, runId))
+
+  /** `committed`, or the current snapshot when nothing was to be done. */
+  private def orCurrent(table: GraftTable, committed: Option[Snapshot]): Snapshot =
+    committed.orElse(table.currentSnapshot).getOrElse(throw new IllegalStateException("empty table"))
 
   /**
    * Predicate-scoped atomic overwrite (Delta's `replaceWhere`): one commit
@@ -1028,10 +947,8 @@ object Merge {
       data: DataFrame,
       runId: String = java.util.UUID.randomUUID.toString,
       validate: Boolean = true): Snapshot = {
-    val spark = table.spark
     val t0 = System.nanoTime()
     val st = table.state
-    val snap = st.snapshot
     if (validate) {
       // full parallel count, not take(1): proving absence must scan it all
       // anyway, and CollectLimit's incremental partition batches would
@@ -1049,15 +966,9 @@ object Merge {
     val kept =
       if (touched.isEmpty) aligned.limit(0)
       else st.readFiles(touched).filter(!coalesce(predicate, lit(false)))
-    val commitUuid = s"overwrite-$runId"
-    val metas = st.writeDataFiles(kept.unionByName(aligned), commitUuid)
-    val added = metas.filter(_.rows > 0)
-    val committed = table.replaceFiles(touched.map(_.path).toSet, added, "overwrite",
-      Map("run-id" -> runId, "predicate" -> predicate.toString),
-      expectedSnapshotId = snap.map(_.id))
-    Lineage.record(spark, table, runId, committed.id, "overwrite", added,
-      added.map(o => o.path -> touched).toMap, (System.nanoTime() - t0) / 1000000)
-    committed
+    RowLevel.rewrite(st, "overwrite", runId, touched,
+      Map("run-id" -> runId, "predicate" -> predicate.toString), t0)(
+      st.writeDataFiles(kept.unionByName(aligned), _))
   }
 }
 

@@ -142,19 +142,13 @@ class GraftDataSource extends RelationProvider with CreatableRelationProvider
         val tbl = if (exists) checkSpecUnchanged(GraftTable.load(spark, root))
                   else GraftTable.create(spark, root, data.schema, createProps)
         val st = tbl.state
-        val expected = st.snapshot.map(_.id)
-        val old = st.files.map(_.path).toSet
-        if (old.isEmpty) {
-          // nothing to replace: commit as a plain append so the genesis
-          // snapshot stays incremental-read-friendly
-          tbl.append(data)
-        } else {
-          val added = st.writeDataFiles(data)
-          // pin the planned-against snapshot: a concurrent append between
-          // files() and commit must force a replan, not silently survive
-          // inside the "overwritten" table
-          tbl.replaceFiles(old, added, "overwrite", expectedSnapshotId = expected)
-        }
+        // nothing to replace: a plain append keeps the genesis snapshot
+        // incremental-read-friendly. Else the copy-on-write writer pins the
+        // planned snapshot: a concurrent append must force a replan, not
+        // survive inside the "overwritten" table
+        if (st.files.isEmpty) tbl.append(data)
+        else graft.ops.RowLevel.rewrite(st, "overwrite", java.util.UUID.randomUUID.toString,
+          st.files, Map.empty, System.nanoTime())(st.writeDataFiles(data, _))
     }
     val st = GraftTable.load(spark, root).state
     // no delete guard here: Spark's SaveIntoDataSourceCommand discards

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation, UnresolvedTable}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFieldName
@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.LongType
 
-import graft.ops.Merge
+import graft.ops.RowLevel
 import graft.table.GraftTable
 
 /**
@@ -23,11 +23,14 @@ import graft.table.GraftTable
  *   UPDATE graft.`/path` SET text = concat(text, '!'), lang = 'en' WHERE lang = 'mis'
  * }}}
  *
- * Same early-batch interception as [[GraftMergeRule]]; both plan into the
- * copy-on-write ops (`Merge.deleteWhere` / `Merge.updateWhere`), which
- * rewrite only metadata-pruned touched files. Conditions and assignment
- * values may reference table columns (qualifiers are stripped and the
- * expressions resolve against the table scan at run time).
+ * Same early-batch interception as [[GraftMergeRule]]; both plan into
+ * [[graft.ops.RowLevel.where]] in the table's write mode
+ * (`write.delete.mode` / `write.update.mode`, Iceberg's properties):
+ * copy-on-write rewrites the metadata-pruned touched files, merge-on-read
+ * records deletion vectors (plus appended images for an UPDATE) and
+ * rewrites none. Conditions and assignment values may reference table
+ * columns (qualifiers are stripped and the expressions resolve against the
+ * table scan at run time).
  */
 case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -135,6 +138,21 @@ case class GraftAddColumnsCommand(
 }
 
 private[sql] object GraftDml {
+  /** One DELETE (`set` None) or UPDATE statement on the table at `path`,
+    * in the write mode its property `modeProp` names: the committed
+    * snapshot's id, the current one when nothing matched, no row on an
+    * empty table. */
+  def where(session: SparkSession, path: String, modeProp: String, cond: Column,
+      set: Option[Map[String, Column]]): Seq[Row] = {
+    val table = GraftTable.load(session, path)
+    val md = table.metadata
+    md.currentSnapshot.toSeq.map { current =>
+      val mor = md.properties.get(modeProp).contains(RowLevel.MergeOnRead)
+      Row(RowLevel.where(table, cond, set, if (mor) RowLevel.MergeOnRead else RowLevel.CopyOnWrite)
+        .getOrElse(current).id)
+    }
+  }
+
   /** Canonicalize a DDL-supplied column name (or dotted struct path) to the
     * table schema's spelling with the SESSION resolver (case-insensitive by
     * default) — the evolution methods resolve with case-sensitive fieldIndex,
@@ -209,43 +227,22 @@ case class GraftDropColumnsCommand(
   }
 }
 
-/** `DELETE FROM graft.…` — plans into copy-on-write [[Merge.deleteWhere]],
-  * or a merge-on-read position delete ([[GraftTable.deleteWherePositional]],
-  * no file rewrites) when the table sets `write.delete.mode=merge-on-read`
-  * (Iceberg's property; any other value = copy-on-write). */
+/** `DELETE FROM graft.…` — [[graft.ops.RowLevel.where]] in the table's
+  * `write.delete.mode` (copy-on-write unless `merge-on-read`). */
 case class GraftDeleteCommand(path: String, cond: ExprHolder) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
-  override def run(session: SparkSession): Seq[Row] = {
-    val table = GraftTable.load(session, path)
-    if (table.currentSnapshot.isEmpty) return Seq.empty // empty table: 0 rows affected
-    val mor = table.metadata.properties.get("write.delete.mode").contains("merge-on-read")
-    val snap =
-      if (mor) table.deleteWherePositional(Shims.column(cond.e))
-        .getOrElse(table.currentSnapshot.get) // no match: current snapshot
-      else Merge.deleteWhere(table, Shims.column(cond.e))
-    Seq(Row(snap.id))
-  }
+  override def run(session: SparkSession): Seq[Row] =
+    GraftDml.where(session, path, "write.delete.mode", Shims.column(cond.e), None)
 }
 
-/** `UPDATE graft.… SET …` — plans into copy-on-write [[Merge.updateWhere]],
-  * or a merge-on-read positional update
-  * ([[GraftTable.updateWherePositional]]: DV the old positions + append the
-  * new images, no file rewrites) when the table sets
-  * `write.update.mode=merge-on-read` (Iceberg's property). */
+/** `UPDATE graft.… SET …` — [[graft.ops.RowLevel.where]] in the table's
+  * `write.update.mode` (copy-on-write unless `merge-on-read`). */
 case class GraftUpdateCommand(
     path: String,
     sets: Seq[(String, ExprHolder)],
     cond: ExprHolder) extends LeafRunnableCommand {
   override val output: Seq[Attribute] = Seq(AttributeReference("snapshot_id", LongType)())
-  override def run(session: SparkSession): Seq[Row] = {
-    val table = GraftTable.load(session, path)
-    if (table.currentSnapshot.isEmpty) return Seq.empty // empty table: 0 rows affected
-    val set = sets.map { case (k, v) => k -> Shims.column(v.e) }.toMap
-    val mor = table.metadata.properties.get("write.update.mode").contains("merge-on-read")
-    val snap =
-      if (mor) table.updateWherePositional(Shims.column(cond.e), set)
-        .getOrElse(table.currentSnapshot.get) // no match: current snapshot
-      else Merge.updateWhere(table, Shims.column(cond.e), set)
-    Seq(Row(snap.id))
-  }
+  override def run(session: SparkSession): Seq[Row] =
+    GraftDml.where(session, path, "write.update.mode", Shims.column(cond.e),
+      Some(sets.map { case (k, v) => k -> Shims.column(v.e) }.toMap))
 }

@@ -280,23 +280,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * matches nothing. Commits as `delete-pos` (summary `delete-key`), like
    * [[deleteWherePositional]]; None when no live row matches.
    */
-  def deleteByKeysMoR(keys: DataFrame, summary: Map[String, String] = Map.empty): Option[Snapshot] = {
-    require(keys.columns.nonEmpty, "key frame needs at least one key column")
-    val keyCols = keys.columns.toSeq
-    val st = state
-    val sch = st.schema
-    keyCols.foreach(k => require(sch.fieldNames.contains(k), s"unknown key column $k"))
-    // ONE evaluation: the probe and the join must see the same key set even
-    // when `keys` is a non-deterministic query over this very table
-    val ks = keys.distinct().localCheckpoint()
-    val planned =
-      if (keyCols.forall(k => Bounds.supported(sch(k).dataType)))
-        graft.ops.Merge.touchedFiles(st, ks, keyCols)
-      else st.files
-    if (planned.isEmpty) return None
-    commitPositionDeletes(st, livePositions(st, planned).join(ks, keyCols, "left_semi"),
-      summary + ("delete-key" -> keyCols.mkString(",")))
-  }
+  def deleteByKeysMoR(keys: DataFrame, summary: Map[String, String] = Map.empty): Option[Snapshot] =
+    graft.ops.RowLevel.deleteByKeys(this, keys, summary)
 
   /**
    * Merge-on-read POSITION delete (deletion vector): record the row
@@ -310,105 +295,26 @@ class GraftTable private (val root: String, val spark: SparkSession) {
    * appended LATER are unaffected, MERGE keeps running, and a rewrite
    * clears exactly the rewritten files' delete rows — they compose with
    * every maintenance op instead of blocking it. Cost: one metadata-pruned
-   * scan of the candidate files to record positions. Returns None when no
-   * row matches.
+   * scan of the candidate files to record positions. Commits `delete-pos`
+   * through [[graft.ops.RowLevel.mergeOnRead]]; returns None when no row
+   * matches.
    */
   def deleteWherePositional(predicate: Column,
-      summary: Map[String, String] = Map.empty): Option[Snapshot] = {
-    val st = state
-    val planned = st.planFiles(Some(predicate))
-    if (planned.isEmpty) return None
-    commitPositionDeletes(st, livePositions(st, planned).filter(predicate),
-      summary + ("predicate" -> predicate.toString))
-  }
-
-  /** Record `hit` (rows of [[livePositions]] over files of `st`) as one DV
-    * blob and commit it as `delete-pos` — one Spark job to gather the
-    * positions, none inside the commit. None when `hit` is empty. */
-  private def commitPositionDeletes(st: TableState, hit: DataFrame,
-      summary: Map[String, String]): Option[Snapshot] = {
-    val entries = DeletionVectors.write(root, s"dv-${UUID.randomUUID}", DeletionVectors.collect(hit))
-    if (entries.isEmpty) return None
-    Some(commitFull("delete-pos") { parent =>
-      requireReferencedLive("delete-pos", st, parent, entries)
-      (parent.map(_.manifests).getOrElse(Seq.empty),
-        Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeDvManifest(entries)),
-        summary ++ Map(
-          "position-deletes-added" -> entries.map(_.cardinality).sum.toString,
-          "position-delete-files" -> entries.length.toString))
-    })
-  }
-
-  /** `planned` (files of `st`) as `st` shows them, with each row's (file,
-    * row-position) as `_gdv_rel`/`_gdv_idx`. Positions are taken on this
-    * LIVE view (existing DVs applied), so re-running the same delete is a
-    * no-op commit and "rows deleted" counts are logical, as in
-    * Delta/Iceberg. */
-  private def livePositions(st: TableState, planned: Seq[DataFileMeta]): DataFrame =
-    st.withPositionDeletesKeepingPos(st.relation(planned), planned)
-
-  /** Positions stay valid while their data files live: fails `op` when a
-    * concurrent commit rewrote a data file of `entries` (forcing a replan),
-    * while appends and other deletes race through — file immutability keeps
-    * their positions valid. Reads no manifest while every manifest of the
-    * planned snapshot is still in `parent` (then every planned file is live). */
-  private def requireReferencedLive(op: String, planned: TableState,
-      parent: Option[Snapshot], entries: Seq[DvMeta]): Unit = {
-    val parentManifests = parent.toSeq.flatMap(_.manifests)
-    val kept = parentManifests.map(_.path).toSet
-    if (planned.snapshot.exists(_.manifests.forall(m => kept.contains(m.path)))) return
-    val live = parentManifests.flatMap(m => readManifest(m.path)).map(_.path).toSet
-    val gone = entries.map(_.dataFile).filterNot(live)
-    require(gone.isEmpty,
-      s"$op planned against files a concurrent commit rewrote " +
-        s"(${gone.take(3).mkString(", ")}${if (gone.length > 3) ", …" else ""}); replan required")
-  }
+      summary: Map[String, String] = Map.empty): Option[Snapshot] =
+    graft.ops.RowLevel.where(this, predicate, None, graft.ops.RowLevel.MergeOnRead, summary = summary)
 
   /**
-   * Merge-on-read UPDATE (Delta-DV-style): ONE commit that position-deletes
-   * the matching rows and appends their updated images — no data file is
-   * rewritten, so a trickle update on a 100 TB table costs the matching
-   * rows, not the touched files. Assignments evaluate against the
-   * PRE-update row (ANSI semantics), cast to the column type; CHECK
-   * constraints run inline on the appended images (writeDataFiles).
-   * Returns None when no row matches.
+   * Merge-on-read UPDATE (Delta-DV-style): ONE `update-pos` commit that
+   * position-deletes the matching rows and appends their updated images —
+   * no data file is rewritten, so a trickle update on a 100 TB table costs
+   * the matching rows, not the touched files. Assignments evaluate against
+   * the PRE-update row (ANSI semantics), cast to the column type; CHECK and
+   * NOT NULL constraints run inline on the appended images
+   * (writeDataFiles). Returns None when no row matches.
    */
   def updateWherePositional(predicate: Column, set: Map[String, Column],
-      summary: Map[String, String] = Map.empty): Option[Snapshot] = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val st = state
-    val sch = st.schema
-    for (c <- set.keys)
-      require(sch.fieldNames.contains(c), s"UPDATE of unknown column $c")
-    val planned = st.planFiles(Some(predicate))
-    if (planned.isEmpty) return None
-    val hit = livePositions(st, planned).filter(coalesce(predicate, lit(false)))
-    // ONE scan feeds both outputs: persist the matching rows (the MoR
-    // niche is a trickle — small), then project positions and new images
-    hit.persist()
-    try {
-      val uuid = s"dvu-${UUID.randomUUID}"
-      val entries = DeletionVectors.write(root, uuid, DeletionVectors.collect(hit))
-      if (entries.isEmpty) return None
-      val images = hit.select(sch.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(v) => when(coalesce(predicate, lit(false)), v.cast(f.dataType))
-            .otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-      val added = st.writeDataFiles(images, s"update-$uuid")
-      Some(commitFull("update-pos") { parent =>
-        requireReferencedLive("update-pos", st, parent, entries)
-        (parent.map(_.manifests).getOrElse(Seq.empty) :+ writeManifest(added),
-          Some(parent.map(_.posDeleteList).getOrElse(Seq.empty) :+ writeDvManifest(entries)),
-          summary ++ Map("predicate" -> predicate.toString,
-            "set-columns" -> set.keys.toSeq.sorted.mkString(","),
-            "position-deletes-added" -> entries.map(_.cardinality).sum.toString,
-            "updated-rows" -> added.map(_.rows).sum.toString))
-      })
-    } finally hit.unpersist()
-  }
+      summary: Map[String, String] = Map.empty): Option[Snapshot] =
+    graft.ops.RowLevel.where(this, predicate, Some(set), graft.ops.RowLevel.MergeOnRead, summary = summary)
 
   /**
    * Compact the live deletion-vector blobs — the niche of Iceberg's

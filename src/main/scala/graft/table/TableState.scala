@@ -5,7 +5,7 @@ import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.graftshim.GraftRelation
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
  * One committed metadata version of a [[GraftTable]], pinned at one of its
@@ -358,6 +358,28 @@ final class TableState private[table] (
     df.select(cols: _*)
   }
 
+  /** One (check, column path) per NOT NULL field of the table schema that
+    * `df` (in [[writeProjection]]) carries, nested struct fields included:
+    * a nested field must be non-NULL wherever its parent struct is. */
+  private def notNullChecks(df: DataFrame): Seq[(Column, String)] = {
+    def walk(fields: Seq[StructField], have: StructType, parent: Option[Column],
+        path: String): Seq[(Column, String)] =
+      fields.flatMap { f =>
+        have.fields.find(_.name.equalsIgnoreCase(f.name)).toSeq.flatMap { h =>
+          val c = parent.fold(df.col(s"`${h.name.replace("`", "``")}`"))(_.getField(h.name))
+          val at = if (path.isEmpty) f.name else s"$path.${f.name}"
+          val self =
+            if (f.nullable) Nil
+            else Seq(parent.fold(c.isNotNull)(p => p.isNull || c.isNotNull) -> at)
+          self ++ ((f.dataType, h.dataType) match {
+            case (t: StructType, hs: StructType) => walk(t.fields.toSeq, hs, Some(c), at)
+            case _ => Nil
+          })
+        }
+      }
+    walk(schema.fields.toSeq, df.schema, None, "")
+  }
+
   /** The Spark row schema [[writeDataFiles]] would write for `df` — the
     * `org.apache.spark.sql.parquet.row.metadata` of its files. Analysis
     * only, no job. */
@@ -379,16 +401,22 @@ final class TableState private[table] (
     // never sees a conf set on the original — sink-written files would
     // silently lose every timestamp bound
     df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // CHECK constraints ride the write pass itself: one codegen'd filter
-    // whose assert_true throws (with the constraint name) on the first
-    // violating row — zero extra scans at any scale. SQL semantics: a NULL
-    // check passes. Existing rows were validated when the constraint was
-    // added, so rewrites of old data can never trip here.
-    val base = constraints.foldLeft(writeProjection(df)) {
-      case (d, (name, check)) =>
-        import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
-        d.filter(assert_true(coalesce(expr(check), lit(true)),
-          lit(s"CHECK constraint '$name' violated: $check")).isNull)
+    // CHECK and NOT NULL constraints ride the write pass itself: one
+    // codegen'd filter whose assert_true throws (naming the constraint or
+    // column) on the first violating row — zero extra scans at any scale.
+    // SQL semantics: a NULL check passes. Existing rows were validated when
+    // the constraint was added, so rewrites of old data can never trip here;
+    // a NOT NULL check on a column the frame already types non-nullable
+    // folds away at planning.
+    import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
+    val projected = writeProjection(df)
+    val checks = constraints.toSeq.map { case (name, check) =>
+      coalesce(expr(check), lit(true)) -> s"CHECK constraint '$name' violated: $check"
+    } ++ notNullChecks(projected).map { case (ok, path) =>
+      ok -> s"NOT NULL constraint violated: column '$path' is NULL"
+    }
+    val base = checks.foldLeft(projected) { case (d, (ok, msg)) =>
+      d.filter(assert_true(ok, lit(msg)).isNull)
     }
     // hidden partitioning: group rows by the transforms so each file covers
     // ONE partition tuple (the derived columns live only in dir names —

@@ -61,4 +61,19 @@ class PlanAuditSpec extends SparkSuite {
     val p = keyed.queryExecution.executedPlan.toString
     assert(p.contains("*("), s"zkey projection must be codegen'd:\n$p")
   }
+
+  test("exact dedup keeps one row per hash in each map partition, before the exchange") {
+    // one hot text (3 rows in 4) beside unique ones: each map task ships
+    // at most one row of the hot hash through the shuffle
+    val df = spark.range(0, 4000, 1, 4).select(col("id").as("doc_id"),
+      when(col("id") % 4 =!= 0, lit("hot text")).otherwise(concat(lit("doc "), col("id").cast("string")))
+        .as("text"))
+    val out = graft.textops.Dedup.exact(df, col("text"), col("doc_id"))
+    assert(out.collect().length == 1001)
+    val lines = out.queryExecution.executedPlan.toString.split("\n").toSeq
+    val partial = lines.indexWhere(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+    assert(exchange >= 0 && partial > exchange,
+      s"no partial WindowGroupLimit below the exchange:\n${lines.mkString("\n")}")
+  }
 }

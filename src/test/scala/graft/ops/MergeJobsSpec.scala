@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.run.Synth
+import graft.run.{Lineage, Synth}
 import graft.table.GraftTable
 
 /**
@@ -66,6 +66,34 @@ class MergeJobsSpec extends SparkSuite {
     val (descs, _) = sparkJobs(Merge.into(t, src))
     assert(descs.size <= 4, s"${descs.size} jobs:\n${descs.mkString("\n")}")
     assert(t.read().count() == 600 - 10 + 5)
+  }
+
+  /** Summary rows of `t`'s lineage, by op. */
+  private def lineageRuns(t: GraftTable): Map[String, Long] =
+    if (!new java.io.File(t.metricsDir).exists) Map.empty
+    else Lineage.metrics(spark, t).filter(col("out_path") === "").groupBy("op").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  test("the row-level writers: one lineage run per DML commit, equal updates in both modes, no extra jobs") {
+    val (cow, mor) = (table("graft-dml-writer-cow"), table("graft-dml-writer-mor"))
+    val upd = Map("text" -> concat(col("text"), lit("#u")))
+    // job budgets: a positional delete is its position scan; an update adds
+    // the image write over the same persisted rows; a key delete evaluates
+    // its keys (here a read of the table), probes and scans
+    val (delJobs, _) = sparkJobs(assert(mor.deleteWherePositional(col("lang") === "de").nonEmpty))
+    val (updJobs, _) = sparkJobs(assert(mor.updateWherePositional(col("lang") === "en", upd).nonEmpty))
+    val (keyJobs, _) = sparkJobs(
+      assert(mor.deleteByKeysMoR(mor.read().filter(col("lang") === "fr").select("url")).nonEmpty))
+    info(s"delete-pos ${delJobs.size} jobs, update-pos ${updJobs.size}, key delete ${keyJobs.size}")
+    for ((op, jobs, bound) <- Seq(("delete-pos", delJobs, 1), ("update-pos", updJobs, 2), ("key delete", keyJobs, 5)))
+      assert(jobs.size <= bound, s"$op: ${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(lineageRuns(mor) == Map("delete-pos" -> 2L, "update-pos" -> 1L))
+
+    Merge.deleteWhere(cow, col("lang") === "de")
+    Merge.updateWhere(cow, col("lang") === "en", upd)
+    Merge.deleteWhere(cow, col("lang") === "fr")
+    assert(lineageRuns(cow) == Map("delete" -> 2L, "update" -> 1L))
+    assertSameRows(cow.read(), mor.read(), "copy-on-write vs merge-on-read DML")
   }
 
   test("the touched-file probe of a 4-partition source runs one job") {

@@ -1,13 +1,14 @@
 package graft.table
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkSuite
 import graft.ops.Merge
 import graft.run.Synth
 
 /**
- * CHECK constraints: data-quality gates enforced inline in the write pass
+ * CHECK and NOT NULL constraints: data-quality gates enforced inline in the write pass
  * (one codegen'd assert filter, no extra scan per write) — the guard a
  * training-data pipeline needs so a bad producer cannot poison the corpus.
  */
@@ -18,7 +19,10 @@ class ConstraintSpec extends SparkSuite {
       .withColumn("url", concat(lit(s"$tag/"), col("url")))
 
   test("writes refuse violating rows; NULL passes; drop re-allows") {
-    val tbl = GraftTable.create(spark, tmpDir("constr"), Synth.pageSchema)
+    // `text` nullable here: the NULL check result below needs a NULL value
+    val schema = StructType(Synth.pageSchema.map(f =>
+      if (f.name == "text") f.copy(nullable = true) else f))
+    val tbl = GraftTable.create(spark, tmpDir("constr"), schema)
     tbl.append(batch("a", 100))
     tbl.addConstraint("has-text", "length(text) > 0")
 
@@ -62,6 +66,40 @@ class ConstraintSpec extends SparkSuite {
       .withColumn("_deleted", lit(false))
     intercept[Exception](Merge.into(tbl, upd))
     assert(tbl.read().filter(col("lang") === "zz").count() == 0)
+  }
+
+  /** Whether `e` or a cause of it says `column 'k'` broke its NOT NULL. */
+  private def notNullError(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(x => Option(x.getMessage).exists(_.contains("NOT NULL constraint violated: column 'k'")))
+
+  test("NOT NULL columns refuse NULLs on every write path, naming the column; the table stays readable") {
+    import spark.implicits._
+    val schema = StructType(Seq(StructField("k", StringType, nullable = false),
+      StructField("v", LongType)))
+    val t = GraftTable.create(spark, tmpDir("constr-notnull"), schema)
+    t.append(Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v"))
+    val good = t.read().collect().toSet
+    // a NULL key never matches, so MERGE inserts it: refused like an append
+    val nullKey = Seq(("a", 10L), (null, 11L)).toDF("k", "v").withColumn("_deleted", lit(false))
+    def refused(path: String)(write: => Any): Unit = {
+      val e = intercept[Exception](write)
+      assert(notNullError(e), s"$path: ${e.getMessage}")
+      assert(t.read().collect().toSet == good, s"$path committed")
+    }
+    refused("append")(t.append(Seq(("d", 4L), (null, 5L)).toDF("k", "v")))
+    refused("copy-on-write merge")(Merge.into(t, nullKey, Seq("k"), versionCol = "v"))
+    refused("merge-on-read merge, driver plan")(
+      Merge.into(t, nullKey, Seq("k"), versionCol = "v", mode = "merge-on-read"))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try refused("merge-on-read merge, join plan")(
+      Merge.into(t, nullKey, Seq("k"), versionCol = "v", mode = "merge-on-read"))
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    refused("SQL INSERT")(spark.sql(s"INSERT INTO graft.`${t.root}` VALUES (NULL, 6)").collect())
+    refused("updateWherePositional")(
+      t.updateWherePositional(col("k") === "a", Map("k" -> lit(null).cast("string"))))
+    refused("updateWhere")(Merge.updateWhere(t, col("k") === "b", Map("k" -> lit(null).cast("string"))))
+    assert(t.read().filter(col("k").isNull).count() == 0)
   }
 
   test("SQL surface: ADD/DROP CONSTRAINT; raw TBLPROPERTIES refuses the prefix") {

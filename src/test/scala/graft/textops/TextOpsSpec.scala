@@ -208,31 +208,4 @@ class TextOpsSpec extends SparkSuite {
     val exact = Dedup.exact(planted, col("text"), col("doc_id"))
     assert(resolved.count() === exact.count())
   }
-
-  test("multimodal batched feature extraction plumbing") {
-    implicit val s = spark
-    val df = docs.select(col("doc_id"), col("text").cast("binary").as("media"))
-    val rows = Multimodal.withMeta(df, "doc_id", "media", "image")
-    val feats = Multimodal.extractFeatures(rows, batchSize = 2).collect()
-    assert(feats.length == 5)
-    assert(feats.forall(_.features.length == 16))
-    // determinism: same bytes → same features
-    val f1 = feats.find(_.id == 1L).get.features.toSeq
-    val f2 = feats.find(_.id == 2L).get.features.toSeq
-    assert(f1 == f2)
-    // meta is populated
-    val meta = rows.collect().find(_.id == 1L).get.meta
-    assert(meta.bytes == docs.filter(col("doc_id") === 1).select(length(col("text"))).head().getInt(0))
-    assert(meta.width >= 64 && meta.height >= 64)
-    // batched resize: geometry within bounds, aspect-ish preserved, bytes shrink
-    val resized = Multimodal.resize(rows, maxW = 64, maxH = 64, batchSize = 2).collect()
-    assert(resized.length == 5)
-    for (r <- resized) {
-      assert(r.meta.width <= 64 && r.meta.height <= 64)
-      assert(r.meta.bytes <= rows.collect().find(_.id == r.id).get.meta.bytes)
-    }
-    // determinism: resizing twice gives identical bytes
-    val again = Multimodal.resize(rows, maxW = 64, maxH = 64, batchSize = 2).collect()
-    assert(resized.map(_.media.toSeq).toSeq == again.map(_.media.toSeq).toSeq)
-  }
 }
