@@ -437,9 +437,9 @@ object SparkEntry {
 
     // J3: FULL ANSI clause matrix in one statement — several conditional
     // matched clauses (DELETE + two UPDATEs with DIFFERENT column sets,
-    // first-match-wins via the `_setw_*` masks), several conditional
-    // INSERT clauses (different column sets via `_insw_*`), and BOTH
-    // NOT MATCHED BY SOURCE actions (delete-first order)
+    // first-match-wins), several conditional INSERT clauses (different
+    // column sets), and BOTH NOT MATCHED BY SOURCE actions (delete-first
+    // order)
     "q34_merge_multi" -> ((s, dir) => {
       val cust = t(s, dir, "customer")
         .select("c_custkey", "c_name", "c_acctbal", "c_nationkey", "c_mktsegment")

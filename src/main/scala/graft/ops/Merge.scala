@@ -1,9 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedStar}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
 import graft.run.Maintenance
@@ -33,28 +35,16 @@ import graft.table.{Bounds, DataFileMeta, DeletionVectors, GraftTable, Snapshot,
  *  - matched & older            → target row kept (late-arriving change)
  *  - unmatched & !deleted       → insert
  *
- * Reserved source columns (all optional) refine the row images — the SQL
- * front door ([[graft.sql.GraftMergeRule]]) lowers column-level MERGE
- * actions onto them:
- *  - `_deleted` boolean: the row is a delete (see above);
- *  - `_noop` boolean: the row asserts PRESENCE only — its matched target
- *    row is kept unchanged (it is "matched by source" for the NOT MATCHED
- *    BY SOURCE clauses without any matched clause applying to it);
- *  - `_set_<col>`: column-level UPDATE image — when any `_set_*` column is
- *    present, a matched update replaces ONLY the assigned columns and keeps
- *    the target's values for the rest (ANSI `UPDATE SET c = expr`);
- *  - `_setw_<col>` boolean: per-row assignment mask for `_set_<col>` — when
- *    present, the update writes the column only where the mask is true and
- *    keeps the target value elsewhere. This is how MULTIPLE update clauses
- *    with different assigned column sets lower (first-match-wins: the row
- *    fired by clause A must keep target values for columns only clause B
- *    assigns — a NULL `_set_` value alone cannot distinguish "assign NULL"
- *    from "not assigned by the firing clause");
- *  - `_ins_<col>`: column-level INSERT image — when any `_ins_*` column is
- *    present, an insert takes the assigned columns and NULL for the rest
- *    (ANSI `INSERT (cols) VALUES (…)`);
- *  - `_insw_<col>` boolean: per-row assignment mask for `_ins_<col>`,
- *    symmetric to `_setw_<col>` (multiple insert clauses).
+ * Explicit clauses (`clauses`, ANSI semantics) replace that fixed list:
+ * ordered WHEN MATCHED (`Delete` | `Update(set)`), WHEN NOT MATCHED
+ * (`Insert(values)`) and WHEN NOT MATCHED BY SOURCE (`Delete` |
+ * `Update(set)`) clauses, each with an optional condition, evaluated
+ * first-match-wins over every (target, source) pair. Conditions and values
+ * name their side as `t.<col>` or `s.<col>`; an update keeps the target's
+ * value for each column it does not set, an insert writes NULL there. The
+ * SQL front door ([[graft.sql.GraftMergeRule]]) builds this list straight
+ * from the statement. The CDC form above is itself the clause list
+ * [[cdcClauses]].
  *
  * Scale design: touched-file planning ships only the per-file [min,max]
  * key intervals (tiny), maps each source key tuple to overlapping files and
@@ -64,7 +54,7 @@ import graft.table.{Bounds, DataFileMeta, DeletionVectors, GraftTable, Snapshot,
  * new snapshot unchanged.
  *
  * Merge-on-read (`mode = "merge-on-read"`) has two plans with the same
- * clause semantics ([[clauses]] is the one clause matrix both evaluate):
+ * clause semantics ([[matrix]] is the one clause matrix both evaluate):
  *  - the DRIVER plan, for a small source: when the optimizer's size
  *    estimate of the normalized source is within
  *    `spark.sql.autoBroadcastJoinThreshold` (`-1` turns it off), the merge
@@ -215,16 +205,38 @@ object Merge {
     else state.table.spark.read.schema(state.schema).parquet(touched.map(state.table.absPath): _*)
   }
 
+  /** One WHEN clause of an explicit MERGE clause list (see the class doc);
+    * `cond` None fires always. */
+  sealed trait Clause {
+    def action: Action
+    def cond: Option[Column]
+  }
+  /** WHEN MATCHED [AND cond] THEN DELETE | UPDATE SET … */
+  final case class WhenMatched(action: RowAction, cond: Option[Column] = None) extends Clause
+  /** WHEN NOT MATCHED [AND cond] THEN INSERT … */
+  final case class WhenNotMatched(action: Insert, cond: Option[Column] = None) extends Clause
+  /** WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE | UPDATE SET … */
+  final case class WhenNotMatchedBySource(action: RowAction, cond: Option[Column] = None) extends Clause
+
+  sealed trait Action
+  /** An action on an existing target row. */
+  sealed trait RowAction extends Action
+  case object Delete extends RowAction
+  /** Table column → new value; the columns it does not set keep the target's. */
+  final case class Update(set: Map[String, Column]) extends RowAction
+  /** Table column → value of the new row; the columns it does not set are NULL. */
+  final case class Insert(values: Map[String, Column]) extends Action
+
   /**
-   * Execute a merge of `source` (page-schema columns + optional reserved
-   * columns, see class doc) into the table on `keyCols`. Returns the
+   * Execute a merge of `source` into the table on `keyCols`. Returns the
    * committed snapshot.
    *
-   * `latestWins` = true (default) keeps the reference's HBase-cell
-   * semantics: a source row older than the target row (by `versionCol`) is
-   * a late-arriving change and loses. `latestWins` = false gives ANSI
-   * MERGE semantics (matched source rows always apply) — the SQL surface
-   * ([[graft.sql.GraftMergeRule]]) uses this.
+   * Without `clauses` the source is a CDC change set (optional `_deleted`
+   * marker, see the class doc). `latestWins` = true (default) keeps the
+   * reference's HBase-cell semantics: a source row older than the target
+   * row (by `versionCol`) is a late-arriving change and loses.
+   * `latestWins` = false gives ANSI MERGE semantics (matched source rows
+   * always apply), which explicit `clauses` require.
    */
   def into(
       table: GraftTable,
@@ -234,9 +246,7 @@ object Merge {
       targetFileBytes: Long = 128L * 1024 * 1024,
       runId: String = java.util.UUID.randomUUID.toString,
       latestWins: Boolean = true,
-      notMatchedBySourceDelete: Option[Column] = None,
-      notMatchedBySourceSet: Option[(Column, Map[String, Column])] = None,
-      notMatchedBySourceDeleteFirst: Boolean = true,
+      clauses: Seq[Clause] = Nil,
       mode: String = "copy-on-write",
       propertyUpdates: Map[String, String] = Map.empty): Snapshot = {
     require(keyCols.nonEmpty, "at least one key column")
@@ -248,16 +258,13 @@ object Merge {
     require(mode == "copy-on-write" || mode == "merge-on-read",
       s"unknown merge mode '$mode' (copy-on-write | merge-on-read)")
     val mor = mode == "merge-on-read"
+    // under latest-wins CDC semantics a clause has no version to compare,
+    // and "absent from this change batch" carries no meaning
+    require(clauses.isEmpty || !latestWins,
+      "explicit MERGE clauses require ANSI semantics (latestWins = false)")
     // NOT MATCHED BY SOURCE clauses act on TARGET rows without a source
-    // match (ANSI); their condition/assignments evaluate on target columns.
-    // They are ANSI-mode only — under latest-wins CDC semantics "absent
-    // from this change batch" carries no meaning. BOTH actions may be
-    // given (ANSI allows a conditional UPDATE and a conditional DELETE
-    // together); `notMatchedBySourceDeleteFirst` fixes their first-match-
-    // wins order.
-    val nmbs = notMatchedBySourceDelete.nonEmpty || notMatchedBySourceSet.nonEmpty
-    require(!nmbs || !latestWins,
-      "NOT MATCHED BY SOURCE requires ANSI semantics (latestWins = false)")
+    // match (ANSI), so they need every candidate file's rows
+    val nmbs = clauses.exists(_.isInstanceOf[WhenNotMatchedBySource])
     val spark = table.spark
     val t0 = System.nanoTime()
     // ONE pinned state plans the whole merge, up to its commit
@@ -279,94 +286,66 @@ object Merge {
     val schema = st.schema
     val cols = schema.fieldNames.toSeq
     keyCols.foreach(k => require(cols.contains(k), s"no key column $k in table schema"))
+    clauses.foreach(checkAssignments(_, cols, keyCols))
 
-    val hasDeleted = source.columns.contains("_deleted")
-    val src0 = if (hasDeleted) source else source.withColumn("_deleted", lit(false))
-    val nmbsSetCols: Set[String] = notMatchedBySourceSet.map(_._2.keySet).getOrElse(Set.empty)
-    val sh = Shape(schema, keyCols, versionCol, latestWins, src0.columns.toSeq,
-      spark.sessionState.analyzer.resolver, notMatchedBySourceDelete.nonEmpty,
-      notMatchedBySourceSet.nonEmpty, nmbsSetCols)
-    require(sh.setwCols.subsetOf(sh.setCols) && sh.inswCols.subsetOf(sh.insCols),
-      "mask columns (_setw_/_insw_) require matching _set_/_ins_ image columns")
-    (sh.setCols ++ sh.insCols).foreach(c =>
-      require(cols.contains(c), s"MERGE action assigns unknown column $c"))
-    sh.setCols.intersect(keyCols.toSet).headOption.foreach(c =>
-      throw new IllegalArgumentException(
-        s"MERGE UPDATE must not assign key column $c (rewrite the row via DELETE + INSERT)"))
-    nmbsSetCols.foreach(c => require(cols.contains(c), s"NOT MATCHED BY SOURCE assigns unknown column $c"))
-    nmbsSetCols.intersect(keyCols.toSet).headOption.foreach(c =>
-      throw new IllegalArgumentException(s"NOT MATCHED BY SOURCE must not assign key column $c"))
+    val resolver = spark.sessionState.analyzer.resolver
+    val src0 =
+      if (clauses.nonEmpty || source.columns.contains("_deleted")) source
+      else source.withColumn("_deleted", lit(false))
+    // besides the keys, a CDC list reads only the version of the target
+    val (cl, targetCols) =
+      if (clauses.nonEmpty) (clauses, cols)
+      else (cdcClauses(schema, src0.columns.toSeq, versionCol, latestWins, resolver),
+        Seq(versionCol).filter(_ => latestWins))
+    val sh = Shape(schema, keyCols, versionCol, latestWins, cl, (keyCols ++ targetCols).distinct, resolver)
     val keyC = keyCols.map(col)
-    val srcUncached = if (latestWins) latestPerKey(src0, sh) else src0
-    if (mor && !nmbs && plansOnDriver(spark, sh, srcUncached))
+    val src = if (latestWins) latestPerKey(src0, sh) else src0
+    if (mor && !nmbs && plansOnDriver(spark, sh, src))
       return mergeOnReadOnDriver(st, sh, src0, runId, log, t0, propertyUpdates)
-    // ONE materialization of the normalized source for ANSI merges:
-    // touched-file planning, the ANSI cardinality check and the full-outer
-    // rewrite join all consume it, and uncached each re-executed the whole
-    // source plan — for the SQL door that plan embeds the touched-file
-    // `_matched` join, so every SQL MERGE paid the lowering 3x. ANSI
-    // sources are clause-filtered change sets (small by design), so one
-    // MEMORY_AND_DISK materialization beats re-deriving them (released in
-    // the finally below; sources the caller already persisted, e.g.
-    // CdcApply's folded batch, are left alone).
-    //
-    // latest-wins merges deliberately DON'T cache: their source is
-    // typically a raw scan-shaped change frame with full payload columns,
-    // and caching it as deserialized rows costs more than the vectorized
-    // re-scan it saves (measured in the 10 GB soak: merge task-seconds
-    // 2.2x, wall +45% with the cache). Instead their planning pass scans
-    // the PRE-dedup keys (below), so the version window runs ONCE — in
-    // the join — and planning stays a column-pruned key scan.
-    val srcOwnCache = !latestWins &&
-      srcUncached.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val src =
-      if (srcOwnCache) srcUncached.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else srcUncached
     try {
 
     val leadDt = schema.fields.find(_.name == keyCols.head).get.dataType
-    // `_noop` rows join (their targets are "matched by source") but must
-    // not WIDEN the rewrite: a file is only touched by keys some clause
-    // fires for — untouched files keep their noop-matched rows by simply
-    // not being rewritten
     // latest-wins planning scans the PRE-dedup source: the version window
     // keeps exactly one row per key tuple, so the key SET is identical,
     // and planning on src0 turns the planning pass into a column-pruned
     // key scan instead of a full execution of the dedup window (which
     // then runs exactly once, inside the rewrite join). Duplicate keys
-    // are harmless to touchedFiles (it collects a set of file ids).
-    val planSrc =
-      if (latestWins) src0
-      else if (sh.hasNoop) src.filter(!coalesce(col("_noop"), lit(false)))
-      else src
+    // are harmless to touchedFiles (it collects a set of file ids). ANSI
+    // planning scans the rows a clause may fire for, where decidable.
+    val planSrc = if (latestWins) src0 else mayFire(sh, src).getOrElse(src)
     // ANSI duplicate-key probe launched CONCURRENTLY with touched-file
-    // planning (guide §2.6 — overlap independent jobs): both consume only
-    // the persisted source, so the probe's aggregate back-fills executor
-    // slots behind the planning scan's tail instead of running as a second
-    // sequential pass. Await sits at the original check site below.
-    val dupsCountF: Option[scala.concurrent.Future[Long]] =
+    // planning (guide §2.6 — overlap independent jobs): the aggregate
+    // back-fills executor slots behind the planning scan's tail instead of
+    // running as a second sequential pass. A source without duplicate keys
+    // pairs every target row with at most one source row, so the ANSI
+    // cardinality rule needs nothing more.
+    val dupKeysF: Option[scala.concurrent.Future[Boolean]] =
       if (latestWins) None
       else {
-        val noopFlag =
-          if (sh.hasNoop) coalesce(col("_noop"), lit(false)) else lit(false)
-        val dupsDf = src.groupBy(keyC: _*)
-          .agg(count(lit(1)).as("_cnt"),
-            sum(when(noopFlag, 0L).otherwise(1L)).as("_modifying"))
-          .filter(col("_cnt") > 1 && col("_modifying") >= 1L)
+        // one result job over the aggregate, each task saying whether its
+        // partition has a duplicate key (count() would add an aggregation)
+        val dups = src.groupBy(keyC: _*).agg(count(lit(1)).as("_cnt")).filter(col("_cnt") > 1)
+          .select(lit(true)).as(Encoders.scalaBoolean)
+          .mapPartitions(rows => Iterator.single(rows.hasNext))(Encoders.scalaBoolean)
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.global
-        Some(scala.concurrent.Future(dupsDf.count()))
+        Some(scala.concurrent.Future(dups.collect().contains(true)))
       }
     val keyTouched = touchedFiles(st, planSrc.select(keyC: _*), keyCols)
     // NOT MATCHED BY SOURCE widens the rewrite to every file that may hold
-    // a row its condition matches (the whole table when unconditional —
-    // inherent to the semantics); the condition prunes via file stats
+    // a row one of its conditions matches (the whole table when one is
+    // unconditional — inherent to the semantics); the conditions prune via
+    // file stats
     val touched =
       if (!nmbs) keyTouched
       else {
-        val cond = (notMatchedBySourceDelete.toSeq ++ notMatchedBySourceSet.map(_._1)).reduce(_ || _)
+        val cond = sh.clauses.collect {
+          case WhenNotMatchedBySource(_, c) => c.fold(lit(true))(unqualified)
+        }.reduce(_ || _)
         (keyTouched ++ st.planFiles(Some(cond))).groupBy(_.path).map(_._2.head).toSeq
       }
+    val dupKeys = dupKeysF.exists(f =>
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
     // bucket-on-key merge: the touched files scan bucketed (HashPartitioning
     // on the key — only the source side of the join shuffles) AND the join
     // output is physically bucket-co-partitioned, so the output rewrite
@@ -382,87 +361,26 @@ object Merge {
       else targetScan(st, touched, keyCols)
     // position deletes applied: a DV-deleted target row is NOT MATCHED
     // (the source row inserts); replaceFiles clears the touched files' DVs.
-    // MoR mode additionally carries each surviving row's (file, position)
-    // so changed rows can be recorded as new DV entries
+    // Merge-on-read, and a source with duplicate keys, additionally carry
+    // each surviving row's (file, position): merge-on-read records changed
+    // rows as new DV entries, and the ANSI cardinality rule is decided per
+    // target row
+    val keepPos = mor || dupKeys
     val base =
-      if (!mor) {
-        if (touched.isEmpty) baseRaw else st.withPositionDeletes(baseRaw, touched)
-      } else if (touched.isEmpty)
+      if (touched.isEmpty && keepPos)
         baseRaw.withColumn("_gdv_rel", lit(null).cast(StringType))
           .withColumn("_gdv_idx", lit(null).cast(LongType))
-      else st.withPositionDeletesKeepingPos(baseRaw, touched)
-
-    if (!latestWins) {
-      // ANSI MERGE: an error when a TARGET row is matched by more than one
-      // source row AND at least one of them would modify it (Delta's rule) —
-      // multiple NOT MATCHED inserts of one key are legal (each inserts),
-      // and keys whose duplicate rows are ALL `_noop` (presence-only,
-      // nothing fires) must not error. A single firing row among noop
-      // duplicates STILL errors: the full-outer join is per source row, so
-      // letting it through would emit both the updated image and a kept
-      // copy of the target. The zero-dup fast path costs ONE source
-      // aggregate; the touched-file semi-join runs only when duplicate keys
-      // exist at all. (A .limit(1).collect() would run the groupBy through
-      // CollectLimit's sequential partition batches.)
-      val noopFlag =
-        if (sh.hasNoop) coalesce(col("_noop"), lit(false)) else lit(false)
-      val dups = src.groupBy(keyC: _*)
-        .agg(count(lit(1)).as("_cnt"),
-          sum(when(noopFlag, 0L).otherwise(1L)).as("_modifying"))
-        .filter(col("_cnt") > 1 && col("_modifying") >= 1L)
-      val dupCount = dupsCountF.map(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        .getOrElse(dups.count())
-      if (dupCount > 0) {
-        val offending = dups.select(keyC: _*).join(
-          base.select(keyC: _*), keyCols, "left_semi")
-        for (ex <- offending.limit(1).collect().headOption)
-          throw duplicateKeyError(ex.toSeq)
-      }
-    }
-
-    // NOT MATCHED BY SOURCE condition/assignments precompute on the TARGET
-    // side BEFORE the join (only target columns are in scope — no
-    // ambiguity with same-named source columns is possible)
-    val baseAug = {
-      var b = base
-      // first-match-wins when BOTH actions exist: the later clause only
-      // fires where the earlier one did not
-      val delRaw = notMatchedBySourceDelete.map(c => coalesce(c.cast("boolean"), lit(false)))
-      val updRaw = notMatchedBySourceSet.map { case (c, _) => coalesce(c.cast("boolean"), lit(false)) }
-      val (delFires, updFires) = (delRaw, updRaw) match {
-        case (Some(d), Some(u)) =>
-          if (notMatchedBySourceDeleteFirst) (Some(d), Some(u && !d)) else (Some(d && !u), Some(u))
-        case other => other
-      }
-      for (d <- delFires) b = b.withColumn("_nmbs_del", d)
-      for (u <- updFires; (_, set) <- notMatchedBySourceSet) {
-        b = b.withColumn("_nmbs_upd", u)
-        // values evaluate only where the clause condition holds (lazy If
-        // branches): an ANSI-throwing assignment must not abort the merge
-        // via rows the clause never applies to
-        for ((name, v) <- set) b = b.withColumn(s"_tset_$name", when(col("_nmbs_upd"), v))
-      }
-      b
-    }
+      else if (touched.isEmpty) baseRaw
+      else if (keepPos) st.withPositionDeletesKeepingPos(baseRaw, touched)
+      else st.withPositionDeletes(baseRaw, touched)
 
     // explicit presence markers: with composite keys (or nullable key
     // columns) "which side is absent" must not be inferred from key nullness
-    val t = baseAug.withColumn("_t_present", lit(true)).alias("t")
-    // duplicate ALL-noop keys collapse to one presence assertion: the
-    // full-outer join emits one row per (target, source-row) PAIR, so a key
-    // asserted present twice would otherwise duplicate its kept target row
-    // in the rewrite output (keys where any duplicate MODIFIES errored
-    // above; latestWins dedups by version window instead)
-    val srcJ =
-      if (!latestWins && sh.hasNoop) {
-        val noopC = coalesce(col("_noop"), lit(false))
-        src.filter(!noopC).unionByName(src.filter(noopC).dropDuplicates(keyCols))
-      } else src
-    val s = srcJ.withColumn("_s_present", lit(true)).alias("s")
+    val t = base.withColumn("_t_present", lit(true)).alias("t")
+    val s = src.withColumn("_s_present", lit(true)).alias("s")
     val joinCond = keyCols.map(k => t(k) === s(k)).reduce(_ && _)
-    val joined = t.join(s, joinCond, "full_outer")
-    val c = clauses(sh, t(_), s(_))
+    val m = matrix(sh)
+    val pairs = t.join(s, joinCond, "full_outer").withColumn(Fired, m.fired)
 
     val totalBytes = math.max(touched.map(_.bytes).sum, 1L)
     // Size the JOIN shuffle by DATA, not the session's partition default:
@@ -517,14 +435,25 @@ object Merge {
       }
     }
 
+    // ANSI cardinality: an error when a target row (its file and position)
+    // is changed by more than one source row. Rows no clause fires for are
+    // legal duplicates: the rewrite keeps their target row once (below)
+    if (dupKeys) withJoinShuffleSizedByData {
+      val twice = pairs.filter(m.dvRow).groupBy(tc("_gdv_rel"), tc("_gdv_idx"))
+        .agg(count(lit(1)).as("_n"), keyCols.map(k => first(tc(k)).as(k)): _*)
+        .filter(col("_n") > 1)
+      for (ex <- twice.select(keyC: _*).limit(1).collect().headOption)
+        throw duplicateKeyError(ex.toSeq)
+    }
+
     // merge-on-read over the join: the SAME full-outer SMJ, so it needs the
     // same data-sized shuffle (the sort-heavy-op rule): without it a 10 GB
     // MoR merge sorts ~300 MB per task at session-default partitions
     if (mor)
       return withJoinShuffleSizedByData {
-        val changed = joined.filter(c.dvRow || c.writeRow)
-          .select(c.image ++ Seq(t("_gdv_rel").as("_gdv_rel"), t("_gdv_idx").as("_gdv_idx"),
-            c.dvRow.as("_dv"), c.writeRow.as("_wr")): _*)
+        val changed = pairs.filter(m.dvRow || m.writeRow)
+          .select(m.image ++ Seq(tc("_gdv_rel").as("_gdv_rel"), tc("_gdv_idx").as("_gdv_idx"),
+            m.dvRow.as("_dv"), m.writeRow.as("_wr")): _*)
         // ONE join execution feeds both outputs: the changed set is the MoR
         // niche (small relative to touched bytes), so persisting it is the
         // cheap side of re-running the full-outer join twice
@@ -535,9 +464,20 @@ object Merge {
         finally changed.unpersist()
       }
 
-    val merged = joined
-      .filter(c.keep)
-      .select(c.image: _*)
+    val merged = {
+      val kept =
+        if (!dupKeys) pairs.filter(m.keep)
+        else {
+          // a target row paired with several source rows stays ONE row: the
+          // pair a clause fired for, else its first pair (source-only rows
+          // are spread by their key)
+          val w = Window.partitionBy(tc("_gdv_rel") +: tc("_gdv_idx") +:
+            keyCols.map(k => when(!tPresent, sc(k))): _*).orderBy(m.dvRow.desc)
+          pairs.withColumn("_rn", row_number().over(w))
+            .filter(m.keep && (!tPresent || col("_rn") === 1))
+        }
+      kept.select(m.image: _*)
+    }
 
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     RowLevel.rewrite(st, "merge", runId, touched,
@@ -612,8 +552,10 @@ object Merge {
           // in-partition sort + record rolling below still produce key-ordered
           // files with tight per-file bounds WITHIN each bucket (what the next
           // merge's interval index stabs). Net shuffle of a bucketed merge:
-          // the source rows, nothing else.
-          else if (bucketedOnKey) merged
+          // the source rows, nothing else. (A source with duplicate keys
+          // re-partitions the pairs for its window, so it takes the range
+          // path.)
+          else if (bucketedOnKey && !dupKeys) merged
           else (steer, bds) match {
             // missing/collapsed boundaries (no bounds, or a keyspace the
             // packed encoding cannot discriminate): range steering would
@@ -642,105 +584,156 @@ object Merge {
       }
     }
     } finally {
-      // release the one-merge source cache and the job label (a stale
-      // description would mislabel every later job in the session's UI)
-      if (srcOwnCache) { src.unpersist(); () }
+      // release the job label (a stale description would mislabel every
+      // later job in the session's UI)
       spark.sparkContext.setJobDescription(null)
     }
   }
 
-  /** What a merge's source and clauses look like: the table, the keys, the
-    * semantics, and the reserved columns (see the class doc) the normalized
-    * source carries. */
+  /** What a merge's clauses look like: the table, the keys, the semantics,
+    * the clause list, and the target columns the clauses may read. */
   private final case class Shape(
       schema: StructType,
       keyCols: Seq[String],
       versionCol: String,
       latestWins: Boolean,
-      srcCols: Seq[String],
-      resolver: (String, String) => Boolean,
-      nmbsDelete: Boolean,
-      nmbsUpdate: Boolean,
-      nmbsSetCols: Set[String]) {
-    private def reserved(prefix: String): Set[String] =
-      srcCols.collect { case c if c.startsWith(prefix) => c.stripPrefix(prefix) }.toSet
-    /** `_set_<c>`: column-level update image; `_setw_<c>` its per-row mask. */
-    val setCols: Set[String] = reserved("_set_")
-    val setwCols: Set[String] = reserved("_setw_")
-    /** `_ins_<c>`: column-level insert image; `_insw_<c>` its per-row mask. */
-    val insCols: Set[String] = reserved("_ins_")
-    val inswCols: Set[String] = reserved("_insw_")
-    val hasNoop: Boolean = srcCols.contains("_noop")
-    /** Whether the source has column `c`, under the session resolver
-      * (case-insensitive by default), like resolving `s(c)` itself. */
-    def srcHas(c: String): Boolean = srcCols.exists(resolver(_, c))
+      clauses: Seq[Clause],
+      targetCols: Seq[String],
+      resolver: (String, String) => Boolean)
+
+  /** Refuse assignments to unknown columns and updates of key columns. */
+  private def checkAssignments(c: Clause, cols: Seq[String], keyCols: Seq[String]): Unit = {
+    val bySource = c.isInstanceOf[WhenNotMatchedBySource]
+    val assigned = c.action match {
+      case Update(set) => set.keys
+      case Insert(values) => values.keys
+      case Delete => Nil
+    }
+    for (k <- assigned) {
+      require(cols.contains(k),
+        if (bySource) s"NOT MATCHED BY SOURCE assigns unknown column $k"
+        else s"MERGE action assigns unknown column $k")
+      if (keyCols.contains(k) && !c.isInstanceOf[WhenNotMatched])
+        throw new IllegalArgumentException(
+          if (bySource) s"NOT MATCHED BY SOURCE must not assign key column $k"
+          else s"MERGE UPDATE must not assign key column $k (rewrite the row via DELETE + INSERT)")
+    }
   }
 
-  /** The clause matrix of a merge over one row of its full-outer (target,
-    * source) pairing: which target rows stay in a rewrite (`keep`), which
-    * leave their file as a DV entry (`dvRow`), which pairs append an image
-    * (`writeRow`), and the image itself, one column per table column. */
-  private final case class Clauses(keep: Column, dvRow: Column, writeRow: Column, image: Seq[Column])
+  /** The clause list of a CDC source: a `_deleted` row deletes its matched
+    * target row, any other row updates it (every column from the source)
+    * or inserts; under latest-wins a matched change applies only when it is
+    * at least as new as the target row. A source may omit table columns:
+    * they read as typed NULLs. */
+  private def cdcClauses(schema: StructType, srcCols: Seq[String], versionCol: String,
+      latestWins: Boolean, resolver: (String, String) => Boolean): Seq[Clause] = {
+    val row = schema.fields.map(f => f.name ->
+      (if (srcCols.exists(resolver(_, f.name))) sc(f.name) else lit(null).cast(f.dataType))).toMap
+    val deleted = coalesce(sc("_deleted"), lit(false))
+    val newer = if (latestWins) Some(sc(versionCol) >= tc(versionCol)) else None
+    Seq(WhenMatched(Delete, Some(newer.fold(deleted)(_ && deleted))),
+      WhenMatched(Update(row), newer),
+      WhenNotMatched(Insert(row), Some(!deleted)))
+  }
 
-  /** [[Clauses]] over accessors of one pair: `t(c)`/`s(c)` read the
-    * target/source column `c`, and `_t_present`/`_s_present` say which sides
-    * exist. The join plan evaluates it over the joined rows and the driver
-    * plan over a local relation of the pairs it found, so both plans share
-    * every clause's semantics. */
-  private def clauses(sh: Shape, t: String => Column, s: String => Column): Clauses = {
-    val sP = coalesce(s("_s_present"), lit(false))
-    val tP = coalesce(t("_t_present"), lit(false))
-    val del = coalesce(s("_deleted"), lit(false))
-    val noop = if (sh.hasNoop) coalesce(s("_noop"), lit(false)) else lit(false)
-    val applies =
-      if (sh.latestWins) sP && tP && s(sh.versionCol) >= t(sh.versionCol)
-      else sP && tP
-    val nmbsDel = if (sh.nmbsDelete) coalesce(t("_nmbs_del"), lit(false)) else lit(false)
-    val nmbsUpd = if (sh.nmbsUpdate) coalesce(t("_nmbs_upd"), lit(false)) else lit(false)
-    // unmatched target rows: kept, unless a NOT MATCHED BY SOURCE DELETE fires
-    val keep = when(!sP, !nmbsDel)
-      .when(applies && del, lit(false)) // newest change is a delete
-      .when(!tP && del, lit(false)) // delete for an absent key: no-op
-      .when(!tP && noop, lit(false)) // presence assertion for an absent key
-      .otherwise(lit(true))
-    // a source may legitimately omit schema columns it never writes (e.g. a
-    // column-level UPDATE with no INSERT clause): full-row images read
-    // missing source columns as typed NULLs — the branches referencing them
-    // are unreachable for such sources, but Catalyst resolves them anyway
-    def sOr(c: String, dt: DataType): Column = if (sh.srcHas(c)) s(c) else lit(null).cast(dt)
-    val image = sh.schema.fields.toSeq.map { f =>
-      val c = f.name
-      val updImage = if (sh.setCols.isEmpty) sOr(c, f.dataType)
-        else if (sh.setCols.contains(c)) {
-          val v = s(s"_set_$c").cast(f.dataType)
-          // per-row mask: the firing clause may not assign this column
-          if (sh.setwCols.contains(c))
-            when(coalesce(s(s"_setw_$c"), lit(false)), v).otherwise(t(c))
-          else v
-        } else t(c)
-      val insImage = if (sh.insCols.isEmpty) sOr(c, f.dataType)
-        else if (sh.insCols.contains(c)) {
-          val v = s(s"_ins_$c").cast(f.dataType)
-          if (sh.inswCols.contains(c))
-            when(coalesce(s(s"_insw_$c"), lit(false)), v) // else NULL
-          else v
-        } else if (sh.keyCols.contains(c)) s(c) // key columns always carry over
-        else lit(null).cast(f.dataType)
-      val withMain = when(applies && !del && !noop, updImage)
-        .when(!tP && sP, insImage) // insert (del rows were filtered above)
-      (if (sh.nmbsSetCols.contains(c))
-        withMain.when(!sP && nmbsUpd, t(s"_tset_$c").cast(f.dataType))
-      else withMain)
-        .otherwise(t(c)).as(c)
+  /** The rows of `src` some MATCHED or NOT MATCHED clause may fire for,
+    * when the source alone decides it: every such clause has a condition,
+    * and together they are deterministic over `s.` columns only. A row no
+    * clause can fire for changes nothing, so it need not widen the rewrite;
+    * it still joins, so its target row stays matched by source. */
+  private def mayFire(sh: Shape, src: DataFrame): Option[DataFrame] = {
+    val conds = sh.clauses.collect { case c: WhenMatched => c.cond; case c: WhenNotMatched => c.cond }
+    if (conds.contains(None)) return None
+    val any = conds.flatten.reduceOption(_ || _).getOrElse(lit(false))
+    val sourceOnly = !Shims.expression(any).exists {
+      case a: UnresolvedAttribute => a.nameParts.size < 2 || a.nameParts.head != "s"
+      case _: UnresolvedStar => true
+      case _ => false
     }
-    // merge-on-read: a target row leaves its file iff a matched clause fires
-    // for it (update OR delete) or a NOT MATCHED BY SOURCE action hits it;
-    // an image is appended for updates and inserts (deletes only produce
-    // the DV entry)
-    val matchedFires = applies && !noop
-    val dvRow = tP && (matchedFires || (!sP && (nmbsDel || nmbsUpd)))
-    val writeRow = (matchedFires && !del) || (!tP && sP && !del && !noop) || (!sP && nmbsUpd)
-    Clauses(keep, dvRow, writeRow, image)
+    if (!sourceOnly) None
+    else scala.util.Try(src.alias("s").filter(any)).toOption.filter(_.queryExecution.analyzed match {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.deterministic
+      case _ => false
+    })
+  }
+
+  /** Column `c` of the target (`t`) or source (`s`) side of a pair. */
+  private def tc(c: String): Column = col(s"t.`${c.replace("`", "``")}`")
+  private def sc(c: String): Column = col(s"s.`${c.replace("`", "``")}`")
+  private def tPresent: Column = coalesce(tc("_t_present"), lit(false))
+
+  /** A NOT MATCHED BY SOURCE condition over the bare table columns (its
+    * `t.` qualifiers dropped), so file statistics can prune by it. */
+  private def unqualified(c: Column): Column =
+    Shims.column(Shims.expression(c).transformUp {
+      case a: UnresolvedAttribute if a.nameParts.size > 1 && a.nameParts.head == "t" =>
+        UnresolvedAttribute(a.nameParts.tail)
+    })
+
+  /** The pair column holding the index of the clause that fired (-1: none). */
+  private val Fired = "_merge_clause"
+
+  /** The clause matrix of a merge over one (target, source) pair: `fired`,
+    * the first clause in list order whose kind and condition hold (a column
+    * of the pair relation named [[Fired]]); which target rows stay in a
+    * rewrite (`keep`); which leave their file as a DV entry (`dvRow`);
+    * which pairs append an image (`writeRow`); and the image itself, one
+    * column per table column. The rest read [[Fired]]. */
+  private final case class Matrix(fired: Column, keep: Column, dvRow: Column, writeRow: Column,
+      image: Seq[Column])
+
+  /** [[Matrix]] over a pair relation whose `t.<col>`/`s.<col>` name the
+    * target/source columns, with `_t_present`/`_s_present` saying which
+    * sides exist. The join plan evaluates it over the `t`/`s`-aliased join
+    * and the driver plan over a local relation of two struct columns `t`
+    * and `s`, so both plans share every clause's semantics. Values evaluate
+    * only for the pairs their clause fires for (lazy CASE branches): an
+    * ANSI-throwing value must not abort the merge through other rows. */
+  private def matrix(sh: Shape): Matrix = {
+    val tP = tPresent
+    val sP = coalesce(sc("_s_present"), lit(false))
+    val cl = sh.clauses.zipWithIndex
+    val fired = cl.map { case (c, i) =>
+      val scope = c match {
+        case _: WhenMatched => tP && sP
+        case _: WhenNotMatched => sP && !tP
+        case _: WhenNotMatchedBySource => tP && !sP
+      }
+      (c.cond.fold(scope)(scope && _), i)
+    }.foldLeft(None: Option[Column]) { case (acc, (fires, i)) =>
+      Some(acc.fold(when(fires, lit(i)))(_.when(fires, lit(i))))
+    }.fold(lit(-1))(_.otherwise(lit(-1)))
+    val f = col(Fired)
+    val image = sh.schema.fields.toSeq.map { fld =>
+      def value(v: Column): Column = fld.dataType match {
+        case _: StructType | _: ArrayType | _: MapType => v
+        case dt => v.cast(dt)
+      }
+      val branches = cl.flatMap { case (c, i) =>
+        c.action match {
+          case Update(set) => set.get(fld.name).map(v => i -> value(v))
+          case Insert(values) => Some(i -> values.get(fld.name).fold(lit(null).cast(fld.dataType))(value))
+          case Delete => None
+        }
+      }
+      (branches match {
+        case Seq() => tc(fld.name)
+        case (i, v) +: rest =>
+          rest.foldLeft(when(f === i, v)) { case (acc, (j, w)) => acc.when(f === j, w) }
+            .otherwise(tc(fld.name))
+      }).as(fld.name)
+    }
+    // a target row leaves its file iff a clause fires for it (update OR
+    // delete); an image is written for updates and inserts
+    val deleted = cl.collect { case (c, i) if c.action == Delete => i } match {
+      case Seq() => lit(false)
+      case is => f.isin(is: _*)
+    }
+    Matrix(fired,
+      keep = (tP && !deleted) || (!tP && f >= 0),
+      dvRow = tP && f >= 0,
+      writeRow = f >= 0 && !deleted,
+      image = image)
   }
 
   /** The latest change per key tuple: greatest version wins; delete beats
@@ -785,10 +778,10 @@ object Merge {
    * files once for the live rows whose keys the source names; write the
    * images. Everything between runs on the driver with no job: the
    * touched-file probe over the collected keys, the pairing of source rows
-   * with matched rows (a NULL key never matches), the ANSI duplicate-key
-   * check, the clause matrix ([[clauses]] over a local relation of the
-   * pairs — the optimizer folds a Filter or Project over a LocalRelation
-   * into a new LocalRelation) and the DV bitmaps.
+   * with matched rows (a NULL key never matches), the clause matrix
+   * ([[matrix]] over a local relation of the pairs — the optimizer folds a
+   * Filter or Project over a LocalRelation into a new LocalRelation), the
+   * ANSI cardinality check and the DV bitmaps.
    */
   private def mergeOnReadOnDriver(st: TableState, sh: Shape, src0: DataFrame, runId: String,
       log: graft.table.StepLog, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
@@ -806,17 +799,11 @@ object Merge {
     // JVM equality is Spark's, and equal source and target types (so equal
     // decimal scales); a tuple with a NULL never matches
     def keyOf(r: Row, idx: Seq[Int]): Option[Seq[Any]] = Some(idx.map(r.get)).filterNot(_.contains(null))
-    val noopIdx = srcSchema.fieldNames.indexOf("_noop")
-    def isNoop(r: Row): Boolean = noopIdx >= 0 && !r.isNullAt(noopIdx) && r.getBoolean(noopIdx)
-    // `_noop` rows never widen the touched set: no clause fires for them
-    val probeKeys = srcRows.filterNot(isNoop).flatMap(r => keyOf(r, srcKeyIdx)).distinct
+    val probeKeys = srcRows.flatMap(r => keyOf(r, srcKeyIdx)).distinct
     val touched = touchedFiles(st, spark.createDataFrame(probeKeys.map(Row.fromSeq).asJava,
       StructType(keyCols.zip(srcKeyIdx).map { case (k, i) => srcSchema(i).copy(name = k) })), keyCols)
-    // the matched target rows, grouped by key tuple: key, version and
-    // position, plus every target column when an update image keeps some
-    val tNeeded = (keyCols ++
-      (if (sh.setCols.nonEmpty) schema.fieldNames.toSeq
-      else Seq(sh.versionCol).filter(_ => sh.latestWins))).distinct
+    // the matched target rows, grouped by key tuple: the columns the clauses
+    // read (keys first) and the position
     val matched: Map[Seq[Any], Seq[Row]] =
       if (touched.isEmpty || probeKeys.isEmpty) Map.empty
       else {
@@ -825,56 +812,47 @@ object Merge {
         val inKeys = keyCols.indices.map(j => col(keyCols(j)).isInCollection(probeKeys.map(_(j)).distinct))
           .reduce(_ && _)
         st.withPositionDeletesKeepingPos(targetScan(st, touched, keyCols), touched)
-          .filter(inKeys).select((tNeeded ++ Seq("_gdv_rel", "_gdv_idx")).map(col): _*)
+          .filter(inKeys).select((sh.targetCols ++ Seq("_gdv_rel", "_gdv_idx")).map(col): _*)
           .collect().toSeq.groupBy(r => keyOf(r, keyCols.indices))
           .collect { case (Some(k), rs) => k -> rs }
       }
-    if (!sh.latestWins)
-      srcRows.groupBy(r => keyOf(r, srcKeyIdx)).collectFirst {
-        case (Some(k), rs) if rs.size > 1 && rs.exists(!isNoop(_)) && matched.contains(k) => k
-      }.foreach(k => throw duplicateKeyError(k))
     // the pairs, as the full-outer join would emit them minus unmatched
     // target rows (no clause acts on those without NOT MATCHED BY SOURCE):
-    // target columns at _t<i> (those not read stay NULL), then presence and
-    // position; source columns at _s<j>, then presence
-    val tNames = schema.fieldNames.toSeq ++ Seq("_t_present", "_gdv_rel", "_gdv_idx")
-    val sNames = srcSchema.fieldNames.toSeq :+ "_s_present"
-    val tSlots = tNeeded.map(schema.fieldNames.indexOf(_)) ++ (schema.size + 1 to schema.size + 2)
-    def targetSide(r: Row): Array[Any] = {
-      val out = new Array[Any](tNames.size)
-      tSlots.zipWithIndex.foreach { case (slot, j) => out(slot) = r.get(j) }
-      out(schema.size) = true
-      out
-    }
-    val absent = new Array[Any](tNames.size)
-    val pairRows = srcRows.flatMap { r =>
-      val sSide = r.toSeq :+ true
-      keyOf(r, srcKeyIdx).flatMap(matched.get) match {
-        case Some(ts) => ts.map(t => Row.fromSeq(targetSide(t).toSeq ++ sSide))
-        case None => Seq(Row.fromSeq(absent.toSeq ++ sSide))
-      }
-    }
-    val pairSchema = StructType(
-      (schema.fields.map(_.dataType) ++ Seq(BooleanType, StringType, LongType)).zipWithIndex
-        .map { case (dt, i) => StructField(s"_t$i", dt) } ++
-        (srcSchema.fields.map(_.dataType) :+ BooleanType).zipWithIndex
-          .map { case (dt, j) => StructField(s"_s$j", dt) })
-    def side(names: Seq[String], prefix: String)(c: String): Column = {
-      val i = names.indexWhere(sh.resolver(_, c))
-      require(i >= 0, s"no column $c on the merge's $prefix side")
-      col(s"$prefix$i")
-    }
-    val c = clauses(sh, side(tNames, "_t"), side(sNames, "_s"))
+    // a `t` struct of the table columns (those not read NULL), presence and
+    // position, NULL for no target row; an `s` struct of the source row and
+    // presence
     val n = schema.size
-    val changed = spark.createDataFrame(pairRows.asJava, pairSchema)
-      .filter(c.dvRow || c.writeRow)
-      .select(c.image ++ Seq(col(s"_t${n + 1}"), col(s"_t${n + 2}"),
-        c.dvRow.as("_dv"), c.writeRow.as("_wr")): _*)
+    val tType = StructType((schema.fields ++ Seq(StructField("_t_present", BooleanType),
+      StructField("_gdv_rel", StringType), StructField("_gdv_idx", LongType))).map(_.copy(nullable = true)))
+    val sType = StructType((srcSchema.fields :+ StructField("_s_present", BooleanType))
+      .map(_.copy(nullable = true)))
+    val tSlots = sh.targetCols.map(schema.fieldIndex) ++ Seq(n + 1, n + 2)
+    def targetSide(r: Row): Row = {
+      val out = new Array[Any](tType.size)
+      tSlots.zipWithIndex.foreach { case (slot, j) => out(slot) = r.get(j) }
+      out(n) = true
+      Row.fromSeq(out.toSeq)
+    }
+    val pairRows = srcRows.flatMap { r =>
+      val s = Row.fromSeq(r.toSeq :+ true)
+      keyOf(r, srcKeyIdx).flatMap(matched.get).fold(Seq(Row(null, s)))(_.map(t => Row(targetSide(t), s)))
+    }
+    val m = matrix(sh)
+    val changed = spark.createDataFrame(pairRows.asJava,
+        StructType(Seq(StructField("t", tType), StructField("s", sType))))
+      .withColumn(Fired, m.fired)
+      .filter(m.dvRow || m.writeRow)
+      .select(m.image ++ Seq(tc("_gdv_rel"), tc("_gdv_idx"), m.dvRow.as("_dv"), m.writeRow.as("_wr")): _*)
     val rows = changed.collect()
     def flag(r: Row, i: Int): Boolean = !r.isNullAt(i) && r.getBoolean(i)
+    val dvRows = rows.filter(flag(_, n + 2))
+    // ANSI cardinality: a target row (file, position) changed by two pairs
+    dvRows.groupBy(r => (r.getString(n), r.getLong(n + 1))).collectFirst {
+      case (_, rs) if rs.length > 1 => keyCols.map(k => rs.head.get(schema.fieldIndex(k)))
+    }.foreach(k => throw duplicateKeyError(k))
     val images = rows.filter(flag(_, n + 3)).map(r => Row.fromSeq(r.toSeq.take(n))).toSeq
     commitMergePos(st, sh, runId, log, touched,
-      DeletionVectors.of(rows.iterator.filter(flag(_, n + 2)).map(r => (r.getString(n), r.getLong(n + 1)))),
+      DeletionVectors.of(dvRows.iterator.map(r => (r.getString(n), r.getLong(n + 1)))),
       Some(images).filter(_.nonEmpty).map(is =>
         spark.createDataFrame(is.asJava, StructType(changed.schema.take(n))).coalesce(1)),
       "driver", t0, propertyUpdates)

@@ -12,7 +12,8 @@ import graft.table.GraftTable
  * parquet like a CDC landing zone. Merge-on-read plans on the driver:
  * collect the source, scan the touched files for the matched rows, write
  * the images — three jobs, no cached RDD. Copy-on-write runs the one-job
- * touched-file probe, then its join and rewrite. With
+ * touched-file probe, then its join and rewrite; an ANSI (SQL) merge also
+ * counts its source's duplicate keys. With
  * `spark.sql.autoBroadcastJoinThreshold = -1` merge-on-read takes the join
  * plan, with the same result.
  */
@@ -66,6 +67,43 @@ class MergeJobsSpec extends SparkSuite {
     val (descs, _) = sparkJobs(Merge.into(t, src))
     assert(descs.size <= 4, s"${descs.size} jobs:\n${descs.mkString("\n")}")
     assert(t.read().count() == 600 - 10 + 5)
+  }
+
+  /** The changes of [[changes]] as a SQL view with an `op` column instead of
+    * `_deleted`. */
+  private def sqlChanges(view: String): Unit =
+    changes().withColumn("op", when(col("_deleted"), "D").otherwise("U")).drop("_deleted")
+      .createOrReplaceTempView(view)
+
+  /** q30's statement shape: a conditional DELETE, an UPDATE of one column
+    * from its source value, and INSERT *. */
+  private def q30(t: GraftTable, view: String): Unit = {
+    spark.sql(
+      s"""MERGE INTO graft.`${t.root}` t USING $view s ON t.url = s.url
+         |WHEN MATCHED AND s.op = 'D' THEN DELETE
+         |WHEN MATCHED THEN UPDATE SET text = s.text || '#2'
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin).collect()
+    ()
+  }
+
+  test("a copy-on-write SQL MERGE of q30's shape runs at most 6 jobs") {
+    val t = table("graft-merge-jobs-sql-cow")
+    sqlChanges("merge_jobs_cow")
+    val (descs, _) = sparkJobs(q30(t, "merge_jobs_cow"))
+    assert(descs.size <= 6, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(t.read().count() == 600 - 10 + 5)
+    assert(t.read().filter(col("text").endsWith("#1#2")).count() == 20)
+  }
+
+  test("a merge-on-read SQL MERGE of q30's shape takes the driver plan in at most 3 jobs") {
+    val t = table("graft-merge-jobs-sql-mor")
+    spark.sql(s"ALTER TABLE graft.`${t.root}` SET TBLPROPERTIES ('write.merge.mode'='merge-on-read')")
+    sqlChanges("merge_jobs_mor")
+    val (descs, _) = sparkJobs(q30(t, "merge_jobs_mor"))
+    assert(t.currentSnapshot.get.summary("merge-plan") == "driver")
+    assert(descs.size <= 3, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(t.read().count() == 600 - 10 + 5)
+    assert(dvRows(t) == 30)
   }
 
   /** Summary rows of `t`'s lineage, by op. */

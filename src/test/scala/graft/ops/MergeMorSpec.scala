@@ -61,11 +61,13 @@ class MergeMorSpec extends SparkSuite {
     val (cow, mor, _) = twin(300)
     val src = cdcSource(cow).filter(!col("_deleted")).drop("_deleted")
       .localCheckpoint(true)
+    val row = src.columns.map(c => c -> col(s"s.$c")).toMap
     def run(t: GraftTable, mode: String) =
-      Merge.into(t, src.withColumn("_deleted", lit(false)), Seq("url"),
-        latestWins = false, mode = mode,
-        notMatchedBySourceDelete = Some(col("lang") === "fr"),
-        notMatchedBySourceSet = Some((col("lang") === "de", Map("text" -> lit("NMBS")))))
+      Merge.into(t, src, Seq("url"), latestWins = false, mode = mode, clauses = Seq(
+        Merge.WhenMatched(Merge.Update(row - "url")),
+        Merge.WhenNotMatched(Merge.Insert(row)),
+        Merge.WhenNotMatchedBySource(Merge.Delete, Some(col("t.lang") === "fr")),
+        Merge.WhenNotMatchedBySource(Merge.Update(Map("text" -> lit("NMBS"))), Some(col("t.lang") === "de"))))
     run(cow, "copy-on-write")
     run(mor, "merge-on-read")
     assertSameRows(mor.read(), cow.read(), "ANSI NMBS MoR vs CoW")

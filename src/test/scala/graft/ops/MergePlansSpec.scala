@@ -38,7 +38,7 @@ class MergePlansSpec extends SparkSuite {
   /** Twin tables, each `prep`ared alike, then each merge of `merges` on
     * both — the driver plan on one, the join plan on the other. */
   private def bothPlans(name: String, prep: GraftTable => Unit = _ => ())(
-      merges: (GraftTable => Snapshot)*): Unit = {
+      merges: (GraftTable => Snapshot)*): GraftTable = {
     val (d, j) = (table(s"graft-plans-$name-d"), table(s"graft-plans-$name-j"))
     prep(d); prep(j)
     for ((merge, i) <- merges.zipWithIndex) {
@@ -47,6 +47,7 @@ class MergePlansSpec extends SparkSuite {
       assertSameRows(d.read(), j.read(), s"$name, after merge $i")
       assert(dvRows(d) == dvRows(j), s"$name, DV rows after merge $i")
     }
+    d
   }
 
   private lazy val rows: Map[String, (String, java.sql.Timestamp, Array[Byte], String, String)] =
@@ -85,27 +86,51 @@ class MergePlansSpec extends SparkSuite {
 
   test("ANSI: column-level updates with per-row masks, inserts, and duplicate all-noop keys") {
     val src = Seq(
-      // clause A assigns text and lang, clause B only lang (masked text)
-      (urls(1), "A-TEXT", "xx", true, false),
-      (urls(2), "B-TEXT", "yy", false, false),
-      (urls(3), "C-TEXT", "zz", true, false),
-      // two presence-only rows of one key: legal, and nothing fires
-      (urls(4), "N", "N", false, true),
-      (urls(4), "N", "N", false, true),
-      ("https://new.example.com/ansi", "-", "-", false, false))
-      .toDF("url", "_set_text", "_set_lang", "_setw_text", "_noop")
-      .withColumn("_ins_warc_ts", lit(new java.sql.Timestamp(1735689600000L)))
-      .withColumn("_ins_html", lit(Array[Byte](1)))
-      .withColumn("_ins_text", lit("INSERTED"))
-      .withColumn("_ins_lang", lit("en"))
-    bothPlans("ansi")(Merge.into(_, src, Seq("url"), latestWins = false, mode = MoR))
+      // clause A sets text and lang, clause B only lang (text keeps the target's)
+      (urls(1), "A-TEXT", "xx", "A"),
+      (urls(2), "B-TEXT", "yy", "B"),
+      (urls(3), "C-TEXT", "zz", "A"),
+      // two rows of one key that fire no clause: legal, and nothing changes
+      (urls(4), "N", "N", "N"),
+      (urls(4), "N", "N", "N"),
+      ("https://new.example.com/ansi", "-", "-", "I"))
+      .toDF("url", "text", "lang", "op")
+    val clauses = Seq(
+      Merge.WhenMatched(Merge.Update(Map("text" -> col("s.text"), "lang" -> col("s.lang"))),
+        Some(col("s.op") === "A")),
+      Merge.WhenMatched(Merge.Update(Map("lang" -> col("s.lang"))), Some(col("s.op") === "B")),
+      Merge.WhenNotMatched(Merge.Insert(Map("url" -> col("s.url"),
+        "warc_ts" -> lit(new java.sql.Timestamp(1735689600000L)), "html" -> lit(Array[Byte](1)),
+        "text" -> lit("INSERTED"), "lang" -> lit("en")))))
+    bothPlans("ansi")(Merge.into(_, src, Seq("url"), latestWins = false, clauses = clauses, mode = MoR))
+  }
+
+  test("ANSI: a MATCHED condition and SET value that read target columns") {
+    // ten matched rows; the clause fires where the target's lang differs
+    // from the source's, and appends the source text to the target's
+    val src = urls.slice(10, 20).zipWithIndex
+      .map { case (u, i) => (u, s"#$i", if (i % 2 == 0) rows(u)._5 else "xx") }
+      .toDF("url", "text", "lang")
+    val clauses = Seq(Merge.WhenMatched(
+      Merge.Update(Map("text" -> concat(col("t.text"), col("s.text")), "lang" -> col("s.lang"))),
+      Some(col("t.lang") =!= col("s.lang"))))
+    val d = bothPlans("target-refs")(
+      Merge.into(_, src, Seq("url"), latestWins = false, clauses = clauses, mode = MoR))
+    val got = d.read().filter(col("url").isin(urls.slice(10, 20): _*))
+      .select("url", "text", "lang").as[(String, String, String)].collect().map(r => r._1 -> r).toMap
+    for ((u, i) <- urls.slice(10, 20).zipWithIndex) {
+      val (_, _, _, text, lang) = rows(u)
+      val want = if (i % 2 == 0 || lang == "xx") (u, text, lang) else (u, s"$text#$i", "xx")
+      assert(got(u) == want, s"row $i")
+    }
   }
 
   test("ANSI duplicate-key error has the same text under both plans") {
     val src = Seq((urls(7), "ONE"), (urls(7), "TWO"), ("https://new.example.com/dup", "X"))
-      .toDF("url", "_set_text")
+      .toDF("url", "text")
+    val set = Seq(Merge.WhenMatched(Merge.Update(Map("text" -> col("s.text")))))
     def error(t: GraftTable): String = intercept[IllegalArgumentException](
-      Merge.into(t, src, Seq("url"), latestWins = false, mode = MoR)).getMessage
+      Merge.into(t, src, Seq("url"), latestWins = false, clauses = set, mode = MoR)).getMessage
     val (d, j) = (table("graft-plans-dup-d"), table("graft-plans-dup-j"))
     val msg = error(d)
     assert(msg == joinPlan(error(j)))
@@ -115,9 +140,10 @@ class MergePlansSpec extends SparkSuite {
 
   test("NOT MATCHED BY SOURCE takes the join plan") {
     val t = table("graft-plans-nmbs")
-    val src = Seq((urls(1), "A")).toDF("url", "_set_text")
-    val snap = Merge.into(t, src, Seq("url"), latestWins = false, mode = MoR,
-      notMatchedBySourceDelete = Some(col("lang") === "fr"))
+    val src = Seq((urls(1), "A")).toDF("url", "text")
+    val snap = Merge.into(t, src, Seq("url"), latestWins = false, mode = MoR, clauses = Seq(
+      Merge.WhenMatched(Merge.Update(Map("text" -> col("s.text")))),
+      Merge.WhenNotMatchedBySource(Merge.Delete, Some(col("t.lang") === "fr"))))
     assert(snap.summary("merge-plan") == "join")
   }
 

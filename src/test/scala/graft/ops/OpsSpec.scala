@@ -287,13 +287,12 @@ class MergeSpec extends SparkSuite {
     val t = GraftTable.create(spark, tmpDir("merge-noop-dup"), Synth.pageSchema)
     t.append(Synth.pages(spark, 100, hosts = 4, partitions = 2))
     val one = t.read().limit(1)
-    // two presence-only (_noop) rows for the same matched key: no target row
-    // is modified, so ANSI cardinality must not error (Spark/Delta agree)
+    // two rows for the same matched key whose clause condition is false: no
+    // target row is modified, so ANSI cardinality must not error
     val noops = one.unionByName(one)
-      .withColumn("_deleted", lit(false)).withColumn("_noop", lit(true))
     val before = t.read().count()
     Merge.into(t, noops, latestWins = false,
-      notMatchedBySourceDelete = Some(lit(false)))
+      clauses = Seq(Merge.WhenMatched(Merge.Delete, Some(lit(false)))))
     assert(t.read().count() === before, "presence-only merge must change nothing")
     // …but two rows that would genuinely MODIFY the same target row still error
     val mods = one.unionByName(one).withColumn("_deleted", lit(false))
@@ -698,36 +697,6 @@ class MergeSpec extends SparkSuite {
 }
 
 class ExpireSpec extends SparkSuite {
-
-  test("caller-supplied _noop rows: firing+noop duplicate errors; all-noop dups keep one copy") {
-    import spark.implicits._
-    // the SQL lowering never emits this shape (it drops noop rows for
-    // firing keys and dedups the rest), but `_noop` is a documented
-    // reserved source column, so a programmatic caller can — the engine
-    // must not silently duplicate the kept target row through the
-    // per-source-row full-outer join
-    val t = GraftTable.create(spark, tmpDir("ops-noop"), Synth.pageSchema)
-    t.append(Synth.pages(spark, 100, partitions = 2))
-    val k = t.read().select("url").orderBy("url").head().getString(0)
-    val ts = new java.sql.Timestamp(1735689600000L)
-    val html = Array[Byte](1)
-    def row(del: Boolean, noop: Boolean) = (k, ts, html, "X", "en", del, noop)
-    def srcOf(rows: Seq[(String, java.sql.Timestamp, Array[Byte], String, String, Boolean, Boolean)]) =
-      rows.toDF("url", "warc_ts", "html", "text", "lang", "_deleted", "_noop")
-    val err = intercept[IllegalArgumentException] {
-      Merge.into(t, srcOf(Seq(row(del = false, noop = false), row(del = false, noop = true))),
-        Seq("url"), latestWins = false)
-    }
-    assert(err.getMessage.contains("multiple rows for matched key"), err.getMessage)
-    // all-noop duplicates collapse to one presence assertion: row unchanged,
-    // present exactly once
-    val pre = t.read().count()
-    Merge.into(t, srcOf(Seq(row(del = false, noop = true), row(del = false, noop = true))),
-      Seq("url"), latestWins = false)
-    assert(t.read().count() === pre)
-    assert(t.read().filter(col("url") === k).count() === 1L,
-      "all-noop duplicate keys must not duplicate the kept row")
-  }
 
   test("expire GCs only files unreferenced by retained snapshots") {
     val root = tmpDir("graft-expire")

@@ -299,7 +299,7 @@ class SqlMergeSpec extends SparkSuite {
 
   test("duplicate matched rows that fire no clause do not trip the cardinality check") {
     // ANSI cardinality errors only when a target row is MODIFIED by more
-    // than one source row; presence-only duplicates (kept for NMBS) are fine
+    // than one source row; duplicates that fire no clause are fine
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -369,6 +369,13 @@ class SqlMergeSpec extends SparkSuite {
     assert(snap.summary("touched-files") === "1", snap.summary.toString)
     assert(snap.summary("removed-files") === "1", snap.summary.toString)
     assert(t.read().count() === 398)
+    // a row no clause fires for does not widen the rewrite either
+    Seq((2030L, "D"), (3010L, "K")).toDF("id", "op").createOrReplaceTempView("prunesrc2")
+    spark.sql(
+      s"""MERGE INTO graft.`${t.root}` t USING prunesrc2 s ON t.id = s.id
+         |WHEN MATCHED AND s.op = 'D' THEN DELETE""".stripMargin).collect()
+    assert(t.currentSnapshot.get.summary("touched-files") === "1")
+    assert(t.read().count() === 397)
   }
 
   test("DV-deleted target rows are NOT MATCHED: the INSERT clause re-ships them") {
@@ -397,10 +404,9 @@ class SqlMergeSpec extends SparkSuite {
     val t = GraftTable.create(spark, tmpDir("sqlmerge-dup"), schema)
     import spark.implicits._
     t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
-    // sel=1 fires the conditional update, sel=2 fires nothing: the lowering
-    // drops the non-firing row for a key that also has a firing one, so the
-    // target row is modified by exactly ONE source row — which ANSI permits
-    // (no cardinality error), and the output carries the update exactly once
+    // sel=1 fires the conditional update, sel=2 fires nothing: the target
+    // row is modified by exactly ONE source row — which ANSI permits (no
+    // cardinality error), and the output carries the update exactly once
     Seq((1L, 1L), (1L, 2L)).toDF("id", "sel").createOrReplaceTempView("dupsrc")
     spark.sql(
       s"""MERGE INTO graft.`${t.root}` t USING dupsrc s ON t.id = s.id
@@ -408,8 +414,8 @@ class SqlMergeSpec extends SparkSuite {
          |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = concat(t.v, '!')""".stripMargin).collect()
     assert(t.read().as[(Long, String)].collect().toSet === Set((1L, "X"), (2L, "b!")),
       "firing duplicate applied once; non-firing duplicate dropped")
-    // ALL duplicates non-firing (presence-only _noop rows survive into the
-    // join because of the NMBS clause): no error, row kept exactly ONCE
+    // ALL duplicates non-firing (both still match the target row, so the
+    // NMBS clause skips it): no error, row kept exactly ONCE
     spark.sql(
       s"""MERGE INTO graft.`${t.root}` t USING dupsrc s ON t.id = s.id
          |WHEN MATCHED AND s.sel = 99 THEN UPDATE SET v = 'Y'
@@ -657,7 +663,7 @@ class SqlMergeSpec extends SparkSuite {
     assert(exUnk.getMessage.contains("unknown target column"), exUnk.getMessage)
   }
 
-  test("target-referencing clauses refuse duplicate target keys loudly") {
+  test("target-referencing clauses read each duplicate target row's own values") {
     import org.apache.spark.sql.types._
     import spark.implicits._
     val schema = StructType(Seq(
@@ -671,11 +677,34 @@ class SqlMergeSpec extends SparkSuite {
       s"""MERGE INTO graft.`${t.root}` t USING tgtdup_src s ON t.k = s.k
          |WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin).collect()
     assert(t.read().filter(col("k") === 7L && col("v") === 100.0).count() === 2)
-    // WITH a target ref the per-key value is ambiguous — loud failure
+    // WITH a target ref each target row reads its own value (ANSI)
     t.append(Seq((7L, 3.0)).toDF("k", "v")) // keep keys duplicated
-    val ex = intercept[IllegalArgumentException](spark.sql(
+    spark.sql(
       s"""MERGE INTO graft.`${t.root}` t USING tgtdup_src s ON t.k = s.k
-         |WHEN MATCHED THEN UPDATE SET v = t.v + s.v""".stripMargin).collect())
-    assert(ex.getMessage.contains("multiple rows for key"), ex.getMessage)
+         |WHEN MATCHED THEN UPDATE SET v = t.v + s.v""".stripMargin).collect()
+    assert(t.read().filter(col("k") === 7L).select("v").as[Double].collect().sorted.toSeq ===
+      Seq(103.0, 200.0, 200.0))
+    assert(t.read().count() === 8)
+  }
+
+  test("several NOT MATCHED BY SOURCE UPDATE clauses: first-match-wins") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false), StructField("v", LongType)))
+    val t = GraftTable.create(spark, tmpDir("sqlmerge-nmbs-upd2"), schema)
+    t.append((1L to 20L).map(k => (k, k)).toDF("k", "v"))
+    Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("k", "v").createOrReplaceTempView("nmbs_upd2")
+    spark.sql(
+      s"""MERGE INTO graft.`${t.root}` t USING nmbs_upd2 s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET v = s.v
+         |WHEN NOT MATCHED BY SOURCE AND t.v < 10 THEN UPDATE SET v = t.v + 100
+         |WHEN NOT MATCHED BY SOURCE AND t.v < 15 THEN UPDATE SET v = t.v + 1000""".stripMargin)
+      .collect()
+    val got = t.read().orderBy("k").as[(Long, Long)].collect().toSeq
+    // 1-3 matched; 4-9 take the first clause; 10-14 the second; 15-20 none
+    val want = (1L to 3L).map(k => (k, k)) ++ (4L to 9L).map(k => (k, k + 100)) ++
+      (10L to 14L).map(k => (k, k + 1000)) ++ (15L to 20L).map(k => (k, k))
+    assert(got === want)
   }
 }
