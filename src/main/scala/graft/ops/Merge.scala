@@ -53,22 +53,26 @@ import graft.table.{Bounds, DataFileMeta, DeletionVectors, GraftTable, Snapshot,
  * in tests via the physical plan); untouched files are carried into the
  * new snapshot unchanged.
  *
- * Merge-on-read (`mode = "merge-on-read"`) has two plans with the same
- * clause semantics ([[matrix]] is the one clause matrix both evaluate):
+ * Each write mode has two plans with the same clause semantics
+ * ([[matrix]] is the one clause matrix all of them evaluate):
  *  - the DRIVER plan, for a small source: when the optimizer's size
  *    estimate of the normalized source is within
  *    `spark.sql.autoBroadcastJoinThreshold` (`-1` turns it off), the merge
- *    collects the source, probes touched files on the driver, scans them
- *    once for the rows whose keys the source names, pairs and applies the
- *    clauses on the driver, and writes the images — at most three Spark
- *    jobs, nothing persisted;
+ *    collects the source, probes touched files on the driver, and scans
+ *    them once: merge-on-read for the live rows whose keys the source
+ *    names, copy-on-write for every live row. It pairs and applies the
+ *    clauses on the driver, and Spark's parquet writer writes the output
+ *    in the driver thread ([[TableState.writeRows]]) — two Spark jobs,
+ *    nothing persisted. Copy-on-write takes it only for an unpartitioned
+ *    table whose touched files are within the same threshold in bytes
+ *    (each touched row comes to the driver); past that, the collected
+ *    source joins as a local relation;
  *  - the JOIN plan, for everything else: the full-outer join of the
- *    source against the touched files, as copy-on-write runs it. NOT
- *    MATCHED BY SOURCE clauses (they need every candidate file's rows),
- *    key columns whose source and target types differ, and key types whose
- *    driver-side equality is not Spark's (float, double, binary, nested)
- *    always take it.
- * The `merge-pos` snapshot's summary names the plan (`merge-plan`).
+ *    source against the touched files. NOT MATCHED BY SOURCE clauses (they
+ *    need every candidate file's rows), key columns whose source and
+ *    target types differ, and key types whose driver-side equality is not
+ *    Spark's (float, double, binary, nested) always take it.
+ * The snapshot's summary names the plan (`merge-plan`).
  */
 object Merge {
 
@@ -191,8 +195,9 @@ object Merge {
     * single-key match is deliberate: with composite merge keys Spark's
     * co-partitioning rule (`requireAllClusterKeysForCoPartition`, default on)
     * shuffles both sides anyway, and an unhelpful bucketed scan would cap
-    * scan parallelism at n for nothing. Everything else keeps the plain
-    * parquet scan over the touched paths (size-split parallelism). Join
+    * scan parallelism at n for nothing. Everything else scans the
+    * touched files through the unbucketed snapshot relation (size-split
+    * parallelism, file statuses from metadata). Join
     * parallelism under the bucketed path is n — that is the user's declared
     * layout; per-task sort input is touchedBytes/n, so pick bucket counts
     * the way you'd pick shuffle partitions. */
@@ -201,8 +206,7 @@ object Merge {
     val bs = state.bucketSpec(touched).filter { b =>
       keyCols.map(_.toLowerCase) == b.bucketColumnNames.map(_.toLowerCase)
     }
-    if (bs.isDefined) state.relation(touched, bucketed = bs)
-    else state.table.spark.read.schema(state.schema).parquet(touched.map(state.table.absPath): _*)
+    state.relation(touched, bucketed = bs)
   }
 
   /** One WHEN clause of an explicit MERGE clause list (see the class doc);
@@ -289,19 +293,31 @@ object Merge {
     clauses.foreach(checkAssignments(_, cols, keyCols))
 
     val resolver = spark.sessionState.analyzer.resolver
-    val src0 =
+    val given =
       if (clauses.nonEmpty || source.columns.contains("_deleted")) source
       else source.withColumn("_deleted", lit(false))
     // besides the keys, a CDC list reads only the version of the target
     val (cl, targetCols) =
       if (clauses.nonEmpty) (clauses, cols)
-      else (cdcClauses(schema, src0.columns.toSeq, versionCol, latestWins, resolver),
+      else (cdcClauses(schema, given.columns.toSeq, versionCol, latestWins, resolver),
         Seq(versionCol).filter(_ => latestWins))
     val sh = Shape(schema, keyCols, versionCol, latestWins, cl, (keyCols ++ targetCols).distinct, resolver)
     val keyC = keyCols.map(col)
-    val src = if (latestWins) latestPerKey(src0, sh) else src0
-    if (mor && !nmbs && plansOnDriver(spark, sh, src))
-      return mergeOnReadOnDriver(st, sh, src0, runId, log, t0, propertyUpdates)
+    val driver =
+      if (!nmbs && plansOnDriver(spark, sh, if (latestWins) latestPerKey(given, sh) else given))
+        Some(new DriverSource(st, sh, given))
+      else None
+    for (ds <- driver) {
+      if (mor) return mergeOnReadOnDriver(st, sh, ds, runId, log, t0, propertyUpdates)
+      // copy-on-write collects every live row of the touched files
+      if (st.partitionSpecs.isEmpty &&
+          ds.touched.map(_.bytes).sum <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+        return copyOnWriteOnDriver(st, sh, ds, targetFileBytes, runId, log, t0, propertyUpdates)
+    }
+    // the join plan; a collected source whose copy-on-write touches more
+    // bytes than the driver plan collects joins as its collected rows
+    val src0 = driver.fold(given)(_.frame)
+    val src = if (latestWins && driver.isEmpty) latestPerKey(src0, sh) else src0
     try {
 
     val leadDt = schema.fields.find(_.name == keyCols.head).get.dataType
@@ -458,9 +474,10 @@ object Merge {
         // niche (small relative to touched bytes), so persisting it is the
         // cheap side of re-running the full-outer join twice
         changed.persist()
-        try commitMergePos(st, sh, runId, log, touched,
+        try commitMergePos(st, runId, log, touched,
             DeletionVectors.collect(changed.filter(col("_dv"))),
-            Some(changed.filter(col("_wr")).select(cols.map(col): _*)), "join", t0, propertyUpdates)
+            Some(st.writeDataFiles(changed.filter(col("_wr")).select(cols.map(col): _*)
+              .sortWithinPartitions(keyC: _*), _)), "join", t0, propertyUpdates)
         finally changed.unpersist()
       }
 
@@ -480,18 +497,9 @@ object Merge {
     }
 
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    RowLevel.rewrite(st, "merge", runId, touched,
-        Map("run-id" -> runId, "touched-files" -> touched.size.toString), t0, Some(log),
+    RowLevel.rewrite(st, "merge", runId, touched, mergeSummary(runId, touched, "join"), t0, Some(log),
         propertyUpdates) { commitUuid =>
-      val dir = s"${table.dataDir}/$commitUuid"
-      // the footers of a rewrite staged by an earlier, crashed attempt are
-      // read back from its dir (the writer drops all-empty outputs: an empty
-      // range partition writes a 0-row file with no stats)
-      if (log.doneSteps.contains("rewrite") && graft.table.FileIO.exists(s"$dir/_SUCCESS"))
-        graft.table.StatsCollector.collect(
-          spark, schema, table.root, graft.table.FileIO.listFilesRecursively(dir, ".parquet"), commitUuid)
-      else withJoinShuffleSizedByData {
-        graft.table.FileIO.deleteRecursively(dir)
+      staged(st, log, commitUuid)(withJoinShuffleSizedByData {
         spark.sparkContext.setJobDescription(s"merge $runId (${touched.size} touched files)")
         // range-partition the merged output on the leading key WITHOUT sampling
         // the child (repartitionByRange would re-execute the full-outer join
@@ -577,11 +585,8 @@ object Merge {
         val touchedRows = touched.map(_.rows).sum
         val rollRecords = if (nOut <= 1 || touchedRows == 0) 0L
           else math.max(1L, touchedRows / nOut)
-        val metas = st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid,
-          maxRecordsPerFile = rollRecords)
-        Maintenance.markDone(table, log, "rewrite")
-        metas
-      }
+        st.writeDataFiles(out.sortWithinPartitions(keyC: _*), commitUuid, maxRecordsPerFile = rollRecords)
+      })
     }
     } finally {
       // release the job label (a stale description would mislabel every
@@ -749,8 +754,8 @@ object Merge {
       s"MERGE source has multiple rows for matched key '${key.mkString(",")}' " +
         s"(a target row must not be modified by more than one source row)")
 
-  /** Whether a merge-on-read merge of the normalized source `src` plans on
-    * the driver ([[mergeOnReadOnDriver]]): the optimizer's size estimate of
+  /** Whether a merge of the normalized source `src` collects it for a
+    * driver plan ([[DriverSource]]): the optimizer's size estimate of
     * `src` is within `spark.sql.autoBroadcastJoinThreshold` (`-1` turns the
     * driver plan off), and every key column has the target's type and a
     * type whose driver-side equality is Spark's join equality (no float or
@@ -772,59 +777,51 @@ object Merge {
       src.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
   }
 
-  /**
-   * The merge-on-read merge of a small source, planned on the driver in at
-   * most three Spark jobs: collect the normalized source; scan the touched
-   * files once for the live rows whose keys the source names; write the
-   * images. Everything between runs on the driver with no job: the
-   * touched-file probe over the collected keys, the pairing of source rows
-   * with matched rows (a NULL key never matches), the clause matrix
-   * ([[matrix]] over a local relation of the pairs — the optimizer folds a
-   * Filter or Project over a LocalRelation into a new LocalRelation), the
-   * ANSI cardinality check and the DV bitmaps.
-   */
-  private def mergeOnReadOnDriver(st: TableState, sh: Shape, src0: DataFrame, runId: String,
-      log: graft.table.StepLog, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
+  /** A tuple of `r`'s values at `idx`; None when one is NULL (a NULL key
+    * never matches). Key tuples compare as JVM values: the driver plans
+    * admit only key types whose JVM equality is Spark's, and equal source
+    * and target types (so equal decimal scales). */
+  private def keyOf(r: Row, idx: Seq[Int]): Option[Seq[Any]] = Some(idx.map(r.get)).filterNot(_.contains(null))
+
+  /** The normalized source of a driver-planned merge, collected once (one
+    * partition satisfies the latest-wins version window's distribution: it
+    * runs without an exchange), the distinct non-NULL key tuples of the
+    * rows a clause may fire for ([[mayFire]], over the collected rows: no
+    * job), and the files they touch, probed on the driver. */
+  private final class DriverSource(st: TableState, sh: Shape, given: DataFrame) {
     import scala.jdk.CollectionConverters._
-    val spark = st.table.spark
+    private val spark = st.table.spark
+    private val df = if (sh.latestWins) latestPerKey(given.coalesce(1), sh) else given
+    val rows: Seq[Row] = df.collect().toSeq
+    val schema: StructType = df.schema
+    val keyIdx: Seq[Int] = sh.keyCols.map(k => schema.fieldNames.indexWhere(sh.resolver(_, k)))
+    val keys: Seq[Seq[Any]] =
+      mayFire(sh, frame).fold(rows)(_.collect().toSeq).flatMap(keyOf(_, keyIdx)).distinct
+    val touched: Seq[DataFileMeta] = touchedFiles(st, spark.createDataFrame(keys.map(Row.fromSeq).asJava,
+      StructType(sh.keyCols.zip(keyIdx).map { case (k, i) => schema(i).copy(name = k) })), sh.keyCols)
+    /** The collected rows as a local frame. */
+    def frame: DataFrame = spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The changes of a driver-planned merge: every source row paired with
+    * the `matched` target rows of its key tuple (the columns the clauses
+    * read, keys first, then `_gdv_rel`/`_gdv_idx`), or with none — the
+    * pairs the full-outer join would emit minus unmatched target rows, on
+    * which no clause acts without NOT MATCHED BY SOURCE. [[matrix]]
+    * evaluates over a local relation of the pairs: a `t` struct of the
+    * table columns (those not read NULL), presence and position, NULL for
+    * no target row, and an `s` struct of the source row and presence. The
+    * optimizer folds the Filter and Project over the LocalRelation, so no
+    * job runs. Returns the positions of the target rows a clause fired for,
+    * after the ANSI cardinality check, and the images to write. */
+  private def driverChanges(st: TableState, sh: Shape, ds: DriverSource,
+      matched: Map[Seq[Any], Seq[Row]]): (Seq[(String, Long)], Seq[Row]) = {
+    import scala.jdk.CollectionConverters._
     val schema = st.schema
-    val keyCols = sh.keyCols
-    // one partition satisfies the version window's distribution: the window
-    // runs without an exchange
-    val srcDf = if (sh.latestWins) latestPerKey(src0.coalesce(1), sh) else src0
-    val srcRows = srcDf.collect().toSeq
-    val srcSchema = srcDf.schema
-    val srcKeyIdx = keyCols.map(k => srcSchema.fieldNames.indexWhere(sh.resolver(_, k)))
-    // key tuples compare as JVM values: the gate admits only key types whose
-    // JVM equality is Spark's, and equal source and target types (so equal
-    // decimal scales); a tuple with a NULL never matches
-    def keyOf(r: Row, idx: Seq[Int]): Option[Seq[Any]] = Some(idx.map(r.get)).filterNot(_.contains(null))
-    val probeKeys = srcRows.flatMap(r => keyOf(r, srcKeyIdx)).distinct
-    val touched = touchedFiles(st, spark.createDataFrame(probeKeys.map(Row.fromSeq).asJava,
-      StructType(keyCols.zip(srcKeyIdx).map { case (k, i) => srcSchema(i).copy(name = k) })), keyCols)
-    // the matched target rows, grouped by key tuple: the columns the clauses
-    // read (keys first) and the position
-    val matched: Map[Seq[Any], Seq[Row]] =
-      if (touched.isEmpty || probeKeys.isEmpty) Map.empty
-      else {
-        // one IN set per key column: a superset of the key tuples, pushed
-        // into the scan; the pairing below matches whole tuples
-        val inKeys = keyCols.indices.map(j => col(keyCols(j)).isInCollection(probeKeys.map(_(j)).distinct))
-          .reduce(_ && _)
-        st.withPositionDeletesKeepingPos(targetScan(st, touched, keyCols), touched)
-          .filter(inKeys).select((sh.targetCols ++ Seq("_gdv_rel", "_gdv_idx")).map(col): _*)
-          .collect().toSeq.groupBy(r => keyOf(r, keyCols.indices))
-          .collect { case (Some(k), rs) => k -> rs }
-      }
-    // the pairs, as the full-outer join would emit them minus unmatched
-    // target rows (no clause acts on those without NOT MATCHED BY SOURCE):
-    // a `t` struct of the table columns (those not read NULL), presence and
-    // position, NULL for no target row; an `s` struct of the source row and
-    // presence
     val n = schema.size
     val tType = StructType((schema.fields ++ Seq(StructField("_t_present", BooleanType),
       StructField("_gdv_rel", StringType), StructField("_gdv_idx", LongType))).map(_.copy(nullable = true)))
-    val sType = StructType((srcSchema.fields :+ StructField("_s_present", BooleanType))
+    val sType = StructType((ds.schema.fields :+ StructField("_s_present", BooleanType))
       .map(_.copy(nullable = true)))
     val tSlots = sh.targetCols.map(schema.fieldIndex) ++ Seq(n + 1, n + 2)
     def targetSide(r: Row): Row = {
@@ -833,39 +830,122 @@ object Merge {
       out(n) = true
       Row.fromSeq(out.toSeq)
     }
-    val pairRows = srcRows.flatMap { r =>
+    val pairRows = ds.rows.flatMap { r =>
       val s = Row.fromSeq(r.toSeq :+ true)
-      keyOf(r, srcKeyIdx).flatMap(matched.get).fold(Seq(Row(null, s)))(_.map(t => Row(targetSide(t), s)))
+      keyOf(r, ds.keyIdx).flatMap(matched.get).fold(Seq(Row(null, s)))(_.map(t => Row(targetSide(t), s)))
     }
     val m = matrix(sh)
-    val changed = spark.createDataFrame(pairRows.asJava,
+    val rows = st.table.spark.createDataFrame(pairRows.asJava,
         StructType(Seq(StructField("t", tType), StructField("s", sType))))
       .withColumn(Fired, m.fired)
       .filter(m.dvRow || m.writeRow)
       .select(m.image ++ Seq(tc("_gdv_rel"), tc("_gdv_idx"), m.dvRow.as("_dv"), m.writeRow.as("_wr")): _*)
-    val rows = changed.collect()
+      .collect()
     def flag(r: Row, i: Int): Boolean = !r.isNullAt(i) && r.getBoolean(i)
     val dvRows = rows.filter(flag(_, n + 2))
     // ANSI cardinality: a target row (file, position) changed by two pairs
     dvRows.groupBy(r => (r.getString(n), r.getLong(n + 1))).collectFirst {
-      case (_, rs) if rs.length > 1 => keyCols.map(k => rs.head.get(schema.fieldIndex(k)))
+      case (_, rs) if rs.length > 1 => sh.keyCols.map(k => rs.head.get(schema.fieldIndex(k)))
     }.foreach(k => throw duplicateKeyError(k))
-    val images = rows.filter(flag(_, n + 3)).map(r => Row.fromSeq(r.toSeq.take(n))).toSeq
-    commitMergePos(st, sh, runId, log, touched,
-      DeletionVectors.of(dvRows.iterator.map(r => (r.getString(n), r.getLong(n + 1)))),
-      Some(images).filter(_.nonEmpty).map(is =>
-        spark.createDataFrame(is.asJava, StructType(changed.schema.take(n))).coalesce(1)),
-      "driver", t0, propertyUpdates)
+    (dvRows.toSeq.map(r => (r.getString(n), r.getLong(n + 1))),
+      rows.toSeq.filter(flag(_, n + 3)).map(r => Row.fromSeq(r.toSeq.take(n))))
+  }
+
+  /**
+   * The merge-on-read merge of a small source, planned on the driver in at
+   * most two Spark jobs: collect the normalized source ([[DriverSource]]);
+   * scan the touched files once for the live rows whose keys the source
+   * names. Everything else runs on the driver with no job: the probe, the
+   * pairing and the clause matrix ([[driverChanges]]), the DV bitmaps, and
+   * the image write ([[TableState.writeRows]]).
+   */
+  private def mergeOnReadOnDriver(st: TableState, sh: Shape, ds: DriverSource, runId: String,
+      log: graft.table.StepLog, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
+    val keyCols = sh.keyCols
+    // the matched target rows, grouped by key tuple: the columns the clauses
+    // read (keys first) and the position
+    val matched: Map[Seq[Any], Seq[Row]] =
+      if (ds.touched.isEmpty || ds.keys.isEmpty) Map.empty
+      else {
+        // one IN set per key column: a superset of the key tuples, pushed
+        // into the scan; the pairing matches whole tuples
+        val inKeys = keyCols.indices.map(j => col(keyCols(j)).isInCollection(ds.keys.map(_(j)).distinct))
+          .reduce(_ && _)
+        st.withPositionDeletesKeepingPos(targetScan(st, ds.touched, keyCols), ds.touched)
+          .filter(inKeys).select((sh.targetCols ++ Seq("_gdv_rel", "_gdv_idx")).map(col): _*)
+          .collect().toSeq.groupBy(r => keyOf(r, keyCols.indices))
+          .collect { case (Some(k), rs) => k -> rs }
+      }
+    val (positions, images) = driverChanges(st, sh, ds, matched)
+    commitMergePos(st, runId, log, ds.touched, DeletionVectors.of(positions.iterator),
+      Option.when(images.nonEmpty)(st.writeRows(images, keyCols, _)), "driver", t0, propertyUpdates)
+  }
+
+  /**
+   * The copy-on-write merge of a small source into an unpartitioned table
+   * whose touched files are within `spark.sql.autoBroadcastJoinThreshold`
+   * bytes, planned on the driver in two Spark jobs: collect the normalized
+   * source ([[DriverSource]]); collect the touched files' live rows with
+   * their positions. On the driver: the probe, the pairing and the clause
+   * matrix ([[driverChanges]]); the output is the live rows no clause fired
+   * for (once each, however many source rows share their key), plus the
+   * images, written by [[TableState.writeRows]] sorted by key, rolled into
+   * as many files as `targetFileBytes` asks for.
+   */
+  private def copyOnWriteOnDriver(st: TableState, sh: Shape, ds: DriverSource, targetFileBytes: Long,
+      runId: String, log: graft.table.StepLog, t0: Long, propertyUpdates: Map[String, String]): Snapshot = {
+    val schema = st.schema
+    val n = schema.size
+    val live: Seq[Row] =
+      if (ds.touched.isEmpty) Seq.empty
+      else st.withPositionDeletesKeepingPos(targetScan(st, ds.touched, sh.keyCols), ds.touched)
+        .select((schema.fieldNames.toSeq ++ Seq("_gdv_rel", "_gdv_idx")).map(col): _*).collect().toSeq
+    val keyIdx = sh.keyCols.map(schema.fieldIndex)
+    val tIdx = sh.targetCols.map(schema.fieldIndex) ++ Seq(n, n + 1)
+    val named = ds.keys.toSet
+    val matched = live.flatMap(r => keyOf(r, keyIdx).filter(named).map(_ -> Row.fromSeq(tIdx.map(r.get))))
+      .groupMap(_._1)(_._2)
+    val (positions, images) = driverChanges(st, sh, ds, matched)
+    val changed = positions.toSet
+    val out = live.filterNot(r => changed((r.getString(n), r.getLong(n + 1))))
+      .map(r => Row.fromSeq(r.toSeq.take(n))) ++ images
+    val nOut = math.max(1, math.ceil(ds.touched.map(_.bytes).sum.toDouble / targetFileBytes).toInt)
+    val rollRecords = if (nOut <= 1) 0L else math.ceil(out.size.toDouble / nOut).toLong
+    RowLevel.rewrite(st, "merge", runId, ds.touched, mergeSummary(runId, ds.touched, "driver"), t0, Some(log),
+        propertyUpdates) { commitUuid =>
+      staged(st, log, commitUuid)(st.writeRows(out, sh.keyCols, commitUuid, rollRecords))
+    }
+  }
+
+  /** The summary of a copy-on-write merge commit. */
+  private def mergeSummary(runId: String, touched: Seq[DataFileMeta], plan: String): Map[String, String] =
+    Map("run-id" -> runId, "touched-files" -> touched.size.toString, "merge-plan" -> plan)
+
+  /** A copy-on-write merge's output under `commitUuid`: read back from its
+    * footers when an earlier, crashed attempt staged it completely (the
+    * step log says `rewrite` and the dir holds `_SUCCESS`), else what
+    * `write` stages, then marked in the step log. */
+  private def staged(st: TableState, log: graft.table.StepLog, commitUuid: String)(
+      write: => Seq[DataFileMeta]): Seq[DataFileMeta] = {
+    val dir = s"${st.table.dataDir}/$commitUuid"
+    if (log.doneSteps.contains("rewrite") && graft.table.FileIO.exists(s"$dir/_SUCCESS"))
+      graft.table.StatsCollector.collect(st.table.spark, st.schema, st.table.root,
+        graft.table.FileIO.listFilesRecursively(dir, ".parquet"), commitUuid)
+    else {
+      graft.table.FileIO.deleteRecursively(dir)
+      val metas = write
+      Maintenance.markDone(st.table, log, "rewrite")
+      metas
+    }
   }
 
   /** Both merge-on-read plans commit here, one `merge-pos` commit of the
-    * changed rows' DV `bitmaps` and the `images` (None: none), sorted by key
-    * within each task for tight key bounds; `merge-plan` names the plan. */
-  private def commitMergePos(st: TableState, sh: Shape, runId: String, log: graft.table.StepLog,
-      touched: Seq[DataFileMeta], bitmaps: DeletionVectors.Bitmaps, images: Option[DataFrame],
+    * changed rows' DV `bitmaps` and the images `write` stages (None: none);
+    * `merge-plan` names the plan. */
+  private def commitMergePos(st: TableState, runId: String, log: graft.table.StepLog,
+      touched: Seq[DataFileMeta], bitmaps: DeletionVectors.Bitmaps, write: Option[String => Seq[DataFileMeta]],
       plan: String, t0: Long, propertyUpdates: Map[String, String]): Snapshot =
-    RowLevel.mergeOnRead(st, "merge-pos", runId, touched, bitmaps,
-        images.map(_.sortWithinPartitions(sh.keyCols.map(col): _*)), t0,
+    RowLevel.mergeOnRead(st, "merge-pos", runId, touched, bitmaps, write, t0,
         st.snapshot.map(_.id), Some(log), propertyUpdates) { added =>
       Map("run-id" -> runId, "touched-files" -> touched.size.toString,
         "merge-plan" -> plan,

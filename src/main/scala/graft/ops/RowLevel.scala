@@ -55,7 +55,7 @@ private[graft] object RowLevel {
       try {
         val bitmaps = DeletionVectors.collect(hit)
         Option.when(bitmaps.nonEmpty)(mergeOnRead(st, "update-pos", runId, planned, bitmaps,
-          Some(hit.select(cols: _*)), t0)(added => why + ("updated-rows" -> added.map(_.rows).sum.toString)))
+          Some(st.writeDataFiles(hit.select(cols: _*), _)), t0)(added => why + ("updated-rows" -> added.map(_.rows).sum.toString)))
       } finally hit.unpersist()
     }
   }
@@ -107,8 +107,9 @@ private[graft] object RowLevel {
   }
 
   /** The merge-on-read writer: `bitmaps` become one DV blob in
-    * `data/dv<o>-<runId>/` (`<o>`: the op's first letter), `images` (None:
-    * none) an append in `data/<op without -pos>-<runId>/`, both rewritten in
+    * `data/dv<o>-<runId>/` (`<o>`: the op's first letter), the images
+    * `write` stages under the name it is given (None: none) an append in
+    * `data/<op without -pos>-<runId>/`, both rewritten in
     * place by a rerun; ONE `op` commit adds a data and a DV manifest, with
     * `summary` of the appended files plus `position-deletes-added`. An empty
     * change commits too, so a MERGE's runId reruns idempotently.
@@ -117,7 +118,7 @@ private[graft] object RowLevel {
     * appends and deletes race through; a caller whose output depends on
     * more also passes `expectedSnapshotId` (MERGE: inserts need absent keys). */
   def mergeOnRead(st: TableState, op: String, runId: String, touched: Seq[DataFileMeta],
-      bitmaps: DeletionVectors.Bitmaps, images: Option[DataFrame], t0: Long,
+      bitmaps: DeletionVectors.Bitmaps, write: Option[String => Seq[DataFileMeta]], t0: Long,
       expectedSnapshotId: Option[Long] = None, log: Option[StepLog] = None,
       propertyUpdates: Map[String, String] = Map.empty)(
       summary: Seq[DataFileMeta] => Map[String, String]): Snapshot = {
@@ -125,9 +126,9 @@ private[graft] object RowLevel {
     val name = op.stripSuffix("-pos")
     val dvs = DeletionVectors.write(table.root, s"dv${name.head}-$runId", bitmaps)
     val dir = s"${table.dataDir}/$name-$runId"
-    val added = images.toSeq.flatMap { df =>
+    val added = write.toSeq.flatMap { w =>
       FileIO.deleteRecursively(dir)
-      val out = st.writeDataFiles(df, s"$name-$runId").filter(_.rows > 0)
+      val out = w(s"$name-$runId").filter(_.rows > 0)
       if (out.isEmpty) FileIO.deleteRecursively(dir)
       out
     }

@@ -1,6 +1,8 @@
 package graft.run
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.graftshim.LocalParquet
+import org.apache.spark.sql.types.StructType
 
 import graft.table.{DataFileMeta, FileIO, GraftTable, MetaJson, StepLog}
 
@@ -26,34 +28,18 @@ object Lineage {
       wall_ms: Long,
       committed_ts: java.sql.Timestamp)
 
-  /** Parquet message type mirroring the Dataset[LineageRow] layout Spark
-    * wrote before (same column names/types, standard 3-level LIST,
-    * TIMESTAMP_MICROS), so [[metrics]] and the `.lineage` SQL relation read
-    * files from either writer interchangeably. */
-  private lazy val lineageParquetType: org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation => L, Types}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    Types.buildMessage()
-      .optional(BINARY).as(L.stringType()).named("run_id")
-      .required(INT64).named("snapshot_id")
-      .optional(BINARY).as(L.stringType()).named("op")
-      .optional(BINARY).as(L.stringType()).named("out_path")
-      .required(INT64).named("rows")
-      .required(INT64).named("bytes")
-      .optionalList().optionalElement(BINARY).as(L.stringType()).named("source_files")
-      .required(INT64).named("source_bytes")
-      .required(INT64).named("wall_ms")
-      .required(INT64).as(L.timestampType(true, L.TimeUnit.MICROS)).named("committed_ts")
-      .named("spark_schema")
+  /** The lineage file schema: [[LineageRow]]'s columns, `committed_ts`
+    * non-nullable as the files have always had it. */
+  private lazy val lineageSchema: StructType = {
+    val enc = Encoders.product[LineageRow].schema
+    StructType(enc.fields.map(f => if (f.name == "committed_ts") f.copy(nullable = false) else f))
   }
 
   /** Append one lineage row per output file (plus an op-summary row with
-    * out_path = ""). Driver-side: row count == output file count — which is
-    * exactly why this writes the parquet file DIRECTLY on the driver
-    * (parquet-hadoop Group API) instead of the previous
-    * `spark.createDataset(rows).write`: the rows already live on the
-    * driver, and the Spark write was one full job submission + task
-    * round-trip per maintenance commit just to serialize them back out. */
+    * out_path = ""). Driver-side: row count == output file count, so
+    * Spark's parquet writer writes the file in this thread
+    * ([[LocalParquet]]) instead of a Spark write job per maintenance
+    * commit. */
   def record(
       spark: SparkSession,
       table: GraftTable,
@@ -63,40 +49,15 @@ object Lineage {
       outputs: Seq[DataFileMeta],
       sourcesPerOutput: Map[String, Seq[DataFileMeta]],
       wallMs: Long): Unit = {
-    val tsMicros = System.currentTimeMillis() * 1000L
+    val ts = new java.sql.Timestamp(System.currentTimeMillis())
     val allSources = sourcesPerOutput.values.flatten.toSeq.distinctBy(_.path)
-    // (out_path, rows, bytes, sources, source_bytes) — summary row last
-    val rows: Seq[(String, Long, Long, Seq[String], Long)] =
-      outputs.map { o =>
-        val srcs = sourcesPerOutput.getOrElse(o.path, Seq.empty)
-        (o.path, o.rows, o.bytes, srcs.map(_.path), srcs.map(_.bytes).sum)
-      } :+ (("", outputs.map(_.rows).sum, outputs.map(_.bytes).sum,
-        allSources.map(_.path), allSources.map(_.bytes).sum))
-    val dir = table.metricsDir
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val file = s"$dir/lineage-${java.util.UUID.randomUUID}.snappy.parquet"
-    val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(lineageParquetType)
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file))
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .withType(lineageParquetType)
-      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try rows.foreach { case (outPath, nRows, nBytes, srcs, srcBytes) =>
-      val g = factory.newGroup()
-      g.append("run_id", runId)
-      g.append("snapshot_id", snapshotId)
-      g.append("op", op)
-      g.append("out_path", outPath)
-      g.append("rows", nRows)
-      g.append("bytes", nBytes)
-      val lst = g.addGroup("source_files")
-      srcs.foreach(s => lst.addGroup("list").append("element", s))
-      g.append("source_bytes", srcBytes)
-      g.append("wall_ms", wallMs)
-      g.append("committed_ts", tsMicros)
-      writer.write(g)
-    } finally writer.close()
+    def row(outPath: String, rows: Long, bytes: Long, srcs: Seq[DataFileMeta]) =
+      LineageRow(runId, snapshotId, op, outPath, rows, bytes, srcs.map(_.path), srcs.map(_.bytes).sum, wallMs, ts)
+    val rows = outputs.map(o => row(o.path, o.rows, o.bytes, sourcesPerOutput.getOrElse(o.path, Seq.empty))) :+
+      row("", outputs.map(_.rows).sum, outputs.map(_.bytes).sum, allSources)
+    val writer = new LocalParquet(spark, lineageSchema, Map.empty)
+    writer.write(s"${table.metricsDir}/lineage-${java.util.UUID.randomUUID}${writer.extension}",
+      LocalParquet.internal(lineageSchema, rows).iterator)
   }
 
   def metrics(spark: SparkSession, table: GraftTable) =

@@ -2,10 +2,11 @@ package graft.table
 
 import java.util.UUID
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.graftshim.GraftRelation
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.graftshim.{GraftRelation, LocalParquet, Shims}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * One committed metadata version of a [[GraftTable]], pinned at one of its
@@ -226,10 +227,13 @@ final class TableState private[table] (
       .withColumn("_gdv_rel", DeletionVectors.relPathColumn)
       .withColumn("_gdv_idx", org.apache.spark.sql.functions.col("_metadata.row_index"))
 
-  /** A rewrite's input: `fs` as a plain parquet scan in this schema with
-    * their position deletes applied. */
-  def readFiles(fs: Seq[DataFileMeta]): DataFrame =
-    withPositionDeletes(spark.read.schema(schema).parquet(fs.map(table.absPath): _*), fs)
+  /** A rewrite's input: `fs` through the snapshot relation (its file
+    * statuses come from metadata: no existence checks, no listing) with
+    * their position deletes applied. Every column reads nullable, as a
+    * path-based parquet read does: a rewrite's files carry the Spark row
+    * metadata copy compaction expects of them (`Compact.copyBins`). */
+  def readFiles(fs: Seq[DataFileMeta]): DataFrame = withPositionDeletes(
+    GraftRelation.dataFrame(spark, Shims.asNullable(schema), table.root, fs, allPartitionSpecs), fs)
 
   /** The graft relation over exactly `fs` (Catalyst pushes filters into its
     * file index); no deletes applied. */
@@ -385,6 +389,40 @@ final class TableState private[table] (
     * only, no job. */
   def writeSchema(df: DataFrame): StructType = writeProjection(df).schema
 
+  /** `df` in [[writeProjection]] under the table's CHECK and NOT NULL
+    * constraints: ONE filter whose conjunction of `assert_true`s throws
+    * (naming the constraint or column) on the first violating row, in
+    * constraint order — it rides the write pass itself, zero extra scans at
+    * any scale. SQL semantics: a NULL check passes. Existing rows were
+    * validated when the constraint was added, so rewrites of old data can
+    * never trip here; a NOT NULL check on a column the frame already types
+    * non-nullable folds away at planning. */
+  private def constrained(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
+    val projected = writeProjection(df)
+    val checks = constraints.toSeq.map { case (name, check) =>
+      coalesce(expr(check), lit(true)) -> s"CHECK constraint '$name' violated: $check"
+    } ++ notNullChecks(projected).map { case (ok, path) =>
+      ok -> s"NOT NULL constraint violated: column '$path' is NULL"
+    }
+    checks.map { case (ok, msg) => assert_true(ok, lit(msg)).isNull }.reduceOption(_ && _)
+      .fold(projected)(projected.filter)
+  }
+
+  /** The parquet writer options of every data file write. */
+  private lazy val parquetOptions: Map[String, String] =
+    // parquet drops chunk stats entirely once min+max exceed ~4 KB, which
+    // silences pruning for document-sized string columns; truncating at
+    // write time (sound: prefix min, incremented-prefix max) keeps bounds
+    // for every string column at any value size
+    Map("parquet.statistics.truncate.length" -> "64") ++
+      // per-column parquet BLOOM FILTERS (table property `bloom-columns`,
+      // comma-separated): point lookups / IN probes on a key column skip
+      // row groups whose min/max would admit them — at a 10^12-row corpus
+      // the difference between "read the row group" and "skip it" for the
+      // overwhelming majority of url point queries
+      bloomColumns.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+
   /**
    * Write `df` as new data files under a fresh commit directory and collect
    * their footer stats. Does NOT commit — callers build the snapshot.
@@ -401,50 +439,68 @@ final class TableState private[table] (
     // never sees a conf set on the original — sink-written files would
     // silently lose every timestamp bound
     df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    // CHECK and NOT NULL constraints ride the write pass itself: one
-    // codegen'd filter whose assert_true throws (naming the constraint or
-    // column) on the first violating row — zero extra scans at any scale.
-    // SQL semantics: a NULL check passes. Existing rows were validated when
-    // the constraint was added, so rewrites of old data can never trip here;
-    // a NOT NULL check on a column the frame already types non-nullable
-    // folds away at planning.
-    import org.apache.spark.sql.functions.{assert_true, coalesce, expr, lit}
-    val projected = writeProjection(df)
-    val checks = constraints.toSeq.map { case (name, check) =>
-      coalesce(expr(check), lit(true)) -> s"CHECK constraint '$name' violated: $check"
-    } ++ notNullChecks(projected).map { case (ok, path) =>
-      ok -> s"NOT NULL constraint violated: column '$path' is NULL"
-    }
-    val base = checks.foldLeft(projected) { case (d, (ok, msg)) =>
-      d.filter(assert_true(ok, lit(msg)).isNull)
-    }
     // hidden partitioning: group rows by the transforms so each file covers
     // ONE partition tuple (the derived columns live only in dir names —
     // partitionBy removes them from file contents, keeping old and new files
     // column-identical)
-    val prepared = partitionSpecs.foldLeft(base)((d, sp) => d.withColumn(sp.name, sp.column(schema)))
-    val writer = prepared.write
-      // parquet drops chunk stats entirely once min+max exceed ~4 KB, which
-      // silences pruning for document-sized string columns; truncating at
-      // write time (sound: prefix min, incremented-prefix max) keeps bounds
-      // for every string column at any value size
-      .option("parquet.statistics.truncate.length", "64")
-    // per-column parquet BLOOM FILTERS (table property `bloom-columns`,
-    // comma-separated): point lookups / IN probes on a key column skip
-    // row groups whose min/max would admit them — at a 10^12-row corpus
-    // the difference between "read the row group" and "skip it" for the
-    // overwhelming majority of url point queries
-    val withBloom = bloomColumns.foldLeft(writer)((w, c) =>
-      w.option(s"parquet.bloom.filter.enabled#$c", "true"))
+    val prepared = partitionSpecs.foldLeft(constrained(df))((d, sp) => d.withColumn(sp.name, sp.column(schema)))
     // roll to a new file every N records WITHIN a task: sorted partition
     // runs split into right-sized files without extra partitions (order and
     // per-file min/max tightness preserved — each file is a sorted run)
-    val withRoll =
-      if (maxRecordsPerFile > 0) withBloom.option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      else withBloom
-    (if (partitionSpecs.isEmpty) withRoll else withRoll.partitionBy(partitionSpecs.map(_.name): _*))
+    val writer = prepared.write.options(parquetOptions ++
+      Option.when(maxRecordsPerFile > 0)("maxRecordsPerFile" -> maxRecordsPerFile.toString))
+    (if (partitionSpecs.isEmpty) writer else writer.partitionBy(partitionSpecs.map(_.name): _*))
       .mode("errorifexists").parquet(dir)
     val written = GraftTable.stampBucketIds(partitionSpecs, FileIO.listFilesRecursively(dir, ".parquet"))
     StatsCollector.collect(spark, schema, table.root, written, commitUuid)
+  }
+
+  /**
+   * [[writeDataFiles]] for rows the caller holds on the driver, in table
+   * schema order, each file sorted by `sortBy`. When the table is
+   * unpartitioned and the constrained write projection folds to a
+   * `LocalRelation` (its CHECK and NOT NULL asserts then raise, with the
+   * same messages, while the optimizer folds them), Spark's parquet writer
+   * writes the rows in this thread ([[LocalParquet]]): the same projection
+   * and field ids, TIMESTAMP_MICROS, writer options, record rolling, file
+   * naming and `_SUCCESS` marker as the Spark write, and no Spark job.
+   * Otherwise the rows take the Spark write as one sorted task.
+   * A file rolls at the first row past `maxRecordsPerFile` whose leading
+   * sort key's manifest lower bound is not below the previous row's upper
+   * bound ([[Bounds.truncatedMin]]/[[Bounds.truncatedMax]]): adjacent
+   * files' key bounds never overlap, even where string bounds are cut.
+   */
+  def writeRows(rows: Seq[Row], sortBy: Seq[String], commitUuid: String = UUID.randomUUID.toString,
+      maxRecordsPerFile: Long = 0L): Seq[DataFileMeta] = {
+    import scala.jdk.CollectionConverters._
+    // all nullable: a NOT NULL check on a non-nullable input column folds away
+    val df = spark.createDataFrame(rows.asJava, Shims.asNullable(schema))
+    val local = if (partitionSpecs.nonEmpty) None else LocalParquet.rows(constrained(df))
+    local.fold(writeDataFiles(df.coalesce(1).sortWithinPartitions(sortBy.map(df.col): _*), commitUuid,
+        maxRecordsPerFile)) { case (rowSchema, data) =>
+      val dir = s"${table.dataDir}/$commitUuid"
+      val writer = new LocalParquet(spark, rowSchema, parquetOptions)
+      // Spark's names for one task's files: part-<task>-<job uuid>-c<file>
+      val job = UUID.randomUUID.toString
+      val sorted = LocalParquet.sorted(rowSchema, data, sortBy).toIndexedSeq
+      val lead = sortBy.headOption.map(c => rowSchema.fieldNames.indexWhere(_.equalsIgnoreCase(c)))
+        .filter(i => rowSchema(i).dataType == StringType)
+      def separated(a: InternalRow, b: InternalRow): Boolean = lead.forall(i => a.isNullAt(i) || b.isNullAt(i) ||
+        Bounds.compare(StringType, Bounds.truncatedMax(StringType, a.getUTF8String(i).toString),
+          Bounds.truncatedMin(StringType, b.getUTF8String(i).toString)) <= 0)
+      val written = scala.collection.mutable.ArrayBuffer.empty[String]
+      var start = 0
+      while (start < sorted.size) {
+        var end = if (maxRecordsPerFile > 0) math.min(sorted.size.toLong, start + maxRecordsPerFile).toInt
+          else sorted.size
+        while (end < sorted.size && !separated(sorted(end - 1), sorted(end))) end += 1
+        val path = f"$dir/part-00000-$job-c${written.size}%03d${writer.extension}"
+        writer.write(path, sorted.slice(start, end).iterator)
+        written += path
+        start = end
+      }
+      writer.markSuccess(dir)
+      StatsCollector.collect(spark, schema, table.root, written.toSeq, commitUuid)
+    }
   }
 }

@@ -22,6 +22,10 @@ object Shims {
     }
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** `st` with every field, nested ones included, nullable. */
+  def asNullable(st: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    st.asNullable
+
   /** Whether values of `dt` are equal exactly when their bytes are (the
     * default UTF8_BINARY collation), so JVM string equality is Spark's. */
   def binaryEquality(dt: org.apache.spark.sql.types.StringType): Boolean = dt.supportsBinaryEquality

@@ -54,6 +54,22 @@ class PlanAuditSpec extends SparkSuite {
       s"projection must prune to read schema:\n$proj")
   }
 
+  test("cluster, compact and merge scans read through the snapshot relation's file index") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val t = GraftTable.create(spark, tmpDir("graft-audit-rewrite"), Synth.pageSchema)
+    t.append(Synth.pages(spark, 600, partitions = 3))
+    val st = t.state
+    // Cluster and Compact read their inputs through readFiles
+    for ((what, df) <- Seq("readFiles" -> st.readFiles(st.files),
+        "merge target scan" -> graft.ops.Merge.targetScan(st, st.files, Seq("url")))) {
+      val indexes = df.queryExecution.optimizedPlan.collect {
+        case l: LogicalRelation => l.relation
+      }.collect { case h: HadoopFsRelation => h.location }
+      assert(indexes.nonEmpty && indexes.forall(_.isInstanceOf[org.apache.spark.sql.graftshim.GraftFileIndex]),
+        s"$what scans ${indexes.map(_.getClass.getSimpleName)}")
+    }
+  }
+
   test("zorder write path stays in whole-stage codegen up to the exchange") {
     val df = Synth.pages(spark, 1000, partitions = 2)
     val keyed = df.withColumn("_zs", graft.ops.Cluster.zkeyCol(graft.ops.Cluster.ZDims(),

@@ -9,13 +9,12 @@ import graft.table.GraftTable
 
 /**
  * The Spark-job budget of a MERGE of a small change batch, read from
- * parquet like a CDC landing zone. Merge-on-read plans on the driver:
- * collect the source, scan the touched files for the matched rows, write
- * the images — three jobs, no cached RDD. Copy-on-write runs the one-job
- * touched-file probe, then its join and rewrite; an ANSI (SQL) merge also
- * counts its source's duplicate keys. With
- * `spark.sql.autoBroadcastJoinThreshold = -1` merge-on-read takes the join
- * plan, with the same result.
+ * parquet like a CDC landing zone. Both modes plan on the driver: collect
+ * the source, scan the touched files (merge-on-read: the matched rows;
+ * copy-on-write: every live row), then pair, apply the clauses and write
+ * on the driver — two jobs, no cached RDD. With
+ * `spark.sql.autoBroadcastJoinThreshold = -1` both take the join plan,
+ * with the same result.
  */
 class MergeJobsSpec extends SparkSuite {
 
@@ -44,29 +43,32 @@ class MergeJobsSpec extends SparkSuite {
 
   private def dvRows(t: GraftTable): Long = t.positionDeletes().map(_.rows).sum
 
-  test("a small-source merge-on-read merge runs at most 3 jobs, caches nothing, and equals the join plan") {
-    val (driver, join) = (table("graft-merge-jobs-driver"), table("graft-merge-jobs-join"))
+  /** A small-source merge in `mode` on the driver plan: at most 2 jobs, no
+    * cached RDD, and the rows and DV rows of the join plan. */
+  private def driverPlanJobs(mode: String, dvs: Long): Unit = {
+    val (driver, join) = (table(s"graft-merge-jobs-$mode-driver"), table(s"graft-merge-jobs-$mode-join"))
     val src = changes()
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (descs, rddBlocks) = sparkJobs {
-      assert(Merge.into(driver, src, mode = "merge-on-read").summary("merge-plan") == "driver")
+      assert(Merge.into(driver, src, mode = mode).summary("merge-plan") == "driver")
     }
-    assert(descs.size <= 3, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(descs.size <= 2, s"${descs.size} jobs:\n${descs.mkString("\n")}")
     assert(rddBlocks == 0, s"$rddBlocks RDD blocks cached during the merge")
     assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore, "no RDD left persisted")
     spark.conf.set(Threshold, "-1")
-    try assert(Merge.into(join, src, mode = "merge-on-read").summary("merge-plan") == "join")
+    try assert(Merge.into(join, src, mode = mode).summary("merge-plan") == "join")
     finally spark.conf.unset(Threshold)
     assertSameRows(driver.read(), join.read(), "driver plan vs join plan")
-    assert(dvRows(driver) == dvRows(join) && dvRows(driver) == 30)
+    assert(driver.read().count() == 600 - 10 + 5)
+    assert(dvRows(driver) == dvRows(join) && dvRows(driver) == dvs)
   }
 
-  test("a copy-on-write merge runs at most 4 jobs") {
-    val t = table("graft-merge-jobs-cow")
-    val src = changes()
-    val (descs, _) = sparkJobs(Merge.into(t, src))
-    assert(descs.size <= 4, s"${descs.size} jobs:\n${descs.mkString("\n")}")
-    assert(t.read().count() == 600 - 10 + 5)
+  test("a small-source merge-on-read merge runs at most 2 jobs, caches nothing, and equals the join plan") {
+    driverPlanJobs("merge-on-read", dvs = 30)
+  }
+
+  test("a small-source copy-on-write merge runs at most 2 jobs, caches nothing, and equals the join plan") {
+    driverPlanJobs("copy-on-write", dvs = 0)
   }
 
   /** The changes of [[changes]] as a SQL view with an `op` column instead of
@@ -86,22 +88,23 @@ class MergeJobsSpec extends SparkSuite {
     ()
   }
 
-  test("a copy-on-write SQL MERGE of q30's shape runs at most 6 jobs") {
+  test("a copy-on-write SQL MERGE of q30's shape takes the driver plan in at most 2 jobs") {
     val t = table("graft-merge-jobs-sql-cow")
     sqlChanges("merge_jobs_cow")
     val (descs, _) = sparkJobs(q30(t, "merge_jobs_cow"))
-    assert(descs.size <= 6, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(t.currentSnapshot.get.summary("merge-plan") == "driver")
+    assert(descs.size <= 2, s"${descs.size} jobs:\n${descs.mkString("\n")}")
     assert(t.read().count() == 600 - 10 + 5)
     assert(t.read().filter(col("text").endsWith("#1#2")).count() == 20)
   }
 
-  test("a merge-on-read SQL MERGE of q30's shape takes the driver plan in at most 3 jobs") {
+  test("a merge-on-read SQL MERGE of q30's shape takes the driver plan in at most 2 jobs") {
     val t = table("graft-merge-jobs-sql-mor")
     spark.sql(s"ALTER TABLE graft.`${t.root}` SET TBLPROPERTIES ('write.merge.mode'='merge-on-read')")
     sqlChanges("merge_jobs_mor")
     val (descs, _) = sparkJobs(q30(t, "merge_jobs_mor"))
     assert(t.currentSnapshot.get.summary("merge-plan") == "driver")
-    assert(descs.size <= 3, s"${descs.size} jobs:\n${descs.mkString("\n")}")
+    assert(descs.size <= 2, s"${descs.size} jobs:\n${descs.mkString("\n")}")
     assert(t.read().count() == 600 - 10 + 5)
     assert(dvRows(t) == 30)
   }

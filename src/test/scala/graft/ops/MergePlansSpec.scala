@@ -7,18 +7,21 @@ import graft.SparkSuite
 import graft.run.Synth
 import graft.table.{GraftTable, Snapshot}
 
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
 /**
- * Merge-on-read MERGE has two plans: the driver plan for sources within
- * `spark.sql.autoBroadcastJoinThreshold`, and the full-outer join plan for
- * the rest (threshold `-1` forces it). Each case below runs the same merges
- * on twin tables, one per plan, and asserts equal reads and equal
- * deletion-vector cardinality after every merge.
+ * MERGE has two plans in each write mode: the driver plan for sources
+ * within `spark.sql.autoBroadcastJoinThreshold`, and the full-outer join
+ * plan for the rest (threshold `-1` forces it). Each case below runs the
+ * same merges on twin tables, one per plan, in both modes, and asserts
+ * equal reads and equal deletion-vector cardinality after every merge.
  */
 class MergePlansSpec extends SparkSuite {
   import spark.implicits._
 
   private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
   private val MoR = "merge-on-read"
+  private val CoW = "copy-on-write"
 
   private lazy val data: DataFrame = Synth.pages(spark, 600, partitions = 4).localCheckpoint(true)
 
@@ -35,19 +38,25 @@ class MergePlansSpec extends SparkSuite {
 
   private def dvRows(t: GraftTable): Long = t.positionDeletes().map(_.rows).sum
 
-  /** Twin tables, each `prep`ared alike, then each merge of `merges` on
-    * both — the driver plan on one, the join plan on the other. */
+  /** Per write mode, twin tables, each `prep`ared alike, then each merge
+    * of `merges` (given the mode) on both — the driver plan on one, the
+    * join plan on the other; both modes end with equal rows. Returns the
+    * merge-on-read driver-plan table. */
   private def bothPlans(name: String, prep: GraftTable => Unit = _ => ())(
-      merges: (GraftTable => Snapshot)*): GraftTable = {
-    val (d, j) = (table(s"graft-plans-$name-d"), table(s"graft-plans-$name-j"))
-    prep(d); prep(j)
-    for ((merge, i) <- merges.zipWithIndex) {
-      assert(merge(d).summary("merge-plan") == "driver", s"merge $i of $name")
-      assert(joinPlan(merge(j)).summary("merge-plan") == "join", s"merge $i of $name")
-      assertSameRows(d.read(), j.read(), s"$name, after merge $i")
-      assert(dvRows(d) == dvRows(j), s"$name, DV rows after merge $i")
+      merges: ((GraftTable, String) => Snapshot)*): GraftTable = {
+    val driverTables = for (mode <- Seq(CoW, MoR)) yield {
+      val (d, j) = (table(s"graft-plans-$name-$mode-d"), table(s"graft-plans-$name-$mode-j"))
+      prep(d); prep(j)
+      for ((merge, i) <- merges.zipWithIndex) {
+        assert(merge(d, mode).summary("merge-plan") == "driver", s"$mode merge $i of $name")
+        assert(joinPlan(merge(j, mode)).summary("merge-plan") == "join", s"$mode merge $i of $name")
+        assertSameRows(d.read(), j.read(), s"$name, $mode, after merge $i")
+        assert(dvRows(d) == dvRows(j), s"$name, $mode, DV rows after merge $i")
+      }
+      d
     }
-    d
+    assertSameRows(driverTables.head.read(), driverTables.last.read(), s"$name, $CoW vs $MoR")
+    driverTables.last
   }
 
   private lazy val rows: Map[String, (String, java.sql.Timestamp, Array[Byte], String, String)] =
@@ -80,8 +89,8 @@ class MergePlansSpec extends SparkSuite {
         urls.slice(20, 22).map(u => (u, 10L, "BACK", false)) ++
         Seq((dupKeys(0), 10L, "TWO", false), ("https://new.example.com/1", 5L, "NEW2", false)): _*)
     val noop = cdc(("https://absent.example.com/y", 0L, "GONE", true))
-    bothPlans("cdc", prep)(
-      Merge.into(_, first, mode = MoR), Merge.into(_, second, mode = MoR), Merge.into(_, noop, mode = MoR))
+    bothPlans("cdc", prep)((t, m) => Merge.into(t, first, mode = m), (t, m) => Merge.into(t, second, mode = m),
+      (t, m) => Merge.into(t, noop, mode = m))
   }
 
   test("ANSI: column-level updates with per-row masks, inserts, and duplicate all-noop keys") {
@@ -102,7 +111,7 @@ class MergePlansSpec extends SparkSuite {
       Merge.WhenNotMatched(Merge.Insert(Map("url" -> col("s.url"),
         "warc_ts" -> lit(new java.sql.Timestamp(1735689600000L)), "html" -> lit(Array[Byte](1)),
         "text" -> lit("INSERTED"), "lang" -> lit("en")))))
-    bothPlans("ansi")(Merge.into(_, src, Seq("url"), latestWins = false, clauses = clauses, mode = MoR))
+    bothPlans("ansi")((t, m) => Merge.into(t, src, Seq("url"), latestWins = false, clauses = clauses, mode = m))
   }
 
   test("ANSI: a MATCHED condition and SET value that read target columns") {
@@ -115,7 +124,7 @@ class MergePlansSpec extends SparkSuite {
       Merge.Update(Map("text" -> concat(col("t.text"), col("s.text")), "lang" -> col("s.lang"))),
       Some(col("t.lang") =!= col("s.lang"))))
     val d = bothPlans("target-refs")(
-      Merge.into(_, src, Seq("url"), latestWins = false, clauses = clauses, mode = MoR))
+      (t, m) => Merge.into(t, src, Seq("url"), latestWins = false, clauses = clauses, mode = m))
     val got = d.read().filter(col("url").isin(urls.slice(10, 20): _*))
       .select("url", "text", "lang").as[(String, String, String)].collect().map(r => r._1 -> r).toMap
     for ((u, i) <- urls.slice(10, 20).zipWithIndex) {
@@ -129,22 +138,67 @@ class MergePlansSpec extends SparkSuite {
     val src = Seq((urls(7), "ONE"), (urls(7), "TWO"), ("https://new.example.com/dup", "X"))
       .toDF("url", "text")
     val set = Seq(Merge.WhenMatched(Merge.Update(Map("text" -> col("s.text")))))
-    def error(t: GraftTable): String = intercept[IllegalArgumentException](
-      Merge.into(t, src, Seq("url"), latestWins = false, clauses = set, mode = MoR)).getMessage
-    val (d, j) = (table("graft-plans-dup-d"), table("graft-plans-dup-j"))
-    val msg = error(d)
-    assert(msg == joinPlan(error(j)))
-    assert(msg == s"MERGE source has multiple rows for matched key '${urls(7)}' " +
-      "(a target row must not be modified by more than one source row)")
+    for (mode <- Seq(CoW, MoR)) {
+      def error(t: GraftTable): String = intercept[IllegalArgumentException](
+        Merge.into(t, src, Seq("url"), latestWins = false, clauses = set, mode = mode)).getMessage
+      val (d, j) = (table(s"graft-plans-dup-$mode-d"), table(s"graft-plans-dup-$mode-j"))
+      val msg = error(d)
+      assert(msg == joinPlan(error(j)), mode)
+      assert(msg == s"MERGE source has multiple rows for matched key '${urls(7)}' " +
+        "(a target row must not be modified by more than one source row)", mode)
+    }
+  }
+
+  test("a NOT NULL violation through MERGE raises the same text under both plans") {
+    val schema = StructType(Seq(StructField("k", StringType, nullable = false), StructField("v", LongType)))
+    // a NULL key never matches, so MERGE inserts it
+    val nullKey = Seq(("a", 10L), (null, 11L)).toDF("k", "v").withColumn("_deleted", lit(false))
+    /** The innermost message of what the merge throws. */
+    def error(t: GraftTable, mode: String): String = {
+      val e = intercept[Exception](Merge.into(t, nullKey, Seq("k"), versionCol = "v", mode = mode))
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last.getMessage
+    }
+    for (mode <- Seq(CoW, MoR)) {
+      val Seq(d, j) = Seq("d", "j").map { p =>
+        val t = GraftTable.create(spark, tmpDir(s"graft-plans-notnull-$mode-$p"), schema)
+        t.append(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"))
+        t
+      }
+      val msg = error(d, mode)
+      assert(msg.contains("NOT NULL constraint violated: column 'k' is NULL"), s"$mode: $msg")
+      assert(msg == joinPlan(error(j, mode)), mode)
+      assert(d.read().count() == 2 && j.read().count() == 2, mode)
+    }
+  }
+
+  test("a driver-written merge file: _SUCCESS, warc_ts bounds, the url bloom filter, read back after RENAME COLUMN") {
+    val t = GraftTable.create(spark, tmpDir("graft-plans-format"), Synth.pageSchema,
+      Map(GraftTable.BloomColumnsProp -> "url"))
+    t.append(data.repartition(4))
+    val before = t.files().map(_.path).toSet
+    val src = cdc(urls.take(3).map(u => (u, 5L, "FMT", false)) :+ (("https://new.example.com/fmt", 0L, "FMT", false)): _*)
+    assert(Merge.into(t, src).summary("merge-plan") == "driver")
+    val added = t.files().filterNot(f => before(f.path))
+    assert(added.nonEmpty)
+    for (f <- added) {
+      val path = t.absPath(f)
+      assert(new java.io.File(new java.io.File(path).getParentFile, "_SUCCESS").isFile, f.path)
+      assert(f.minValues.contains("warc_ts") && f.maxValues.contains("warc_ts"), f.path)
+      assert(bloomFlags(path).forall(_("url")), s"expected a bloom filter on url in ${f.path}")
+    }
+    t.renameColumn("text", "body")
+    assert(t.read().filter(col("body") === "FMT").count() == 4)
+    assert(t.read().count() == 601)
   }
 
   test("NOT MATCHED BY SOURCE takes the join plan") {
-    val t = table("graft-plans-nmbs")
     val src = Seq((urls(1), "A")).toDF("url", "text")
-    val snap = Merge.into(t, src, Seq("url"), latestWins = false, mode = MoR, clauses = Seq(
-      Merge.WhenMatched(Merge.Update(Map("text" -> col("s.text")))),
-      Merge.WhenNotMatchedBySource(Merge.Delete, Some(col("t.lang") === "fr"))))
-    assert(snap.summary("merge-plan") == "join")
+    for (mode <- Seq(CoW, MoR)) {
+      val snap = Merge.into(table(s"graft-plans-nmbs-$mode"), src, Seq("url"), latestWins = false, mode = mode,
+        clauses = Seq(Merge.WhenMatched(Merge.Update(Map("text" -> col("s.text")))),
+          Merge.WhenNotMatchedBySource(Merge.Delete, Some(col("t.lang") === "fr"))))
+      assert(snap.summary("merge-plan") == "join", mode)
+    }
   }
 
   test("binary merge keys are refused at planning") {

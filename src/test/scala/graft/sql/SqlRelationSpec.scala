@@ -127,6 +127,27 @@ class SqlRelationSpec extends SparkSuite {
     assert(rows.forall(r => r.getSeq[String](3).nonEmpty), "sources recorded per output")
   }
 
+  test("lineage files keep their schema in Lineage.metrics and the .lineage relation") {
+    import org.apache.spark.sql.types._
+    val t = GraftTable.create(spark, tmpDir("sqlrel-lineage-schema"), Synth.pageSchema)
+    t.append(Synth.pages(spark, 200, partitions = 2))
+    graft.ops.Merge.deleteWhere(t, col("lang") === "de")
+    val want = StructType(Seq(
+      StructField("run_id", StringType), StructField("snapshot_id", LongType),
+      StructField("op", StringType), StructField("out_path", StringType),
+      StructField("rows", LongType), StructField("bytes", LongType),
+      StructField("source_files", ArrayType(StringType, containsNull = true)),
+      StructField("source_bytes", LongType), StructField("wall_ms", LongType),
+      StructField("committed_ts", TimestampType)))
+    assert(graft.run.Lineage.metrics(spark, t).schema === want)
+    assert(spark.sql(s"SELECT * FROM graft.`${t.root}`.lineage").schema === want)
+    val Array(summary) = spark.sql(
+      s"SELECT op, rows, committed_ts FROM graft.`${t.root}`.lineage WHERE out_path = ''").collect()
+    assert(summary.getString(0) == "delete")
+    assert(summary.getLong(1) == t.read().count())
+    assert(math.abs(summary.getTimestamp(2).getTime - System.currentTimeMillis()) < 600000L)
+  }
+
   test("ALTER TABLE ADD COLUMNS evolves the schema; old files read NULL") {
     val t = mk(100)
     spark.sql(s"ALTER TABLE graft.`${t.root}` ADD COLUMNS (quality DOUBLE, source STRING)")

@@ -31,7 +31,13 @@ class TableStateSpec extends SparkSuite {
   private lazy val pristine: Map[String, String] = Seq(CoW, MoR).map { mode =>
     val t = GraftTable.create(spark, tmpDir(s"graft-state-$mode"), Synth.pageSchema)
     t.append(Synth.pages(spark, 4000, partitions = 8))
-    (1 to 4).foreach(i => Merge.into(t, upsert(i), Seq("url"), mode = mode))
+    // copy-on-write upserts on the join plan, which writes each rewrite as
+    // several files (the driver plan writes these 8 touched files as one),
+    // so compaction has files to bin
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    if (mode == CoW) spark.conf.set(threshold, "-1")
+    try (1 to 4).foreach(i => Merge.into(t, upsert(i), Seq("url"), mode = mode))
+    finally spark.conf.unset(threshold)
     mode -> t.root
   }.toMap
 
